@@ -42,10 +42,10 @@ def concurrently(*thunks, max_workers: int = 4) -> list:
     silently skipped. 2-4 in flight is plenty (guide §2.6); FIFO
     scheduling gives back-fill behaviour at any cluster scale, so this
     is placement-free — it changes WHEN jobs are submitted, never what
-    any of them computes.
+    any of them computes. No thunks → ``[]``.
     """
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     with ThreadPoolExecutor(max_workers=min(max_workers, len(thunks))) as pool:
         futures = [pool.submit(t) for t in thunks]
         results, first_err = [], None

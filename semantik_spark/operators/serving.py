@@ -18,6 +18,14 @@ queries against the persisted artifacts:
                   embedding table, zero shuffles before top-k.
   hybrid_serve  — RRF fusion of the two serve branches.
 
+The IVF family (build_dense_ivf, ivf_append, dense_serve_ivf,
+hybrid_serve_approx, write_ivfpq_index, ivfpq_serve) shares one cell
+layer: _write_cells writes every coarse codebook, _read_codebook is the
+one cached reader of codebook/, ivfpq_codebook/ and ivfpq_pq/ (keyed by
+the part-file names each write job stamps fresh), and _plan_probes plans
+every probe table on the driver. Driver-built tables are
+session.local_df LocalRelations, never pickled-list LogicalRDDs.
+
 Scale notes (100 TB): the persisted postings table is partitionable by
 collection and bucketable by term; the dense table by collection /
 centroid_id (see similarity.knn_ivf). Serving then prunes partitions at
@@ -28,14 +36,19 @@ indexing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from semantik_spark.functions.vectors import mock_embedding
+from semantik_spark.functions.vectors import cosine, mock_embedding
 from semantik_spark.operators import bm25, search
+from semantik_spark.operators.similarity import (
+    _codebook_df, _l2, _nearest_centroids, _pq_by_subspace, _pq_codebook_df,
+    ivf_centroids, ivf_refine, pq_codebooks,
+)
 from semantik_spark.plans.predicates import compile_predicate
 from semantik_spark.functions.caching import cache, checkpoint
 from semantik_spark.functions.parallel import concurrently, spread
+from semantik_spark.session import local_df
 
 
 def build_sparse(docs: DataFrame, path: str,
@@ -306,7 +319,7 @@ def build_index(docs: DataFrame, path: str,
                 payload_cols: tuple[str, ...] = ()) -> None:
     """Materialize the search index under ``path``: terms/, postings/,
     dense/ parquet tables. ``payload_cols`` are carried into the dense
-    table so payload-filtered serving (dense_serve_filtered) can push
+    table so payload-filtered serving (dense_serve's predicate) can push
     its predicate into the parquet scan instead of joining the catalog
     per query — the reference's Qdrant payload-index trade
     (models.py:419-472 payload, dense_search.py:88-98 filters)."""
@@ -336,27 +349,18 @@ def bm25_serve(spark: SparkSession, path: str, queries: DataFrame,
 
 
 def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
-                k: int = 10, query_id_col: str = "query_id",
+                k: int = 10, predicate: dict | None = None,
+                query_id_col: str = "query_id",
                 query_text_col: str = "query_text") -> DataFrame:
-    """Dense top-k against the persisted embedding table."""
-    index = spark.read.parquet(f"{path}/dense")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        mock_embedding(query_text_col).alias("query_vec"),
-    )
-    return search.dense_search(index, q, k)
+    """Dense top-k against the persisted embedding table.
 
-
-def dense_serve_filtered(spark: SparkSession, path: str, queries: DataFrame,
-                         predicate: dict | None = None, k: int = 10,
-                         query_id_col: str = "query_id",
-                         query_text_col: str = "query_text") -> DataFrame:
-    """Payload-filtered dense top-k (F2 ∘ W2): the predicate compiles
-    to a Column (plans/predicates.py) applied to the index scan BEFORE
-    scoring, so equality/range terms on payload columns reach the
-    parquet reader as PushedFilters (plan-asserted) — candidate ranking
-    then runs on the filtered subset only, never post-filtering a
-    top-k (which under-fills k, the classic filtered-ANN bug)."""
+    ``predicate`` (payload filter, F2 ∘ W2) compiles to a Column
+    (plans/predicates.py) applied to the index scan BEFORE scoring, so
+    equality/range terms on payload columns reach the parquet reader as
+    PushedFilters (plan-asserted) — candidate ranking then runs on the
+    filtered subset only, never post-filtering a top-k (which under-fills
+    k, the classic filtered-ANN bug). None compiles to TRUE, which
+    Catalyst prunes: the unfiltered plan is unchanged."""
     index = spark.read.parquet(f"{path}/dense").where(compile_predicate(predicate))
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -382,17 +386,11 @@ def hybrid_serve(spark: SparkSession, path: str, queries: DataFrame,
     order identically (score DESC, doc_id ASC)."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    from pyspark.sql import Window
-
-    from semantik_spark.operators import bm25
-
     index = spark.read.parquet(f"{path}/dense")
     qd = queries.select(
         F.col("query_id").alias("query_id"),
         mock_embedding("query_text").alias("query_vec"),
     )
-    from semantik_spark.functions.vectors import cosine
-
     dscored = index.crossJoin(F.broadcast(qd)).select(
         "query_id", "doc_id", cosine("embedding", "query_vec").alias("score")
     )
@@ -408,8 +406,6 @@ def _rrf_union_fuse(dscored: DataFrame, sscored: DataFrame,
     hybrid_serve docstring): union with a branch tag, one window per
     (query, branch), groupBy pivot — row-identical to ranking each
     branch and full-outer-joining, at 3 exchanges fewer."""
-    from pyspark.sql import Window
-
     u = dscored.select(F.lit(0).alias("branch"), "query_id", "doc_id", "score") \
         .unionByName(sscored.select(F.lit(1).alias("branch"),
                                     "query_id", "doc_id", "score"))
@@ -452,10 +448,6 @@ def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
     its cells from disk — real partition pruning, not a post-scan
     filter — which is the 100 TB difference between scanning
     nprobe/n_centroids of the corpus and scanning all of it."""
-    from semantik_spark.operators.similarity import (
-        _codebook_df, _nearest_centroids, ivf_centroids, ivf_refine,
-    )
-
     emb = docs.select(F.col(id_col).alias("doc_id"),
                       mock_embedding(text_col).cast("array<double>").alias("embedding"),
                       *payload_cols)
@@ -482,10 +474,7 @@ def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
     concurrently(
         lambda: assigned.write.mode("overwrite").partitionBy("centroid_id")
                         .parquet(f"{path}/dense_ivf"),
-        lambda: spark.createDataFrame(
-            [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows],
-            "cid bigint, cv array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/codebook"),
+        lambda: _write_cells(spark, cent_rows, f"{path}/codebook"),
     )
 
 
@@ -512,16 +501,9 @@ def ivf_append(spark: SparkSession, path: str, new_docs: DataFrame,
     Scale: delta-sized work only — one broadcast-codebook map over the
     new rows + an append write; no shuffle of existing index data.
     """
-    from semantik_spark.operators.similarity import (
-        _codebook_df, _nearest_centroids,
-    )
-
-    cent_rows = [
-        (int(r["cid"]), list(r["cv"]))
-        for r in spark.read.parquet(f"{path}/codebook").collect()
-    ]
+    cells = _read_codebook(spark, f"{path}/codebook", _cells)
     codebook = F.broadcast(_codebook_df(spark, [
-        {"cid": cid, "cv": cv} for cid, cv in sorted(cent_rows)
+        {"cid": cid, "cv": cv} for cid, cv in cells.items()
     ]))
     emb = new_docs.select(
         F.col(id_col).alias("doc_id"),
@@ -572,57 +554,76 @@ def _cosine_py(a: list[float], b: list[float]) -> float:
     return dot / nn if nn > 0 else 0.0
 
 
-#: driver-side codebook cache keyed by (dir, mtime) — a serving process
-#: holds the n_centroids x dim floats in memory; re-reading the parquet
-#: per request paid a full Spark job (~0.2-0.4 s locally) for data that
-#: only changes on retrain (overwrite recreates the dir, so the mtime
-#: key invalidates exactly then; ivf_append never touches the codebook)
-_CODEBOOK_CACHE: dict[str, tuple[float, list]] = {}
+def _write_cells(spark: SparkSession, cent_rows: list, d: str) -> None:
+    """Persist a coarse codebook as (cid, cv) rows — the one writer of
+    codebook/ and ivfpq_codebook/."""
+    local_df(spark, [(int(r["cid"]), [float(x) for x in r["cv"]])
+                     for r in cent_rows],
+             "cid bigint, cv array<double>").write.mode("overwrite").parquet(d)
 
 
-def _load_codebook(spark: SparkSession, path: str) -> list:
+def _cells(rows) -> dict:
+    """Coarse codebook rows → {cid: cv} in cid order (the cell map)."""
+    return dict(sorted(((int(r["cid"]), [float(x) for x in r["cv"]])
+                        for r in rows), key=lambda t: t[0]))
+
+
+#: driver-side codebook store: directory → (part-file names, parsed
+#: codebook). A serving process holds the n_centroids × dim floats in
+#: memory; re-reading the parquet per request paid a full Spark job for
+#: data that only changes on (re)build. Every Spark write job stamps a
+#: fresh UUID into its part-file names, so any overwrite of a codebook
+#: directory changes its key (ivf_append never touches the codebook).
+_CODEBOOKS: dict[str, tuple[list, object]] = {}
+
+
+def _read_codebook(spark: SparkSession, d: str, parse):
+    """The one cached reader of codebook/, ivfpq_codebook/ and
+    ivfpq_pq/: ``parse`` turns the collected rows into the serving
+    structure (_cells, similarity._pq_by_subspace). The key is listed
+    BEFORE the read, so a write racing the read can at worst store a
+    stale key that the next call re-reads, never a stale codebook."""
     import os
 
-    d = f"{path}/codebook"
-    try:
-        mtime = os.path.getmtime(d)
-    except OSError:
-        mtime = -1.0
-    hit = _CODEBOOK_CACHE.get(d)
-    if hit is not None and hit[0] == mtime:
+    key = sorted(n for n in os.listdir(d) if not n.startswith(("_", ".")))
+    hit = _CODEBOOKS.get(d)
+    if hit is not None and hit[0] == key:
         return hit[1]
-    rows = sorted(
-        ((int(r["cid"]), [float(x) for x in r["cv"]])
-         for r in spark.read.parquet(d).collect()),
-        key=lambda t: t[0],
-    )
-    _CODEBOOK_CACHE[d] = (mtime, rows)
-    return rows
+    value = parse(spark.read.parquet(d).collect())
+    _CODEBOOKS[d] = (key, value)
+    return value
 
 
-def _plan_text_probes(spark: SparkSession, queries: DataFrame,
-                      cent_rows: list, nprobe: int,
-                      query_id_col: str = "query_id",
-                      query_text_col: str = "query_text"):
-    """Driver-side probe planning shared by dense_serve_ivf and
-    hybrid_serve_approx: embed each query with the bit-identical
-    Python twin, rank codebook cells, and build the probes table as
-    literals — ONE Spark job per serve. The query-id column keeps the
-    CALLER'S type (derived from the queries schema, the ivfpq_serve
-    recipe) — a hardcoded string type rejected integer-keyed query
-    batches on these two paths only. Returns (probes_df, probed_cells)."""
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    probe_rows = []
-    for r in queries.select(F.col(query_id_col).alias("query_id"),
-                            F.col(query_text_col).alias("query_text")).collect():
-        qv = _mock_embedding_py(str(r["query_text"]))
-        ranked = sorted(((_cosine_py(qv, cv), -cid) for cid, cv in cent_rows),
+def _query_rows(queries: DataFrame, id_col: str, col: str, embed):
+    """The serve batch as driver rows ``(query_id, embed(col))`` plus the
+    query-id SQL type, kept from the CALLER'S schema — a hardcoded type
+    rejected integer- or string-keyed batches on some paths."""
+    rows = queries.select(id_col, col).collect()
+    return ([(r[0], embed(r[1])) for r in rows],
+            queries.schema[id_col].dataType.simpleString())
+
+
+def _text_vec(text) -> list[float]:
+    return _mock_embedding_py(str(text))
+
+
+def _plan_probes(spark: SparkSession, cells: dict, qrows: list,
+                 qid_type: str, nprobe: int, ccv: bool = False):
+    """Driver-side probe planning for every IVF serve path: rank the
+    cells of the cell map for each ``(query_id, qv)`` row with the
+    bit-exact cosine twin (ties → smaller cid) and build the probes
+    table as a LocalRelation — ONE Spark job per serve. ``ccv`` adds
+    the probed centroid vector (the IVFADC residual base). Returns
+    (probes_df, probed_cells)."""
+    rows = []
+    for qid, qv in qrows:
+        ranked = sorted(((_cosine_py(qv, cv), -cid) for cid, cv in cells.items()),
                         reverse=True)[:nprobe]
-        probe_rows += [(r["query_id"], qv, -negcid) for _, negcid in ranked]
-    probes = spark.createDataFrame(
-        probe_rows,
-        f"query_id {qid_type}, qv array<double>, centroid_id bigint")
-    return probes, sorted({cid for _, _, cid in probe_rows})
+        rows += [(qid, qv, -neg, cells[-neg]) if ccv else (qid, qv, -neg)
+                 for _, neg in ranked]
+    ddl = f"query_id {qid_type}, qv array<double>, centroid_id bigint"
+    probes = local_df(spark, rows, ddl + (", ccv array<double>" if ccv else ""))
+    return probes, sorted({r[2] for r in rows})
 
 
 def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
@@ -644,11 +645,10 @@ def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
     PartitionFilters on the centroid_id directory layout (asserted in
     tests/test_plans.py) — at 100 TB a probe reads nprobe/n_centroids
     of the index FROM DISK."""
-    from semantik_spark.functions.vectors import cosine
-
-    cent_rows = _load_codebook(spark, path)
-    probes, probed_cells = _plan_text_probes(
-        spark, queries, cent_rows, nprobe, query_id_col, query_text_col)
+    qrows, qid_type = _query_rows(queries, query_id_col, query_text_col, _text_vec)
+    probes, probed_cells = _plan_probes(
+        spark, _read_codebook(spark, f"{path}/codebook", _cells),
+        qrows, qid_type, nprobe)
     # filtered ANN (F2 ∘ probe pruning): partition pruning on
     # centroid_id AND payload PushedFilters compose on the same scan,
     # pre-ranking — k fills from eligible docs inside probed cells only
@@ -658,8 +658,6 @@ def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
     scored = index.join(F.broadcast(probes), "centroid_id").select(
         "query_id", "doc_id", cosine("embedding", "qv").alias("score")
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
@@ -697,13 +695,6 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
     only per-vector state the ADC scan touches (dim/8 of the raw
     bytes at m=8,dim=64 float64), partition-pruned to probed cells.
     """
-    from semantik_spark.functions.caching import cache
-    from semantik_spark.operators.similarity import (
-        _codebook_df, _l2, _pq_codebook_df, ivf_centroids, ivf_refine,
-        pq_codebooks,
-    )
-    from semantik_spark.functions.vectors import cosine
-
     d = dim // m
     spark = corpus.sparkSession
     # train_sample_mod: both codebooks (coarse + PQ) train on the
@@ -744,7 +735,8 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
                         refine_iters=refine_iters,
                         id_col="vec_id", vec_col="residual",
                         train_sample_mod=train_sample_mod)
-    cb = F.broadcast(_pq_codebook_df(spark, book, m))
+    by_s = _pq_by_subspace(book, m)
+    cb = F.broadcast(_pq_codebook_df(spark, by_s))
 
     # positional code per subspace: the codebook lists are cid-ordered,
     # so argmin over (dist, position) == knn_ivfpq's (dist, cid)
@@ -762,13 +754,8 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
         "vec_id", "centroid_id",
         F.array(*[code_at(s) for s in range(m)]).alias("codes"),
     )
-    by_s: dict[int, list] = {}
-    for b in book:
-        by_s.setdefault(int(b["s"]), []).append((int(b["cid"]), b["cv"]))
-    pq_rows = []
-    for s, lst in sorted(by_s.items()):
-        for pos, (cid, cv) in enumerate(sorted(lst, key=lambda t: t[0])):
-            pq_rows.append((s, pos, cid, [float(x) for x in cv]))
+    pq_rows = [(s, pos, cid, cv) for s, lst in enumerate(by_s)
+               for pos, (cid, cv) in enumerate(lst)]
     # the four artifacts are independent (codes reads the cached
     # assignment, full the raw scan, both codebooks are driver-local) —
     # overlap the writes (guide §2.6): the full-precision write
@@ -778,13 +765,10 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
                      .parquet(f"{path}/ivfpq_codes"),
         lambda: c.select("vec_id", "v").write.mode("overwrite")
                  .parquet(f"{path}/ivfpq_full"),
-        lambda: spark.createDataFrame(
-            [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows],
-            "cid bigint, cv array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/ivfpq_codebook"),
-        lambda: spark.createDataFrame(
-            pq_rows, "s int, pos int, cid bigint, cv array<double>"
-        ).write.mode("overwrite").parquet(f"{path}/ivfpq_pq"),
+        lambda: _write_cells(spark, cent_rows, f"{path}/ivfpq_codebook"),
+        lambda: local_df(spark, pq_rows,
+                         "s int, pos int, cid bigint, cv array<double>")
+                .write.mode("overwrite").parquet(f"{path}/ivfpq_pq"),
     )
 
 
@@ -812,47 +796,18 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
 
     Row-identical to similarity.knn_ivfpq at equal parameters
     (test-pinned)."""
-    from semantik_spark.functions.vectors import cosine
-    from pyspark.sql import Window
-
-    cent_rows = sorted(
-        ((int(r["cid"]), [float(x) for x in r["cv"]])
-         for r in spark.read.parquet(f"{path}/ivfpq_codebook").collect()),
-        key=lambda t: t[0],
-    )
-    pq = spark.read.parquet(f"{path}/ivfpq_pq").collect()
-    m = 1 + max(int(r["s"]) for r in pq)
-    by_s: list[list] = [[] for _ in range(m)]
-    for r in pq:
-        by_s[int(r["s"])].append((int(r["pos"]), int(r["cid"]),
-                                  [float(x) for x in r["cv"]]))
-    for lst in by_s:
-        lst.sort(key=lambda t: t[0])
-    cents_data = [[(cid, cv) for _, cid, cv in lst] for lst in by_s]
-
-    q_rows = queries.select(F.col(query_id_col).alias("query_id"),
-                            F.col(query_vec_col).alias("qv")).collect()
-    probe_rows = []
-    for r in q_rows:
-        qv = [float(x) for x in r["qv"]]
-        ranked = sorted(((_cosine_py(qv, cv), -cid) for cid, cv in cent_rows),
-                        reverse=True)[:nprobe]
-        cvs = dict(cent_rows)
-        probe_rows += [(r["query_id"], qv, -negcid, cvs[-negcid])
-                       for _, negcid in ranked]
-    probes = spark.createDataFrame(
-        probe_rows,
-        f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
-        "qv array<double>, centroid_id bigint, ccv array<double>",
-    )
-    probed_cells = sorted({cid for _, _, cid, _ in probe_rows})
+    by_s = _read_codebook(spark, f"{path}/ivfpq_pq", _pq_by_subspace)
+    m = len(by_s)
+    qrows, qid_type = _query_rows(queries, query_id_col, query_vec_col,
+                                  lambda v: [float(x) for x in v])
+    probes, probed_cells = _plan_probes(
+        spark, _read_codebook(spark, f"{path}/ivfpq_codebook", _cells),
+        qrows, qid_type, nprobe, ccv=True)
 
     # phase 1: ADC over probed cells only (partition pruning on the
     # directory layout); recon travels as DATA via the one-row
     # broadcast codebook (literal inlining blows codegen at real sizes)
-    pq_cb = F.broadcast(spark.createDataFrame(
-        [(cents_data,)], "cents array<array<struct<cid:bigint,cv:array<double>>>>"
-    ))
+    pq_cb = F.broadcast(_pq_codebook_df(spark, by_s))
     index = spark.read.parquet(f"{path}/ivfpq_codes").where(
         F.col("centroid_id").isin(probed_cells)
     )
@@ -879,16 +834,9 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
     # phase 2: exact rescore with the candidate ids PUSHED into the
     # full-precision scan (row-group skipping), qv rejoined broadcast
     cand_ids = sorted({int(r["vec_id"]) for r in cand_rows})
-    cand = spark.createDataFrame(
-        [(r["query_id"], int(r["vec_id"])) for r in cand_rows],
-        f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
-        "vec_id bigint",
-    )
-    qdf = spark.createDataFrame(
-        [(r["query_id"], [float(x) for x in r["qv"]]) for r in q_rows],
-        f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
-        "qv array<double>",
-    )
+    cand = local_df(spark, [(r["query_id"], int(r["vec_id"])) for r in cand_rows],
+                    f"query_id {qid_type}, vec_id bigint")
+    qdf = local_df(spark, qrows, f"query_id {qid_type}, qv array<double>")
     full = spark.read.parquet(f"{path}/ivfpq_full").where(
         F.col("vec_id").isin(cand_ids)
     )
@@ -928,10 +876,10 @@ def hybrid_serve_approx(spark: SparkSession, path: str, queries: DataFrame,
     index."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    from semantik_spark.functions.vectors import cosine
-
-    cent_rows = _load_codebook(spark, path)
-    probes, probed_cells = _plan_text_probes(spark, queries, cent_rows, nprobe)
+    qrows, qid_type = _query_rows(queries, "query_id", "query_text", _text_vec)
+    probes, probed_cells = _plan_probes(
+        spark, _read_codebook(spark, f"{path}/codebook", _cells),
+        qrows, qid_type, nprobe)
     index = spark.read.parquet(f"{path}/dense_ivf").where(
         F.col("centroid_id").isin(probed_cells)
     )

@@ -44,6 +44,7 @@ from semantik_spark.functions.caching import cache
 from semantik_spark.functions.parallel import spread
 from semantik_spark.functions.quant import round_half_away
 from semantik_spark.functions.vectors import cosine
+from semantik_spark.session import local_df
 
 # --- summation-order safety audit (optimization r14) -------------------
 #
@@ -163,9 +164,8 @@ def _codebook_df(spark, cent_rows: list):
     (measured ~2s at 16×64) and would not survive a real 1024-cell
     codebook at all."""
     data = [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows]
-    return spark.createDataFrame(
-        [(data,)], "cents array<struct<cid:bigint,cv:array<double>>>"
-    )
+    return local_df(spark, [(data,)],
+                    "cents array<struct<cid:bigint,cv:array<double>>>")
 
 
 def _nearest_centroids(vec: str) -> F.Column:
@@ -211,13 +211,13 @@ def ivf_refine(corpus: DataFrame, cent_rows: list, iters: int = 1,
     # 3.7 → 6.6 s median with the spread (interleaved 5-rep noop,
     # sf0.1). At 100 TB the scan itself is already many partitions, so
     # the Lloyd step parallelizes naturally — which is SAFE because the
-    # per-(cell,dim) double sums are proven ORDER-FREE for this data at
-    # 6 dp by the order-margin audit (see _ORDER_AUDIT above /
-    # tools/order_margin_audit.py / plans/r14/order_margin_audit.txt:
-    # min margin ≥ 1e4× the any-order summation error bound at every
-    # SF). That proof is what removes r13's "order-sensitivity lock" on
-    # this path; it makes ANY partitioning (scan splits, AQE, retries)
-    # round to identical centroid bits.
+    # per-(cell,dim) double sums round to identical centroid bits at 6 dp
+    # under any partitioning (scan splits, AQE, retries) — proven for the
+    # audited data (sf0.001–sf0.1) by the order-margin audit (see
+    # _ORDER_AUDIT above / tools/order_margin_audit.py /
+    # plans/r14/order_margin_audit.txt: min margin ≥ 1e4× the any-order
+    # summation error bound at every audited SF), not for other inputs.
+    # That proof is what removes r13's "order-sensitivity lock" here.
     c = corpus.select(F.col(id_col).alias("vec_id"),
                       F.col(vec_col).cast("array<double>").alias("v"))
     rows = [{"cid": int(r["cid"]), "cv": [float(x) for x in r["cv"]]}
@@ -520,7 +520,7 @@ def pq_codebooks(corpus: DataFrame, dim: int = 64, m: int = 8,
     exploded = c.select("vec_id", subs).select("vec_id", "sub.s", "sub.sv")
     audit = _order_audit_on()
     for _ in range(refine_iters):
-        cb = F.broadcast(_pq_codebook_df(spark, book, m))
+        cb = F.broadcast(_pq_codebook_df(spark, _pq_by_subspace(book, m)))
         assigned = exploded.crossJoin(cb).withColumn(
             "cid",
             F.array_min(F.transform(
@@ -559,20 +559,29 @@ def pq_codebooks(corpus: DataFrame, dim: int = 64, m: int = 8,
     return book
 
 
-def _pq_codebook_df(spark, book: list, m: int):
+def _pq_codebook_df(spark, by_s: list):
     """One-row codebook DataFrame indexed BY SUBSPACE — ``cents[s]`` is
-    the cid-ordered centroid list of subspace s, so the per-row encoder
-    reaches its candidates with one element_at instead of re-filtering
-    a flat m·n_centroids array m times per row (measured 2× on the
-    encode stage at sf0.1)."""
+    the cid-ordered centroid list of subspace s (_pq_by_subspace), so
+    the per-row encoder reaches its candidates with one element_at
+    instead of re-filtering a flat m·n_centroids array m times per row
+    (measured 2× on the encode stage at sf0.1)."""
+    return local_df(spark, [(by_s,)],
+                    "cents array<array<struct<cid:bigint,cv:array<double>>>>")
+
+
+def _pq_by_subspace(book, m: int | None = None) -> list[list[tuple]]:
+    """Group PQ codebook rows (``s``, ``cid``, ``cv`` — pq_codebooks
+    output or the persisted ivfpq_pq/ table) into per-subspace
+    cid-ordered ``(cid, cv)`` lists; a centroid's position in its list
+    is its PQ code. ``m`` defaults to the highest subspace + 1."""
+    if m is None:
+        m = 1 + max((int(b["s"]) for b in book), default=-1)
     by_s: list[list] = [[] for _ in range(m)]
     for b in book:
-        by_s[b["s"]].append((b["cid"], b["cv"]))
+        by_s[int(b["s"])].append((int(b["cid"]), [float(x) for x in b["cv"]]))
     for lst in by_s:
         lst.sort(key=lambda t: t[0])
-    return spark.createDataFrame(
-        [(by_s,)], "cents array<array<struct<cid:bigint,cv:array<double>>>>"
-    )
+    return by_s
 
 
 def knn_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -598,7 +607,7 @@ def knn_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
     book = pq_codebooks(corpus, dim=dim, m=m, n_centroids=n_centroids,
                         refine_iters=refine_iters, id_col=id_col, vec_col=vec_col)
     spark = corpus.sparkSession
-    cb = F.broadcast(_pq_codebook_df(spark, book, m))
+    cb = F.broadcast(_pq_codebook_df(spark, _pq_by_subspace(book, m)))
     c = corpus.select(F.col(id_col).alias("vec_id"),
                       F.col(vec_col).cast("array<double>").alias("v"))
 
@@ -1106,7 +1115,7 @@ def knn_ivfpq(corpus: DataFrame, queries: DataFrame, k: int = 5,
     book = pq_codebooks(assigned, dim=dim, m=m, n_centroids=pq_centroids,
                         refine_iters=refine_iters,
                         id_col="vec_id", vec_col="residual")
-    cb = F.broadcast(_pq_codebook_df(spark, book, m))
+    cb = F.broadcast(_pq_codebook_df(spark, _pq_by_subspace(book, m)))
 
     def best_rcv(s: int) -> F.Column:
         cands = F.element_at(F.col("cents"), s + 1)

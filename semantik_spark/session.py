@@ -10,7 +10,24 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """Driver-scale table from Python row tuples (in ``ddl`` column
+    order), built through Arrow so it plans as a JVM ``LocalRelation``.
+    ``spark.createDataFrame(<list>)`` plans as a ``LogicalRDD`` over a
+    PythonRDD instead, and every action reading that launches Python
+    worker tasks, even for four rows. Not via pandas: an empty pandas
+    frame silently falls back to the ``LogicalRDD`` path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(app_name: str = "semantik_spark", shuffle_partitions: int | None = None) -> SparkSession:

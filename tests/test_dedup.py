@@ -316,14 +316,21 @@ def test_banded_candidates_salted_path_identical_and_spread(spark):
     hb = hot.select(F.col("doc_id").alias("doc_b"), "_bkey")
     joined = salted_join(ha, hb, on="_bkey", salt=8, fingerprint_col="doc_a")
     # AQE's partition coalescing hides the reducer spread at toy scale —
-    # freeze it so spark_partition_id reflects the actual hash layout
+    # freeze it so spark_partition_id reflects the actual hash layout.
+    # Shuffle partitions are pinned to 32: the session default follows
+    # the core count, and at 4 the MEAN partition already equals the
+    # bound below, so the spread check would fail on small boxes for
+    # reasons unrelated to salting.
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
         sizes = [r["count"] for r in
                  joined.withColumn("pid", F.spark_partition_id())
                        .groupBy("pid").count().collect()]
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     assert sum(sizes) == 250 * 250
     assert len(sizes) > 1
     assert max(sizes) < (250 * 250) / 4, sizes

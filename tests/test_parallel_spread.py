@@ -92,6 +92,14 @@ def test_concurrently_returns_in_call_order():
     assert concurrently(lambda: 42) == [42]
 
 
+def test_concurrently_with_no_thunks_returns_empty():
+    """An empty group (e.g. a cascade whose optional artifacts all
+    turned out absent) is a no-op, not a thread-pool ValueError."""
+    from semantik_spark.functions.parallel import concurrently
+
+    assert concurrently() == []
+
+
 def test_concurrently_propagates_first_error():
     """A failing thunk must fail the whole group — a silently skipped
     artifact write would corrupt an index build — and the others still

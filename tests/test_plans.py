@@ -312,6 +312,54 @@ def test_dense_serve_ivf_prunes_partitions(spark, tmp_path):
                for ln in scan_lines), plan[:2000]
 
 
+def test_ivf_serve_driver_tables_plan_as_local_relations(spark, tmp_path):
+    """Driver-built serve tables (probes, rescore candidates, query
+    vectors, codebooks) must plan as JVM LocalRelations: a LogicalRDD
+    over a PythonRDD launches Python-worker tasks on every action that
+    reads it, the serve path's dominant fixed cost. Catches a silent
+    fallback from the Arrow path to the pickled one — including for an
+    empty batch, where a pandas-built frame would fall back."""
+    import random
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from semantik_spark.operators import serving
+    from semantik_spark.operators.similarity import _codebook_df, _pq_codebook_df
+    from semantik_spark.session import local_df
+
+    def analyzed(df) -> str:
+        return df._jdf.queryExecution().analyzed().toString()
+
+    docs = _mk_docs(spark, 120)
+    idx = str(tmp_path / "idx")
+    serving.build_index(docs, idx)
+    serving.build_dense_ivf(docs, idx, n_centroids=4)
+    serving.build_sparse_pruned(spark, idx, keep=8)
+    rnd = random.Random(5)
+    vecs = [[rnd.gauss(0, 1) for _ in range(64)] for _ in range(40)]
+    serving.write_ivfpq_index(
+        spark.createDataFrame(list(enumerate(vecs)), "vec_id bigint, embedding array<double>"),
+        idx, dim=64, n_centroids=4, m=8, pq_centroids=4)
+    texts = {"query_id": [1, 2], "query_text": ["merge stream", "filter doc"]}
+    vqs = {"query_id": [1, 2], "query_vec": vecs[:2]}
+    for build in (lambda d: spark.createDataFrame(pd.DataFrame(d)),
+                  lambda d: spark.createDataFrame(pa.table(d))):
+        tq, vq = build(texts), build(vqs)
+        for out in (serving.dense_serve_ivf(spark, idx, tq, k=3, nprobe=2),
+                    serving.hybrid_serve_approx(spark, idx, tq, k=3, nprobe=2),
+                    serving.ivfpq_serve(spark, idx, vq, k=3, nprobe=2, rescore_k=6)):
+            plan = analyzed(out)
+            assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
+    for tbl in (_codebook_df(spark, [{"cid": 0, "cv": [1.0, 0.0]}]),
+                _codebook_df(spark, []),
+                _pq_codebook_df(spark, [[(0, [1.0]), (1, [0.5])]]),
+                _pq_codebook_df(spark, []),
+                local_df(spark, [], "query_id bigint, qv array<double>")):
+        plan = analyzed(tbl)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
 def test_funnel_no_cartesian_shared_user_partitioning(spark):
     """Funnel's step joins are user_id equi-joins — never a nested-loop
     product — and the only nested-loop in the plan is the broadcast of

@@ -99,7 +99,7 @@ def test_dense_serve_filtered_pushes_predicate(spark, tmp_path):
     """Payload-filtered dense serving: the predicate must reach the
     parquet scan as a pushed filter (pre-ranking), and ranking must run
     on the filtered subset so k is filled from eligible docs only."""
-    from semantik_spark.operators.serving import build_index, dense_serve_filtered
+    from semantik_spark.operators.serving import build_index, dense_serve
 
     docs = spark.range(60).selectExpr(
         "id as doc_id",
@@ -109,7 +109,7 @@ def test_dense_serve_filtered_pushes_predicate(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(docs, idx, payload_cols=("lang",))
     qs = spark.createDataFrame([("q1", "alpha beta")], ["query_id", "query_text"])
-    hits = dense_serve_filtered(spark, idx, qs, predicate={"lang": "en"}, k=5)
+    hits = dense_serve(spark, idx, qs, predicate={"lang": "en"}, k=5)
     rows = hits.collect()
     assert len(rows) == 5
     assert all(r["doc_id"] % 3 == 0 for r in rows)  # only eligible docs ranked
@@ -232,6 +232,57 @@ def test_ivf_append_equals_one_shot_frozen_codebook_build(spark, tmp_path):
                  if d.startswith("centroid_id=")}
     valid = {f"centroid_id={c['cid']}" for c in cents}
     assert pre_dirs <= post_dirs <= valid
+
+
+def test_codebook_store_follows_rebuild_in_place(spark, tmp_path):
+    """The driver codebook store is keyed by each codebook directory's
+    part-file names, which every write job stamps fresh: after IVF and
+    IVFPQ are rebuilt into the SAME root with different docs and
+    n_centroids, serving and ivf_append must match a fresh build at a
+    new root — never reuse the previous build's cached codebooks."""
+    import random
+
+    from semantik_spark.operators.serving import (
+        build_dense_ivf, dense_serve_ivf, ivf_append, ivfpq_serve,
+        write_ivfpq_index,
+    )
+
+    rnd = random.Random(11)
+    vecs = spark.createDataFrame(
+        [(i, [rnd.gauss(0, 1) for _ in range(64)]) for i in range(90)],
+        "vec_id bigint, embedding array<double>")
+    docs = spark.createDataFrame(
+        [(i, f"document about topic {i % 7} item {i}") for i in range(80)],
+        ["doc_id", "text"])
+    qdf = spark.createDataFrame(
+        [("q1", "topic 3 item"), ("q2", "document about")],
+        ["query_id", "query_text"])
+    vq = vecs.where("vec_id < 4").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+
+    def build(root, lo, n_cells):
+        build_dense_ivf(docs.where(f"doc_id >= {lo}"), root, n_centroids=n_cells)
+        write_ivfpq_index(vecs.where(f"vec_id >= {lo + 4}"), root, dim=64,
+                          n_centroids=n_cells, m=8, pq_centroids=4)
+
+    def served(root):
+        ivf = sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                     for r in dense_serve_ivf(spark, root, qdf, k=5, nprobe=2).collect())
+        pq = sorted((r["query_id"], r["rank"], r["vec_id"], r["cos"])
+                    for r in ivfpq_serve(spark, root, vq, k=5, nprobe=2,
+                                         rescore_k=10).collect())
+        return ivf, pq
+
+    root, fresh = str(tmp_path / "root"), str(tmp_path / "fresh")
+    build(root, 0, 8)
+    first = served(root)  # fills the store with the first build's codebooks
+    build(root, 10, 4)
+    build(fresh, 10, 4)
+    assert served(root) == served(fresh) != first
+    delta = docs.where("doc_id < 10")
+    ivf_append(spark, root, delta)
+    ivf_append(spark, fresh, delta)
+    assert served(root) == served(fresh)
 
 
 def test_hybrid_serve_approx_full_width_equals_exact(spark, tmp_path):
