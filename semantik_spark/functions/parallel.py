@@ -37,9 +37,11 @@ def concurrently(*thunks, max_workers: int = 4) -> list:
     output paths, no read-what-another-writes, and no crash-ordering
     contract between them (a replay-marker commit point or an
     idempotence fence like tombstones-last must stay OUTSIDE the pool,
-    sequenced after it). Exceptions propagate — the first failing
-    thunk's error is re-raised after all threads finish, so no write is
-    silently skipped. 2-4 in flight is plenty (guide §2.6); FIFO
+    sequenced after it). Exceptions propagate — after all threads
+    finish, the first failing thunk's (in call order) error is
+    re-raised, and every further failure is attached to it with
+    ``add_note`` as ``"concurrently: thunk <i> also failed: <repr>"``,
+    so no write is silently skipped and no error is lost. 2-4 in flight is plenty (guide §2.6); FIFO
     scheduling gives back-fill behaviour at any cluster scale, so this
     is placement-free — it changes WHEN jobs are submitted, never what
     any of them computes. No thunks → ``[]``.
@@ -48,16 +50,18 @@ def concurrently(*thunks, max_workers: int = 4) -> list:
         return [t() for t in thunks]
     with ThreadPoolExecutor(max_workers=min(max_workers, len(thunks))) as pool:
         futures = [pool.submit(t) for t in thunks]
-        results, first_err = [], None
-        for f in futures:
+        results, errs = [], []
+        for i, f in enumerate(futures):
             try:
                 results.append(f.result())
             except BaseException as e:  # noqa: BLE001 — collect, re-raise below
-                if first_err is None:
-                    first_err = e
+                errs.append((i, e))
                 results.append(None)
-        if first_err is not None:
-            raise first_err
+        if errs:
+            first = errs[0][1]
+            for i, e in errs[1:]:
+                first.add_note(f"concurrently: thunk {i} also failed: {e!r}")
+            raise first
         return results
 
 

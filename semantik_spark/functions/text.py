@@ -83,8 +83,3 @@ def word_shingles(c: Column | str, n: int = 3) -> Column:
     expressions, but hot paths should materialize the tokens column and
     call shingles_from_tokens (see that docstring for why)."""
     return shingles_from_tokens(whitespace_tokens(c), n)
-
-
-def token_estimate(c: Column | str) -> Column:
-    """chars/4 token estimate (reference character_strategy.py:270)."""
-    return F.ceil(F.length(_col(c)) / F.lit(4.0)).cast("bigint")

@@ -26,21 +26,6 @@ def dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Σ a_i·b_i as an UNROLLED fixed-width expression chain
-    ((0.0 + a0·b0) + a1·b1) + … — bit-identical to dot() (same seed,
-    same left-to-right order, so DuckDB's sequential list_dot_product
-    still matches) but whole-stage-codegen-able: dot() is an
-    interpreted higher-order aggregate, ~20× slower when evaluated
-    per PAIR in an all-pairs scorer. Use when the dimension is known
-    (probe the first row) and the expression sits in a hot loop."""
-    ca, cb = _col(a), _col(b)
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + ca[i].cast("double") * cb[i].cast("double")
-    return acc
-
-
 def norm(a: Column | str) -> Column:
     return F.sqrt(F.aggregate(_col(a), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 

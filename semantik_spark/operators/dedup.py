@@ -208,22 +208,6 @@ def _minhash_wide(arr: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 16, n: int = 3,
-                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """doc_id, seed (0..num_hashes-1), minhash BIGINT (long form of
-    _minhash_wide, kept for the operator's public row contract)."""
-    wide = _minhash_wide(
-        cache(shingle_arrays(docs, n, id_col, text_col)), num_hashes
-    )
-    pairs = F.array(*[
-        F.struct(F.lit(i).alias("seed"), F.col(f"mh{i}").alias("minhash"))
-        for i in range(num_hashes)
-    ])
-    return wide.select("doc_id", F.explode(pairs).alias("p")).select(
-        "doc_id", "p.seed", "p.minhash"
-    )
-
-
 def banded_candidates(banded: DataFrame,
                       hot_bucket_threshold: int | None = 4096,
                       salt: int = 8) -> DataFrame:

@@ -46,6 +46,7 @@ from semantik_spark.operators.similarity import (
     ivf_centroids, ivf_refine, pq_codebooks,
 )
 from semantik_spark.plans.predicates import compile_predicate
+from semantik_spark.functions import statedir
 from semantik_spark.functions.caching import cache, checkpoint
 from semantik_spark.functions.parallel import concurrently, spread
 from semantik_spark.session import local_df
@@ -79,22 +80,17 @@ def build_sparse(docs: DataFrame, path: str,
     terms = bm25.term_stats_from_state(tstate, stats)
     post = bm25.postings(tok, terms, stats)
 
-    # reset the mergeable stats state so a later APPEND-path
-    # merge_sparse_append continues from this exact rebuild — via the
-    # atomic whole-directory swap, never two in-place overwrites
-    def _write_state(tmp: str) -> None:
-        concurrently(
-            lambda: cstate.write.mode("overwrite").parquet(f"{tmp}/corpus"),
-            lambda: tstate.write.mode("overwrite").parquet(f"{tmp}/terms"),
-        )
-
-    # terms/, postings/ and the state swap are four independent writes
+    # terms/, postings/ and the state publish are independent writes
     # over the shared cached tok/tstate (different paths, nothing reads
-    # what another writes, and a full rebuild has no inter-artifact
-    # crash-ordering contract — only the state swap itself must publish
-    # corpus+terms together, which the directory rename guarantees
-    # regardless of internal write order) — overlap them (guide §2.6;
-    # this path's jobs move KB-MB, its wall is per-job fixed cost).
+    # what another writes) — overlap them (guide §2.6; this path's jobs
+    # move KB-MB, its wall is per-job fixed cost). CRASH WINDOW: the
+    # three writes land in any order, and terms/ and postings/ are plain
+    # overwrites, so a crash can leave either one partial or from the
+    # previous build beside a new bm25_state — which carries the
+    # stream's _last_batch marker forward, so a merge replay stays
+    # fenced over the stale tables. The only atomic unit is the state
+    # directory itself (corpus+terms published by one rename); recovery
+    # for a crashed rebuild is to rerun build_sparse.
     # the persisted postings drop term_id: appended batches are scored
     # under a GROWN vocabulary whose rank-based ids shift, so a stored
     # id column would mix id spaces across append generations — the
@@ -103,79 +99,22 @@ def build_sparse(docs: DataFrame, path: str,
         lambda: terms.write.mode("overwrite").parquet(f"{path}/terms"),
         lambda: post.drop("term_id").write.mode("overwrite")
                     .parquet(f"{path}/postings"),
-        lambda: _bm25_state_swap(path, _write_state),
+        # reset the mergeable stats state so a later APPEND-path
+        # merge_sparse_append continues from this exact rebuild
+        lambda: _publish_bm25_state(path, cstate, tstate),
     )
     tok.unpersist()
 
 
-def _bm25_state_read(spark: SparkSession, path: str, sub: str):
-    """Read {path}/bm25_state/{sub} with the __old crash-window
-    fallback. Returns None ONLY when neither location exists (a
-    genuinely first batch); a read failure on an EXISTING state
-    propagates — the previous bare except treated any transient read
-    error as first-batch and silently reset the corpus-global BM25
-    stats to the latest delta batch."""
-    import os
-
-    base = os.path.join(path, "bm25_state", sub)
-    old = os.path.join(path, "bm25_state__old", sub)
-    if os.path.exists(base):
-        try:
-            return spark.read.parquet(base)
-        except Exception:
-            if os.path.exists(old):
-                return spark.read.parquet(old)
-            raise
-    if os.path.exists(old):
-        return spark.read.parquet(old)
-    return None
-
-
-def _bm25_state_swap(path: str, write_fn, batch_id: int | None = None) -> None:
-    """Atomically publish a new bm25_state: ``write_fn(staging_dir)``
-    writes corpus/ and terms/ into the staging dir, then the rename
-    pair swaps the WHOLE directory in — a crash can no longer leave
-    n_docs including a batch whose df is missing (the old in-place
-    overwrites had exactly that window). ``batch_id`` writes the
-    ``_last_batch`` replay marker into the staging dir so it publishes
-    atomically with the state; non-streaming writers (exact rebuild,
-    GDPR delete) preserve the stream's existing watermark instead."""
-    import os
-    import shutil
-
-    base = os.path.join(path, "bm25_state")
-    tmp = base + "__tmp"
-    old = base + "__old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_fn(tmp)
-    marker = os.path.join(base, "_last_batch")
-    if batch_id is not None:
-        with open(os.path.join(tmp, "_last_batch"), "w") as fh:
-            fh.write(str(int(batch_id)))
-    elif os.path.exists(marker):
-        shutil.copy(marker, os.path.join(tmp, "_last_batch"))
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(base):
-        os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _bm25_last_batch(path: str) -> int | None:
-    """The bm25_state ``_last_batch`` replay marker (with the __old
-    crash-window fallback): Structured Streaming replays a crashed
-    batch under the SAME batch_id, so ``batch_id <= marker`` means the
-    state already merged this batch — merging again would double-add
-    n_docs/sum_dl/df."""
-    import os
-
-    for base in (os.path.join(path, "bm25_state"),
-                 os.path.join(path, "bm25_state__old")):
-        f = os.path.join(base, "_last_batch")
-        if os.path.exists(f):
-            with open(f) as fh:
-                return int(fh.read().strip())
-    return None
+def _publish_bm25_state(path: str, corpus: DataFrame, terms: DataFrame,
+                        batch_id: int | None = None) -> None:
+    """The one writer of {path}/bm25_state: corpus/ and terms/ staged
+    together and published by one statedir swap — a crash can never
+    leave n_docs including a batch whose df is missing."""
+    statedir.publish(f"{path}/bm25_state", lambda tmp: concurrently(
+        lambda: corpus.write.mode("overwrite").parquet(f"{tmp}/corpus"),
+        lambda: terms.write.mode("overwrite").parquet(f"{tmp}/terms"),
+    ), batch_id)
 
 
 def merge_sparse_append(delta_docs: DataFrame, path: str,
@@ -205,12 +144,12 @@ def merge_sparse_append(delta_docs: DataFrame, path: str,
     """
     spark = delta_docs.sparkSession
     if batch_id is not None:
-        last = _bm25_last_batch(path)
+        last = statedir.last_batch(f"{path}/bm25_state")
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
     tok = cache(bm25.tokenize(delta_docs, id_col=id_col, text_col=text_col))
-    old_c = _bm25_state_read(spark, path, "corpus")
-    old_t = _bm25_state_read(spark, path, "terms")
+    old_c = statedir.read(spark, f"{path}/bm25_state", "corpus")
+    old_t = statedir.read(spark, f"{path}/bm25_state", "terms")
     if old_c is not None and old_t is not None:
         new_c = bm25.merge_corpus_state(old_c, tok)
         new_t = bm25.merge_term_state(old_t, tok)
@@ -224,12 +163,6 @@ def merge_sparse_append(delta_docs: DataFrame, path: str,
     merged_c, merged_t = new_c, new_t
     new_c, new_t = concurrently(
         lambda: checkpoint(merged_c), lambda: checkpoint(merged_t))
-
-    def _write_state(tmp: str) -> None:
-        concurrently(
-            lambda: new_c.write.mode("overwrite").parquet(f"{tmp}/corpus"),
-            lambda: new_t.write.mode("overwrite").parquet(f"{tmp}/terms"),
-        )
 
     # postings + terms are written BEFORE the state swap: the swap
     # publishes the _last_batch replay marker, so it must be the SINGLE
@@ -265,7 +198,7 @@ def merge_sparse_append(delta_docs: DataFrame, path: str,
         _write_postings,
         lambda: terms.write.mode("overwrite").parquet(f"{path}/terms"),
     )
-    _bm25_state_swap(path, _write_state, batch_id=batch_id)
+    _publish_bm25_state(path, new_c, new_t, batch_id)
     tok.unpersist()
 
 
@@ -437,6 +370,24 @@ def _rrf_union_fuse(dscored: DataFrame, sscored: DataFrame,
     )
 
 
+def _ivf_embed(docs: DataFrame, id_col: str, text_col: str,
+               payload_cols: tuple[str, ...]) -> DataFrame:
+    """The dense_ivf row shape: (doc_id, embedding array<double>,
+    payload...) — embedded once, shared by build and append."""
+    return docs.select(F.col(id_col).alias("doc_id"),
+                       mock_embedding(text_col).cast("array<double>").alias("embedding"),
+                       *payload_cols)
+
+
+def _ivf_assign(spark: SparkSession, emb: DataFrame, cent_rows: list) -> DataFrame:
+    """Tag ``emb`` rows with their nearest cell (``centroid_id``) under
+    a frozen codebook — the ONE assignment expression, so an append
+    lands every vector in the cell a one-shot build would pick."""
+    return emb.crossJoin(F.broadcast(_codebook_df(spark, cent_rows))).withColumn(
+        "centroid_id", -F.array_max(_nearest_centroids("embedding"))["negcid"]
+    ).drop("cents")
+
+
 def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
                     refine_iters: int = 1,
                     id_col: str = "doc_id", text_col: str = "text",
@@ -448,9 +399,7 @@ def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
     its cells from disk — real partition pruning, not a post-scan
     filter — which is the 100 TB difference between scanning
     nprobe/n_centroids of the corpus and scanning all of it."""
-    emb = docs.select(F.col(id_col).alias("doc_id"),
-                      mock_embedding(text_col).cast("array<double>").alias("embedding"),
-                      *payload_cols)
+    emb = _ivf_embed(docs, id_col, text_col, payload_cols)
     # train_sample_mod: codebook trains on the deterministic hash
     # sample (similarity.train_sample) — the 100 TB practice; the FULL
     # corpus is still assigned and written below under the frozen result
@@ -461,14 +410,11 @@ def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
                                id_col="doc_id", vec_col="embedding",
                                train_sample_mod=train_sample_mod)
     spark = docs.sparkSession
-    codebook = F.broadcast(_codebook_df(spark, cent_rows))
     # NO spread before the partitionBy write (r14, measured): a spread
     # multiplies the per-cell file count by the partition count (the
     # guide §6 small-files trap measured on write_ivfpq_index) and the
     # embed+assign map is not compute-bound locally
-    assigned = emb.crossJoin(codebook).withColumn(
-        "centroid_id", -F.array_max(_nearest_centroids("embedding"))["negcid"]
-    ).drop("cents")
+    assigned = _ivf_assign(spark, emb, cent_rows)
     # the cell-partitioned table and the tiny codebook sidecar are
     # independent writes — overlap them (§2.6)
     concurrently(
@@ -502,17 +448,9 @@ def ivf_append(spark: SparkSession, path: str, new_docs: DataFrame,
     new rows + an append write; no shuffle of existing index data.
     """
     cells = _read_codebook(spark, f"{path}/codebook", _cells)
-    codebook = F.broadcast(_codebook_df(spark, [
-        {"cid": cid, "cv": cv} for cid, cv in cells.items()
-    ]))
-    emb = new_docs.select(
-        F.col(id_col).alias("doc_id"),
-        mock_embedding(text_col).cast("array<double>").alias("embedding"),
-        *payload_cols,
-    )
-    assigned = emb.crossJoin(codebook).withColumn(
-        "centroid_id", -F.array_max(_nearest_centroids("embedding"))["negcid"]
-    ).drop("cents")
+    assigned = _ivf_assign(
+        spark, _ivf_embed(new_docs, id_col, text_col, payload_cols),
+        [{"cid": cid, "cv": cv} for cid, cv in cells.items()])
     assigned.write.mode("append").partitionBy("centroid_id") \
         .parquet(f"{path}/dense_ivf")
 
@@ -974,16 +912,10 @@ def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,
     # cached tok — overlap their materialization (guide §2.6)
     new_c, new_t = concurrently(
         lambda: checkpoint(bm25.retract_corpus_state(
-            _bm25_state_read(spark, path, "corpus"), tok)),
+            statedir.read(spark, f"{path}/bm25_state", "corpus"), tok)),
         lambda: checkpoint(bm25.retract_term_state(
-            _bm25_state_read(spark, path, "terms"), tok)),
+            statedir.read(spark, f"{path}/bm25_state", "terms"), tok)),
     )
-
-    def _write_state(tmp: str) -> None:
-        concurrently(
-            lambda: new_c.write.mode("overwrite").parquet(f"{tmp}/corpus"),
-            lambda: new_t.write.mode("overwrite").parquet(f"{tmp}/terms"),
-        )
 
     def _rebuild_terms() -> None:
         # reads only the CHECKPOINTED retracted state, never the files
@@ -1020,15 +952,20 @@ def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,
             w.parquet(p)
         return run
 
-    # state swap, terms rebuild and the per-artifact rewrites are
-    # mutually independent (disjoint paths; every input they share —
-    # ids, new_c, new_t — is already checkpointed), so overlap them
-    # (§2.6). The tombstones append stays strictly LAST, outside the
-    # pool: it is the idempotence fence — a retried cascade filters ids
-    # through the tombstones, so they may only record docs whose
-    # rewrites all completed.
+    # state publish, terms rebuild and the per-artifact rewrites write
+    # disjoint paths from already-checkpointed inputs (ids, new_c,
+    # new_t), so they are overlapped (§2.6) — but they are NOT
+    # crash-independent. The tombstones append stays strictly LAST,
+    # outside the pool: a retried cascade filters ids through the
+    # tombstones AND through presence in postings/dense/dense_log, so
+    # the retry fence covers the rewrites only, not the state
+    # retraction. CRASH WINDOWS: if the rewrites complete but the state
+    # publish does not, the retry finds the erased docs no longer live
+    # and never publishes their retraction (n_docs/sum_dl/df overcount
+    # them); if the state publishes but a rewrite does not, the retry
+    # still sees the docs live and retracts them a second time.
     concurrently(
-        lambda: _bm25_state_swap(path, _write_state),
+        lambda: _publish_bm25_state(path, new_c, new_t),
         _rebuild_terms,
         *[_rewrite(sub, part) for sub, part in artifacts
           if os.path.exists(f"{path}/{sub}")],

@@ -29,11 +29,6 @@ def _stopword_hits(tokens: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens, lambda t: F.array_contains(wl, t)))
 
 
-def language_scores(text_col: str) -> dict[str, Column]:
-    toks = raw_tokens(text_col)
-    return {lang: _stopword_hits(toks, words) for lang, words in LANG_STOPWORDS.items()}
-
-
 def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """doc_id, lang_pred, lang_hits — function-word-hit language ID.
 

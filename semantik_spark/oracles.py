@@ -1518,12 +1518,6 @@ ssig AS (
 )"""
 
 
-def q_simhash_signatures(bits: int = 60) -> str:
-    return f"""
-WITH {simhash_sig_ctes('documents', bits).lstrip()}
-SELECT doc_id, simhash FROM ssig"""
-
-
 def q_simhash_pairs(max_hamming: int = 3, bits: int = 60) -> str:
     """All-pairs in DuckDB (fine at oracle SF); the Spark side is
     band-blocked, which pigeonhole makes exactly complete, so the two
@@ -4846,54 +4840,6 @@ adj AS (SELECT u AS src, v AS dst FROM und
 est0 AS (SELECT src AS id, count(*)::BIGINT AS est FROM adj GROUP BY src){''.join(its)}
 SELECT d.id, d.est AS degree, {prev}.est AS core
 FROM est0 d JOIN {prev} ON {prev}.id = d.id"""
-
-
-def q_simhash_radius_report(radii: tuple = (2, 4, 6, 8), n: int = 3,
-                            threshold: float = 0.5, bits: int = 60) -> str:
-    """Twin of dedup.simhash_radius_report: all-pairs hamming at
-    max(radii) (fine at oracle SF; the Spark side band-blocks), truth
-    from the exact shingle-Jaccard join, P/R per radius via a VALUES
-    theta-join. simhash_sig_ctes and shingle_ctes both open with the
-    identical wtok CTE over aug_docs, so the shingle chain is spliced
-    in from its second CTE."""
-    sh = shingle_ctes("aug_docs", n)
-    assert "), shl AS (" in sh
-    sh_tail = "shl AS (" + sh.split("), shl AS (", 1)[1]
-    values = ", ".join(f"({int(r)})" for r in radii)
-    return f"""
-WITH {AUGMENTED_DOCS_CTE.lstrip()},
-{simhash_sig_ctes('aug_docs', bits).lstrip()},
-{sh_tail},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         bit_count(xor(a.simhash, b.simhash))::INT AS hamming
-  FROM ssig a JOIN ssig b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= {max(radii)}
-),
-truth AS (
-  SELECT doc_a, doc_b FROM (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           count(*)::DOUBLE / (a.n_shingles + b.n_shingles - count(*)) AS j
-    FROM sh a JOIN sh b USING (shingle)
-    WHERE a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id, a.n_shingles, b.n_shingles)
-  WHERE j >= {threshold}
-),
-marked AS (
-  SELECT p.hamming,
-         CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_true
-  FROM pairs p LEFT JOIN truth t
-    ON p.doc_a = t.doc_a AND p.doc_b = t.doc_b
-),
-nex AS (SELECT count(*)::BIGINT AS n_exact FROM truth)
-SELECT r.radius::INT AS radius,
-       count(*)::BIGINT AS n_found,
-       sum(is_true)::BIGINT AS n_true_found,
-       (SELECT n_exact FROM nex) AS n_exact,
-       round(sum(is_true)::DOUBLE / count(*), 6) AS precision,
-       round(sum(is_true)::DOUBLE / (SELECT n_exact FROM nex), 6) AS recall
-FROM marked m JOIN (VALUES {values}) r(radius) ON m.hamming <= r.radius
-GROUP BY r.radius"""
 
 
 def q_cdc_dedup_stats(window: int = 16, modulus: int = 64) -> str:

@@ -570,32 +570,6 @@ def parse_structured(files: DataFrame) -> DataFrame:
     return src.mapInPandas(run, schema=_STRUCTURED_SCHEMA)
 
 
-# --- unstructured parser (slot — libs not in image) ------------------------
-
-def unstructured_available() -> bool:
-    try:
-        import unstructured  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def parse_unstructured(files: DataFrame) -> DataFrame:
-    """S6 slot for the LEGACY binary formats (.doc/.ppt): pandas-batched
-    `unstructured.partition.auto` over binary content
-    (unstructured.py:160-170). PDF/DOCX/PPTX/XLSX/ODT/EPUB/HTML/eml/
-    structured formats all have REAL stdlib parsers above; only the two
-    pre-OOXML OLE formats genuinely need the library stack, which is
-    not in this image."""
-    if not unstructured_available():
-        raise NotImplementedError(
-            "unstructured not installed in this image; "
-            "route_parsers marks these rows parse_status='needs_binary_parser'"
-        )
-    raise NotImplementedError("real unstructured wiring pending model image")
-
-
 def parse(files: DataFrame) -> DataFrame:
     """Registry-dispatched parse: text rows decode JVM-side
     (sources.local.parse_text); email/html/structured/pdf/office rows

@@ -19,7 +19,20 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from semantik_spark.functions import statedir
 from semantik_spark.functions.caching import checkpoint as _ckpt
+
+
+def _run_batches(stream: DataFrame, process, checkpoint: str):
+    """Start ``process(batch, batch_id)`` as a checkpointed
+    foreachBatch query that drains what is available and stops — the
+    one wiring every sink here uses. Returns the StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_files(spark: SparkSession, root: str, schema: str,
@@ -30,6 +43,33 @@ def stream_files(spark: SparkSession, root: str, schema: str,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(root)
+
+
+def _detect_changes(spark: SparkSession, hashed: DataFrame,
+                    catalog_path: str, id_col: str):
+    """J4 change detection: ``hashed`` rows whose (id, content_hash) is
+    not yet in the catalog, plus the catalog's (_old_id, _old_hash)
+    projection (None on the first batch). The catalog is read through
+    statedir.read, so ONLY a missing catalog counts as a first batch —
+    an unreadable existing one fails the batch instead of re-appending
+    every row as "changed"."""
+    cat = statedir.read(spark, catalog_path)
+    if cat is None:  # first batch: no catalog yet
+        return hashed, None
+    old = cat.select(
+        F.col(id_col).alias("_old_id"), F.col("content_hash").alias("_old_hash")
+    )
+    # eqNullSafe: a NULL text (sha2 -> NULL hash) or NULL id must match
+    # its own prior delivery — plain equality is NULL for those rows,
+    # the anti-join keeps them forever, and every re-delivery
+    # re-appends them
+    changed = hashed.join(
+        old,
+        hashed[id_col].eqNullSafe(F.col("_old_id"))
+        & F.col("content_hash").eqNullSafe(F.col("_old_hash")),
+        "left_anti",
+    )
+    return changed, old
 
 
 def incremental_ingest(stream: DataFrame, catalog_path: str, checkpoint: str,
@@ -47,32 +87,12 @@ def incremental_ingest(stream: DataFrame, catalog_path: str, checkpoint: str,
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         hashed = batch.withColumn("content_hash", F.sha2(F.col(text_col), 256))
-        try:
-            old = spark.read.parquet(catalog_path).select(
-                F.col(id_col).alias("_old_id"), F.col("content_hash").alias("_old_hash")
-            )
-            # eqNullSafe: a NULL text (sha2 -> NULL hash) or NULL id
-            # must match its own prior delivery — plain equality is
-            # NULL for those rows, the anti-join keeps them forever,
-            # and every re-delivery re-appends them
-            changed = hashed.join(
-                old,
-                hashed[id_col].eqNullSafe(F.col("_old_id"))
-                & F.col("content_hash").eqNullSafe(F.col("_old_hash")),
-                "left_anti",
-            )
-        except Exception:  # first batch: no catalog yet
-            changed = hashed
+        changed, _ = _detect_changes(spark, hashed, catalog_path, id_col)
         if transform is not None:
             changed = transform(changed)
         changed.write.mode("append").parquet(catalog_path)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream, process, checkpoint)
 
 
 def streaming_dedup(stream: DataFrame, key_cols: list[str],
@@ -160,32 +180,15 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         hashed = batch.withColumn("content_hash", F.sha2(F.col(text_col), 256))
-        try:
-            old = spark.read.parquet(catalog_path).select(
-                F.col(id_col).alias("_old_id"), F.col("content_hash").alias("_old_hash")
-            )
-            # eqNullSafe: a NULL text (sha2 -> NULL hash) or NULL id
-            # must match its own prior delivery — plain equality is
-            # NULL for those rows, the anti-join keeps them forever,
-            # and every re-delivery re-appends them
-            changed = hashed.join(
-                old,
-                hashed[id_col].eqNullSafe(F.col("_old_id"))
-                & F.col("content_hash").eqNullSafe(F.col("_old_hash")),
-                "left_anti",
-            )
-            if sparse_refresh == "merge":
-                # delta-merge is only exact for NEW doc ids; an update
-                # (same id, different hash) needs the old version
-                # retracted → exact rebuild for that batch
-                n_updates = changed.join(
-                    old.select(F.col("_old_id").alias(id_col)).distinct(),
-                    id_col, "left_semi").count()
-            else:
-                n_updates = 0
-        except Exception:  # first batch: no catalog yet
-            changed = hashed
-            n_updates = 0
+        changed, old = _detect_changes(spark, hashed, catalog_path, id_col)
+        n_updates = 0
+        if old is not None and sparse_refresh == "merge":
+            # delta-merge is only exact for NEW doc ids; an update
+            # (same id, different hash) needs the old version
+            # retracted → exact rebuild for that batch
+            n_updates = changed.join(
+                old.select(F.col("_old_id").alias(id_col)).distinct(),
+                id_col, "left_semi").count()
         changed = _ckpt(changed.withColumn(
             "_batch_id", F.lit(batch_id).cast("bigint")
         ))  # one evaluation, three sinks
@@ -216,11 +219,9 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
             # the catalog is an append log (batch-stamped): resolve to
             # the newest version per doc — INCLUDING this batch, which
             # is not in the catalog yet — before the exact rebuild
-            try:
-                catalog = spark.read.parquet(catalog_path) \
-                    .unionByName(changed, allowMissingColumns=True)
-            except Exception:  # first batch: no catalog yet
-                catalog = changed
+            catalog = statedir.read(spark, catalog_path)
+            catalog = changed if catalog is None else \
+                catalog.unionByName(changed, allowMissingColumns=True)
             w = Window.partitionBy(id_col).orderBy(F.desc("_batch_id"))
             latest = (
                 catalog.withColumn("_rn", F.row_number().over(w))
@@ -229,12 +230,7 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
             serving.build_sparse(latest, idx_dir, id_col=id_col, text_col=text_col)
         changed.write.mode("append").parquet(catalog_path)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream, process, checkpoint)
 
 
 def dense_latest(spark: SparkSession, idx_dir: str) -> DataFrame:
@@ -258,24 +254,20 @@ def compact_dense_log(spark: SparkSession, idx_dir: str) -> dict:
     compacted segment in, so read-time upsert cost (dense_latest's
     window) returns to O(live docs) after heavy churn.
 
-    Local-FS swap is staging-dir + rename (POSIX-atomic at the dir
-    entry); on an object store the same job writes a new segment and
-    flips a manifest pointer instead — the blue/green shape
-    operators/maintenance.BlueGreenIndex already implements for the
-    full index. Appends that land between the snapshot read and the
-    swap are the same race every log+compact store has; schedule
-    compaction from the single writer (the foreachBatch loop is
-    serialized per stream, so triggering it every Nth batch is safe).
+    The swap is functions/statedir.publish, and the log is read through
+    statedir.read, so a rerun after a crash between the two publish
+    renames compacts the fallback copy. Appends that land between the
+    snapshot read and the swap are the same race every log+compact
+    store has; schedule compaction from the single writer (the
+    foreachBatch loop is serialized per stream, so triggering it every
+    Nth batch is safe).
 
     Returns {"rows_before", "rows_after", "batches_merged"}.
     """
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
     log_dir = f"{idx_dir}/dense_log"
-    log = spark.read.parquet(log_dir)
+    log = statedir.read(spark, log_dir)
     stats = log.agg(
         F.count("*").alias("n"),
         F.count_distinct("doc_id").alias("nd"),
@@ -287,13 +279,7 @@ def compact_dense_log(spark: SparkSession, idx_dir: str) -> dict:
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    tmp = f"{idx_dir}/dense_log__compacting"
-    latest.write.mode("overwrite").parquet(tmp)
-    old = f"{idx_dir}/dense_log__old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(log_dir, old)
-    os.rename(tmp, log_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    statedir.publish(log_dir, lambda tmp: latest.write.mode("overwrite").parquet(tmp))
     return {
         "rows_before": int(stats["n"]),
         "rows_after": int(stats["nd"]),
@@ -323,93 +309,48 @@ def dense_as_of(spark: SparkSession, idx_dir: str, batch_id: int) -> DataFrame:
     )
 
 
-def _read_state(spark: SparkSession, state_path: str) -> DataFrame | None:
-    """Read a sketch state table, tolerating the swap crash window.
+def _merge_sink(stream: DataFrame, state_path: str, checkpoint: str,
+                step: Callable[[DataFrame, DataFrame | None], DataFrame]):
+    """The one driver of the mergeable-state sinks: per micro-batch,
+    skip a replayed batch id (``batch_id <= statedir.last_batch``:
+    Structured Streaming replays a crashed batch under the SAME id, and
+    an additive merge would double-add it), read the state (None on the
+    first batch), ``step(batch, old_or_None)`` → the new state, and
+    publish it with the batch's marker through statedir.publish — the
+    batch's single commit point. Returns the StreamingQuery."""
 
-    The state swap is rename(state, state__old); rename(tmp, state) —
-    a crash between the two renames leaves the sketch ONLY at
-    ``state__old``. A bare read-or-None here would silently restart the
-    sketch from empty (ADVICE r5): fall back to ``__old`` before
-    treating the read failure as first-batch. Set-union merges (KMV,
-    HLL, SCD2's lattice) are idempotent under replay by algebra;
-    count-ADDITION sketches are NOT — a crash after the swap completes
-    but before the streaming checkpoint commits would replay the batch
-    against the POST-batch state and double-add it, which is why every
-    additive sink also carries the ``_last_batch`` marker
-    (_last_merged_batch) and skips replayed batch ids.
+    def process(batch: DataFrame, batch_id: int) -> None:
+        last = statedir.last_batch(state_path)
+        if last is not None and batch_id <= last:
+            return  # checkpoint replay of an already-merged batch
+        new = step(batch, statedir.read(batch.sparkSession, state_path))
+        statedir.publish(state_path,
+                         lambda tmp: new.write.mode("overwrite").parquet(tmp),
+                         batch_id)
 
-    Returns None ONLY when neither location exists (a genuinely first
-    batch); a read failure on an EXISTING state propagates — the
-    previous bare except treated any transient read error as
-    first-batch and silently reset the sketch to the latest delta
-    batch (the serving._bm25_state_read hardening, applied here)."""
-    import os
-
-    if os.path.exists(state_path):
-        try:
-            return spark.read.parquet(state_path)
-        except Exception:
-            if os.path.exists(state_path + "__old"):
-                return spark.read.parquet(state_path + "__old")
-            raise
-    if os.path.exists(state_path + "__old"):
-        return spark.read.parquet(state_path + "__old")
-    return None
+    return _run_batches(stream, process, checkpoint)
 
 
-def _swap_state(merged: DataFrame, state_path: str,
-                batch_id: int | None = None) -> None:
-    """Atomic publish of a merged state: write to ``__merging``, rename
-    the current state to ``__old``, rename ``__merging`` in, drop
-    ``__old`` — the staging-dir+rename shape every sink here used
-    inline, deduplicated. With ``batch_id``, a ``_last_batch`` marker
-    file rides INSIDE the staging dir (the underscore prefix keeps it
-    invisible to parquet readers), so the publishing rename makes the
-    state and its batch watermark visible atomically."""
-    import os
-    import shutil
-
-    tmp = state_path + "__merging"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        with open(os.path.join(tmp, "_last_batch"), "w") as fh:
-            fh.write(str(int(batch_id)))
-    old_dir = state_path + "__old"
-    shutil.rmtree(old_dir, ignore_errors=True)
-    if os.path.exists(state_path):
-        os.rename(state_path, old_dir)
-    os.rename(tmp, state_path)
-    shutil.rmtree(old_dir, ignore_errors=True)
-
-
-def _last_merged_batch(state_path: str) -> int | None:
-    """The state's ``_last_batch`` marker, with the same ``__old``
-    crash-window fallback as _read_state. Additive (count-sum) sinks
-    check it at the top of process(): Structured Streaming replays a
-    crashed batch under the SAME batch_id, so ``batch_id <= marker``
-    means the state already contains this batch and merging it again
-    would double-add — the replay becomes a no-op instead."""
-    import os
-
-    for p in (state_path, state_path + "__old"):
-        f = os.path.join(p, "_last_batch")
-        if os.path.exists(f):
-            with open(f) as fh:
-                return int(fh.read().strip())
-    return None
+def _add_counts(old: DataFrame, partial: DataFrame, *keys: str) -> DataFrame:
+    """Cell-wise count addition of a batch partial into a state — the
+    merge of every additive (keys..., n bigint) sketch here."""
+    return (
+        old.unionByName(partial)
+        .groupBy(*keys)
+        .agg(F.sum("n").cast("bigint").alias("n"))
+    )
 
 
 def _served_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Reader-side twin of _read_state: every *_from_state server rides
-    the same __old crash-window fallback the writers use — a crash
-    between the two publish renames must not black out serving until
-    the next micro-batch happens to run — and a genuinely missing
-    state raises a clear error instead of an opaque parquet exception."""
-    st = _read_state(spark, state_path)
+    """statedir.read for every *_from_state server: the same
+    crash-window fallback the writers use — a crash between the two
+    publish renames must not black out serving until the next
+    micro-batch happens to run — and a genuinely missing state raises
+    a clear error instead of an opaque parquet exception."""
+    st = statedir.read(spark, state_path)
     if st is None:
         raise FileNotFoundError(
-            f"no sketch state at {state_path} (nor its __old crash-window "
+            f"no sketch state at {state_path} (nor its crash-window "
             f"fallback) — run the corresponding streaming sink first")
     return st
 
@@ -426,24 +367,15 @@ def streaming_kmv(stream: DataFrame, state_path: str, checkpoint: str,
     that the state is plain sorted doubles any engine can verify.
 
     State is one parquet table (group, us array<double>) of at most
-    k doubles per group — driver-trivial at any corpus scale; the swap
-    is staging-dir + rename like compact_dense_log. Returns the
-    StreamingQuery (availableNow semantics are up to the caller's
-    trigger via stream source options; this uses the default
-    foreachBatch trigger wiring of incremental_ingest).
+    k doubles per group — driver-trivial at any corpus scale; it is
+    published through functions/statedir (the _merge_sink driver every
+    sketch sink here shares). Returns the StreamingQuery.
     """
-    import os
-    import shutil
+    from pyspark.sql import Window
 
     from semantik_spark.functions.hashing import hash60
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-merged batch
-        from pyspark.sql import Window
-
+    def step(batch: DataFrame, old: DataFrame | None) -> DataFrame:
         u = (hash60(F.col(value_col)) + F.lit(1)) / F.lit(float(2**60))
         # k smallest per group via distinct + rank window, NOT
         # collect_set: collect_set materializes EVERY distinct hash of
@@ -468,28 +400,20 @@ def streaming_kmv(stream: DataFrame, state_path: str, checkpoint: str,
             .groupBy("g")
             .agg(F.array_sort(F.collect_list("u")).alias("us"))
         )
-        old = _read_state(spark, state_path)
-        if old is not None:
-            merged = (
-                old.unionByName(partial)
-                .groupBy("g")
-                .agg(
-                    F.slice(
-                        F.array_sort(F.array_distinct(F.flatten(F.collect_list("us")))),
-                        1, k,
-                    ).alias("us")
-                )
+        if old is None:
+            return partial
+        return (
+            old.unionByName(partial)
+            .groupBy("g")
+            .agg(
+                F.slice(
+                    F.array_sort(F.array_distinct(F.flatten(F.collect_list("us")))),
+                    1, k,
+                ).alias("us")
             )
-        else:
-            merged = partial
-        _swap_state(merged, state_path, batch_id)
+        )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_sink(stream, state_path, checkpoint, step)
 
 
 def kmv_state_estimates(spark: SparkSession, state_path: str, k: int = 64) -> DataFrame:
@@ -522,39 +446,20 @@ def streaming_ddsketch(stream: DataFrame, state_path: str, checkpoint: str,
     that a HARD per-group bound via the paper's collapse-lowest-buckets
     variant (sketches.ddsketch_collapse) re-applied after every merge —
     a pathological value range then degrades low-tail quantiles instead
-    of growing state. Swap is staging-dir + rename like streaming_kmv.
-    Mirrors streaming_kmv's foreachBatch wiring.
+    of growing state. Published through functions/statedir by the
+    shared _merge_sink driver.
     """
-    import os
-    import shutil
-
     from semantik_spark.operators.sketches import ddsketch_buckets, ddsketch_collapse
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-merged batch
-        partial = ddsketch_buckets(batch, group_col, value_col, alpha)
-        old = _read_state(spark, state_path)
+    def step(batch: DataFrame, old: DataFrame | None) -> DataFrame:
+        merged = ddsketch_buckets(batch, group_col, value_col, alpha)
         if old is not None:
-            merged = (
-                old.unionByName(partial)
-                .groupBy("g", "bucket")
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-        else:
-            merged = partial
+            merged = _add_counts(old, merged, "g", "bucket")
         if max_buckets is not None:
             merged = ddsketch_collapse(merged, max_buckets)
-        _swap_state(merged, state_path, batch_id)
+        return merged
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_sink(stream, state_path, checkpoint, step)
 
 
 def ddsketch_state_quantiles(spark: SparkSession, state_path: str,
@@ -587,22 +492,14 @@ def streaming_heavy_hitters(stream: DataFrame, state_path: str, checkpoint: str,
     carry the scalar; a separate meta file would break the single
     atomic swap). Serve exact answers with heavy_hitters_from_state.
     """
-    import os
-    import shutil
-
     from semantik_spark.operators.frequency import mg_merge, mg_summarize
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-merged batch
+    def step(batch: DataFrame, old: DataFrame | None) -> DataFrame:
         keys = batch.select(F.col(key_col).cast("string").alias("k")).where(
             F.col("k").isNotNull()
         )
         n_batch = keys.count()
         partial = mg_summarize(batch, key_col, m)
-        old = _read_state(spark, state_path)
         if old is not None:
             old_n = old.where(F.col("k").isNull())
             merged = mg_merge(
@@ -613,18 +510,13 @@ def streaming_heavy_hitters(stream: DataFrame, state_path: str, checkpoint: str,
             )
         else:
             merged = partial
-            total = spark.range(1).select(F.lit(n_batch).cast("bigint").alias("c"))
-        state = merged.unionByName(
+            total = batch.sparkSession.range(1).select(
+                F.lit(n_batch).cast("bigint").alias("c"))
+        return merged.unionByName(
             total.select(F.lit(None).cast("string").alias("k"), "c")
         )
-        _swap_state(state, state_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_sink(stream, state_path, checkpoint, step)
 
 
 def heavy_hitters_from_state(spark: SparkSession, state_path: str,
@@ -719,34 +611,13 @@ def streaming_count_min(stream: DataFrame, state_path: str, checkpoint: str,
     State is one parquet table (row int, bucket int, n bigint),
     <= depth*width rows forever — constant-size streaming frequency
     state, served point-lookups via count_min_state_estimates."""
-    import os
-    import shutil
-
     from semantik_spark.operators.frequency import count_min_cells
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-merged batch
+    def step(batch: DataFrame, old: DataFrame | None) -> DataFrame:
         partial = count_min_cells(batch, key_col, depth, width)
-        old = _read_state(spark, state_path)
-        if old is not None:
-            merged = (
-                old.unionByName(partial)
-                .groupBy("row", "bucket")
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-        else:
-            merged = partial
-        _swap_state(merged, state_path, batch_id)
+        return partial if old is None else _add_counts(old, partial, "row", "bucket")
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_sink(stream, state_path, checkpoint, step)
 
 
 def count_min_state_estimates(spark: SparkSession, state_path: str,
@@ -837,7 +708,7 @@ def streaming_lsh_dedup(stream: DataFrame, state_path: str, checkpoint: str,
                     F.col("a.sig").alias("sa"), F.col("b.sig").alias("sb"))
         )
         cands = in_batch
-        old = _read_state(spark, state_path)
+        old = statedir.read(spark, state_path)
         if old is not None:
             o = old.alias("o")
             first_is_new = F.col("a.doc_id") < F.col("o.doc_id")
@@ -874,12 +745,7 @@ def streaming_lsh_dedup(stream: DataFrame, state_path: str, checkpoint: str,
         matches.write.mode("append").parquet(matches_path)
         banded.write.mode("append").parquet(state_path)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream, process, checkpoint)
 
 
 def lsh_matches(spark: SparkSession, matches_path: str) -> DataFrame:
@@ -1011,9 +877,9 @@ def streaming_scd2(stream: DataFrame, state_path: str, checkpoint: str,
     scd.scd2_merge (history re-enters the collapse as synthetic
     updates; merge == full-log rebuild for any batch split under the
     append-only timestamp contract — the batch invariant, now held
-    per trigger). State = the history table itself, dir-swap persisted
-    with the crash-window __old fallback every sketch stream here
-    uses.
+    per trigger). State = the history table itself, published through
+    functions/statedir by the _merge_sink driver every sketch stream
+    here uses.
 
     This is the reference's continuous sync landing in a VERSIONED
     dimension instead of a latest-only catalog: consumers get as-of
@@ -1024,30 +890,14 @@ def streaming_scd2(stream: DataFrame, state_path: str, checkpoint: str,
     |history| + |batch| rows — history is version-chains, bounded by
     change volume, not event volume; no joins, no iteration.
     """
-    import os
-    import shutil
-
     from semantik_spark.operators import scd
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-merged batch
-        old = _read_state(spark, state_path)
+    def step(batch: DataFrame, old: DataFrame | None) -> DataFrame:
         if old is None:
-            new = scd.scd2_history(batch, key_col, attr_cols, ts_col, seq_col)
-        else:
-            new = scd.scd2_merge(old, batch, key_col, attr_cols,
-                                 ts_col, seq_col)
-        _swap_state(new, state_path, batch_id)
+            return scd.scd2_history(batch, key_col, attr_cols, ts_col, seq_col)
+        return scd.scd2_merge(old, batch, key_col, attr_cols, ts_col, seq_col)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_sink(stream, state_path, checkpoint, step)
 
 
 def streaming_hll(stream: DataFrame, state_path: str, checkpoint: str,
@@ -1063,31 +913,17 @@ def streaming_hll(stream: DataFrame, state_path: str, checkpoint: str,
     registers.
 
     State is one parquet table (g, j, mj) of at most 2^p rows per
-    group regardless of stream volume. Swap is staging-dir + rename
-    like streaming_kmv.
+    group regardless of stream volume. Published through
+    functions/statedir by the shared _merge_sink driver.
     """
-    import os
-    import shutil
-
     from semantik_spark.operators.sketches import (hll_merge_registers,
                                                    hll_registers)
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-merged batch
+    def step(batch: DataFrame, old: DataFrame | None) -> DataFrame:
         partial = hll_registers(batch, group_col, value_col, p)
-        old = _read_state(spark, state_path)
-        merged = partial if old is None else hll_merge_registers(old, partial)
-        _swap_state(merged, state_path, batch_id)
+        return partial if old is None else hll_merge_registers(old, partial)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_sink(stream, state_path, checkpoint, step)
 
 
 def hll_state_estimates(spark: SparkSession, state_path: str,
@@ -1235,14 +1071,8 @@ def streaming_contingency(stream: DataFrame, state_path: str,
     stattests.chi_square_from_counts (counts compose exactly, so the
     served verdict hash-matches the batch test over the same rows).
     """
-    import os
-    import shutil
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
-        if last is not None and batch_id <= last:
-            return  # checkpoint replay of an already-merged batch
+    def step(batch: DataFrame, old: DataFrame | None) -> DataFrame:
         partial = (
             # NULL categories excluded per chi_square_independence's
             # NULL discipline — the state must hold exactly the cells
@@ -1253,23 +1083,9 @@ def streaming_contingency(stream: DataFrame, state_path: str,
                      F.col(col_col).cast("string").alias("col_val"))
             .agg(F.count("*").cast("bigint").alias("n"))
         )
-        old = _read_state(spark, state_path)
-        if old is not None:
-            merged = (
-                old.unionByName(partial)
-                .groupBy("row_val", "col_val")
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-        else:
-            merged = partial
-        _swap_state(merged, state_path, batch_id)
+        return partial if old is None else _add_counts(old, partial, "row_val", "col_val")
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_sink(stream, state_path, checkpoint, step)
 
 
 def contingency_chi_square(spark: SparkSession, state_path: str):

@@ -121,6 +121,28 @@ def test_concurrently_propagates_first_error():
     assert ran == ["ok"]
 
 
+def test_concurrently_keeps_every_error():
+    """With two failing thunks the first (in call order) is raised and
+    the second rides along as a note — neither message is lost."""
+    import traceback
+
+    import pytest
+
+    from semantik_spark.functions.parallel import concurrently
+
+    def boom(msg):
+        def run():
+            raise RuntimeError(msg)
+        return run
+
+    with pytest.raises(RuntimeError, match="first failure") as ei:
+        concurrently(boom("first failure"), lambda: None,
+                     boom("second failure"))
+    assert any("second failure" in n for n in ei.value.__notes__)
+    shown = "".join(traceback.format_exception(ei.value))
+    assert "first failure" in shown and "second failure" in shown
+
+
 def test_build_index_concurrent_writes_equal_artifacts(spark, tmp_path):
     """build_index's overlapped artifact writes (§2.6) produce exactly
     the artifacts the sequential order did: terms==state-derived terms,

@@ -530,6 +530,7 @@ def test_merge_sparse_append_replay_after_crash_before_swap(spark, tmp_path):
     attempt are removed) and a terms table equal to a full rebuild.
     The old order (swap first) made the replay a fenced no-op with the
     batch's postings permanently missing."""
+    from semantik_spark.functions import statedir
     from semantik_spark.operators import serving
 
     docs = spark.createDataFrame(
@@ -540,21 +541,21 @@ def test_merge_sparse_append_replay_after_crash_before_swap(spark, tmp_path):
     delta = docs.where("doc_id >= 8")
 
     # crash AT the swap: postings + terms already written, marker not
-    real_swap = serving._bm25_state_swap
+    real_swap = statedir.publish
     def exploding_swap(*a, **kw):
         raise RuntimeError("simulated crash before marker swap")
-    serving._bm25_state_swap = exploding_swap
+    statedir.publish = exploding_swap
     try:
         import pytest as _pytest
         with _pytest.raises(RuntimeError, match="simulated crash"):
             serving.merge_sparse_append(delta, idx, batch_id=7)
     finally:
-        serving._bm25_state_swap = real_swap
-    assert serving._bm25_last_batch(idx) is None  # marker never advanced
+        statedir.publish = real_swap
+    assert statedir.last_batch(f"{idx}/bm25_state") is None  # marker never advanced
 
     # the streaming replay re-runs the SAME batch — must converge
     serving.merge_sparse_append(delta, idx, batch_id=7)
-    assert serving._bm25_last_batch(idx) == 7
+    assert statedir.last_batch(f"{idx}/bm25_state") == 7
 
     post = spark.read.parquet(f"{idx}/postings")
     dup = (post.groupBy("doc_id", "term").count().where("count > 1").count())

@@ -148,6 +148,47 @@ def test_incremental_ingest_checkpoint_no_reprocess(spark, tmp_path):
     q2.awaitTermination(120)
     assert spark.read.parquet(catalog).count() == 2
 
+
+@pytest.mark.parametrize("sink", ["ingest", "index"])
+def test_unreadable_catalog_fails_batch_instead_of_first_batch(spark, tmp_path, sink):
+    """An existing catalog that cannot be read is NOT a first batch:
+    change detection must fail the micro-batch rather than treat every
+    row as changed and re-append it (for incremental_index also to the
+    dense log). Only a missing catalog starts from scratch."""
+    import os
+
+    from semantik_spark.streaming.incremental import incremental_index
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    catalog, idx = str(tmp_path / "catalog"), str(tmp_path / "idx")
+    schema = "doc_id bigint, text string"
+
+    def run(ckpt):
+        stream = stream_files(spark, str(drop), schema)
+        if sink == "ingest":
+            return incremental_ingest(stream, catalog, str(tmp_path / ckpt))
+        return incremental_index(stream, idx, catalog, str(tmp_path / ckpt),
+                                 sparse_refresh="merge")
+
+    _write_json(drop / "b1.json", [{"doc_id": 1, "text": "alpha"},
+                                   {"doc_id": 2, "text": "beta"}])
+    run("ckpt1").awaitTermination(120)
+    assert spark.read.parquet(catalog).count() == 2
+
+    # a non-parquet part file that sorts first, so the catalog read fails
+    planted = os.path.join(catalog, "part-0.parquet")
+    with open(planted, "w") as fh:
+        fh.write("not parquet at all")
+    # a fresh checkpoint re-delivers both (unchanged) docs
+    with pytest.raises(Exception):
+        run("ckpt2").awaitTermination(120)
+
+    os.remove(planted)
+    assert spark.read.parquet(catalog).count() == 2
+    if sink == "index":
+        assert spark.read.parquet(f"{idx}/dense_log").count() == 2
+
 def test_incremental_index_updates_serving_tables(spark, tmp_path):
     """Streaming index maintenance e2e: two availableNow runs through
     one checkpoint must leave (a) an append-only dense log whose
@@ -826,30 +867,27 @@ def test_state_replay_guard_and_reader_fallback(spark, tmp_path):
     import os
     import shutil
 
-    from semantik_spark.streaming.incremental import (
-        _last_merged_batch,
-        _served_state,
-        _swap_state,
-    )
+    from semantik_spark.functions.statedir import last_batch, publish
+    from semantik_spark.streaming.incremental import _served_state
 
     state = str(tmp_path / "sk")
     df1 = spark.createDataFrame([("a", 1, 3)], "g string, bucket int, n long")
-    _swap_state(df1, state, batch_id=0)
-    assert _last_merged_batch(state) == 0
+    publish(state, lambda tmp: df1.write.mode("overwrite").parquet(tmp), batch_id=0)
+    assert last_batch(state) == 0
 
     # replay check: a sink seeing batch_id 0 again must skip
-    assert 0 <= _last_merged_batch(state)
+    assert 0 <= last_batch(state)
 
     df2 = spark.createDataFrame([("a", 1, 5)], "g string, bucket int, n long")
-    _swap_state(df2, state, batch_id=1)
-    assert _last_merged_batch(state) == 1
+    publish(state, lambda tmp: df2.write.mode("overwrite").parquet(tmp), batch_id=1)
+    assert last_batch(state) == 1
     assert _served_state(spark, state).collect()[0]["n"] == 5
 
     # crash window: state only at __old — reader must still serve,
     # and the marker must still resolve
     os.rename(state, state + "__old")
     assert _served_state(spark, state).collect()[0]["n"] == 5
-    assert _last_merged_batch(state) == 1
+    assert last_batch(state) == 1
     shutil.rmtree(state + "__old")
     import pytest as _pytest
     with _pytest.raises(FileNotFoundError, match="no sketch state"):
@@ -879,7 +917,7 @@ def test_merge_counters_null_keys_align(spark):
 
 
 def test_read_state_propagates_error_on_existing_unreadable_state(spark, tmp_path):
-    """_read_state must NOT treat a read failure on an EXISTING state
+    """statedir.read must NOT treat a read failure on an EXISTING state
     dir as first-batch (that silently resets the sketch to the latest
     delta); only a genuinely-missing state returns None, and the __old
     crash-window fallback still applies."""
@@ -887,7 +925,7 @@ def test_read_state_propagates_error_on_existing_unreadable_state(spark, tmp_pat
 
     import pytest as _pytest
 
-    from semantik_spark.streaming.incremental import _read_state
+    from semantik_spark.functions.statedir import read as _read_state
 
     missing = str(tmp_path / "nope")
     assert _read_state(spark, missing) is None
@@ -943,18 +981,18 @@ def test_streaming_kmv_null_values_never_steal_slots(spark, tmp_path):
 def test_streaming_scd2_crash_at_swap_then_replay_converges(spark, tmp_path):
     """Kill-replay pin for the SCD2 writer family (VERDICT r11 item 5,
     the merge_sparse_append discipline): all merge work happens BEFORE
-    the _swap_state marker publish, so a crash AT the swap leaves the
+    the statedir.publish marker publish, so a crash AT the swap leaves the
     old state + old marker intact and the checkpoint replay re-runs the
     whole merge — which must CONVERGE to the full-log rebuild, with no
     duplicate versions, and a further restart with no new data must be
     a fenced no-op."""
     import pytest as _pytest
 
+    from semantik_spark.functions import statedir
+    from semantik_spark.functions.statedir import last_batch as _last_merged_batch
     from semantik_spark.operators import scd
-    from semantik_spark.streaming import incremental
     from semantik_spark.streaming.incremental import (
-        _last_merged_batch, stream_files, streaming_scd2,
-        write_time_ordered_drop,
+        stream_files, streaming_scd2, write_time_ordered_drop,
     )
 
     base = str(tmp_path / "scd2")
@@ -980,18 +1018,18 @@ def test_streaming_scd2_crash_at_swap_then_replay_converges(spark, tmp_path):
             state, ckpt, "custkey", ["priority"], "ts", "seq")
 
     # crash AT the first swap: merge ran, marker/state never published
-    real_swap = incremental._swap_state
+    real_swap = statedir.publish
 
     def exploding_swap(*a, **kw):
         raise RuntimeError("simulated crash at scd2 state swap")
 
-    incremental._swap_state = exploding_swap
+    statedir.publish = exploding_swap
     try:
         q = _run()
         with _pytest.raises(Exception, match="simulated crash"):
             q.awaitTermination(120)
     finally:
-        incremental._swap_state = real_swap
+        statedir.publish = real_swap
     assert _last_merged_batch(state) is None  # marker never advanced
 
     # restart through the SAME checkpoint: batch 0 replays, then batch 1
@@ -1029,10 +1067,11 @@ def test_streaming_ddsketch_crash_at_swap_then_replay_converges(spark, tmp_path)
     over ALL rows, cell for cell."""
     import pytest as _pytest
 
+    from semantik_spark.functions import statedir
+    from semantik_spark.functions.statedir import last_batch as _last_merged_batch
     from semantik_spark.operators.sketches import ddsketch_buckets
-    from semantik_spark.streaming import incremental
     from semantik_spark.streaming.incremental import (
-        _last_merged_batch, stream_files, streaming_ddsketch,
+        stream_files, streaming_ddsketch,
     )
 
     base = str(tmp_path / "dds")
@@ -1049,21 +1088,21 @@ def test_streaming_ddsketch_crash_at_swap_then_replay_converges(spark, tmp_path)
                          max_files_per_trigger=1),
             state, ckpt, "g", "v", alpha=0.02)
 
-    real_swap = incremental._swap_state
+    real_swap = statedir.publish
     calls = {"n": 0}
 
-    def swap_crashing_on_batch1(merged, state_path, batch_id=None):
+    def swap_crashing_on_batch1(state_path, write, batch_id=None):
         if batch_id == 1:
             raise RuntimeError("simulated crash at ddsketch state swap")
-        return real_swap(merged, state_path, batch_id=batch_id)
+        return real_swap(state_path, write, batch_id=batch_id)
 
-    incremental._swap_state = swap_crashing_on_batch1
+    statedir.publish = swap_crashing_on_batch1
     try:
         q = _run()
         with _pytest.raises(Exception, match="simulated crash"):
             q.awaitTermination(120)
     finally:
-        incremental._swap_state = real_swap
+        statedir.publish = real_swap
     # batch 0 published, batch 1's merge died before its swap
     assert _last_merged_batch(state) == 0
 
