@@ -14,6 +14,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from semantik_spark.config import ENGLISH_STOPWORDS, MIN_TOKEN_LENGTH, TOKEN_PATTERN
+from semantik_spark.functions.vectors import by_name
 
 
 def _col(c: Column | str) -> Column:
@@ -36,6 +37,7 @@ def lit_str_array(words) -> Column:
     return F.expr(f"array({quoted})")
 
 
+@by_name
 def bm25_tokens(c: Column | str) -> Column:
     """Reference-parity BM25 token stream: len>=2, stopwords removed.
 

@@ -9,12 +9,39 @@ stays inside whole-stage codegen.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+def by_name(build):
+    """Memoize an expression builder per tuple of column names.
+
+    Building an expression like mock_embedding or cosine costs dozens of
+    py4j round-trips (tens of ms each time), and a serve call rebuilds
+    the same few expressions over the same column names. A Column is an
+    immutable, session-independent expression tree, so the one built for
+    ("embedding", "qv") serves every later call. Only all-``str`` calls
+    are cached: a Column argument may be any expression, so it builds a
+    fresh one. Threads that miss together each build one; every copy is
+    the same expression."""
+    memo: dict[tuple[str, ...], Column] = {}
+
+    @functools.wraps(build)
+    def wrapper(*args, **kwargs):
+        if kwargs or not all(isinstance(a, str) for a in args):
+            return build(*args, **kwargs)
+        hit = memo.get(args)
+        if hit is None:
+            hit = memo[args] = build(*args)
+        return hit
+
+    return wrapper
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -30,6 +57,7 @@ def norm(a: Column | str) -> Column:
     return F.sqrt(F.aggregate(_col(a), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
+@by_name
 def cosine(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; 0.0 when either norm is 0."""
     d = dot(a, b)
@@ -51,6 +79,7 @@ def _bind(value: Column, body) -> Column:
     return F.get(F.transform(F.array(value), body), 0)
 
 
+@by_name
 def mock_embedding(c: Column | str) -> Column:
     """Deterministic 8-dim mock embedding, reference-identical math
     (dense_search.py:19-44): sha256(text) → 8 big-endian uint32 →

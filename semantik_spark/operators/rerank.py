@@ -31,7 +31,7 @@ from semantik_spark.config import (
     RERANK_CANDIDATE_MULTIPLIER,
 )
 from semantik_spark.functions.text import bm25_tokens
-from semantik_spark.functions.vectors import _bind
+from semantik_spark.functions.vectors import _bind, by_name
 
 
 def candidate_k(k: int) -> int:
@@ -58,6 +58,7 @@ def hydrate(results: DataFrame, docs: DataFrame,
     return results.join(F.broadcast(wanted), "doc_id", "left")
 
 
+@by_name
 def mock_rerank_score(query_text: Column | str, content: Column | str) -> Column:
     """Deterministic test-mode 'cross-encoder': token-set cosine
     |q∩d| / sqrt(|q|·|d|). Same contract as the model scorer
@@ -97,7 +98,7 @@ def rerank(candidates: DataFrame, queries: DataFrame, docs: DataFrame, k: int = 
     with_q = with_content.join(
         F.broadcast(queries.select("query_id", "query_text")), "query_id"
     )
-    scored = with_q.withColumn("rerank_score", score_fn(F.col("query_text"), F.col("text")))
+    scored = with_q.withColumn("rerank_score", score_fn("query_text", "text"))
     w = Window.partitionBy("query_id").orderBy(F.desc("rerank_score"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

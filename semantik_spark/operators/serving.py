@@ -18,13 +18,27 @@ queries against the persisted artifacts:
                   embedding table, zero shuffles before top-k.
   hybrid_serve  — RRF fusion of the two serve branches.
 
+A serve call pays only for the scan: everything query-independent is
+done once per process.
+  - One index-table store (_TABLES) holds, per directory, its data-file
+    listing, its schema and its parsed codebooks. Every serve read goes
+    through _scan, which hands Spark the stored schema, so no read runs
+    a schema-inference job; _read_codebook keeps the parsed codebook/,
+    ivfpq_codebook/ and ivfpq_pq/ rows the same way. Every write job
+    stamps fresh part-file names, so appends, rebuilds and delete
+    rewrites change the listing and refresh the entry. Writers read
+    their inputs plainly.
+  - The expression builders the serve paths call (mock_embedding,
+    cosine, bm25_tokens, rerank.mock_rerank_score,
+    similarity._nearest_centroids) memoize by column name
+    (functions.vectors.by_name): each is built once per process.
+
 The IVF family (build_dense_ivf, ivf_append, dense_serve_ivf,
 hybrid_serve_approx, write_ivfpq_index, ivfpq_serve) shares one cell
-layer: _write_cells writes every coarse codebook, _read_codebook is the
-one cached reader of codebook/, ivfpq_codebook/ and ivfpq_pq/ (keyed by
-the part-file names each write job stamps fresh), and _plan_probes plans
-every probe table on the driver. Driver-built tables are
-session.local_df LocalRelations, never pickled-list LogicalRDDs.
+layer: _write_cells writes every coarse codebook, _read_codebook reads
+it through the store, and _plan_probes plans every probe table on the
+driver. Driver-built tables are session.local_df LocalRelations, never
+pickled-list LogicalRDDs.
 
 Scale notes (100 TB): the persisted postings table is partitionable by
 collection and bucketable by term; the dense table by collection /
@@ -38,6 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from semantik_spark.functions.vectors import cosine, mock_embedding
 from semantik_spark.operators import bm25, search
@@ -268,14 +283,66 @@ def build_index(docs: DataFrame, path: str,
     )
 
 
+#: the index-table store: directory → (data-file listing, schema,
+#: {parse: parsed codebook}). Schemas and codebooks change only when
+#: files are written, and every Spark write job stamps a fresh UUID into
+#: its part-file names, so an append, overwrite or delete rewrite
+#: changes the listing and the entry is re-inferred. Spark still lists
+#: the files on each read, so a scan always sees the current files.
+_TABLES: dict[str, tuple[tuple[str, ...], StructType, dict]] = {}
+
+
+def _listing(d: str) -> tuple[str, ...]:
+    """Sorted relative paths of the data files under ``d`` — the
+    ``_``/``.`` entries Spark's file index ignores (``_SUCCESS``,
+    checksums, staging dirs) are skipped at every level."""
+    import os
+
+    out = []
+    for root, dirs, files in os.walk(d):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        rel = os.path.relpath(root, d)
+        out += [os.path.join(rel, n) for n in files if not n.startswith(("_", "."))]
+    return tuple(sorted(out))
+
+
+def _table(spark: SparkSession, d: str) -> tuple[tuple[str, ...], StructType, dict]:
+    """The store entry of ``d``, re-inferred when its listing changed.
+    The listing is taken BEFORE the inference, so a write racing it can
+    at worst store a stale key that the next call re-reads, never a
+    stale schema or codebook under the new key."""
+    key = _listing(d)
+    hit = _TABLES.get(d)
+    if hit is None or hit[0] != key:
+        hit = _TABLES[d] = (key, spark.read.parquet(d).schema, {})
+    return hit
+
+
+def _scan(spark: SparkSession, d: str) -> DataFrame:
+    """Serve-path read of an index table with its stored schema: no
+    schema-inference job."""
+    return spark.read.schema(_table(spark, d)[1]).parquet(d)
+
+
+def _read_codebook(spark: SparkSession, d: str, parse):
+    """The one cached reader of codebook/, ivfpq_codebook/ and
+    ivfpq_pq/: ``parse`` turns the collected rows into the serving
+    structure (_cells, similarity._pq_by_subspace), kept in the store
+    entry until the directory's listing changes."""
+    _, schema, parsed = _table(spark, d)
+    if parse not in parsed:
+        parsed[parse] = parse(spark.read.schema(schema).parquet(d).collect())
+    return parsed[parse]
+
+
 def bm25_serve(spark: SparkSession, path: str, queries: DataFrame,
                k: int = 10) -> DataFrame:
     """BM25 top-k against the persisted index: query_id, doc_id, score,
     rank. Only the (tiny) query encoding touches the terms table; the
     postings scan is the one big input and the per-(query,doc) sum the
     one shuffle."""
-    terms = spark.read.parquet(f"{path}/terms")
-    post = spark.read.parquet(f"{path}/postings")
+    terms = _scan(spark, f"{path}/terms")
+    post = _scan(spark, f"{path}/postings")
     enc = bm25.encode_queries(queries, terms)
     scored = bm25.score(post, enc)
     return search._topk(scored, k)
@@ -294,7 +361,7 @@ def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
     filtered subset only, never post-filtering a top-k (which under-fills
     k, the classic filtered-ANN bug). None compiles to TRUE, which
     Catalyst prunes: the unfiltered plan is unchanged."""
-    index = spark.read.parquet(f"{path}/dense").where(compile_predicate(predicate))
+    index = _scan(spark, f"{path}/dense").where(compile_predicate(predicate))
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         mock_embedding(query_text_col).alias("query_vec"),
@@ -307,19 +374,21 @@ def hybrid_serve(spark: SparkSession, path: str, queries: DataFrame,
     """Hybrid RRF against the persisted index — the deployed composed
     query path (service.py:73-408 minus the per-request model calls).
 
-    SINGLE-EXCHANGE fusion (r6 latency work): instead of ranking each
-    branch in its own sort-shuffle and FULL-OUTER-joining the two
-    ranked lists (3 exchanges of scored rows), both branches' raw
-    scores union with a branch tag, ONE window ranks per (query,
-    branch), and the join becomes a groupBy pivot over the ≤
-    2·|queries|·search_k surviving rows. Row-identical to
-    rrf_fuse(dense_ranked, sparse_ranked): a (query, doc) group holds
-    exactly the branches that scored it, so the max(when(branch=…))
-    pivot reproduces the outer join's NULL pattern, and ranks/ties
-    order identically (score DESC, doc_id ASC)."""
+    Fusion behind one shuffle boundary: each branch ranks in its own
+    window partitioned by query_id, so its one hashpartitioning(query_id)
+    exchange carries only the ≤ search_k rows per query and task that
+    the Partial WindowGroupLimit below it keeps, and the two branch
+    exchanges run in parallel. The ranked branches union with a branch
+    tag; the union keeps hashpartitioning(query_id), so the groupBy
+    pivot over the ≤ 2·|queries|·search_k surviving rows and the final
+    window add no exchange (plan-asserted in tests/test_plans.py).
+    Row-identical to rrf_fuse(dense_ranked, sparse_ranked): a (query,
+    doc) group holds exactly the branches that scored it, so the
+    max(when(branch=…)) pivot reproduces the outer join's NULL pattern,
+    and ranks/ties order identically (score DESC, doc_id ASC)."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    index = spark.read.parquet(f"{path}/dense")
+    index = _scan(spark, f"{path}/dense")
     qd = queries.select(
         F.col("query_id").alias("query_id"),
         mock_embedding("query_text").alias("query_vec"),
@@ -327,28 +396,30 @@ def hybrid_serve(spark: SparkSession, path: str, queries: DataFrame,
     dscored = index.crossJoin(F.broadcast(qd)).select(
         "query_id", "doc_id", cosine("embedding", "query_vec").alias("score")
     )
-    terms = spark.read.parquet(f"{path}/terms")
-    post = spark.read.parquet(f"{path}/postings")
+    terms = _scan(spark, f"{path}/terms")
+    post = _scan(spark, f"{path}/postings")
     sscored = bm25.score(post, bm25.encode_queries(queries, terms))
     return _rrf_union_fuse(dscored, sscored, k, search_k)
 
 
 def _rrf_union_fuse(dscored: DataFrame, sscored: DataFrame,
                     k: int, search_k: int) -> DataFrame:
-    """Single-exchange RRF fusion of two raw score tables (see
-    hybrid_serve docstring): union with a branch tag, one window per
-    (query, branch), groupBy pivot — row-identical to ranking each
-    branch and full-outer-joining, at 3 exchanges fewer."""
-    u = dscored.select(F.lit(0).alias("branch"), "query_id", "doc_id", "score") \
-        .unionByName(sscored.select(F.lit(1).alias("branch"),
-                                    "query_id", "doc_id", "score"))
-    wb = Window.partitionBy("query_id", "branch").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    ranked = u.withColumn("rank", F.row_number().over(wb)) \
-        .where(F.col("rank") <= search_k)
+    """RRF fusion of two raw score tables behind one shuffle boundary
+    (see hybrid_serve docstring): each branch ranks in its own window
+    partitioned by query_id, the ranked branches union with a branch
+    tag, and a groupBy pivot plus the final window fuse them — both
+    already clustered by query_id, so neither adds an exchange."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+
+    def ranked(scored: DataFrame, branch: int) -> DataFrame:
+        return (scored.withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= search_k)
+                .select(F.lit(branch).alias("branch"),
+                        "query_id", "doc_id", "score", "rank"))
+
     fused = (
-        ranked.groupBy("query_id", "doc_id")
+        ranked(dscored, 0).unionByName(ranked(sscored, 1))
+        .groupBy("query_id", "doc_id")
         .agg(
             F.max(F.when(F.col("branch") == 0, F.col("rank"))).alias("dense_rank"),
             F.max(F.when(F.col("branch") == 0, F.col("score"))).alias("dense_score"),
@@ -361,9 +432,8 @@ def _rrf_union_fuse(dscored: DataFrame, sscored: DataFrame,
             + F.coalesce(1.0 / (F.lit(search.RRF_K) + F.col("sparse_rank")), F.lit(0.0)),
         )
     )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        fused.withColumn("rank", F.row_number().over(wq))
+        fused.withColumn("rank", F.row_number().over(w))
         .where((F.col("rank") <= k) & F.col("doc_id").isNotNull())
         .select("query_id", "doc_id", "score", "rank",
                 "dense_rank", "sparse_rank", "dense_score", "sparse_score")
@@ -506,32 +576,6 @@ def _cells(rows) -> dict:
                         for r in rows), key=lambda t: t[0]))
 
 
-#: driver-side codebook store: directory → (part-file names, parsed
-#: codebook). A serving process holds the n_centroids × dim floats in
-#: memory; re-reading the parquet per request paid a full Spark job for
-#: data that only changes on (re)build. Every Spark write job stamps a
-#: fresh UUID into its part-file names, so any overwrite of a codebook
-#: directory changes its key (ivf_append never touches the codebook).
-_CODEBOOKS: dict[str, tuple[list, object]] = {}
-
-
-def _read_codebook(spark: SparkSession, d: str, parse):
-    """The one cached reader of codebook/, ivfpq_codebook/ and
-    ivfpq_pq/: ``parse`` turns the collected rows into the serving
-    structure (_cells, similarity._pq_by_subspace). The key is listed
-    BEFORE the read, so a write racing the read can at worst store a
-    stale key that the next call re-reads, never a stale codebook."""
-    import os
-
-    key = sorted(n for n in os.listdir(d) if not n.startswith(("_", ".")))
-    hit = _CODEBOOKS.get(d)
-    if hit is not None and hit[0] == key:
-        return hit[1]
-    value = parse(spark.read.parquet(d).collect())
-    _CODEBOOKS[d] = (key, value)
-    return value
-
-
 def _query_rows(queries: DataFrame, id_col: str, col: str, embed):
     """The serve batch as driver rows ``(query_id, embed(col))`` plus the
     query-id SQL type, kept from the CALLER'S schema — a hardcoded type
@@ -590,7 +634,7 @@ def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
     # filtered ANN (F2 ∘ probe pruning): partition pruning on
     # centroid_id AND payload PushedFilters compose on the same scan,
     # pre-ranking — k fills from eligible docs inside probed cells only
-    index = spark.read.parquet(f"{path}/dense_ivf").where(
+    index = _scan(spark, f"{path}/dense_ivf").where(
         F.col("centroid_id").isin(probed_cells)
     ).where(compile_predicate(predicate))
     scored = index.join(F.broadcast(probes), "centroid_id").select(
@@ -746,7 +790,7 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
     # directory layout); recon travels as DATA via the one-row
     # broadcast codebook (literal inlining blows codegen at real sizes)
     pq_cb = F.broadcast(_pq_codebook_df(spark, by_s))
-    index = spark.read.parquet(f"{path}/ivfpq_codes").where(
+    index = _scan(spark, f"{path}/ivfpq_codes").where(
         F.col("centroid_id").isin(probed_cells)
     )
     recon = F.flatten(F.array(*[
@@ -775,7 +819,7 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
     cand = local_df(spark, [(r["query_id"], int(r["vec_id"])) for r in cand_rows],
                     f"query_id {qid_type}, vec_id bigint")
     qdf = local_df(spark, qrows, f"query_id {qid_type}, qv array<double>")
-    full = spark.read.parquet(f"{path}/ivfpq_full").where(
+    full = _scan(spark, f"{path}/ivfpq_full").where(
         F.col("vec_id").isin(cand_ids)
     )
     exact = (
@@ -805,7 +849,7 @@ def hybrid_serve_approx(spark: SparkSession, path: str, queries: DataFrame,
     driver-planned probes) RRF-fused with the impact-pruned sparse
     branch (per-term postings capped at index time) — both branches'
     scan cost bounded independently of corpus/term size, the same
-    single-exchange fusion as hybrid_serve.
+    fusion as hybrid_serve.
 
     Recall trade is the product of the branch trades (IVF nprobe sweep
     + pruning keep); with nprobe = n_centroids and keep >= corpus the
@@ -818,14 +862,14 @@ def hybrid_serve_approx(spark: SparkSession, path: str, queries: DataFrame,
     probes, probed_cells = _plan_probes(
         spark, _read_codebook(spark, f"{path}/codebook", _cells),
         qrows, qid_type, nprobe)
-    index = spark.read.parquet(f"{path}/dense_ivf").where(
+    index = _scan(spark, f"{path}/dense_ivf").where(
         F.col("centroid_id").isin(probed_cells)
     )
     dscored = index.join(F.broadcast(probes), "centroid_id").select(
         "query_id", "doc_id", cosine("embedding", "qv").alias("score")
     )
-    terms = spark.read.parquet(f"{path}/terms")
-    post = spark.read.parquet(f"{path}/postings_pruned")
+    terms = _scan(spark, f"{path}/terms")
+    post = _scan(spark, f"{path}/postings_pruned")
     sscored = bm25.score(post, bm25.encode_queries(queries, terms))
     return _rrf_union_fuse(dscored, sscored, k, search_k)
 

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from semantik_spark.functions.caching import cache
 from semantik_spark.functions.parallel import spread
 from semantik_spark.functions.quant import round_half_away
-from semantik_spark.functions.vectors import cosine
+from semantik_spark.functions.vectors import by_name, cosine
 from semantik_spark.session import local_df
 
 # --- summation-order safety audit (optimization r14) -------------------
@@ -168,6 +168,7 @@ def _codebook_df(spark, cent_rows: list):
                     "cents array<struct<cid:bigint,cv:array<double>>>")
 
 
+@by_name
 def _nearest_centroids(vec: str) -> F.Column:
     """ARRAY<STRUCT<cos,negcid>> of centroid scores for a vector column
     against the joined ``cents`` column — evaluated per row with NO

@@ -285,6 +285,54 @@ def test_codebook_store_follows_rebuild_in_place(spark, tmp_path):
     assert served(root) == served(fresh)
 
 
+def test_table_store_follows_in_place_rewrites(spark, tmp_path):
+    """Every serve read takes its schema from the index-table store,
+    keyed by each directory's data-file listing. Once a serve has filled
+    the store, an in-place rebuild of dense/ with a payload column must
+    serve a predicate on that column, and after merge_dense_append and
+    delete_from_index the appended doc must be served and the deleted
+    one gone in dense, ivf and hybrid — never a stale schema."""
+    from semantik_spark.operators.serving import (
+        build_dense_ivf, build_index, delete_from_index, dense_serve,
+        dense_serve_ivf, hybrid_serve, ivf_append, merge_dense_append,
+        merge_sparse_append,
+    )
+
+    docs = spark.range(60).selectExpr(
+        "id as doc_id",
+        "concat('alpha beta doc ', id) as text",
+        "case when id % 3 = 0 then 'en' else 'de' end as lang",
+    )
+    root = str(tmp_path / "root")
+    build_index(docs, root)
+    build_dense_ivf(docs, root, n_centroids=4)
+
+    def served(text):
+        q = spark.createDataFrame([("q1", text)], ["query_id", "query_text"])
+        return {name: [r["doc_id"] for r in sorted(out.collect(), key=lambda r: r["rank"])]
+                for name, out in (
+                    ("dense", dense_serve(spark, root, q, k=5)),
+                    ("ivf", dense_serve_ivf(spark, root, q, k=5, nprobe=2)),
+                    ("hybrid", hybrid_serve(spark, root, q, k=5)))}
+
+    assert all(ids for ids in served("alpha beta").values())  # fills the store
+    build_index(docs, root, payload_cols=("lang",))
+    qs = spark.createDataFrame([("q1", "alpha beta")], ["query_id", "query_text"])
+    hits = dense_serve(spark, root, qs, k=5, predicate={"lang": "en"}).collect()
+    assert len(hits) == 5 and all(r["doc_id"] % 3 == 0 for r in hits), hits
+
+    new = spark.createDataFrame([(100, "zyzzyva marker appended", "en")],
+                                "doc_id bigint, text string, lang string")
+    merge_sparse_append(new, root)
+    merge_dense_append(new, root, payload_cols=("lang",))
+    ivf_append(spark, root, new)
+    delete_from_index(spark, root, docs.where("doc_id = 7").select("doc_id", "text"))
+    for name, ids in served("zyzzyva marker appended").items():
+        assert ids[0] == 100, (name, ids)
+    for name, ids in served("alpha beta doc 7").items():
+        assert ids and 7 not in ids, (name, ids)
+
+
 def test_hybrid_serve_approx_full_width_equals_exact(spark, tmp_path):
     """With nprobe = n_centroids and keep >= corpus, the approximate
     hybrid path degrades to the exact one — identical fused rankings;
@@ -458,6 +506,19 @@ def test_driver_side_twins_are_bit_identical_to_columns(spark):
         pv = _mock_embedding_py(r["text"])
         assert list(r["v"]) == pv, (r["text"], r["v"], pv)  # exact ==
         assert r["c"] == _cosine_py(pv, list(reversed(pv))), r["text"]
+    # the builders memoize by column name: two named calls share one
+    # expression, a Column argument builds a fresh one, and both
+    # evaluate to the same bits
+    assert mock_embedding("text") is mock_embedding("text")
+    assert cosine("v", "w") is cosine("v", "w")
+    assert mock_embedding(F.col("text")) is not mock_embedding(F.col("text"))
+    named = (df.select("i", mock_embedding("text").alias("v"))
+             .withColumn("w", F.reverse("v"))
+             .select("i", "v", cosine("v", "w").alias("c")))
+    built = (df.select("i", mock_embedding(F.col("text")).alias("v"))
+             .withColumn("w", F.reverse("v"))
+             .select("i", "v", cosine(F.col("v"), F.col("w")).alias("c")))
+    assert sorted(named.collect()) == sorted(built.collect())
 
 
 def test_delete_cascade_reaches_every_artifact_and_is_idempotent(spark, tmp_path):
