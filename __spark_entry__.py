@@ -30,6 +30,7 @@ from semantik_spark.operators import bm25, chunking, dedup, extract, hyde, metri
 from semantik_spark.operators.sniff import sniff_columns
 from semantik_spark.oracles import IR_QUERY_TERMS, SEARCH_QUERIES
 from semantik_spark.plans.predicates import compile_predicate
+from semantik_spark.session import local_df
 from semantik_spark.streaming.windows import sessionize, sliding_counts, tumbling_counts
 
 
@@ -96,7 +97,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _queries_df(spark: SparkSession, pairs) -> DataFrame:
-    return spark.createDataFrame(pairs, ["query_id", "query_text"])
+    return local_df(spark, pairs, "query_id string, query_text string")
 
 
 def _r6(df: DataFrame, *cols: str) -> DataFrame:

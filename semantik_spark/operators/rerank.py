@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from semantik_spark.functions.caching import checkpoint
-
 from semantik_spark.config import (
     RERANK_CANDIDATE_MAX,
     RERANK_CANDIDATE_MIN,
@@ -32,6 +30,7 @@ from semantik_spark.config import (
 )
 from semantik_spark.functions.text import bm25_tokens
 from semantik_spark.functions.vectors import _bind, by_name
+from semantik_spark.session import local_df
 
 
 def candidate_k(k: int) -> int:
@@ -83,21 +82,31 @@ def rerank(candidates: DataFrame, queries: DataFrame, docs: DataFrame, k: int = 
     already clamped to candidate_k(k) rows per query.
     Output: query_id, doc_id, rerank_score, rank.
     """
-    # localCheckpoint the candidate set BEFORE hydrate: hydrate
-    # references its input lineage twice (distinct-ids semi-join
-    # prefilter + final join left side), and the uncached first-stage
-    # lineage is the full hybrid search — without materialization it
-    # executes end-to-end twice (counter-proven r10: 45→82 jobs, 2×
-    # shuffle). The set is bounded ≤ |queries|·candidate_k rows by the
-    # W3 clamp, so the checkpoint is tiny. The blocks are registered in
-    # the caching registry (functions/caching.py checkpoint, r14 —
-    # ADVICE r13) and released deterministically at the next query's
-    # release_all(), the same lifecycle as every operator cache().
-    hits = checkpoint(candidates.select("query_id", "doc_id"), eager=True)
-    with_content = hydrate(hits, docs)
-    with_q = with_content.join(
-        F.broadcast(queries.select("query_id", "query_text")), "query_id"
-    )
+    # collect the candidate set: it is bounded ≤ |queries|·candidate_k
+    # rows by the W3 clamp, so it comes back to the driver and the
+    # first-stage lineage runs exactly once (referenced twice, an
+    # uncached lineage executes end-to-end twice — counter-proven r10:
+    # 45→82 jobs). The query texts join onto it on the driver with the
+    # inner join's semantics (a NULL query_id matches nothing), the
+    # hits reach Spark as one LocalRelation, and their ids make
+    # hydration (J3) a static doc_id IN (…) pushdown on the payload
+    # scan whose survivors broadcast into the left join that keeps
+    # every hit.
+    cand = candidates.select("query_id", "doc_id")
+    qs = queries.select("query_id", "query_text")
+    def key(qid):  # a binary id collects as an unhashable bytearray
+        return bytes(qid) if isinstance(qid, bytearray) else qid
+
+    texts: dict = {}
+    for qid, text in qs.collect():
+        texts.setdefault(key(qid), []).append(text)
+    rows = [(qid, doc, text) for qid, doc in cand.collect() if qid is not None
+            for text in texts.get(key(qid), ())]
+    hits = local_df(candidates.sparkSession, rows, ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in (*cand.schema, qs.schema[1])))
+    wanted = docs.select("doc_id", "text").where(
+        F.col("doc_id").isin(sorted({d for _, d, _ in rows if d is not None})))
+    with_q = hits.join(F.broadcast(wanted), "doc_id", "left")
     scored = with_q.withColumn("rerank_score", score_fn("query_text", "text"))
     w = Window.partitionBy("query_id").orderBy(F.desc("rerank_score"), F.asc("doc_id"))
     return (

@@ -11,23 +11,36 @@ queries against the persisted artifacts:
   build_index   — tokenize → corpus/term stats → postings → dense
                   embeddings, written as parquet (one pass over the
                   corpus; the tokenized intermediate is shared).
-  bm25_serve    — encode queries against persisted terms, broadcast
-                  into the persisted postings scan, one shuffle (the
+  bm25_serve    — the driver-encoded query terms as a static term IN
+                  pushdown on the postings scan, one shuffle (the
                   per-(query,doc) sum), window top-k.
-  dense_serve   — embed queries, broadcast against the persisted
+  dense_serve   — driver-embedded queries scored against the persisted
                   embedding table, zero shuffles before top-k.
-  hybrid_serve  — RRF fusion of the two serve branches.
+  hybrid_serve  — the two ranked branches in one Spark job graph, their
+                  ≤ 2·|queries|·search_k rows collected and RRF-fused
+                  on the driver.
 
 A serve call pays only for the scan: everything query-independent is
-done once per process.
+done once per process, and the query side never runs on executors.
   - One index-table store (_TABLES) holds, per directory, its data-file
-    listing, its schema and its parsed codebooks. Every serve read goes
-    through _scan, which hands Spark the stored schema, so no read runs
-    a schema-inference job; _read_codebook keeps the parsed codebook/,
-    ivfpq_codebook/ and ivfpq_pq/ rows the same way. Every write job
+    listing, its schema, its parsed codebooks and its scan DataFrame
+    (per session). Every serve read goes through _scan, which hands Spark the stored
+    schema, so no read runs a schema-inference job. Every write job
     stamps fresh part-file names, so appends, rebuilds and delete
     rewrites change the listing and refresh the entry. Writers read
     their inputs plainly.
+  - The query side is built on the driver (_query_rows): one collect of
+    (query_id, query_text, bm25_tokens(query_text)) that Catalyst folds
+    into a LocalRelation batch, the bit-exact embedding twin _text_vec,
+    and tf·idf weights from one idf collect of the batch's terms.
+  - Driver-built query rows reach Spark in one of two ways, by how the
+    plan consumes them. Rows that every scanned row expands against
+    (bm25, dense and hybrid: the query vectors and the term → query
+    map) are plan literals (_inline) keyed by query position (_indexed),
+    so no job ships them. Tables joined by key (the IVF probe table of
+    _plan_probes, ivfpq_serve's candidates and query vectors) are
+    session.local_df LocalRelations broadcast into the join, one job
+    each; moving them to literals is open work.
   - The expression builders the serve paths call (mock_embedding,
     cosine, bm25_tokens, rerank.mock_rerank_score,
     similarity._nearest_centroids) memoize by column name
@@ -54,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from semantik_spark.functions.text import bm25_tokens
 from semantik_spark.functions.vectors import cosine, mock_embedding
 from semantik_spark.operators import bm25, search
 from semantik_spark.operators.similarity import (
@@ -284,11 +298,12 @@ def build_index(docs: DataFrame, path: str,
 
 
 #: the index-table store: directory → (data-file listing, schema,
-#: {parse: parsed codebook}). Schemas and codebooks change only when
-#: files are written, and every Spark write job stamps a fresh UUID into
-#: its part-file names, so an append, overwrite or delete rewrite
-#: changes the listing and the entry is re-inferred. Spark still lists
-#: the files on each read, so a scan always sees the current files.
+#: parsed) where parsed holds {parse: parsed codebook} and "scan":
+#: (session, scan DataFrame). All of it changes only when files are
+#: written, and every Spark write job
+#: stamps a fresh UUID into its part-file names, so an append, overwrite
+#: or delete rewrite changes the listing and the entry is re-inferred.
+#: A kept scan DataFrame lists exactly the files of its entry's key.
 _TABLES: dict[str, tuple[tuple[str, ...], StructType, dict]] = {}
 
 
@@ -320,8 +335,15 @@ def _table(spark: SparkSession, d: str) -> tuple[tuple[str, ...], StructType, di
 
 def _scan(spark: SparkSession, d: str) -> DataFrame:
     """Serve-path read of an index table with its stored schema: no
-    schema-inference job."""
-    return spark.read.schema(_table(spark, d)[1]).parquet(d)
+    schema-inference job. The DataFrame is kept in the store entry for
+    the session that built it, so warm calls reuse its analyzed plan; a
+    changed listing or another session (a stopped one is never reused)
+    builds a new one."""
+    _, schema, parsed = _table(spark, d)
+    hit = parsed.get("scan")
+    if hit is None or hit[0] is not spark:
+        hit = parsed["scan"] = (spark, spark.read.schema(schema).parquet(d))
+    return hit[1]
 
 
 def _read_codebook(spark: SparkSession, d: str, parse):
@@ -338,21 +360,23 @@ def _read_codebook(spark: SparkSession, d: str, parse):
 def bm25_serve(spark: SparkSession, path: str, queries: DataFrame,
                k: int = 10) -> DataFrame:
     """BM25 top-k against the persisted index: query_id, doc_id, score,
-    rank. Only the (tiny) query encoding touches the terms table; the
-    postings scan is the one big input and the per-(query,doc) sum the
-    one shuffle."""
-    terms = _scan(spark, f"{path}/terms")
-    post = _scan(spark, f"{path}/postings")
-    enc = bm25.encode_queries(queries, terms)
-    scored = bm25.score(post, enc)
-    return search._topk(scored, k)
+    rank. The query terms are encoded on the driver (_sparse_scored);
+    the postings scan is the one big input and the per-(query,doc) sum
+    the one shuffle. ``query_id`` may be of any atomic type (see
+    _indexed)."""
+    ids, qrows, qid_type = _indexed(*_query_rows(
+        queries, "query_id", "query_text", None, tokens=True))
+    return search._topk(_with_ids(_sparse_scored(spark, path, qrows), ids, qid_type), k)
 
 
 def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
                 k: int = 10, predicate: dict | None = None,
                 query_id_col: str = "query_id",
                 query_text_col: str = "query_text") -> DataFrame:
-    """Dense top-k against the persisted embedding table.
+    """Dense top-k against the persisted embedding table; the query
+    vectors are embedded on the driver (_text_vec) and reach the scan as
+    literals (_dense_scored). ``query_id`` may be of any atomic type
+    (see _indexed).
 
     ``predicate`` (payload filter, F2 ∘ W2) compiles to a Column
     (plans/predicates.py) applied to the index scan BEFORE scoring, so
@@ -362,11 +386,9 @@ def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
     k, the classic filtered-ANN bug). None compiles to TRUE, which
     Catalyst prunes: the unfiltered plan is unchanged."""
     index = _scan(spark, f"{path}/dense").where(compile_predicate(predicate))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        mock_embedding(query_text_col).alias("query_vec"),
-    )
-    return search.dense_search(index, q, k)
+    ids, qrows, qid_type = _indexed(*_query_rows(
+        queries, query_id_col, query_text_col, _text_vec))
+    return search._topk(_with_ids(_dense_scored(index, qrows), ids, qid_type), k)
 
 
 def hybrid_serve(spark: SparkSession, path: str, queries: DataFrame,
@@ -374,70 +396,186 @@ def hybrid_serve(spark: SparkSession, path: str, queries: DataFrame,
     """Hybrid RRF against the persisted index — the deployed composed
     query path (service.py:73-408 minus the per-request model calls).
 
-    Fusion behind one shuffle boundary: each branch ranks in its own
-    window partitioned by query_id, so its one hashpartitioning(query_id)
-    exchange carries only the ≤ search_k rows per query and task that
-    the Partial WindowGroupLimit below it keeps, and the two branch
-    exchanges run in parallel. The ranked branches union with a branch
-    tag; the union keeps hashpartitioning(query_id), so the groupBy
-    pivot over the ≤ 2·|queries|·search_k surviving rows and the final
-    window add no exchange (plan-asserted in tests/test_plans.py).
-    Row-identical to rrf_fuse(dense_ranked, sparse_ranked): a (query,
-    doc) group holds exactly the branches that scored it, so the
-    max(when(branch=…)) pivot reproduces the outer join's NULL pattern,
-    and ranks/ties order identically (score DESC, doc_id ASC)."""
+    The query side is built on the driver (_query_rows, _sparse_scored).
+    The two branches rank in one Spark job graph (_hybrid_branches):
+    each ranks in its own window partitioned by the query, so its one
+    hashpartitioning(qi) exchange carries only the ≤ search_k rows per
+    query and task that the Partial WindowGroupLimit below it keeps, and
+    the union of the ranked branches is the plan root (plan-asserted in
+    tests/test_plans.py). Its ≤ 2·|queries|·search_k rows are collected
+    and fused on the driver (_rrf_fuse_local) — the bounded-collect
+    pattern of ivfpq_serve's phase 1 — so the call has executed when it
+    returns. Row-identical to search.rrf_fuse(dense_ranked,
+    sparse_ranked): ranks and ties order identically (score DESC,
+    doc_id ASC). ``query_id`` may be of any atomic type (see
+    _indexed)."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    index = _scan(spark, f"{path}/dense")
-    qd = queries.select(
-        F.col("query_id").alias("query_id"),
-        mock_embedding("query_text").alias("query_vec"),
-    )
-    dscored = index.crossJoin(F.broadcast(qd)).select(
-        "query_id", "doc_id", cosine("embedding", "query_vec").alias("score")
-    )
-    terms = _scan(spark, f"{path}/terms")
-    post = _scan(spark, f"{path}/postings")
-    sscored = bm25.score(post, bm25.encode_queries(queries, terms))
-    return _rrf_union_fuse(dscored, sscored, k, search_k)
+    return _rrf_fuse_local(spark, *_hybrid_branches(spark, path, queries, search_k), k)
 
 
-def _rrf_union_fuse(dscored: DataFrame, sscored: DataFrame,
-                    k: int, search_k: int) -> DataFrame:
-    """RRF fusion of two raw score tables behind one shuffle boundary
-    (see hybrid_serve docstring): each branch ranks in its own window
-    partitioned by query_id, the ranked branches union with a branch
-    tag, and a groupBy pivot plus the final window fuse them — both
-    already clustered by query_id, so neither adds an exchange."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+def _indexed(qrows: list, qid_type: str) -> tuple[list, list, str]:
+    """The driver batch ``qrows`` keyed by query position: (ids, rows,
+    qid_type) where ``ids`` are the distinct query ids in first-seen
+    order and each row carries in place of its query_id the 1-based
+    position ``qi`` of that id in ``ids``. A literal row (_inline) holds
+    only ``qi``, so no id is ever rendered as SQL text: rows that share
+    an id share a qi, ranking by qi ranks by query, and _with_ids or
+    _rrf_fuse_local put the ids back. Ids of a nested type (array, map,
+    struct) raise a TypeError."""
+    if qid_type.startswith(("array<", "map<", "struct<")):
+        raise TypeError(f"query_id must be of an atomic type, not {qid_type}")
+    ids: list = []
+    pos: dict = {}
+    out = []
+    for qid, *rest in qrows:
+        key = bytes(qid) if isinstance(qid, bytearray) else qid
+        if key not in pos:
+            pos[key] = len(ids) + 1
+            ids.append(qid)
+        out.append((pos[key], *rest))
+    return ids, out, qid_type
+
+
+def _with_ids(scored: DataFrame, ids: list, qid_type: str) -> DataFrame:
+    """``scored`` (qi, doc_id, score) with each qi replaced by its query
+    id from ``ids`` (see _indexed). The ids are one typed array of F.lit
+    values, so every atomic id type keeps its exact value."""
+    id_array = F.array(*map(F.lit, ids)).cast(f"array<{qid_type}>")
+    return scored.select(F.element_at(id_array, F.col("qi")).alias("query_id"),
+                         "doc_id", "score")
+
+
+def _sparse_scored(spark: SparkSession, path: str, qrows: list,
+                   postings: str = "postings") -> DataFrame:
+    """Sparse dot-product scores (qi, doc_id, score) of the indexed
+    driver batch ``qrows`` (qi, _, tokens): bm25.encode_queries and
+    bm25.score with the query side on the driver. q_weight = tf_q · idf
+    per (query, term), terms without a positive idf dropped; the idf of
+    the batch's terms is one collect of ``term IN (…)`` on terms/. The
+    encoded terms reach the postings scan as a static ``term IN (…)``
+    filter and a literal term → [(qi, q_weight)] map that each surviving
+    postings row expands through (see _inline)."""
+    from collections import Counter
+
+    tf = Counter((qi, t) for qi, _, toks in qrows for t in toks)
+    terms = sorted({t for _, t in tf})
+    idf = dict(_scan(spark, f"{path}/terms").where(F.col("term").isin(terms))
+               .select("term", "idf").collect()) if terms else {}
+    by_term: dict[str, list] = {}
+    for (qi, t), n in tf.items():
+        if (idf.get(t) or 0.0) > 0:
+            by_term.setdefault(t, []).append((qi, float(n) * idf[t]))
+    entries = ", ".join(f"{_sql_literal(t)}, {_sql_literal(qs)}"
+                        for t, qs in by_term.items())
+    post = _scan(spark, f"{path}/{postings}").where(F.col("term").isin(sorted(by_term)))
+    return (post.select("doc_id", "weight", _inline(
+                f"try_element_at(map({entries}), term)" if by_term else "NULL",
+                "qi: int, q_weight: double"))
+            .groupBy("qi", "doc_id")
+            .agg(F.sum(F.col("weight") * F.col("q_weight")).alias("score")))
+
+
+def _dense_scored(index: DataFrame, qrows: list) -> DataFrame:
+    """Cosine scores (qi, doc_id, score) of every ``index`` row against
+    each driver-embedded query of the indexed batch ``qrows`` (qi, qv,
+    …)."""
+    return index.select("doc_id", "embedding", _inline(
+        _sql_literal([r[:2] for r in qrows]), "qi: int, qv: array<double>"),
+    ).select("qi", "doc_id", cosine("embedding", "qv").alias("score"))
+
+
+def _inline(rows_sql: str, fields: str):
+    """Generator Column expanding the array of structs that the SQL
+    text ``rows_sql`` evaluates to into the columns ``fields`` beside
+    each row it is selected over. Literal rows fold into one constant of
+    the plan, so no job ships them — a broadcast LocalRelation costs a
+    job of its own, ahead of the scan that reads it."""
+    return F.expr(f"inline(CAST({rows_sql} AS array<struct<{fields}>>))")
+
+
+def _sql_literal(v) -> str:
+    """SQL text that Spark parses back to exactly the driver value
+    ``v``: None, str, int, float (a float's repr round-trips), list →
+    array and tuple → struct of those. A str is written as its UTF-8
+    bytes in hex, so no quote or backslash in it is read as an escape,
+    whatever spark.sql.parser.escapedStringLiterals says. Any other
+    type raises rather than be coerced to a different value."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(v, (list, tuple)):
+        return ("array(" if isinstance(v, list) else "struct(") \
+            + ", ".join(map(_sql_literal, v)) + ")"
+    if isinstance(v, float):
+        return f"{v!r}D"
+    if isinstance(v, int):
+        return repr(v)
+    raise TypeError(f"no SQL literal for a {type(v).__name__} value")
+
+
+def _hybrid_branches(spark: SparkSession, path: str, queries: DataFrame,
+                     search_k: int, nprobe: int | None = None
+                     ) -> tuple[DataFrame, list, str]:
+    """The ranked branches of a hybrid serve as one union of (branch,
+    qi, doc_id, score, rank ≤ search_k) rows, branch 0 dense and 1
+    sparse: exact dense and postings/, or with ``nprobe`` the IVF-probed
+    dense_ivf/ and postings_pruned/. Returned with the batch's ids and
+    query-id type (see _indexed)."""
+    ids, qrows, qid_type = _indexed(*_query_rows(
+        queries, "query_id", "query_text", _text_vec, tokens=True))
+    if nprobe is None:
+        dscored = _dense_scored(_scan(spark, f"{path}/dense"), qrows)
+    else:
+        probes, probed_cells = _plan_probes(
+            spark, _read_codebook(spark, f"{path}/codebook", _cells),
+            [r[:2] for r in qrows], "int", nprobe)
+        dscored = _scan(spark, f"{path}/dense_ivf").where(
+            F.col("centroid_id").isin(probed_cells)
+        ).join(F.broadcast(probes), "centroid_id").select(
+            F.col("query_id").alias("qi"), "doc_id",
+            cosine("embedding", "qv").alias("score"))
+    sscored = _sparse_scored(spark, path, qrows,
+                             "postings" if nprobe is None else "postings_pruned")
+    w = Window.partitionBy("qi").orderBy(F.desc("score"), F.asc("doc_id"))
 
     def ranked(scored: DataFrame, branch: int) -> DataFrame:
         return (scored.withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= search_k)
                 .select(F.lit(branch).alias("branch"),
-                        "query_id", "doc_id", "score", "rank"))
+                        "qi", "doc_id", "score", "rank"))
 
-    fused = (
-        ranked(dscored, 0).unionByName(ranked(sscored, 1))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.max(F.when(F.col("branch") == 0, F.col("rank"))).alias("dense_rank"),
-            F.max(F.when(F.col("branch") == 0, F.col("score"))).alias("dense_score"),
-            F.max(F.when(F.col("branch") == 1, F.col("rank"))).alias("sparse_rank"),
-            F.max(F.when(F.col("branch") == 1, F.col("score"))).alias("sparse_score"),
-        )
-        .withColumn(
-            "score",
-            F.coalesce(1.0 / (F.lit(search.RRF_K) + F.col("dense_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (F.lit(search.RRF_K) + F.col("sparse_rank")), F.lit(0.0)),
-        )
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .where((F.col("rank") <= k) & F.col("doc_id").isNotNull())
-        .select("query_id", "doc_id", "score", "rank",
-                "dense_rank", "sparse_rank", "dense_score", "sparse_score")
-    )
+    return ranked(dscored, 0).unionByName(ranked(sscored, 1)), ids, qid_type
+
+
+def _rrf_fuse_local(spark: SparkSession, branches: DataFrame, ids: list,
+                    qid_type: str, k: int) -> DataFrame:
+    """Collect the ranked branches and RRF-fuse them on the driver,
+    bit-identical to the Spark fusion: per (query, doc_id) the max
+    rank and score of each branch (NULL where the branch missed it),
+    score = Σ 1.0/(RRF_K + rank) in dense-then-sparse order, ranked by
+    score DESC, doc_id ASC (NULL doc_id first) and THEN the NULL doc_id
+    row dropped. Returns the fused rows, each qi mapped back to its id
+    in ``ids``, as a LocalRelation with rrf_fuse's columns and types."""
+    fused: dict = {}
+    for branch, qi, doc, score, rank in branches.collect():
+        g = fused.setdefault(qi, {}).setdefault(doc, [None] * 4)
+        for i, v in ((branch, rank), (branch + 2, score)):
+            g[i] = v if g[i] is None else max(g[i], v)
+    out = []
+    for qi, docs in fused.items():
+        scored = sorted(
+            ((sum(1.0 / float(search.RRF_K + r) for r in g[:2] if r is not None),
+              doc, g) for doc, g in docs.items()),
+            key=lambda t: (-t[0], t[1] is not None, t[1]))
+        out += [(ids[qi - 1], doc, score, rank, g[0], g[1], g[2], g[3])
+                for rank, (score, doc, g) in enumerate(scored[:k], 1)
+                if doc is not None]
+    doc_type = branches.schema["doc_id"].dataType.simpleString()
+    return local_df(spark, out, f"query_id {qid_type}, doc_id {doc_type}, "
+                    "score double, rank int, dense_rank int, sparse_rank int, "
+                    "dense_score double, sparse_score double")
 
 
 def _ivf_embed(docs: DataFrame, id_col: str, text_col: str,
@@ -544,11 +682,14 @@ def _mock_embedding_py(text: str) -> list[float]:
     return [x / n for x in vals]
 
 
-def _cosine_py(a: list[float], b: list[float]) -> float:
+def _cosine_py(a: list[float] | None, b: list[float] | None) -> float:
     """Driver-side twin of functions.vectors.cosine (sequential folds,
-    same association order)."""
+    same association order); 0.0 when either side is NULL, as the
+    Column's NULL norm falls to its otherwise branch."""
     import math
 
+    if a is None or b is None:
+        return 0.0
     dot = 0.0
     na = 0.0
     nb = 0.0
@@ -576,17 +717,27 @@ def _cells(rows) -> dict:
                         for r in rows), key=lambda t: t[0]))
 
 
-def _query_rows(queries: DataFrame, id_col: str, col: str, embed):
-    """The serve batch as driver rows ``(query_id, embed(col))`` plus the
-    query-id SQL type, kept from the CALLER'S schema — a hardcoded type
-    rejected integer- or string-keyed batches on some paths."""
-    rows = queries.select(id_col, col).collect()
-    return ([(r[0], embed(r[1])) for r in rows],
+def _query_rows(queries: DataFrame, id_col: str, col: str, embed,
+                tokens: bool = False):
+    """The serve batch as driver rows ``(query_id, embed(col))`` — plus
+    the bm25_tokens list of ``col`` when ``tokens`` — and the query-id
+    SQL type, kept from the CALLER'S schema (a hardcoded type rejected
+    integer- or string-keyed batches on some paths). ``embed`` None
+    keeps ``col`` as is. Over a LocalRelation batch Catalyst folds the
+    tokenizer into the relation, so the collect runs no job, and the
+    tokens are Spark's own: there is no Python tokenizer to drift."""
+    embed = embed or (lambda v: v)
+    cols = [id_col, col] + ([bm25_tokens(col)] if tokens else [])
+    rows = queries.select(*cols).collect()
+    return ([(r[0], embed(r[1])) + ((r[2] or [],) if tokens else ())
+             for r in rows],
             queries.schema[id_col].dataType.simpleString())
 
 
-def _text_vec(text) -> list[float]:
-    return _mock_embedding_py(str(text))
+def _text_vec(text) -> list[float] | None:
+    """The driver-side query embedding: NULL text embeds to NULL, as
+    the mock_embedding Column does."""
+    return None if text is None else _mock_embedding_py(str(text))
 
 
 def _plan_probes(spark: SparkSession, cells: dict, qrows: list,
@@ -858,20 +1009,8 @@ def hybrid_serve_approx(spark: SparkSession, path: str, queries: DataFrame,
     index."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    qrows, qid_type = _query_rows(queries, "query_id", "query_text", _text_vec)
-    probes, probed_cells = _plan_probes(
-        spark, _read_codebook(spark, f"{path}/codebook", _cells),
-        qrows, qid_type, nprobe)
-    index = _scan(spark, f"{path}/dense_ivf").where(
-        F.col("centroid_id").isin(probed_cells)
-    )
-    dscored = index.join(F.broadcast(probes), "centroid_id").select(
-        "query_id", "doc_id", cosine("embedding", "qv").alias("score")
-    )
-    terms = _scan(spark, f"{path}/terms")
-    post = _scan(spark, f"{path}/postings_pruned")
-    sscored = bm25.score(post, bm25.encode_queries(queries, terms))
-    return _rrf_union_fuse(dscored, sscored, k, search_k)
+    return _rrf_fuse_local(
+        spark, *_hybrid_branches(spark, path, queries, search_k, nprobe), k)
 
 
 def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,

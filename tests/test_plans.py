@@ -313,8 +313,9 @@ def test_dense_serve_ivf_prunes_partitions(spark, tmp_path):
 
 
 def test_ivf_serve_driver_tables_plan_as_local_relations(spark, tmp_path):
-    """Driver-built serve tables (probes, rescore candidates, query
-    vectors, codebooks) must plan as JVM LocalRelations: a LogicalRDD
+    """Driver-built serve tables (probes, rescore candidates, fused
+    hybrid rows, rerank hits, codebooks) must plan as JVM
+    LocalRelations, for integer- and string-keyed batches: a LogicalRDD
     over a PythonRDD launches Python-worker tasks on every action that
     reads it, the serve path's dominant fixed cost. Catches a silent
     fallback from the Arrow path to the pickled one — including for an
@@ -324,7 +325,7 @@ def test_ivf_serve_driver_tables_plan_as_local_relations(spark, tmp_path):
     import pandas as pd
     import pyarrow as pa
 
-    from semantik_spark.operators import serving
+    from semantik_spark.operators import rerank, serving
     from semantik_spark.operators.similarity import _codebook_df, _pq_codebook_df
     from semantik_spark.session import local_df
 
@@ -345,12 +346,26 @@ def test_ivf_serve_driver_tables_plan_as_local_relations(spark, tmp_path):
     vqs = {"query_id": [1, 2], "query_vec": vecs[:2]}
     for build in (lambda d: spark.createDataFrame(pd.DataFrame(d)),
                   lambda d: spark.createDataFrame(pa.table(d))):
-        tq, vq = build(texts), build(vqs)
-        for out in (serving.dense_serve_ivf(spark, idx, tq, k=3, nprobe=2),
-                    serving.hybrid_serve_approx(spark, idx, tq, k=3, nprobe=2),
-                    serving.ivfpq_serve(spark, idx, vq, k=3, nprobe=2, rescore_k=6)):
-            plan = analyzed(out)
-            assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
+        vq = build(vqs)
+        for tq in (build(texts), build({**texts, "query_id": ["q1", "q2"]})):
+            # bm25 and dense carry their query side as plan literals:
+            # no driver table at all, so only the LogicalRDD half applies
+            for out in (serving.bm25_serve(spark, idx, tq, k=3),
+                        serving.dense_serve(spark, idx, tq, k=3)):
+                assert "LogicalRDD" not in analyzed(out), analyzed(out)
+            for out in (serving.dense_serve_ivf(spark, idx, tq, k=3, nprobe=2),
+                        serving.hybrid_serve(spark, idx, tq, k=3),
+                        serving.hybrid_serve_approx(spark, idx, tq, k=3, nprobe=2),
+                        rerank.rerank(serving.hybrid_serve(spark, idx, tq, k=6),
+                                      tq, docs, k=3),
+                        serving.ivfpq_serve(spark, idx, vq, k=3, nprobe=2, rescore_k=6)):
+                plan = analyzed(out)
+                assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
+    none = local_df(spark, [], "query_id string, query_text string")
+    for out in (serving.bm25_serve(spark, idx, none, k=3),
+                serving.dense_serve(spark, idx, none, k=3),
+                serving.hybrid_serve(spark, idx, none, k=3)):
+        assert out.collect() == [] and "LogicalRDD" not in analyzed(out)
     for tbl in (_codebook_df(spark, [{"cid": 0, "cv": [1.0, 0.0]}]),
                 _codebook_df(spark, []),
                 _pq_codebook_df(spark, [[(0, [1.0]), (1, [0.5])]]),
@@ -1051,11 +1066,14 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
     could not adjudicate the r7 hybrid 'breach' (plan byte-identical to
     r6, >5x-contended run). A refactor that adds an exchange/action
     shows up here as a counter diff, deterministically. Bounds are the
-    measured warmed counts (bm25 7, dense 4, ivf 5, hybrid 9,
-    hybrid_approx 10, ivfpq 10): every serve read takes its schema from
-    the index-table store, so none runs a schema-inference job, and the
-    RRF fusion runs no shuffle above its branch union. Pinned as <= so
-    only regressions trip, never an optimization.
+    measured warmed counts (bm25 6, dense 4, ivf 5, hybrid 8,
+    hybrid_approx 9, ivfpq 10, rerank 11; the pickled-list query batch
+    costs each text path one collect job): every serve read takes its
+    schema from the index-table store, so none runs a schema-inference
+    job; the query side is built on the driver, with one idf collect
+    per call; the hybrid branches run as one union whose rows are fused
+    on the driver; rerank collects its candidates instead of checkpointing
+    them. Pinned as <= so only regressions trip, never an optimization.
 
     MEASUREMENT CONTEXT (VERDICT r12 item 3): warmed-in-process — each
     path executes once unmeasured immediately before the pinned run in
@@ -1066,7 +1084,7 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
     index_build 39 cold vs 21 warmed)."""
     import random
 
-    from semantik_spark.operators import serving
+    from semantik_spark.operators import rerank, serving
 
     docs = _mk_docs(spark)
     qdf = _mk_queries(spark)
@@ -1084,17 +1102,21 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     paths = [
-        ("bm25_serve", 7, lambda: serving.bm25_serve(spark, idx, qdf, k=5)),
+        ("bm25_serve", 6, lambda: serving.bm25_serve(spark, idx, qdf, k=5)),
         ("dense_serve", 4, lambda: serving.dense_serve(spark, idx, qdf, k=5)),
         ("dense_ivf_serve", 5,
          lambda: serving.dense_serve_ivf(spark, idx, qdf, k=5, nprobe=2)),
-        ("hybrid_serve", 9,
+        ("hybrid_serve", 8,
          lambda: serving.hybrid_serve(spark, idx, qdf, k=5, search_k=10)),
-        ("hybrid_serve_approx", 10,
+        ("hybrid_serve_approx", 9,
          lambda: serving.hybrid_serve_approx(spark, idx, qdf, k=5, search_k=10,
                                              nprobe=2)),
         ("ivfpq_serve", 10,
          lambda: serving.ivfpq_serve(spark, idx, vq, k=3, nprobe=2, rescore_k=6)),
+        ("rerank", 11,
+         lambda: rerank.rerank(serving.hybrid_serve(spark, idx, qdf,
+                                                    k=rerank.candidate_k(5)),
+                               qdf, docs, k=5)),
     ]
     for name, bound, fn in paths:
         fn().count()  # warm: AQE stats / broadcast thresholds settle
@@ -1128,16 +1150,15 @@ def _plan_tree(plan: str) -> list[tuple[str, str, int | None]]:
 
 
 def test_rrf_fusion_adds_no_exchange_above_branch_union(spark, tmp_path):
-    """RRF fusion behind one shuffle boundary (serving._rrf_union_fuse):
-    each branch ranks in its own window partitioned by query_id, so in
-    the FINAL executed plan of hybrid_serve and hybrid_serve_approx
-    (a) no exchange sits between the branch Union and the final Window —
-    the union keeps hashpartitioning(query_id), which the pivot groupBy
-    and the final window both accept — and (b) every exchange that
-    reads per-(query, doc) branch scores (the first one below each
+    """RRF fusion behind one shuffle boundary: hybrid_serve and
+    hybrid_serve_approx collect the union of their ranked branches
+    (serving._hybrid_branches) and fuse it on the driver, so in the
+    FINAL executed plan of that union (a) the Union is the plan root —
+    no exchange, window or aggregate above it — and (b) every exchange
+    that reads per-(query, doc) branch scores (the first one below each
     union input) has a Partial WindowGroupLimit beneath it in its stage,
-    so only <= search_k rows per query and task cross it. A
-    repartition above the union, or ranking after it, breaks (a)."""
+    so only <= search_k rows per query and task cross it. Fusing in
+    Spark again, or ranking after the union, breaks (a)."""
     from semantik_spark.operators import serving
 
     docs = _mk_docs(spark)
@@ -1146,9 +1167,8 @@ def test_rrf_fusion_adds_no_exchange_above_branch_union(spark, tmp_path):
     serving.build_dense_ivf(docs, idx, n_centroids=4)
     serving.build_sparse_pruned(spark, idx, keep=8)
     qdf = _mk_queries(spark)
-    for out in (serving.hybrid_serve(spark, idx, qdf, k=5, search_k=10),
-                serving.hybrid_serve_approx(spark, idx, qdf, k=5, search_k=10,
-                                            nprobe=2)):
+    for out, _, _ in (serving._hybrid_branches(spark, idx, qdf, 10),
+                      serving._hybrid_branches(spark, idx, qdf, 10, nprobe=2)):
         assert out.collect()
         final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
         nodes = _plan_tree(final)
@@ -1161,9 +1181,7 @@ def test_rrf_fusion_adds_no_exchange_above_branch_union(spark, tmp_path):
                 yield i
 
         above = [nodes[a][0] for a in ancestors(unions[0])]
-        assert "Window" in above, final
-        assert not any(n in ("Exchange", "ShuffleQueryStage", "AQEShuffleRead")
-                       for n in above), final
+        assert set(above) <= {"ResultQueryStage"}, final
         children = {}
         for i, n in enumerate(nodes):
             children.setdefault(n[2], []).append(i)
@@ -1191,7 +1209,7 @@ def test_rrf_fusion_adds_no_exchange_above_branch_union(spark, tmp_path):
         branch_exchanges = [first_exchange(c) for c in children[unions[0]]]
         assert len(branch_exchanges) == 2 and None not in branch_exchanges, final
         for e in branch_exchanges:
-            assert "hashpartitioning(query_id" in nodes[e][1], nodes[e][1]
+            assert "hashpartitioning(qi" in nodes[e][1], nodes[e][1]
             assert stage_has_partial_limit(e), (nodes[e][1], final)
 
 

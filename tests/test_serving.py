@@ -57,11 +57,15 @@ def test_hybrid_serve_matches_inline_search(spark, corpus, index_path):
 def test_serve_reads_prune_columns(spark, index_path):
     """The dense serve scan must read only (doc_id, embedding) — column
     pruning reaching the parquet scan is what makes late
-    materialization real at 100 TB."""
+    materialization real at 100 TB. The query side is plan literals
+    expanded beside the scan: no join, so the corpus never shuffles to
+    meet it, and the one exchange is the top-k's."""
     qdf = spark.createDataFrame(QUERIES, ["query_id", "query_text"])
     plan = serving.dense_serve(spark, index_path, qdf, k=10) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan  # broadcast query side
+    assert "Generate inline" in plan and "Join" not in plan, plan
+    assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
+    assert "ReadSchema: struct<doc_id:bigint,embedding:array<double>>" in plan, plan
 
 
 def test_dense_serve_ivf_full_probe_equals_exact(spark, tmp_path):
@@ -705,3 +709,202 @@ def test_replace_batch_postings_converges_after_partial_move(spark, tmp_path):
     again = spark.read.parquet(f"{idx}/postings")
     assert again.count() == 30
     assert again.groupBy("doc_id", "term").count().where("count > 1").count() == 0
+
+
+@pytest.mark.parametrize("qids", [(1, 2), ("qa", "qb")], ids=["int", "string"])
+def test_driver_rrf_is_bit_identical_to_spark_fusion(spark, qids):
+    """hybrid_serve fuses its collected branches on the driver
+    (serving._rrf_fuse_local); every value and column type must equal
+    search.rrf_fuse over the same ranked branches: RRF ties broken by
+    doc_id, docs only one branch ranked, a query the sparse branch
+    missed and an empty sparse branch, for int and string query ids."""
+    from semantik_spark.session import local_df
+
+    a, b = qids
+    qtype = "bigint" if isinstance(a, int) else "string"
+    ddl = f"query_id {qtype}, doc_id bigint, score double, rank int"
+    dense = [(a, 10, 0.9, 1), (a, 11, 0.8, 2), (a, 12, 0.7, 3), (a, 13, 0.7, 4),
+             (b, 10, 0.5, 1), (b, 14, 0.4, 2)]
+    sparse = [(a, 12, 7.5, 1), (a, 15, 3.0, 2), (a, 10, 1.0, 3), (a, 16, 1.0, 4)]
+    qi = {a: 1, b: 2}
+
+    def branches(d, s):  # the (branch, qi, ...) union _hybrid_branches builds
+        return local_df(spark, [(br, qi[q], *rest) for br, rs in ((0, d), (1, s))
+                                for q, *rest in rs],
+                        "branch int, qi int, doc_id bigint, score double, rank int")
+
+    def rows(df):
+        return ([(f.name, f.dataType.simpleString()) for f in df.schema],
+                sorted(tuple(r) for r in df.collect()))
+
+    for d, s in ((dense, sparse), (dense, []), (sparse, dense)):
+        for k in (2, 3, 10):
+            want = rows(search.rrf_fuse(local_df(spark, d, ddl), local_df(spark, s, ddl), k=k))
+            assert rows(serving._rrf_fuse_local(spark, branches(d, s), [a, b], qtype, k)) \
+                == want, (k, want)
+
+
+def test_scan_frames_follow_sparse_writes(spark, tmp_path):
+    """The kept scan DataFrames live in the index-table store entries,
+    keyed by each directory's data-file listing. After
+    merge_sparse_append and after delete_from_index, bm25_serve and
+    hybrid_serve on the warm store must return exactly what they return
+    from an empty store: a term first queried while outside the
+    vocabulary must be found once a doc brings it in, and a deleted doc
+    must be gone."""
+    from semantik_spark.operators.serving import (
+        build_index, bm25_serve, delete_from_index, hybrid_serve,
+        merge_sparse_append,
+    )
+    from semantik_spark.session import local_df
+
+    docs = spark.range(40).selectExpr("id as doc_id",
+                                      "concat('alpha beta doc ', id) as text")
+    root = str(tmp_path / "root")
+    build_index(docs, root)
+    q = local_df(spark, [("q1", "alpha zyzzyva"), ("q2", "beta doc 3")],
+                 "query_id string, query_text string")
+
+    def served():
+        return {name: sorted(tuple(r) for r in fn().collect())
+                for name, fn in (("bm25", lambda: bm25_serve(spark, root, q, k=5)),
+                                 ("hybrid", lambda: hybrid_serve(spark, root, q, k=5)))}
+
+    def cold():
+        serving._TABLES.clear()
+        return served()
+
+    first = served()  # fills the scan frames
+    assert all("scan" in serving._TABLES[f"{root}/{t}"][2] for t in ("terms", "postings"))
+    assert first == cold()
+    merge_sparse_append(spark.createDataFrame(
+        [(100, "zyzzyva zyzzyva marker")], "doc_id bigint, text string"), root)
+    warm = served()
+    assert warm == cold()
+    assert [r for r in warm["bm25"] if r[0] == "q1" and r[3] == 1][0][1] == 100, warm
+    delete_from_index(spark, root, docs.where("doc_id = 3").select("doc_id", "text"))
+    warm = served()
+    assert warm == cold()
+    assert all(r[1] != 3 for rs in warm.values() for r in rs), warm
+
+
+def test_serve_paths_keep_atomic_query_id_types(spark, corpus, index_path):
+    """bm25_serve, dense_serve and hybrid_serve carry each query's
+    position in their plan literals, never its id, so a query_id of any
+    atomic type comes back with its value and type: the rows of a batch
+    keyed by string (quotes and backslashes included), date, timestamp,
+    decimal and binary ids equal the rows of the same batch keyed by
+    int, ids swapped — and so do rerank's over hybrid_serve. Nested id
+    types are refused up front."""
+    import datetime
+    from decimal import Decimal
+
+    from semantik_spark.operators import rerank
+    from semantik_spark.session import local_df
+
+    texts = ["stream merge", "filter token", None]
+    keyed = {
+        "int": [3, 1, 2],
+        "string": ["it's", "back\\slash\\'", "日本"],
+        "date": [datetime.date(2024, 1, d) for d in (3, 1, 2)],
+        "timestamp": [datetime.datetime(2024, 1, 1, 12, 0, s) for s in (3, 1, 2)],
+        "decimal(10,2)": [Decimal("3.25"), Decimal("1.50"), Decimal("2.00")],
+        "binary": [bytearray(b"c\x00"), bytearray(b"a"), bytearray(b"b")],
+    }
+    paths = {
+        "bm25": lambda q: serving.bm25_serve(spark, index_path, q, k=5),
+        "dense": lambda q: serving.dense_serve(spark, index_path, q, k=5),
+        "hybrid": lambda q: serving.hybrid_serve(spark, index_path, q, k=5),
+        "rerank": lambda q: rerank.rerank(serving.hybrid_serve(spark, index_path, q, k=10),
+                                          q, corpus, k=5),
+    }
+
+    def key(v):
+        return bytes(v) if isinstance(v, bytearray) else v
+
+    def served(qtype):
+        q = local_df(spark, list(zip(keyed[qtype], texts)),
+                     f"query_id {qtype}, query_text string")
+        pos = {key(r[0]): i for i, r in enumerate(q.collect())}
+        out = {}
+        for name, fn in paths.items():
+            df = fn(q)
+            assert df.schema["query_id"].dataType.simpleString() == qtype, (name, df.schema)
+            out[name] = sorted((pos[key(r[0])], *r[1:]) for r in df.collect())
+        return out
+
+    want = served("int")
+    assert all(want.values())
+    for qtype in keyed:
+        assert served(qtype) == want, qtype
+    nested = local_df(spark, [([1], "stream")], "query_id array<int>, query_text string")
+    for fn in list(paths.values())[:3]:
+        with pytest.raises(TypeError, match="atomic type"):
+            fn(nested)
+
+
+def test_null_query_text_serves_like_the_column_path(spark, corpus, index_path, tmp_path):
+    """A NULL query text embeds to NULL, as the mock_embedding Column
+    does, so every doc scores 0.0 for it: dense_serve, a full-probe
+    dense_serve_ivf and hybrid_serve return what the in-one-run Column
+    operators return for the batch [NULL, "None"]. The IVF path once
+    embedded str(None) and returned the hits of the text "None"."""
+    from semantik_spark.operators.serving import (
+        _cosine_py, _text_vec, build_dense_ivf, dense_serve, dense_serve_ivf,
+        hybrid_serve,
+    )
+    from semantik_spark.session import local_df
+
+    assert _text_vec(None) is None and _cosine_py(None, [1.0, 0.0]) == 0.0
+    qdf = local_df(spark, [("qn", None), ("qs", "None")],
+                   "query_id string, query_text string")
+    ivf = str(tmp_path / "ivf")
+    build_dense_ivf(corpus, ivf, n_centroids=4)
+    dense_cols = ("query_id", "doc_id", "rank", "score")
+    inline = _rows(search.mock_dense_search(corpus, qdf, k=10), dense_cols)
+    assert [r for r in inline if r[0] == "qn"] == \
+        [("qn", i, i + 1, 0.0) for i in range(10)]
+    assert _rows(dense_serve(spark, index_path, qdf, k=10), dense_cols) == inline
+    assert _rows(dense_serve_ivf(spark, ivf, qdf, k=10, nprobe=4), dense_cols) == inline
+    hybrid_cols = ("query_id", "doc_id", "rank", "score", "dense_rank", "sparse_rank")
+    assert _rows(hybrid_serve(spark, index_path, qdf, k=10, search_k=20), hybrid_cols) \
+        == _rows(search.hybrid_search(corpus, qdf, k=10, search_k=20), hybrid_cols)
+
+
+def test_sql_literals_round_trip_exactly(spark):
+    """The serve paths hand their driver-built query rows to Spark as
+    SQL literals (serving._sql_literal): every value must parse back
+    bit-for-bit — doubles at the edges of the range, signed zero,
+    quotes, backslashes, unicode and newlines in strings, NULLs, and
+    nested arrays and structs — with the string-escape parser setting
+    on and off."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from semantik_spark.operators.serving import _sql_literal
+
+    values = [0.1, 1 / 3, -2.5e-308, 5e-324, 1.7976931348623157e308, -0.0, 1e16,
+              123456789.123456789, "it's", "back\\slash\\'", "日本語 émigré",
+              "line\nbreak\ttab", "", None, 0, -7, 2**62,
+              [0.1, None, 1e-300], ("q1", 0.25), [("a", [1.5]), (None, None)]]
+
+    def plain(v):
+        if isinstance(v, (list, tuple)):
+            return [plain(x) for x in v]
+        return v
+
+    conf = "spark.sql.parser.escapedStringLiterals"
+    try:
+        for escaped in ("false", "true"):
+            spark.conf.set(conf, escaped)
+            got = spark.range(1).select(*[F.expr(_sql_literal(v)).alias(f"c{i}")
+                                          for i, v in enumerate(values)]).first()
+            for v, g in zip(values, got):
+                assert plain(g) == plain(v), (escaped, v, g)
+                if isinstance(v, float):
+                    assert repr(g) == repr(v), (v, g)  # signed zero too
+    finally:
+        spark.conf.unset(conf)
+    with pytest.raises(TypeError):  # never coerced to another value
+        _sql_literal(Decimal("1.5"))

@@ -17,7 +17,8 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 import pandas as pd
@@ -111,11 +112,16 @@ def _log_run(sf_dir: str, results: dict[str, str], n_pass: int, n_fail: int) -> 
     "Correctness window rotation"): past-boundary re-checks are auditable
     here rather than in commit messages.
     """
+    def git(*args: str) -> str:
+        return subprocess.run(["git", "-C", REPO, *args], capture_output=True,
+                              text=True, timeout=10).stdout.strip()
+
+    # an uncommitted tree is recorded as <head>+dirty: the evidence must
+    # name the code that produced it, not the commit it started from
     try:
-        head = subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
+        head = git("rev-parse", "--short", "HEAD") or None
+        if head and git("status", "--porcelain"):
+            head += "+dirty"
     except Exception:
         head = None
     line = {
@@ -126,7 +132,7 @@ def _log_run(sf_dir: str, results: dict[str, str], n_pass: int, n_fail: int) -> 
         "n_fail": n_fail,
         "results": results,
     }
-    path = os.path.join("/root/repo", "ORACLE_CHECKS.jsonl")
+    path = os.path.join(REPO, "ORACLE_CHECKS.jsonl")
     with open(path, "a") as fh:
         fh.write(json.dumps(line, sort_keys=True) + "\n")
 
