@@ -33,14 +33,12 @@ done once per process, and the query side never runs on executors.
     (query_id, query_text, bm25_tokens(query_text)) that Catalyst folds
     into a LocalRelation batch, the bit-exact embedding twin _text_vec,
     and tf·idf weights from one idf collect of the batch's terms.
-  - Driver-built query rows reach Spark in one of two ways, by how the
-    plan consumes them. Rows that every scanned row expands against
-    (bm25, dense and hybrid: the query vectors and the term → query
-    map) are plan literals (_inline) keyed by query position (_indexed),
-    so no job ships them. Tables joined by key (the IVF probe table of
-    _plan_probes, ivfpq_serve's candidates and query vectors) are
-    session.local_df LocalRelations broadcast into the join, one job
-    each; moving them to literals is open work.
+  - Every serve path hands its query rows to Spark as plan literals
+    (_sql_literal) keyed by query position (_indexed), so no job ships them
+    and no serve broadcasts a query table: the dense query vectors as
+    one array, rows keyed by a scan column (term, IVF cell, ivfpq
+    candidate) as one map behind a static ``key IN (…)`` (_keyed).
+    Every path scores (qi, doc_id, score); _with_ids puts the ids back.
   - The expression builders the serve paths call (mock_embedding,
     cosine, bm25_tokens, rerank.mock_rerank_score,
     similarity._nearest_centroids) memoize by column name
@@ -49,9 +47,10 @@ done once per process, and the query side never runs on executors.
 The IVF family (build_dense_ivf, ivf_append, dense_serve_ivf,
 hybrid_serve_approx, write_ivfpq_index, ivfpq_serve) shares one cell
 layer: _write_cells writes every coarse codebook, _read_codebook reads
-it through the store, and _plan_probes plans every probe table on the
-driver. Driver-built tables are session.local_df LocalRelations, never
-pickled-list LogicalRDDs.
+it through the store, and _plan_probes plans every probe on the
+driver. The tables a serve still builds on the driver (the fused hybrid
+rows, rerank's hits, the query-independent codebooks) are
+session.local_df LocalRelations, never pickled-list LogicalRDDs.
 
 Scale notes (100 TB): the persisted postings table is partitionable by
 collection and bucketable by term; the dense table by collection /
@@ -418,7 +417,7 @@ def _indexed(qrows: list, qid_type: str) -> tuple[list, list, str]:
     """The driver batch ``qrows`` keyed by query position: (ids, rows,
     qid_type) where ``ids`` are the distinct query ids in first-seen
     order and each row carries in place of its query_id the 1-based
-    position ``qi`` of that id in ``ids``. A literal row (_inline) holds
+    position ``qi`` of that id in ``ids``. A literal row (_sql_literal) holds
     only ``qi``, so no id is ever rendered as SQL text: rows that share
     an id share a qi, ranking by qi ranks by query, and _with_ids or
     _rrf_fuse_local put the ids back. Ids of a nested type (array, map,
@@ -453,9 +452,8 @@ def _sparse_scored(spark: SparkSession, path: str, qrows: list,
     bm25.score with the query side on the driver. q_weight = tf_q · idf
     per (query, term), terms without a positive idf dropped; the idf of
     the batch's terms is one collect of ``term IN (…)`` on terms/. The
-    encoded terms reach the postings scan as a static ``term IN (…)``
-    filter and a literal term → [(qi, q_weight)] map that each surviving
-    postings row expands through (see _inline)."""
+    encoded terms reach the postings scan as a term → [(qi, q_weight)]
+    map (_keyed)."""
     from collections import Counter
 
     tf = Counter((qi, t) for qi, _, toks in qrows for t in toks)
@@ -466,12 +464,8 @@ def _sparse_scored(spark: SparkSession, path: str, qrows: list,
     for (qi, t), n in tf.items():
         if (idf.get(t) or 0.0) > 0:
             by_term.setdefault(t, []).append((qi, float(n) * idf[t]))
-    entries = ", ".join(f"{_sql_literal(t)}, {_sql_literal(qs)}"
-                        for t, qs in by_term.items())
-    post = _scan(spark, f"{path}/{postings}").where(F.col("term").isin(sorted(by_term)))
-    return (post.select("doc_id", "weight", _inline(
-                f"try_element_at(map({entries}), term)" if by_term else "NULL",
-                "qi: int, q_weight: double"))
+    return (_keyed(_scan(spark, f"{path}/{postings}"), "term", by_term,
+                   "qi: int, q_weight: double", "doc_id", "weight")
             .groupBy("qi", "doc_id")
             .agg(F.sum(F.col("weight") * F.col("q_weight")).alias("score")))
 
@@ -480,39 +474,49 @@ def _dense_scored(index: DataFrame, qrows: list) -> DataFrame:
     """Cosine scores (qi, doc_id, score) of every ``index`` row against
     each driver-embedded query of the indexed batch ``qrows`` (qi, qv,
     …)."""
-    return index.select("doc_id", "embedding", _inline(
-        _sql_literal([r[:2] for r in qrows]), "qi: int, qv: array<double>"),
+    fields = "qi: int, qv: array<double>"
+    return index.select("doc_id", "embedding", F.expr("inline({})".format(_sql_literal(
+        _structs([r[:2] for r in qrows], fields), f"array<struct<{fields}>>"))),
     ).select("qi", "doc_id", cosine("embedding", "qv").alias("score"))
 
 
-def _inline(rows_sql: str, fields: str):
-    """Generator Column expanding the array of structs that the SQL
-    text ``rows_sql`` evaluates to into the columns ``fields`` beside
-    each row it is selected over. Literal rows fold into one constant of
-    the plan, so no job ships them — a broadcast LocalRelation costs a
-    job of its own, ahead of the scan that reads it."""
-    return F.expr(f"inline(CAST({rows_sql} AS array<struct<{fields}>>))")
+def _keyed(scan: DataFrame, key: str, by_key: dict, fields: str,
+           *cols: str) -> DataFrame:
+    """The ``scan`` rows whose ``key`` is in ``by_key``, each expanded
+    into one row per ``fields`` tuple of by_key[key] beside ``cols``.
+    The static ``key IN (…)`` reaches the parquet reader (as
+    PartitionFilters on a partition column); the map is one literal
+    (_sql_literal), so no join and no broadcast. An empty map keeps no
+    row."""
+    entries = [{"k": k, "v": _structs(v, fields)} for k, v in by_key.items()]
+    ddl = (f"array<struct<k: {scan.schema[key].dataType.simpleString()}, "
+           f"v: array<struct<{fields}>>>>")
+    return scan.where(F.col(key).isin(sorted(by_key))).select(*cols, F.expr(
+        f"inline(try_element_at(map_from_entries({_sql_literal(entries, ddl)}), {key}))"))
 
 
-def _sql_literal(v) -> str:
-    """SQL text that Spark parses back to exactly the driver value
-    ``v``: None, str, int, float (a float's repr round-trips), list →
-    array and tuple → struct of those. A str is written as its UTF-8
-    bytes in hex, so no quote or backslash in it is read as an escape,
-    whatever spark.sql.parser.escapedStringLiterals says. Any other
-    type raises rather than be coerced to a different value."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, str):
-        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
-    if isinstance(v, (list, tuple)):
-        return ("array(" if isinstance(v, list) else "struct(") \
-            + ", ".join(map(_sql_literal, v)) + ")"
-    if isinstance(v, float):
-        return f"{v!r}D"
-    if isinstance(v, int):
-        return repr(v)
-    raise TypeError(f"no SQL literal for a {type(v).__name__} value")
+def _structs(rows: list, fields: str) -> list[dict]:
+    """Driver tuples as structs of ``fields`` (flat ``name: type``
+    pairs, in tuple order)."""
+    names = [f.split(":")[0].strip() for f in fields.split(",")]
+    return [dict(zip(names, r)) for r in rows]
+
+
+def _sql_literal(v, ddl: str) -> str:
+    """SQL text of one constant of type ``ddl`` (an array, map or
+    struct) holding exactly the driver value ``v`` — None, str, int,
+    float, lists as arrays and dicts as structs. It is one JSON string
+    that from_json parses and Catalyst folds into one literal, so no job
+    ships it and every DataFrame step analyzes two nodes however large
+    ``v`` is (a nested SQL literal costs analysis per value: ~0.2 s per
+    ivfpq call at 64-d vectors). JSON keeps a float's repr, NaN and
+    ±Infinity; the string is hex UTF-8, so no quote or backslash in it
+    is read as an escape, whatever spark.sql.parser.escapedStringLiterals
+    says. A value JSON cannot hold raises rather than be coerced."""
+    import json
+
+    return (f"from_json(CAST(X'{json.dumps(v).encode('utf-8').hex()}' AS STRING), "
+            f"'{ddl}')")
 
 
 def _hybrid_branches(spark: SparkSession, path: str, queries: DataFrame,
@@ -525,17 +529,8 @@ def _hybrid_branches(spark: SparkSession, path: str, queries: DataFrame,
     query-id type (see _indexed)."""
     ids, qrows, qid_type = _indexed(*_query_rows(
         queries, "query_id", "query_text", _text_vec, tokens=True))
-    if nprobe is None:
-        dscored = _dense_scored(_scan(spark, f"{path}/dense"), qrows)
-    else:
-        probes, probed_cells = _plan_probes(
-            spark, _read_codebook(spark, f"{path}/codebook", _cells),
-            [r[:2] for r in qrows], "int", nprobe)
-        dscored = _scan(spark, f"{path}/dense_ivf").where(
-            F.col("centroid_id").isin(probed_cells)
-        ).join(F.broadcast(probes), "centroid_id").select(
-            F.col("query_id").alias("qi"), "doc_id",
-            cosine("embedding", "qv").alias("score"))
+    dscored = (_dense_scored(_scan(spark, f"{path}/dense"), qrows) if nprobe is None
+               else _ivf_scored(spark, path, qrows, nprobe))
     sscored = _sparse_scored(spark, path, qrows,
                              "postings" if nprobe is None else "postings_pruned")
     w = Window.partitionBy("qi").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -740,23 +735,35 @@ def _text_vec(text) -> list[float] | None:
     return None if text is None else _mock_embedding_py(str(text))
 
 
-def _plan_probes(spark: SparkSession, cells: dict, qrows: list,
-                 qid_type: str, nprobe: int, ccv: bool = False):
+def _plan_probes(cells: dict, qrows: list, nprobe: int,
+                 ccv: bool = False) -> dict:
     """Driver-side probe planning for every IVF serve path: rank the
-    cells of the cell map for each ``(query_id, qv)`` row with the
-    bit-exact cosine twin (ties → smaller cid) and build the probes
-    table as a LocalRelation — ONE Spark job per serve. ``ccv`` adds
-    the probed centroid vector (the IVFADC residual base). Returns
-    (probes_df, probed_cells)."""
-    rows = []
-    for qid, qv in qrows:
+    cells of the cell map for each row ``(qi, qv, …)`` of an indexed
+    batch with the bit-exact cosine twin (ties → smaller cid). Returns
+    the probe map {probed cell: [(qi, qv), …]}, one entry per batch row
+    probing the cell, that _keyed expands with no Spark job. ``ccv``
+    adds the probed centroid vector (the IVFADC residual base)."""
+    by_cell: dict = {}
+    for qi, qv, *_ in qrows:
         ranked = sorted(((_cosine_py(qv, cv), -cid) for cid, cv in cells.items()),
                         reverse=True)[:nprobe]
-        rows += [(qid, qv, -neg, cells[-neg]) if ccv else (qid, qv, -neg)
-                 for _, neg in ranked]
-    ddl = f"query_id {qid_type}, qv array<double>, centroid_id bigint"
-    probes = local_df(spark, rows, ddl + (", ccv array<double>" if ccv else ""))
-    return probes, sorted({r[2] for r in rows})
+        for _, neg in ranked:
+            by_cell.setdefault(-neg, []).append(
+                (qi, qv, cells[-neg]) if ccv else (qi, qv))
+    return by_cell
+
+
+def _ivf_scored(spark: SparkSession, path: str, qrows: list, nprobe: int,
+                predicate: dict | None = None) -> DataFrame:
+    """Cosine scores (qi, doc_id, score) of each query of the indexed
+    batch ``qrows`` (qi, qv, …) against the dense_ivf/ rows of its
+    ``nprobe`` nearest cells that pass ``predicate``."""
+    index = _scan(spark, f"{path}/dense_ivf").where(compile_predicate(predicate))
+    return _keyed(index, "centroid_id",
+                  _plan_probes(_read_codebook(spark, f"{path}/codebook", _cells),
+                               qrows, nprobe),
+                  "qi: int, qv: array<double>", "doc_id", "embedding",
+                  ).select("qi", "doc_id", cosine("embedding", "qv").alias("score"))
 
 
 def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
@@ -769,30 +776,21 @@ def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
     definition — this is the serve path) and the codebook (n_centroids
     × dim floats) are both driver-scale, so query embeddings and
     nearest-cell selection are computed in Python with bit-identical
-    twins of the Column expressions, and the probes table is created as
-    literals. That makes the whole serve ONE Spark job — previously a
-    codebook-scoring job and a distinct-cells collect ran before the
-    real query (2.3s → 0.9s at sf0.1).
+    twins of the Column expressions, and the probes reach the scan as a
+    literal cell → query map (_ivf_scored). A warm collect over a
+    LocalRelation batch runs 2 jobs, the scan stage and the top-k stage
+    (tests/test_plans.py pins 4 for a count() over a pickled-list batch).
 
     The probed-cell isin predicate is static, so Catalyst turns it into
     PartitionFilters on the centroid_id directory layout (asserted in
     tests/test_plans.py) — at 100 TB a probe reads nprobe/n_centroids
-    of the index FROM DISK."""
-    qrows, qid_type = _query_rows(queries, query_id_col, query_text_col, _text_vec)
-    probes, probed_cells = _plan_probes(
-        spark, _read_codebook(spark, f"{path}/codebook", _cells),
-        qrows, qid_type, nprobe)
-    # filtered ANN (F2 ∘ probe pruning): partition pruning on
-    # centroid_id AND payload PushedFilters compose on the same scan,
-    # pre-ranking — k fills from eligible docs inside probed cells only
-    index = _scan(spark, f"{path}/dense_ivf").where(
-        F.col("centroid_id").isin(probed_cells)
-    ).where(compile_predicate(predicate))
-    scored = index.join(F.broadcast(probes), "centroid_id").select(
-        "query_id", "doc_id", cosine("embedding", "qv").alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    of the index FROM DISK; the payload ``predicate`` composes on the
+    same scan as PushedFilters, pre-ranking (filtered ANN). ``query_id``
+    may be of any atomic type; nested id types raise (see _indexed)."""
+    ids, qrows, qid_type = _indexed(*_query_rows(
+        queries, query_id_col, query_text_col, _text_vec))
+    return search._topk(_with_ids(_ivf_scored(spark, path, qrows, nprobe, predicate),
+                                  ids, qid_type), k)
 
 
 def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
@@ -928,58 +926,45 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
                neighborhoods, never the corpus.
 
     Row-identical to similarity.knn_ivfpq at equal parameters
-    (test-pinned)."""
+    (test-pinned). Both phases reach their scans through _keyed (cell
+    → [(qi, qv, ccv)], then candidate → [(qi, qv)]). ``query_id`` may
+    be of any atomic type; nested id types raise (see _indexed)."""
     by_s = _read_codebook(spark, f"{path}/ivfpq_pq", _pq_by_subspace)
     m = len(by_s)
-    qrows, qid_type = _query_rows(queries, query_id_col, query_vec_col,
-                                  lambda v: [float(x) for x in v])
-    probes, probed_cells = _plan_probes(
-        spark, _read_codebook(spark, f"{path}/ivfpq_codebook", _cells),
-        qrows, qid_type, nprobe, ccv=True)
+    ids, qrows, qid_type = _indexed(*_query_rows(
+        queries, query_id_col, query_vec_col, lambda v: [float(x) for x in v]))
 
-    # phase 1: ADC over probed cells only (partition pruning on the
-    # directory layout); recon travels as DATA via the one-row
-    # broadcast codebook (literal inlining blows codegen at real sizes)
-    pq_cb = F.broadcast(_pq_codebook_df(spark, by_s))
-    index = _scan(spark, f"{path}/ivfpq_codes").where(
-        F.col("centroid_id").isin(probed_cells)
-    )
+    # phase 1: ADC over probed cells only (partition pruning). The PQ
+    # codebook is query-independent, so it travels as DATA in a one-row
+    # broadcast rather than be parsed into every call's plan as a literal
+    probes = _plan_probes(_read_codebook(spark, f"{path}/ivfpq_codebook", _cells),
+                          qrows, nprobe, ccv=True)
     recon = F.flatten(F.array(*[
         F.element_at(F.element_at(F.col("cents"), s + 1),
                      F.element_at(F.col("codes"), s + 1) + 1)["cv"]
         for s in range(m)
     ]))
-    approx = (
-        index.crossJoin(pq_cb)
-        .join(F.broadcast(probes), "centroid_id")
-        .select("query_id", "vec_id",
-                cosine(F.zip_with("ccv", recon, lambda a, b: a + b),
-                       F.col("qv")).alias("acos"))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("acos"), F.asc("vec_id"))
-    cand_rows = (
-        approx.withColumn("arank", F.row_number().over(w1))
-        .where(F.col("arank") <= rescore_k)
-        .select("query_id", "vec_id")
-        .collect()
-    )
+    approx = _keyed(_scan(spark, f"{path}/ivfpq_codes"), "centroid_id", probes,
+                    "qi: int, qv: array<double>, ccv: array<double>",
+                    "vec_id", "codes",
+                    ).crossJoin(F.broadcast(_pq_codebook_df(spark, by_s))).select(
+        F.col("qi").alias("query_id"), F.col("vec_id").alias("doc_id"),
+        cosine(F.zip_with("ccv", recon, lambda a, b: a + b),
+               F.col("qv")).alias("score"))
+    # top rescore_k per query position collected (nq × rescore_k rows)
+    cand_rows = search._topk(approx, rescore_k).select("query_id", "doc_id").collect()
 
     # phase 2: exact rescore with the candidate ids PUSHED into the
-    # full-precision scan (row-group skipping), qv rejoined broadcast
-    cand_ids = sorted({int(r["vec_id"]) for r in cand_rows})
-    cand = local_df(spark, [(r["query_id"], int(r["vec_id"])) for r in cand_rows],
-                    f"query_id {qid_type}, vec_id bigint")
-    qdf = local_df(spark, qrows, f"query_id {qid_type}, qv array<double>")
-    full = _scan(spark, f"{path}/ivfpq_full").where(
-        F.col("vec_id").isin(cand_ids)
-    )
-    exact = (
-        F.broadcast(cand).join(full, "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "vec_id", cosine("v", "qv").alias("cos"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return exact.withColumn("rank", F.row_number().over(w2)).where(F.col("rank") <= k)
+    # full-precision scan (row-group skipping); each candidate row
+    # expands against every batch row of the query that nominated it
+    cands: dict = {}
+    for qi, vec in cand_rows:
+        cands.setdefault(vec, []).extend(r for r in qrows if r[0] == qi)
+    exact = _keyed(_scan(spark, f"{path}/ivfpq_full"), "vec_id", cands,
+                   "qi: int, qv: array<double>", "vec_id", "v").select(
+        "qi", F.col("vec_id").alias("doc_id"), cosine("v", "qv").alias("score"))
+    return search._topk(_with_ids(exact, ids, qid_type), k).select(
+        "query_id", F.col("doc_id").alias("vec_id"), F.col("score").alias("cos"), "rank")
 
 
 def build_sparse_pruned(spark: SparkSession, path: str, keep: int = 64) -> None:

@@ -313,20 +313,26 @@ def test_dense_serve_ivf_prunes_partitions(spark, tmp_path):
 
 
 def test_ivf_serve_driver_tables_plan_as_local_relations(spark, tmp_path):
-    """Driver-built serve tables (probes, rescore candidates, fused
-    hybrid rows, rerank hits, codebooks) must plan as JVM
-    LocalRelations, for integer- and string-keyed batches: a LogicalRDD
-    over a PythonRDD launches Python-worker tasks on every action that
-    reads it, the serve path's dominant fixed cost. Catches a silent
-    fallback from the Arrow path to the pickled one — including for an
-    empty batch, where a pandas-built frame would fall back."""
+    """Driver-built serve tables (fused hybrid rows, rerank hits,
+    codebooks) must plan as JVM LocalRelations, for integer- and
+    string-keyed batches: a LogicalRDD over a PythonRDD launches
+    Python-worker tasks on every action that reads it, the serve path's
+    dominant fixed cost. Catches a silent fallback from the Arrow path
+    to the pickled one — including for an empty batch, where a
+    pandas-built frame would fall back. The paths whose query side is
+    all plan literals (bm25, dense, IVF, IVFPQ) hold no driver table,
+    serve an empty batch (an empty probe or candidate map) as no rows,
+    and serve a batch with a repeated query_id as the union of its
+    rows: each row of the batch expands on its own."""
     import random
 
     import pandas as pd
     import pyarrow as pa
 
     from semantik_spark.operators import rerank, serving
-    from semantik_spark.operators.similarity import _codebook_df, _pq_codebook_df
+    from semantik_spark.operators.similarity import (
+        _codebook_df, _pq_codebook_df, knn_ivfpq,
+    )
     from semantik_spark.session import local_df
 
     def analyzed(df) -> str:
@@ -348,24 +354,46 @@ def test_ivf_serve_driver_tables_plan_as_local_relations(spark, tmp_path):
                   lambda d: spark.createDataFrame(pa.table(d))):
         vq = build(vqs)
         for tq in (build(texts), build({**texts, "query_id": ["q1", "q2"]})):
-            # bm25 and dense carry their query side as plan literals:
-            # no driver table at all, so only the LogicalRDD half applies
+            # these carry their query side as plan literals: no driver
+            # table at all, so only the LogicalRDD half applies
             for out in (serving.bm25_serve(spark, idx, tq, k=3),
-                        serving.dense_serve(spark, idx, tq, k=3)):
+                        serving.dense_serve(spark, idx, tq, k=3),
+                        serving.dense_serve_ivf(spark, idx, tq, k=3, nprobe=2),
+                        serving.ivfpq_serve(spark, idx, vq, k=3, nprobe=2, rescore_k=6)):
                 assert "LogicalRDD" not in analyzed(out), analyzed(out)
-            for out in (serving.dense_serve_ivf(spark, idx, tq, k=3, nprobe=2),
-                        serving.hybrid_serve(spark, idx, tq, k=3),
+            for out in (serving.hybrid_serve(spark, idx, tq, k=3),
                         serving.hybrid_serve_approx(spark, idx, tq, k=3, nprobe=2),
                         rerank.rerank(serving.hybrid_serve(spark, idx, tq, k=6),
-                                      tq, docs, k=3),
-                        serving.ivfpq_serve(spark, idx, vq, k=3, nprobe=2, rescore_k=6)):
+                                      tq, docs, k=3)):
                 plan = analyzed(out)
                 assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
     none = local_df(spark, [], "query_id string, query_text string")
     for out in (serving.bm25_serve(spark, idx, none, k=3),
                 serving.dense_serve(spark, idx, none, k=3),
-                serving.hybrid_serve(spark, idx, none, k=3)):
+                serving.hybrid_serve(spark, idx, none, k=3),
+                serving.dense_serve_ivf(spark, idx, none, k=3, nprobe=2),
+                serving.hybrid_serve_approx(spark, idx, none, k=3, nprobe=2),
+                serving.ivfpq_serve(spark, idx,
+                                    local_df(spark, [], "query_id string, query_vec array<double>"),
+                                    k=3, nprobe=2, rescore_k=6)):
         assert out.collect() == [] and "LogicalRDD" not in analyzed(out)
+    # a repeated query_id: every batch row probes and rescores on its
+    # own, as the broadcast-join plans did — dense_serve_ivf returns
+    # each hit of the single batch twice, and ivfpq_serve equals
+    # knn_ivfpq (whose joins expand the repeated rows the same way)
+    one = local_df(spark, [(7, "merge stream")], "query_id int, query_text string")
+    two = local_df(spark, [(7, "merge stream")] * 2, "query_id int, query_text string")
+    single, doubled = (sorted(tuple(r)[1:3] for r in serving.dense_serve_ivf(
+        spark, idx, q, k=k, nprobe=2).collect()) for q, k in ((one, 3), (two, 6)))
+    assert doubled == sorted(single * 2), (single, doubled)
+    vtwo = local_df(spark, [(7, vecs[0])] * 2, "query_id int, query_vec array<double>")
+    norm = lambda df: sorted(  # noqa: E731
+        (r["query_id"], r["vec_id"], round(r["cos"], 10), r["rank"]) for r in df.collect())
+    assert norm(serving.ivfpq_serve(spark, idx, vtwo, k=3, nprobe=2, rescore_k=6)) == \
+        norm(knn_ivfpq(spark.createDataFrame(list(enumerate(vecs)),
+                                             "vec_id bigint, embedding array<double>"),
+                       vtwo, k=3, dim=64, n_centroids=4, nprobe=2, m=8,
+                       pq_centroids=4, rescore_k=6))
     for tbl in (_codebook_df(spark, [{"cid": 0, "cv": [1.0, 0.0]}]),
                 _codebook_df(spark, []),
                 _pq_codebook_df(spark, [[(0, [1.0]), (1, [0.5])]]),
@@ -1066,14 +1094,16 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
     could not adjudicate the r7 hybrid 'breach' (plan byte-identical to
     r6, >5x-contended run). A refactor that adds an exchange/action
     shows up here as a counter diff, deterministically. Bounds are the
-    measured warmed counts (bm25 6, dense 4, ivf 5, hybrid 8,
-    hybrid_approx 9, ivfpq 10, rerank 11; the pickled-list query batch
-    costs each text path one collect job): every serve read takes its
+    measured warmed counts (bm25 6, dense 4, ivf 4, hybrid 8,
+    hybrid_approx 8, ivfpq 7, rerank 11; the pickled-list query batch
+    costs each path one collect job): every serve read takes its
     schema from the index-table store, so none runs a schema-inference
     job; the query side is built on the driver, with one idf collect
-    per call; the hybrid branches run as one union whose rows are fused
-    on the driver; rerank collects its candidates instead of checkpointing
-    them. Pinned as <= so only regressions trip, never an optimization.
+    per call, and reaches the scans as plan literals, so no serve
+    broadcasts a query table; the hybrid branches run as one union
+    whose rows are fused on the driver; rerank collects its candidates
+    instead of checkpointing them. Pinned as <= so only regressions
+    trip, never an optimization.
 
     MEASUREMENT CONTEXT (VERDICT r12 item 3): warmed-in-process — each
     path executes once unmeasured immediately before the pinned run in
@@ -1104,14 +1134,14 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
     paths = [
         ("bm25_serve", 6, lambda: serving.bm25_serve(spark, idx, qdf, k=5)),
         ("dense_serve", 4, lambda: serving.dense_serve(spark, idx, qdf, k=5)),
-        ("dense_ivf_serve", 5,
+        ("dense_ivf_serve", 4,
          lambda: serving.dense_serve_ivf(spark, idx, qdf, k=5, nprobe=2)),
         ("hybrid_serve", 8,
          lambda: serving.hybrid_serve(spark, idx, qdf, k=5, search_k=10)),
-        ("hybrid_serve_approx", 9,
+        ("hybrid_serve_approx", 8,
          lambda: serving.hybrid_serve_approx(spark, idx, qdf, k=5, search_k=10,
                                              nprobe=2)),
-        ("ivfpq_serve", 10,
+        ("ivfpq_serve", 7,
          lambda: serving.ivfpq_serve(spark, idx, vq, k=3, nprobe=2, rescore_k=6)),
         ("rerank", 11,
          lambda: rerank.rerank(serving.hybrid_serve(spark, idx, qdf,
@@ -1127,6 +1157,60 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
             sc.setJobGroup(None, None)
         jobs = len(tracker.getJobIdsForGroup(f"gate_{name}"))
         assert 0 < jobs <= bound, (name, jobs, bound)
+
+
+def test_serve_paths_broadcast_no_query_table(spark, tmp_path):
+    """The IVF serve paths hand their probes and rescore candidates to
+    Spark as plan literals, never as broadcast driver tables (a
+    broadcast LocalRelation is a job of its own ahead of the scan):
+    every plan dense_serve_ivf and hybrid_serve_approx execute — their
+    collects and the returned frame's — holds no BroadcastExchange, and
+    ivfpq_serve's hold exactly one, the query-independent PQ codebook
+    (a one-row LocalTableScan of ``cents``)."""
+    import random
+
+    from semantik_spark.operators import serving
+
+    docs = _mk_docs(spark)
+    qdf = _mk_queries(spark)
+    idx = str(tmp_path / "idx")
+    serving.build_index(docs, idx)
+    serving.build_dense_ivf(docs, idx, n_centroids=4)
+    serving.build_sparse_pruned(spark, idx, keep=8)
+    rnd = random.Random(5)
+    vecs = [[rnd.gauss(0, 1) for _ in range(64)] for _ in range(40)]
+    serving.write_ivfpq_index(
+        spark.createDataFrame(list(enumerate(vecs)), "vec_id bigint, embedding array<double>"),
+        idx, dim=64, n_centroids=4, m=8, pq_centroids=4)
+    vq = spark.createDataFrame([(i, vecs[i]) for i in range(2)],
+                               "query_id bigint, query_vec array<double>")
+    cls = type(qdf)  # the concrete DataFrame class, whose collect serving calls
+    collect = cls.collect
+
+    def executed(fn) -> list[str]:
+        plans = []
+
+        def recording(self):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return collect(self)
+
+        cls.collect = recording
+        try:
+            fn().collect()
+        finally:
+            cls.collect = collect
+        return plans
+
+    for fn in (lambda: serving.dense_serve_ivf(spark, idx, qdf, k=5, nprobe=2),
+               lambda: serving.hybrid_serve_approx(spark, idx, qdf, k=5, search_k=10,
+                                                   nprobe=2)):
+        plans = executed(fn)
+        assert plans and not any("BroadcastExchange" in p for p in plans), plans
+    plans = "\n".join(executed(
+        lambda: serving.ivfpq_serve(spark, idx, vq, k=3, nprobe=2, rescore_k=6)))
+    lines = plans.splitlines()
+    hits = [i for i, ln in enumerate(lines) if "BroadcastExchange" in ln]
+    assert len(hits) == 1 and "LocalTableScan [cents#" in lines[hits[0] + 1], plans
 
 
 def _plan_tree(plan: str) -> list[tuple[str, str, int | None]]:

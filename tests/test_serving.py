@@ -788,15 +788,19 @@ def test_scan_frames_follow_sparse_writes(spark, tmp_path):
     assert all(r[1] != 3 for rs in warm.values() for r in rs), warm
 
 
-def test_serve_paths_keep_atomic_query_id_types(spark, corpus, index_path):
-    """bm25_serve, dense_serve and hybrid_serve carry each query's
-    position in their plan literals, never its id, so a query_id of any
-    atomic type comes back with its value and type: the rows of a batch
-    keyed by string (quotes and backslashes included), date, timestamp,
-    decimal and binary ids equal the rows of the same batch keyed by
-    int, ids swapped — and so do rerank's over hybrid_serve. Nested id
-    types are refused up front."""
+def test_serve_paths_keep_atomic_query_id_types(spark, corpus, index_path, tmp_path):
+    """Every serve path (bm25_serve, dense_serve, hybrid_serve,
+    dense_serve_ivf, hybrid_serve_approx, and ivfpq_serve over a vector
+    batch) carries each query's position in its plan literals, never
+    its id, so a query_id of any atomic type comes back with its value
+    and type: the rows of a batch keyed by string (quotes and
+    backslashes included), date, timestamp, decimal and binary ids
+    equal the rows of the same batch keyed by int, ids swapped — and so
+    do rerank's over hybrid_serve. Nested id types are refused up
+    front on every path."""
     import datetime
+    import random
+    import shutil
     from decimal import Decimal
 
     from semantik_spark.operators import rerank
@@ -811,12 +815,26 @@ def test_serve_paths_keep_atomic_query_id_types(spark, corpus, index_path):
         "decimal(10,2)": [Decimal("3.25"), Decimal("1.50"), Decimal("2.00")],
         "binary": [bytearray(b"c\x00"), bytearray(b"a"), bytearray(b"b")],
     }
-    paths = {
-        "bm25": lambda q: serving.bm25_serve(spark, index_path, q, k=5),
-        "dense": lambda q: serving.dense_serve(spark, index_path, q, k=5),
-        "hybrid": lambda q: serving.hybrid_serve(spark, index_path, q, k=5),
-        "rerank": lambda q: rerank.rerank(serving.hybrid_serve(spark, index_path, q, k=10),
-                                          q, corpus, k=5),
+    ivf = str(tmp_path / "ivf")
+    shutil.copytree(index_path, ivf)
+    serving.build_dense_ivf(corpus, ivf, n_centroids=4)
+    serving.build_sparse_pruned(spark, ivf, keep=8)
+    rnd = random.Random(5)
+    vecs = [[rnd.gauss(0, 1) for _ in range(64)] for _ in range(40)]
+    pq = str(tmp_path / "pq")
+    serving.write_ivfpq_index(
+        local_df(spark, list(enumerate(vecs)), "vec_id bigint, embedding array<double>"),
+        pq, dim=64, n_centroids=4, m=8, pq_centroids=4)
+    paths = {  # each takes the text batch and the vector batch
+        "bm25": lambda q, v: serving.bm25_serve(spark, index_path, q, k=5),
+        "dense": lambda q, v: serving.dense_serve(spark, index_path, q, k=5),
+        "hybrid": lambda q, v: serving.hybrid_serve(spark, index_path, q, k=5),
+        "ivf": lambda q, v: serving.dense_serve_ivf(spark, ivf, q, k=5, nprobe=2),
+        "hybrid_approx": lambda q, v: serving.hybrid_serve_approx(spark, ivf, q, k=5,
+                                                                  nprobe=2),
+        "ivfpq": lambda q, v: serving.ivfpq_serve(spark, pq, v, k=3, nprobe=2, rescore_k=6),
+        "rerank": lambda q, v: rerank.rerank(serving.hybrid_serve(spark, index_path, q, k=10),
+                                             q, corpus, k=5),
     }
 
     def key(v):
@@ -825,10 +843,12 @@ def test_serve_paths_keep_atomic_query_id_types(spark, corpus, index_path):
     def served(qtype):
         q = local_df(spark, list(zip(keyed[qtype], texts)),
                      f"query_id {qtype}, query_text string")
+        v = local_df(spark, list(zip(keyed[qtype], vecs[-3:])),
+                     f"query_id {qtype}, query_vec array<double>")
         pos = {key(r[0]): i for i, r in enumerate(q.collect())}
         out = {}
         for name, fn in paths.items():
-            df = fn(q)
+            df = fn(q, v)
             assert df.schema["query_id"].dataType.simpleString() == qtype, (name, df.schema)
             out[name] = sorted((pos[key(r[0])], *r[1:]) for r in df.collect())
         return out
@@ -838,9 +858,11 @@ def test_serve_paths_keep_atomic_query_id_types(spark, corpus, index_path):
     for qtype in keyed:
         assert served(qtype) == want, qtype
     nested = local_df(spark, [([1], "stream")], "query_id array<int>, query_text string")
-    for fn in list(paths.values())[:3]:
-        with pytest.raises(TypeError, match="atomic type"):
-            fn(nested)
+    nested_vec = local_df(spark, [([1], vecs[0])], "query_id array<int>, query_vec array<double>")
+    for name, fn in paths.items():
+        if name != "rerank":  # rerank's first stage is hybrid_serve
+            with pytest.raises(TypeError, match="atomic type"):
+                fn(nested, nested_vec)
 
 
 def test_null_query_text_serves_like_the_column_path(spark, corpus, index_path, tmp_path):
@@ -872,25 +894,39 @@ def test_null_query_text_serves_like_the_column_path(spark, corpus, index_path, 
 
 
 def test_sql_literals_round_trip_exactly(spark):
-    """The serve paths hand their driver-built query rows to Spark as
-    SQL literals (serving._sql_literal): every value must parse back
-    bit-for-bit — doubles at the edges of the range, signed zero,
-    quotes, backslashes, unicode and newlines in strings, NULLs, and
-    nested arrays and structs — with the string-escape parser setting
-    on and off."""
+    """The serve paths hand their driver-built query rows to Spark as SQL
+    literals (serving._sql_literal): every value must parse back
+    bit-for-bit — doubles at the edges of the range, signed zero, NaN
+    and ±Infinity (a caller's query_vec reaches ivfpq_serve's plan as a
+    literal), quotes, backslashes, unicode and newlines in strings,
+    NULLs, and nested arrays and structs — with the string-escape
+    parser setting on and off, and the literal folds to one constant."""
+    import math
     from decimal import Decimal
 
+    from pyspark.sql import Row
     from pyspark.sql import functions as F
 
     from semantik_spark.operators.serving import _sql_literal
 
-    values = [0.1, 1 / 3, -2.5e-308, 5e-324, 1.7976931348623157e308, -0.0, 1e16,
-              123456789.123456789, "it's", "back\\slash\\'", "日本語 émigré",
-              "line\nbreak\ttab", "", None, 0, -7, 2**62,
-              [0.1, None, 1e-300], ("q1", 0.25), [("a", [1.5]), (None, None)]]
+    typed = [(0.1, "double"), (1 / 3, "double"), (-2.5e-308, "double"),
+             (5e-324, "double"), (1.7976931348623157e308, "double"), (-0.0, "double"),
+             (1e16, "double"), (123456789.123456789, "double"), (math.nan, "double"),
+             (math.inf, "double"), (-math.inf, "double"), ("it's", "string"),
+             ("back\\slash\\'", "string"), ("日本語 émigré 🙂", "string"),
+             ("line\nbreak\ttab", "string"), ("", "string"), (None, "string"),
+             (0, "int"), (-7, "int"), (2**62, "bigint"),
+             ([0.1, None, 1e-300], "array<double>"),
+             ({"a": "q1", "b": 0.25}, "struct<a: string, b: double>"),
+             ([{"a": "a", "b": [1.5]}, {"a": None, "b": None}],
+              "array<struct<a: string, b: array<double>>>")]
+    ddl = "struct<" + ", ".join(f"c{i}: {t}" for i, (_, t) in enumerate(typed)) + ">"
+    lit = _sql_literal({f"c{i}": v for i, (v, _) in enumerate(typed)}, ddl)
 
     def plain(v):
-        if isinstance(v, (list, tuple)):
+        if isinstance(v, Row):
+            return v.asDict(recursive=True)
+        if isinstance(v, list):
             return [plain(x) for x in v]
         return v
 
@@ -898,13 +934,16 @@ def test_sql_literals_round_trip_exactly(spark):
     try:
         for escaped in ("false", "true"):
             spark.conf.set(conf, escaped)
-            got = spark.range(1).select(*[F.expr(_sql_literal(v)).alias(f"c{i}")
-                                          for i, v in enumerate(values)]).first()
-            for v, g in zip(values, got):
-                assert plain(g) == plain(v), (escaped, v, g)
+            df = spark.range(1).select(F.expr(lit).alias("s"))
+            assert "from_json" not in df._jdf.queryExecution().optimizedPlan().toString()
+            for (v, _), g in zip(typed, df.first()["s"]):
+                if isinstance(v, float) and math.isnan(v):
+                    assert isinstance(g, float) and math.isnan(g), (escaped, g)
+                    continue
+                assert plain(g) == v, (escaped, v, g)
                 if isinstance(v, float):
                     assert repr(g) == repr(v), (v, g)  # signed zero too
     finally:
         spark.conf.unset(conf)
     with pytest.raises(TypeError):  # never coerced to another value
-        _sql_literal(Decimal("1.5"))
+        _sql_literal([Decimal("1.5")], "array<decimal(2,1)>")
