@@ -2,12 +2,12 @@
 
 ``queries()`` exposes the engine's operator inventory (SURVEY.md §2 +
 the training-data-pipeline extensions); ``oracle_sql()`` gives the
-DuckDB-equivalent SQL for EVERY entry (tests/test_entry_contract.py
-asserts the key sets are identical, so no entry can be rows-only).
-Every registered query is value-checked: by a driver hash row within
-the last ~4 rotation rounds for the first-50 window, and by
-tools/check_oracle.py locally for entries added since (runs appended
-to ORACLE_CHECKS.jsonl).
+DuckDB-equivalent SQL for every entry. Both are read off QUERY_TABLE
+(end of module), one row per query holding its name, its ``q_*``
+function, its oracle SQL and its bench.py series, so no entry can be
+rows-only. Every registered query is value-checked: by a driver hash
+row for the first-50 window, and by tools/check_oracle.py locally for
+the rest (runs appended to ORACLE_CHECKS.jsonl).
 
 All float outputs are rounded to 6 decimals on BOTH sides; ranks use
 deterministic id tie-breaks; large money sums go through decimal casts
@@ -18,6 +18,7 @@ across engines.
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -5707,2236 +5708,6 @@ def q_source_imap_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-# The round-12 driver window (HISTORICAL — superseded by ROUND13_WINDOW
-# below; kept as the committed record of the CORRECTNESS_r12 contract):
-# queries() returned these 50 first, then every other registered entry
-# in declaration order. Composition: the 3 round-11 additions (first-ever driver
-# rows, ROUND12_WINDOW_MUST), the 8 r5 anchors that did not fit the
-# round-11 window (ROUND12_R5_CARRY), then 39 of the 42 surviving r6
-# anchors (alphabetical; 6 of the original 48 were pruned as
-# near-redundant this round — see README "Registry pruning (round
-# 12)"). The remaining 3 r6 anchors — market_share,
-# nation_trade_volume, top_supplier — are the ROUND13_R6_TAIL: they
-# age to seven rounds ONCE (re-verified via tools/check_oracle.py at
-# sf0.001 + sf0.01 this round, runs in ORACLE_CHECKS.jsonl) and head
-# the round-13 window.
-ROUND12_WINDOW: tuple = (
-    # round-11 additions — first driver rows (ROUND12_WINDOW_MUST)
-    "stat_bf_from_sketch",
-    "streaming_bf",
-    "streaming_psi",
-    # the 8 r5 anchors carried past the round-11 window (ROUND12_R5_CARRY)
-    "source_mix_temp",
-    "splade_vocab",
-    "state_islands",
-    "text_boilerplate",
-    "text_readability",
-    "value_correlation",
-    "weighted_sample",
-    "zipf_fit",
-    # 39 of the 42 surviving r6 anchors (last driver row CORRECTNESS_r06)
-    "bloom_prune",
-    "bm25_postings",
-    "bm25_search",
-    "bpe_encode_words",
-    "corpus_drift_psi",
-    "corpus_overlap",
-    "customer_order_distribution",
-    "dedup_clusters",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash_pairs",
-    "dense_mock_search",
-    "dsir_weights",
-    "edit_distance_pairs",
-    "excess_qty_supplier",
-    "gopher_quality",
-    "hybrid_rrf",
-    "hyde_hybrid",
-    "idle_customer_balance",
-    "ir_metrics",
-    "ir_metrics_agg",
-    "knn_ivfpq",
-    "late_data_audit",
-    "leakage_safe_split",
-    "logreg_scores",
-    "min_cost_supplier",
-    "nation_year_profit",
-    "quantile_sketch",
-    "semdedup",
-    "sole_fault_supplier",
-    "sparse_vectors",
-    "splade_search",
-    "streaming_count_min",
-    "streaming_heavy_hitters",
-    "streaming_lsh_dedup",
-    "top_revenue_parts",
-    "url_domain_stats",
-    "winsorized_stats",
-)
-
-# The 3 r6 anchors that did NOT fit the round-12 window; they head the
-# round-13 fill (the one-time 7-round tail — see README).
-ROUND13_R6_TAIL: tuple = (
-    "market_share",
-    "nation_trade_volume",
-    "top_supplier",
-)
-
-# The round-13 driver window (HISTORICAL — superseded by ROUND14_WINDOW
-# below; kept verbatim for the rotation audit trail, like
-# ROUND12_WINDOW above): the 3 round-12 additions took their first-ever
-# driver rows (tests/test_entry_contract.py ROUND13_WINDOW_MUST — the
-# real-connector source gates), then the one-time 7-round
-# ROUND13_R6_TAIL, then the full 44-entry r7 block. This drained
-# never-driver-verified entries to ZERO.
-ROUND13_WINDOW: tuple = (
-    # round-12 additions — first driver rows (ROUND13_WINDOW_MUST)
-    "source_file_filters",
-    "source_git_sync",
-    "source_imap_sync",
-    # the one-time seven-round tail (ROUND13_R6_TAIL, README rotation)
-    "market_share",
-    "nation_trade_volume",
-    "top_supplier",
-    # the 44 r7-anchored entries (last driver row CORRECTNESS_r07)
-    "benchmark_mapping",
-    "benchmark_matrix",
-    "bm25_corpus_stats",
-    "bm25_stats_merge",
-    "bm25_term_stats",
-    "bpe_merges_sampled",
-    "cdc_chunks_scan",
-    "cdc_dedup",
-    "chunk_character",
-    "chunk_hierarchical",
-    "chunk_hybrid",
-    "chunk_markdown",
-    "chunk_recursive",
-    "chunk_semantic",
-    "collection_counters",
-    "compaction_plan",
-    "dataset_split",
-    "decontaminate",
-    "dedup_sentences",
-    "embedding_quantize",
-    "events_cusum",
-    "events_trend",
-    "extract_entities",
-    "extract_keywords",
-    "incremental_changed",
-    "jl_projection",
-    "knn_bruteforce",
-    "knn_communities",
-    "knn_ivf",
-    "knn_ivfpq_serve",
-    "knn_lsh",
-    "knn_pq",
-    "knn_quantized",
-    "lm_quality",
-    "pack_sequences",
-    "pca_projection",
-    "pii_redact",
-    "predicate_route",
-    "projection_labels",
-    "quality_sample",
-    "run_dead_letter",
-    "run_status_counts",
-    "scd2_asof_join",
-    "stale_marking",
-)
-
-
-# The round-14 driver window, authoritative ORDER: no queries were added
-# in round 13/14 (both optimization rounds — ROUND14_WINDOW_MUST in
-# tests/test_entry_contract.py is empty), so the 5 free slots
-# (50 − 45 r8 anchors) go to the entries this round's optimization work
-# touched most deeply, all r9-anchored (their last driver row is
-# CORRECTNESS_r09) — the rotation contract's "behavior-changed first"
-# slot applied to internals-changed-results-identical entries:
-# doc_clusters (cluster_profile assignment spread + the avg_cos
-# order-margin proof), knn_ivf_sample_sweep (3 trainings under the
-# order-free-proof), search_snippets + rerank_search (checkpoint
-# registry), theil_sen_trend (spread()-helper routing). Then the FULL
-# 45-entry r8 block (every registered entry whose last driver row is
-# CORRECTNESS_r08), alphabetical. 5 + 45 = exactly 50; the oldest
-# anchor after this round is r9.
-ROUND14_WINDOW: tuple = (
-    # optimization-touched r9 anchors (first slots, oldest-refresh tier)
-    "doc_clusters",
-    "knn_ivf_sample_sweep",
-    "search_snippets",
-    "rerank_search",
-    "theil_sen_trend",
-    # the 45 r8-anchored entries (last driver row CORRECTNESS_r08)
-    "bm25_append_delete_replay",
-    "bm25_pruned_search",
-    "bpe_fertility",
-    "curated_manifest",
-    "customer_rfm",
-    "dedup_canonical",
-    "dedup_containment",
-    "dedup_cut",
-    "dedup_embedding",
-    "dedup_passages",
-    "dedup_spans",
-    "events_acf",
-    "events_concurrency",
-    "events_mad_outliers",
-    "events_seasonal",
-    "forecast_revenue",
-    "gdpr_delete_cascade",
-    "incremental_clusters",
-    "interval_overlap",
-    "k_anonymity",
-    "knn_assortativity",
-    "knn_binary",
-    "knn_ivf_append",
-    "knn_kcore",
-    "knn_link_prediction",
-    "knn_ppr",
-    "matryoshka_recall",
-    "maxsim_rerank",
-    "quality_calibrated",
-    "record_linkage",
-    "spell_suggestions",
-    "stratified_sample",
-    "stream_interval_join_outer",
-    "streaming_hll",
-    "streaming_scd2",
-    "streaming_sessions",
-    "temporal_split",
-    "text_entropy",
-    "text_vocab",
-    "textrank_keywords",
-    "unigram_em_encode",
-    "unigram_encode",
-    "unigram_pieces",
-    "value_band_pairs",
-    "wordpiece_encode",
-)
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING CONTRACT (rotated for round 14): the correctness driver
-    # evaluates only the first 50 entries, and the window's job is
-    # STALENESS ROTATION — first-ever driver rows for queries added
-    # since the last rotation, behavior-changed entries, then the
-    # longest-unrefreshed anchors. ROUND14_WINDOW above is the
-    # authoritative order; the dict below keeps its historical (r10)
-    # declaration order and is reordered at return. Window arithmetic:
-    # with 290 registered entries and a 50-slot window the refresh
-    # floor is a SIX-round cycle — the window drains the oldest block
-    # each round (r12 took the 8-entry r5 remainder + 39 of the 42
-    # surviving r6 anchors; r13 = the 3 source-gate MUSTs + the
-    # 3-entry ROUND13_R6_TAIL + the full 44-entry r7 block, draining
-    # never-driver-verified entries to zero; r14 = no new queries
-    # (optimization rounds), so the full 45-entry r8 block + 5
-    # optimization-touched r9 anchors in the free slots).
-    #
-    # The past-boundary anchoring contract is BEHAVIOR-anchored, not
-    # byte-anchored (VERDICT r4 "what's wrong" #3): an entry past the
-    # boundary is one whose last driver-green round produced the same
-    # rows it produces today; whenever a module behind a past-boundary
-    # query is touched, `tools/check_oracle.py <query...>` is re-run on
-    # every affected query before commit and the run is appended to
-    # ORACLE_CHECKS.jsonl (one JSON line per run — the tool logs this
-    # itself). See README "Correctness window rotation".
-    _q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # --- r10 window head (tests/test_entry_contract.py
-        # ROUND10_WINDOW_MUST, pre-wired by the r9 rotation): the 33
-        # round-9 late additions take their FIRST driver row this round
-        "heaps_law": q_heaps_law,
-        "corpus_drift_jsd": q_corpus_drift_jsd,
-        "item_item_cf": q_item_item_cf,
-        "burrows_delta": q_burrows_delta,
-        "hill_tail": q_hill_tail,
-        "ltr_features": q_ltr_features,
-        "market_hhi": q_market_hhi,
-        "cuped_ab": q_cuped_ab,
-        "logrank_test": q_logrank_test,
-        "knn_clustering": q_knn_clustering,
-        "price_elasticity": q_price_elasticity,
-        "forecast_backtest": q_forecast_backtest,
-        "streaming_chi_square": q_streaming_chi_square,
-        "markov_stationary": q_markov_stationary,
-        "textrank_sentences": q_textrank_sentences,
-        "referential_integrity": q_referential_integrity,
-        "markov_attribution": q_markov_attribution,
-        "sequential_patterns": q_sequential_patterns,
-        "poisson_bootstrap": q_poisson_bootstrap,
-        "funnel_wilson": q_funnel_wilson,
-        "eb_item_rates": q_eb_item_rates,
-        "ks_family_bh": q_ks_family_bh,
-        "rank_tau": q_rank_tau,
-        "collocations_llr": q_collocations_llr,
-        "knn_harmonic": q_knn_harmonic,
-        "label_centroids": q_label_centroids,
-        "simpson_audit": q_simpson_audit,
-        "mutual_information": q_mutual_information,
-        "cohens_kappa": q_cohens_kappa,
-        "ljung_box": q_ljung_box,
-        "roc_auc": q_roc_auc,
-        "pacf_daily": q_pacf_daily,
-        "brown_forsythe": q_brown_forsythe,
-        # --- the 13 r4-anchored entries displaced from the round-9
-        # window (last driver-green row CORRECTNESS_r04) — their refresh
-        # lands here per the rotation contract
-        "rollup_agg": q_rollup_agg,
-        "sniff_formats": q_sniff_formats,
-        "text_collocations": q_text_collocations,
-        "text_curation": q_text_curation,
-        "text_fingerprint": q_text_fingerprint,
-        "text_lang_id": q_text_lang_id,
-        "text_quality": q_text_quality,
-        "text_repetition": q_text_repetition,
-        "text_token_counts": q_text_token_counts,
-        "topk_per_group": q_topk_per_group,
-        "user_retention": q_user_retention,
-        "user_sessions": q_user_sessions,
-        "value_percentiles": q_value_percentiles,
-        # --- r5-anchored fill to the 50-slot capacity (next-oldest
-        # anchors, last driver row CORRECTNESS_r05); an r10 query added
-        # later displaces from HERE — extend ROUND10_WINDOW_MUST when
-        # adding
-        "audio_wav_segments": q_audio_wav_segments,
-        "bluegreen_swap": q_bluegreen_swap,
-        "cluster_keywords": q_cluster_keywords,
-        "contamination_report": q_contamination_report,
-        # --- driver window boundary (50): everything below is
-        # behavior-anchored by an earlier driver round (r4-r9 — every
-        # entry above this comment plus the first 50 of r9 are green in
-        # CORRECTNESS_r09; the block immediately below is the remaining
-        # r5 anchor set, PLANNED TO FILL THE ROUND-11 WINDOW together
-        # with any r10 additions so no anchor ages past ~4 rounds).
-        # Touched-module entries are re-checked via tools/check_oracle.py
-        # before commit per the behavior-anchored contract (README
-        # 'Correctness window rotation').
-        "gdpr_sync_replay": q_gdpr_sync_replay,
-        "approx_distinct_hll_packed": q_approx_distinct_hll_packed,
-        "interval_overlap_two_level": q_interval_overlap_two_level,
-        "knn_ivf_sample_sweep": q_knn_ivf_sample_sweep,
-        "embedding_dbscan": q_embedding_dbscan,
-        "bm25_rocchio_search": q_bm25_rocchio_search,
-        "lm_dirichlet_search": q_lm_dirichlet_search,
-        "streaming_exact_dedup": q_streaming_exact_dedup,
-        "mmr_rerank": q_mmr_rerank,
-        "search_snippets": q_search_snippets,
-        "sliding_uniques_hll": q_sliding_uniques_hll,
-        "phrase_search": q_phrase_search,
-        "search_facets": q_search_facets,
-        "query_autocomplete": q_query_autocomplete,
-        "user_survival": q_user_survival,
-        "benford_audit": q_benford_audit,
-        "token_gini": q_token_gini,
-        "knn_label_modularity": q_knn_label_modularity,
-        "lm_kneser_ney": q_lm_kneser_ney,
-        "boolean_search": q_boolean_search,
-        "stat_ks_test": q_stat_ks_test,
-        "stat_mann_whitney": q_stat_mann_whitney,
-        "stat_chi_square": q_stat_chi_square,
-        "theil_sen_trend": q_theil_sen_trend,
-        "good_turing": q_good_turing,
-        "stupid_backoff": q_stupid_backoff,
-        "chunk_collapse": q_chunk_collapse,
-        "chunk_fixed": q_chunk_fixed,
-        "corpus_shards": q_corpus_shards,
-        "cube_agg": q_cube_agg,
-        "customers_without_orders": q_customers_without_orders,
-        "doc_clusters": q_doc_clusters,
-        "doc_length_histogram": q_doc_length_histogram,
-        "events_anomaly": q_events_anomaly,
-        "events_asof": q_events_asof,
-        "events_funnel": q_events_funnel,
-        "events_props_json": q_events_props_json,
-        "events_range_window": q_events_range_window,
-        "events_sliding": q_events_sliding,
-        "events_tumbling": q_events_tumbling,
-        "join_revenue": q_join_revenue,
-        "more_like_this": q_more_like_this,
-        "multi_collection_dense": q_multi_collection_dense,
-        "nb_classify": q_nb_classify,
-        "ngram_topk": q_ngram_topk,
-        "order_priority": q_order_priority,
-        "parse_routed": q_parse_routed,
-        "pricing_summary": q_pricing_summary,
-        "rerank_search": q_rerank_search,
-        "approx_distinct_daily": q_approx_distinct_daily,
-        "artifact_roundtrip": q_artifact_roundtrip,
-        "customer_value_ranks": q_customer_value_ranks,
-        "dedup_jaccard_prefix": q_dedup_jaccard_prefix,
-        "discounted_revenue": q_discounted_revenue,
-        "knn_binary": q_knn_binary,
-        "dedup_spans": q_dedup_spans,
-        "matryoshka_recall": q_matryoshka_recall,
-        "dedup_cut": q_dedup_cut,
-        "bm25_pruned_search": q_bm25_pruned_search,
-        "unigram_pieces": q_unigram_pieces,
-        "unigram_encode": q_unigram_encode,
-        "knn_ivf_append": q_knn_ivf_append,
-        "stream_interval_join_outer": q_stream_interval_join_outer,
-        "knn_kcore": q_knn_kcore,
-        "textrank_keywords": q_textrank_keywords,
-        "maxsim_rerank": q_maxsim_rerank,
-        "spell_suggestions": q_spell_suggestions,
-        "incremental_clusters": q_incremental_clusters,
-        "events_seasonal": q_events_seasonal,
-        "quality_calibrated": q_quality_calibrated,
-        "bpe_fertility": q_bpe_fertility,
-        "streaming_scd2": q_streaming_scd2,
-        "text_entropy": q_text_entropy,
-        "value_band_pairs": q_value_band_pairs,
-        "events_mad_outliers": q_events_mad_outliers,
-        "curated_manifest": q_curated_manifest,
-        "unigram_em_encode": q_unigram_em_encode,
-        "dedup_containment": q_dedup_containment,
-        "knn_ppr": q_knn_ppr,
-        "customer_rfm": q_customer_rfm,
-        "streaming_sessions": q_streaming_sessions,
-        "events_concurrency": q_events_concurrency,
-        "gdpr_delete_cascade": q_gdpr_delete_cascade,
-        "bm25_append_delete_replay": q_bm25_append_delete_replay,
-        "forecast_revenue": q_forecast_revenue,
-        "interval_overlap": q_interval_overlap,
-        "events_acf": q_events_acf,
-        "wordpiece_encode": q_wordpiece_encode,
-        "record_linkage": q_record_linkage,
-        "k_anonymity": q_k_anonymity,
-        "knn_link_prediction": q_knn_link_prediction,
-        "streaming_hll": q_streaming_hll,
-        "temporal_split": q_temporal_split,
-        "knn_assortativity": q_knn_assortativity,
-        "dedup_embedding": q_dedup_embedding,
-        "dedup_canonical": q_dedup_canonical,
-        "dedup_passages": q_dedup_passages,
-        "stratified_sample": q_stratified_sample,
-        "text_vocab": q_text_vocab,
-        "events_cusum": q_events_cusum,
-        "compaction_plan": q_compaction_plan,
-        "knn_communities": q_knn_communities,
-        "cdc_dedup": q_cdc_dedup,
-        "events_trend": q_events_trend,
-        "scd2_asof_join": q_scd2_asof_join,
-        "jl_projection": q_jl_projection,
-        "knn_ivfpq_serve": q_knn_ivfpq_serve,
-        "bm25_stats_merge": q_bm25_stats_merge,
-        "cdc_chunks_scan": q_cdc_chunks_scan,
-        "bpe_merges_sampled": q_bpe_merges_sampled,
-        "ingest_index": q_ingest_index,
-        "chunk_character": q_chunk_character,
-        "pii_redact": q_pii_redact,
-        "lm_quality": q_lm_quality,
-        "dedup_sentences": q_dedup_sentences,
-        "dataset_split": q_dataset_split,
-        "pack_sequences": q_pack_sequences,
-        "decontaminate": q_decontaminate,
-        "quality_sample": q_quality_sample,
-        "chunk_markdown": q_chunk_markdown,
-        "chunk_semantic": q_chunk_semantic,
-        "chunk_hierarchical": q_chunk_hierarchical,
-        "chunk_hybrid": q_chunk_hybrid,
-        "chunk_recursive": q_chunk_recursive,
-        "predicate_route": q_predicate_route,
-        "incremental_changed": q_incremental_changed,
-        "collection_counters": q_collection_counters,
-        "gc_orphans": q_gc_orphans,
-        "stale_marking": q_stale_marking,
-        "run_status_counts": q_run_status_counts,
-        "run_dead_letter": q_run_dead_letter,
-        "projection_labels": q_projection_labels,
-        "benchmark_matrix": q_benchmark_matrix,
-        "benchmark_mapping": q_benchmark_mapping,
-        "embedding_quantize": q_embedding_quantize,
-        "bm25_corpus_stats": q_bm25_corpus_stats,
-        "bm25_term_stats": q_bm25_term_stats,
-        "extract_keywords": q_keywords,
-        "extract_entities": q_entities,
-        "knn_pq": q_knn_pq,
-        "pca_projection": q_pca_projection,
-        "knn_bruteforce": q_knn_bruteforce,
-        "knn_lsh": q_knn_lsh,
-        "knn_ivf": q_knn_ivf,
-        "knn_quantized": q_knn_quantized,
-        "quantile_sketch": q_quantile_sketch,
-        "url_domain_stats": q_url_domain_stats,
-        "customer_order_distribution": q_customer_order_distribution,
-        "top_supplier": q_top_supplier,
-        "idle_customer_balance": q_idle_customer_balance,
-        "bloom_prune": q_bloom_prune,
-        "winsorized_stats": q_winsorized_stats,
-        "nation_trade_volume": q_nation_trade_volume,
-        "min_cost_supplier": q_min_cost_supplier,
-        "excess_qty_supplier": q_excess_qty_supplier,
-        "streaming_heavy_hitters": q_streaming_heavy_hitters,
-        "pipeline_config": q_pipeline_config,
-        "edit_distance_pairs": q_edit_distance_pairs,
-        "bpe_encode_words": q_bpe_encode_words,
-        "sole_fault_supplier": q_sole_fault_supplier,
-        "nation_year_profit": q_nation_year_profit,
-        "gopher_quality": q_gopher_quality,
-        "knn_ivfpq": q_knn_ivfpq,
-        "dsir_weights": q_dsir_weights,
-        "streaming_count_min": q_streaming_count_min,
-        "semdedup": q_semdedup,
-        "logreg_scores": q_logreg_scores,
-        "streaming_lsh_dedup": q_streaming_lsh_dedup,
-        "market_share": q_market_share,
-        "top_revenue_parts": q_top_revenue_parts,
-        "corpus_overlap": q_corpus_overlap,
-        "corpus_drift_psi": q_corpus_drift_psi,
-        "late_data_audit": q_late_data_audit,
-        "leakage_safe_split": q_leakage_safe_split,
-        "bm25_postings": q_bm25_postings,
-        "bm25_search": q_bm25_search,
-        "hybrid_rrf": q_hybrid_rrf,
-        "ir_metrics": q_ir_metrics,
-        "ir_metrics_agg": q_ir_metrics_agg,
-        "hyde_hybrid": q_hyde_hybrid,
-        "splade_search": q_splade_search,
-        "dense_mock_search": q_dense_mock_search,
-        "sparse_vectors": q_sparse_vectors,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "text_readability": q_text_readability,
-        "source_mix": q_source_mix,
-        "events_rolling": q_events_rolling,
-        "value_correlation": q_value_correlation,
-        "lm_bigram": q_lm_bigram,
-        "events_transitions": q_events_transitions,
-        "text_boilerplate": q_text_boilerplate,
-        "funnel_latency": q_funnel_latency,
-        "source_mix_temp": q_source_mix_temp,
-        "session_paths": q_session_paths,
-        "doc_outliers": q_doc_outliers,
-        "hybrid_weighted": q_hybrid_weighted,
-        "profile_table": q_profile_table,
-        "state_islands": q_state_islands,
-        "zipf_fit": q_zipf_fit,
-        "length_bins": q_length_bins,
-        "hard_negatives": q_hard_negatives,
-        "knn_pagerank": q_knn_pagerank,
-        "event_assoc": q_event_assoc,
-        "events_ewma": q_events_ewma,
-        "knn_triangles": q_knn_triangles,
-        "kmv_set_ops": q_kmv_set_ops,
-        "local_supplier_revenue": q_local_supplier_revenue,
-        "priority_grouping_sets": q_priority_grouping_sets,
-        "events_twap": q_events_twap,
-        "fuzzy_pairs": q_fuzzy_pairs,
-        "purchase_attribution": q_purchase_attribution,
-        "weighted_sample": q_weighted_sample,
-        "events_pivot": q_events_pivot,
-        "events_dedup_first": q_events_dedup_first,
-        "ivm_counters": q_ivm_counters,
-        "multimodal_features": q_multimodal_features,
-        "multimodal_frames": q_multimodal_frames,
-        "splade_vocab": q_splade_vocab,
-        "shipping_priority": q_shipping_priority,
-        "returned_items": q_returned_items,
-        "late_shipment_priority": q_late_shipment_priority,
-        "promo_revenue": q_promo_revenue,
-        "parts_supplier_count": q_parts_supplier_count,
-        "small_qty_revenue": q_small_qty_revenue,
-        "large_orders": q_large_orders,
-        # --- round-10 additions (past the boundary; first driver row
-        # next rotation — tests/test_entry_contract.py
-        # ROUND11_WINDOW_MUST; growth capped ~10, VERDICT r9 item 2)
-        "phrase_search_slop": q_phrase_search_slop,
-        "ivf_codebook_drift": q_ivf_codebook_drift,
-        "stat_tests_from_sketch": q_stat_tests_from_sketch,
-        "ivf_retrain_recall": q_ivf_retrain_recall,
-        "streaming_ks": q_streaming_ks,
-        # --- round-11 additions (past the boundary; first driver row
-        # next rotation — tests/test_entry_contract.py
-        # ROUND12_WINDOW_MUST; growth capped ~6, VERDICT r10 item 10)
-        "stat_bf_from_sketch": q_stat_bf_from_sketch,
-        "streaming_bf": q_streaming_bf,
-        "streaming_psi": q_streaming_psi,
-        # --- round-12 additions (past the boundary; first driver row
-        # next rotation — tests/test_entry_contract.py
-        # ROUND13_WINDOW_MUST; growth capped at the r13 window's free
-        # slots, VERDICT r11 item 7: the source connectors get
-        # oracle-adjacent gates)
-        "source_file_filters": q_source_file_filters,
-        "source_git_sync": q_source_git_sync,
-        "source_imap_sync": q_source_imap_sync,
-    }
-    # reorder to the round-14 window contract: ROUND14_WINDOW first
-    # (the driver hash-checks exactly these 50), then declaration order
-    window = set(ROUND14_WINDOW)
-    ordered = list(ROUND14_WINDOW) + [k for k in _q if k not in window]
-    return {k: _fresh(_q[k]) for k in ordered}
-
-
-def oracle_sql() -> dict[str, str]:
-    out = {
-        "pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity) AS sum_qty,
-       sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_base_price,
-       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS sum_disc_price,
-       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)) * (1::DECIMAL(8,2) + l_tax::DECIMAL(8,2)))::DECIMAL(30,6))::DOUBLE AS sum_charge,
-       round(sum(l_quantity) / count(*), 6) AS avg_qty,
-       round(sum(l_extendedprice::DECIMAL(18,2))::DOUBLE / count(*), 6) AS avg_price,
-       round(sum(l_discount::DECIMAL(18,4))::DOUBLE / count(*), 6) AS avg_disc,
-       count(*)::BIGINT AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus""",
-        "topk_per_group": """
-SELECT p_brand, p_partkey, p_retailprice, rn::INT AS rn FROM (
-  SELECT p_brand, p_partkey, p_retailprice,
-         row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC) AS rn
-  FROM part) WHERE rn <= 3""",
-        "join_revenue": """
-SELECT n_name, count(*)::BIGINT AS n_orders,
-       sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name""",
-        "customers_without_orders": """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderpriority = '1-URGENT')""",
-        "rollup_agg": """
-SELECT l_returnflag, l_linestatus, count(*)::BIGINT AS n, sum(l_quantity) AS sum_qty
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-        "cube_agg": """
-SELECT l_returnflag, l_linestatus,
-       GROUPING(l_returnflag, l_linestatus)::INT AS gid,
-       count(*)::BIGINT AS n,
-       sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_price
-FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-        "order_priority": """
-SELECT o_orderpriority, count(*)::BIGINT AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-GROUP BY o_orderpriority""",
-        "more_like_this": oracles.q_more_like_this(100, 10, 16),
-        "events_tumbling": """
-SELECT epoch_us(time_bucket(INTERVAL 5 MINUTES, ts::TIMESTAMP))::BIGINT AS bucket_us,
-       event_type, count(*)::BIGINT AS n, round(sum(value), 4) AS sum_value
-FROM events GROUP BY 1, 2""",
-        "events_funnel": """
-WITH e AS (
-  SELECT user_id AS u, event_type AS et, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
-),
-r0 AS (SELECT u, min(us) AS t FROM e WHERE et = 'view' GROUP BY u),
-r1 AS (SELECT e.u, min(e.us) AS t FROM e JOIN r0 USING (u)
-       WHERE e.et = 'click' AND e.us > r0.t GROUP BY e.u),
-r2 AS (SELECT e.u, min(e.us) AS t FROM e JOIN r1 USING (u)
-       WHERE e.et = 'purchase' AND e.us > r1.t GROUP BY e.u),
-c AS (
-  SELECT 0 AS step_index, 'view' AS step, count(*)::BIGINT AS n_users FROM r0
-  UNION ALL
-  SELECT 1, 'click', count(*)::BIGINT FROM r1
-  UNION ALL
-  SELECT 2, 'purchase', count(*)::BIGINT FROM r2
-)
-SELECT step_index::INT AS step_index, step, n_users,
-       round(n_users / (SELECT n_users FROM c WHERE step_index = 0), 6) AS conversion
-FROM c""",
-        "session_paths": """
-WITH e AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
-), flagged AS (
-  SELECT user_id, event_id, event_type, us,
-         CASE WHEN us - lag(us) OVER w > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-), sess AS (
-  SELECT user_id, event_id, event_type, us,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS sid
-  FROM flagged
-), capped AS (
-  SELECT * FROM (
-    SELECT user_id, sid, event_type, us, event_id,
-           row_number() OVER (PARTITION BY user_id, sid ORDER BY us, event_id) AS rn
-    FROM sess) WHERE rn <= 8
-), p AS (
-  SELECT user_id, sid, string_agg(event_type, '>' ORDER BY rn) AS path
-  FROM capped GROUP BY user_id, sid
-)
-SELECT path, count(*)::BIGINT AS n_sessions
-FROM p GROUP BY path
-ORDER BY n_sessions DESC, path ASC LIMIT 20""",
-        "funnel_latency": """
-WITH e AS (
-  SELECT user_id AS u, event_type AS et, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
-),
-r0 AS (SELECT u, min(us) AS t FROM e WHERE et = 'view' GROUP BY u),
-r1 AS (SELECT e.u, min(e.us) AS t FROM e JOIN r0 USING (u)
-       WHERE e.et = 'click' AND e.us > r0.t GROUP BY e.u),
-r2 AS (SELECT e.u, min(e.us) AS t FROM e JOIN r1 USING (u)
-       WHERE e.et = 'purchase' AND e.us > r1.t GROUP BY e.u),
-lat AS (SELECT (r2.t - r0.t) / 1000000.0 AS s FROM r2 JOIN r0 USING (u))
-SELECT count(*)::BIGINT AS n_converted,
-       round(quantile_cont(s, 0.5), 6) AS p50_s,
-       round(quantile_cont(s, 0.9), 6) AS p90_s,
-       round(max(s), 6) AS max_s
-FROM lat""",
-        "user_retention": """
-WITH ud AS (SELECT DISTINCT user_id AS u, ts::TIMESTAMP::DATE AS d FROM events),
-f AS (SELECT u, min(d) AS cohort_day FROM ud GROUP BY u),
-sz AS (SELECT cohort_day, count(*)::BIGINT AS n_cohort FROM f GROUP BY cohort_day),
-act AS (
-  SELECT f.cohort_day, date_diff('day', f.cohort_day, ud.d)::INT AS day_offset,
-         count(*)::BIGINT AS n_active
-  FROM ud JOIN f USING (u)
-  WHERE date_diff('day', f.cohort_day, ud.d) <= 7
-  GROUP BY 1, 2
-)
-SELECT act.cohort_day::VARCHAR AS cohort_day, day_offset, n_active, n_cohort,
-       round(n_active / n_cohort, 6) AS retention
-FROM act JOIN sz USING (cohort_day)""",
-        "events_props_json": """
-WITH e AS (
-  SELECT event_type, try_cast(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events
-)
-SELECT event_type, count(k)::BIGINT AS n_with_k, min(k) AS min_k, max(k) AS max_k,
-       sum(k)::BIGINT AS sum_k, round(avg(k), 6) AS avg_k
-FROM e GROUP BY event_type""",
-        "nb_classify": oracles.q_nb_classify(5, "lang"),
-        "user_sessions": """
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
-), flagged AS (
-  SELECT user_id, event_id, us,
-         CASE WHEN us - lag(us) OVER w > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-), sess AS (
-  SELECT user_id, us,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
-  FROM flagged
-)
-SELECT user_id, session_id, min(us) AS session_start_us, max(us) AS session_end_us,
-       count(*)::BIGINT AS n_events
-FROM sess GROUP BY user_id, session_id""",
-        "bm25_corpus_stats": oracles.q_bm25_corpus_stats(),
-        "bm25_term_stats": oracles.q_bm25_term_stats(),
-        # one-pass whole-corpus stats: a hash-match against the Spark
-        # side's half+half delta-merge IS the merge==recompute proof
-        "bm25_stats_merge": oracles.q_bm25_stats_merge(),
-        "gdpr_delete_cascade": oracles.q_gdpr_delete_cascade(),
-        "bm25_append_delete_replay": oracles.q_bm25_append_delete_replay(),
-        "gdpr_sync_replay": oracles.q_gdpr_sync_replay(),
-        "forecast_revenue": """
-SELECT sum((l_extendedprice::DECIMAL(18,2) * l_discount::DECIMAL(8,2))::DECIMAL(30,4))::DOUBLE AS revenue,
-       count(*)::BIGINT AS n_lines
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""",
-        # row-form batch replay: a hash match proves the packed
-        # shard->pack->merge->estimate algebra == batch registers
-        "approx_distinct_hll_packed": oracles.q_approx_distinct_hll(p=8),
-        "wordpiece_encode": oracles.q_wordpiece_encode(8, 30),
-        "knn_link_prediction": oracles.q_knn_link_prediction(k=5, top_k=20),
-        "knn_assortativity": oracles.q_knn_assortativity(k=5),
-        # batch-register replay: a hash match IS the stream==batch proof
-        "streaming_hll": oracles.q_approx_distinct_hll(p=8, with_exact=False),
-        "temporal_split": """
-WITH span AS (
-  SELECT min(epoch_us(ts::TIMESTAMP)) AS t0, max(epoch_us(ts::TIMESTAMP)) AS t1
-  FROM events
-), tagged AS (
-  SELECT event_type, user_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us,
-         CASE WHEN ts IS NULL THEN 'unknown'
-              WHEN epoch_us(ts::TIMESTAMP) < t0 + ((t1 - t0) * 8) // 10
-              THEN 'train'
-              WHEN epoch_us(ts::TIMESTAMP) < t0 + ((t1 - t0) * 8) // 10
-                                                + 2 * 86400000000
-              THEN 'embargo'
-              ELSE 'test' END AS split
-  FROM events CROSS JOIN span
-)
-SELECT split, event_type, count(*)::BIGINT AS n_events,
-       count(DISTINCT user_id)::BIGINT AS n_users,
-       min(us) AS min_us, max(us) AS max_us
-FROM tagged GROUP BY 1, 2""",
-        "record_linkage": """
-WITH clean AS (
-  SELECT c_nationkey, c_custkey AS id, c_name AS name,
-         c_acctbal::DOUBLE AS val,
-         list_aggregate(list_transform(regexp_extract_all(c_name, '[0-9]'),
-                        x -> x::BIGINT), 'sum') AS dsum
-  FROM customer
-), dirty AS (
-  SELECT c_nationkey, c_custkey + 1000000 AS id,
-         substr(c_name, 1, length(c_name) - 2)
-           || substr(c_name, length(c_name), 1)
-           || substr(c_name, length(c_name) - 1, 1) AS name,
-         floor(c_acctbal)::DOUBLE AS val
-  FROM customer WHERE c_custkey % 7 = 0
-), dirtyb AS (
-  SELECT *, list_aggregate(list_transform(regexp_extract_all(name, '[0-9]'),
-                           x -> x::BIGINT), 'sum') AS dsum
-  FROM dirty
-), cand AS (
-  SELECT l.id AS id_left, r.id AS id_right,
-         levenshtein(l.name, r.name) AS dist,
-         CASE WHEN levenshtein(l.name, r.name) = 0 THEN 4000
-              WHEN levenshtein(l.name, r.name) <= 2 THEN 2500
-              ELSE -3000 END
-         + CASE WHEN abs(l.val - r.val) < 1.0 THEN 1500 ELSE -1000 END AS score
-  FROM clean l JOIN dirtyb r
-    ON l.c_nationkey = r.c_nationkey AND l.dsum = r.dsum
-)
-SELECT id_left, id_right, dist::INT AS name_dist, score::BIGINT AS score_milli
-FROM cand WHERE score >= 3000""",
-        "k_anonymity": """
-WITH span AS (
-  SELECT min(c_acctbal) AS lo, max(c_acctbal) AS hi FROM customer
-), d AS (
-  SELECT c_nationkey, c_mktsegment,
-         (CASE WHEN hi = lo THEN 0
-               ELSE least(9, floor((c_acctbal - lo) * 10.0 / (hi - lo)))
-          END)::INT AS bal_band
-  FROM customer CROSS JOIN span
-), classes AS (
-  SELECT c_nationkey, c_mktsegment, bal_band, count(*)::BIGINT AS class_size
-  FROM d GROUP BY 1, 2, 3
-)
-SELECT c_nationkey, c_mktsegment, bal_band, class_size,
-       (SELECT min(class_size) FROM classes)::BIGINT AS k_anonymity,
-       class_size < 5 AS at_risk
-FROM classes""",
-        # the oracle joins on the RAW range predicate — a hash match
-        # proves the bucket-blocked equi-join loses no pair
-        "interval_overlap": """
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us, ts FROM events
-), flagged AS (
-  SELECT user_id, event_id, us,
-         CASE WHEN us - lag(us) OVER w > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-), sess AS (
-  SELECT user_id, us,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
-  FROM flagged
-), si AS (
-  SELECT user_id, session_id, min(us) AS s0, max(us) AS s1
-  FROM sess GROUP BY user_id, session_id
-), busy AS (
-  SELECT date_trunc('day', ts) AS day, count(*) AS n FROM e
-  GROUP BY 1 ORDER BY n DESC, day ASC LIMIT 5
-), win AS (
-  SELECT strftime(day, '%Y-%m-%d') AS day,
-         epoch_us(day::TIMESTAMP)::BIGINT AS r0,
-         epoch_us(day::TIMESTAMP)::BIGINT + 86399999999 AS r1
-  FROM busy
-)
-SELECT user_id, session_id, day,
-       (least(s1, r1) - greatest(s0, r0))::BIGINT AS overlap_us
-FROM si JOIN win ON s0 <= r1 AND r0 <= s1""",
-        "events_acf": """
-WITH span AS (
-  SELECT date_trunc('day', min(ts)) AS d0, date_trunc('day', max(ts)) AS d1 FROM events
-), cal AS (
-  SELECT g, unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS day
-  FROM span CROSS JOIN (SELECT DISTINCT event_type AS g FROM events)
-), counts AS (
-  SELECT event_type AS g, date_trunc('day', ts) AS day, count(*)::BIGINT AS x
-  FROM events GROUP BY 1, 2
-), dense AS (
-  SELECT cal.g, cal.day, coalesce(x, 0)::DECIMAL(18,0) AS x
-  FROM cal LEFT JOIN counts ON cal.g = counts.g AND cal.day = counts.day
-), stats AS (
-  SELECT g, sum(x)::DECIMAL(18,0) AS s, count(*)::DECIMAL(18,0) AS n FROM dense GROUP BY 1
-), wid AS (
-  SELECT dense.g, n,
-         (x * n - s)::DECIMAL(18,0) AS c0,
-         (lead(x, 1) OVER w * n - s)::DECIMAL(18,0) AS c1,
-         (lead(x, 2) OVER w * n - s)::DECIMAL(18,0) AS c2,
-         (lead(x, 7) OVER w * n - s)::DECIMAL(18,0) AS c7
-  FROM dense JOIN stats ON dense.g = stats.g
-  WINDOW w AS (PARTITION BY dense.g ORDER BY day)
-), agg AS (
-  SELECT g, max(n)::BIGINT AS n_days, sum(c0 * c0) AS den,
-         sum(c0 * c1) AS n1, sum(c0 * c2) AS n2, sum(c0 * c7) AS n7
-  FROM wid GROUP BY 1
-)
-SELECT g AS event_type, n_days, l.lag,
-       round((CASE l.lag WHEN 1 THEN n1 WHEN 2 THEN n2 ELSE n7 END)::DOUBLE
-             / den::DOUBLE, 6) AS acf
-FROM agg CROSS JOIN (VALUES (1), (2), (7)) AS l(lag)""",
-        "bm25_postings": oracles.q_bm25_postings(),
-        "bm25_search": oracles.q_bm25_search(10),
-        "splade_vocab": oracles.q_splade_vocab(),
-        "splade_search": oracles.q_splade_search(k=10),
-        "sparse_vectors": _ORACLE_SPARSE_VECTORS,
-        "hyde_hybrid": oracles.q_hyde_hybrid(k=10, search_k=20),
-        "extract_keywords": oracles.q_keywords(top_k=5),
-        "extract_entities": oracles.q_entities(),
-        "dense_mock_search": oracles.q_dense_mock_search(10),
-        "hybrid_rrf": oracles.q_hybrid_rrf(10, 20),
-        "ir_metrics": oracles.q_ir_metrics((5, 10), 10),
-        "ir_metrics_agg": oracles.q_ir_metrics_agg((5, 10), 10),
-        "projection_labels": """
-SELECT doc_id, coalesce(source, 'unknown') AS category_source,
-       CASE WHEN n_chars < 200 THEN 'small'
-            WHEN n_chars < 1000 THEN 'medium'
-            ELSE 'large' END AS category_size
-FROM documents""",
-        "benchmark_matrix": f"""
-SELECT m.model, m.quantization, m.k AS run_k, a.metric,
-       round(a.value, 6) AS value
-FROM (SELECT model, quantization, k
-      FROM (VALUES ('modelA'), ('modelB')) m(model)
-      CROSS JOIN (VALUES ('float32'), ('float16'), ('int8')) q(quantization)
-      CROSS JOIN (VALUES (5), (10)) kk(k)) m
-JOIN ({oracles.q_ir_metrics_agg((5, 10), 10)}) a
-  ON a.k IS NULL OR a.k = m.k""",
-        "dedup_exact": oracles.q_dedup_exact(),
-        "dedup_ngram_jaccard": oracles.q_ngram_jaccard(3, 0.5),
-        "dedup_minhash_lsh": oracles.q_minhash_lsh(16, 4, 3, 0.5),
-        "dedup_clusters": oracles.q_dedup_clusters(16, 4, 3, 0.5),
-        "dedup_simhash_pairs": oracles.q_simhash_pairs(max_hamming=3),
-        "dedup_embedding": oracles.q_embedding_dups(0.99),
-        "knn_bruteforce": oracles.q_knn_bruteforce(5),
-        "knn_lsh": oracles.q_knn_lsh(5, 64, 8),
-        "knn_ivf": oracles.q_knn_ivf(5, 16, 4),
-        "knn_quantized": oracles.q_knn_quantized(5, 20),
-        "knn_pq": oracles.q_knn_pq(5, 64, 8, 16, 20),
-        "doc_clusters": oracles.q_doc_clusters(16, 1),
-        "approx_distinct_daily": oracles.q_approx_distinct_daily(64),
-        "cluster_keywords": oracles.q_cluster_keywords(8, 5),
-        "doc_outliers": oracles.q_doc_outliers(16, 1, -1.0),
-        "hybrid_weighted": oracles.q_hybrid_weighted(10, 20, 0.5),
-        "text_readability": oracles.Q_TEXT_READABILITY,
-        "source_mix": oracles.Q_SOURCE_MIX,
-        "events_rolling": """
-SELECT event_id, user_id,
-       round(avg(value) OVER w, 6) AS roll_avg,
-       round(min(value) OVER w, 6) AS roll_min,
-       round(max(value) OVER w, 6) AS roll_max,
-       (count(*) OVER w)::INT AS roll_n
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)""",
-        "value_correlation": """
-WITH agg AS (
-  SELECT l_returnflag, count(*)::BIGINT AS n,
-         sum(l_quantity::DECIMAL(18,2))::DOUBLE AS sx,
-         sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sy,
-         sum(l_quantity::DECIMAL(18,2) * l_quantity::DECIMAL(18,2))::DOUBLE AS sxx,
-         sum(l_extendedprice::DECIMAL(18,2) * l_extendedprice::DECIMAL(18,2))::DOUBLE AS syy,
-         sum(l_quantity::DECIMAL(18,2) * l_extendedprice::DECIMAL(18,2))::DOUBLE AS sxy,
-         sum(l_discount::DECIMAL(8,2))::DOUBLE AS sd,
-         sum(l_discount::DECIMAL(8,2) * l_discount::DECIMAL(8,2))::DOUBLE AS sdd
-  FROM lineitem GROUP BY l_returnflag)
-SELECT l_returnflag, n,
-       round(((sxy - sx * sy / n) / (n - 1))
-             / sqrt(((sxx - sx * sx / n) / (n - 1)) * ((syy - sy * sy / n) / (n - 1))), 6) AS corr_qty_price,
-       round((sxy - sx * sy / n) / (n - 1), 6) AS covar_qty_price,
-       round(sqrt((sdd - sd * sd / n) / (n - 1)), 6) AS stddev_disc
-FROM agg""",
-        "events_transitions": """
-WITH seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event
-  FROM events),
-pairs AS (
-  SELECT prev_event, event_type AS next_event, count(*)::BIGINT AS n
-  FROM seq WHERE prev_event IS NOT NULL
-  GROUP BY prev_event, event_type)
-SELECT prev_event, next_event, n,
-       round(n / (sum(n) OVER (PARTITION BY prev_event)), 6) AS p_next
-FROM pairs""",
-        "text_boilerplate": """
-WITH sents AS (
-  SELECT doc_id, source AS src, lower(trim(s)) AS s
-  FROM (SELECT doc_id, source, unnest(regexp_split_to_array(text, '[.!?] ')) AS s
-        FROM documents)
-  WHERE lower(trim(s)) != ''),
-hs AS (SELECT doc_id, src, (('0x'||substr(md5(cast(lower(trim(s)) as varchar)),1,15))::bigint) AS h
-       FROM (SELECT doc_id, src, s FROM sents) t),
-sizes AS (SELECT source AS src, count(DISTINCT doc_id) AS n_src_docs FROM documents GROUP BY source),
-bp AS (
-  SELECT src, h FROM (
-    SELECT hs.src, hs.h, count(DISTINCT hs.doc_id) AS n_with, any_value(sizes.n_src_docs) AS n_src_docs
-    FROM hs JOIN sizes USING (src) GROUP BY hs.src, hs.h)
-  WHERE n_with >= 2 AND n_with / n_src_docs >= 0.3)
-SELECT doc_id, count(*)::INT AS n_sentences,
-       sum(CASE WHEN bp.h IS NOT NULL THEN 1 ELSE 0 END)::INT AS n_boilerplate,
-       round(sum(CASE WHEN bp.h IS NOT NULL THEN 1 ELSE 0 END) / count(*), 6) AS bp_frac
-FROM hs LEFT JOIN bp ON hs.src = bp.src AND hs.h = bp.h
-GROUP BY doc_id""",
-        "source_mix_temp": """
-WITH per AS (SELECT source, count(*)::BIGINT AS n_docs FROM documents GROUP BY source),
-wtd AS (SELECT source, n_docs, pow(n_docs::DOUBLE, 0.5) AS w FROM per),
-tot AS (SELECT sum(w) AS w_total FROM wtd),
-sh AS (SELECT source, n_docs, w / w_total AS target_share FROM wtd, tot),
-sc AS (SELECT min(n_docs / target_share) AS scale FROM sh)
-SELECT source, n_docs,
-       round(target_share, 6) AS target_share,
-       floor(scale * target_share)::BIGINT AS planned_n,
-       round(floor(scale * target_share) / n_docs, 6) AS sample_rate
-FROM sh, sc""",
-        "lm_bigram": """
-WITH tk AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                             x -> length(x) > 0) AS toks
-  FROM documents),
-dbg AS (
-  SELECT doc_id, toks[r.i] AS wa, toks[r.i] || ' ' || toks[r.i + 1] AS gram
-  FROM tk, LATERAL unnest(range(1, len(toks))) AS r(i)
-  WHERE len(toks) >= 2),
-bgc AS (SELECT gram, any_value(wa) AS wa, count(*)::BIGINT AS c12 FROM dbg GROUP BY gram),
-uni AS (SELECT w, count(*)::BIGINT AS c1
-        FROM (SELECT unnest(toks) AS w FROM tk) s GROUP BY w),
-v AS (SELECT count(*)::BIGINT AS vsz FROM uni),
-model AS (
-  SELECT gram, round(ln((c12 + 0.5) / (c1 + 0.5 * vsz)), 9)::DECIMAL(20,9) AS lp
-  FROM bgc JOIN uni ON bgc.wa = uni.w, v),
-agg AS (
-  SELECT doc_id, count(*)::INT AS n_bigrams, sum(lp)::DECIMAL(28,9) AS slp
-  FROM dbg JOIN model USING (gram) GROUP BY doc_id)
-SELECT doc_id, n_bigrams,
-       round(slp::DOUBLE / n_bigrams, 6) AS avg_logprob,
-       round(exp(-(slp::DOUBLE / n_bigrams)), 6) AS ppl
-FROM agg""",
-        "multimodal_features": """
-SELECT doc_id::VARCHAR AS media_id,
-       CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp'
-            WHEN 2 THEN 'gif' ELSE 'jpeg' END AS format,
-       (16 + (doc_id * 7) % 48)::INT AS width,
-       (16 + (doc_id * 13) % 48)::INT AS height,
-       (CASE doc_id % 4
-          WHEN 2 THEN 3
-          WHEN 3 THEN 1 + 2 * (doc_id % 2)
-          ELSE CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END
-        END)::INT AS n_channels
-FROM documents""",
-        "shipping_priority": """
-SELECT l_orderkey, o_orderdate::VARCHAR AS order_date,
-       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-07-01 00:00:00'
-  AND l_shipdate > TIMESTAMP '1998-07-01 00:00:00'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""",
-        "returned_items": """
-SELECT c_custkey, c_name, n_name,
-       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS revenue,
-       count(*)::BIGINT AS n_items
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey ASC LIMIT 20""",
-        "late_shipment_priority": """
-SELECT o_orderpriority,
-       sum(CASE WHEN late THEN 1 ELSE 0 END)::BIGINT AS n_late,
-       sum(CASE WHEN late THEN 0 ELSE 1 END)::BIGINT AS n_ontime,
-       round(sum(CASE WHEN late THEN 1 ELSE 0 END) * 1.0 / count(*), 6) AS late_frac
-FROM (SELECT o_orderpriority,
-             date_diff('day', o_orderdate, l_shipdate) > 90 AS late
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-GROUP BY o_orderpriority""",
-        "promo_revenue": """
-WITH j AS (
-  SELECT strftime(l_shipdate, '%Y-%m') AS month, p_type,
-         (l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4) AS dp
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1998-07-01 00:00:00'
-)
-SELECT month,
-       round(100.0 * sum(CASE WHEN p_type = 'PROMO' THEN dp ELSE 0::DECIMAL(30,4) END)::DOUBLE
-             / sum(dp)::DOUBLE, 6) AS promo_pct,
-       sum(CASE WHEN p_type = 'PROMO' THEN dp ELSE 0::DECIMAL(30,4) END)::DOUBLE AS promo_revenue
-FROM j GROUP BY month""",
-        "parts_supplier_count": """
-WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-SELECT p_brand, p_size, count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
-FROM ps JOIN part ON l_partkey = p_partkey
-WHERE p_type <> 'PROMO'
-  AND l_suppkey IN (SELECT s_suppkey FROM supplier WHERE s_acctbal >= 0)
-GROUP BY p_brand, p_size
-ORDER BY supplier_cnt DESC, p_brand ASC, p_size ASC LIMIT 15""",
-        "small_qty_revenue": """
-WITH f AS (
-  SELECT l_partkey, l_quantity, l_extendedprice FROM lineitem
-  WHERE l_partkey IN (SELECT p_partkey FROM part
-                      WHERE p_brand = 'Brand#13' AND p_type = 'ECONOMY')
-), s AS (
-  SELECT l_partkey, sum(l_quantity::DECIMAL(18,2)) AS sq,
-         count(*)::BIGINT AS n
-  FROM f GROUP BY l_partkey
-)
-SELECT count(*)::BIGINT AS n_lines,
-       coalesce(round(sum(l_extendedprice::DECIMAL(18,2))::DOUBLE / 2.0, 6), 0.0) AS avg_yearly
-FROM f JOIN s USING (l_partkey)
-WHERE l_quantity::DECIMAL(18,2) * 5 * n < sq""",
-        "large_orders": """
-WITH big AS (
-  SELECT l_orderkey, sum(l_quantity::DECIMAL(18,2)) AS sum_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING sum(l_quantity::DECIMAL(18,2)) > 100
-)
-SELECT c_custkey, c_name, l_orderkey,
-       (o_totalprice::DECIMAL(18,2))::DOUBLE AS total_price,
-       sum_qty::DOUBLE AS sum_qty
-FROM big JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY sum_qty DESC, l_orderkey ASC LIMIT 100""",
-        "discounted_revenue": """
-SELECT count(*)::BIGINT AS n_lines,
-       coalesce(sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE, 0.0) AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
-   OR (p_brand = 'Brand#19' AND p_size BETWEEN 1 AND 20 AND l_quantity BETWEEN 10 AND 25)
-   OR (p_brand = 'Brand#5' AND p_size BETWEEN 1 AND 30 AND l_quantity BETWEEN 20 AND 35)""",
-        "events_cusum": """
-WITH ev AS (
-  SELECT event_type AS etype, epoch_us(ts::TIMESTAMP)::BIGINT AS us,
-         event_id AS eid, round(value, 6)::DECIMAL(28,6) AS x, value
-  FROM events WHERE value IS NOT NULL
-), stats AS (
-  SELECT etype, round(avg(value), 6) AS mu, round(stddev_samp(value), 6) AS sd
-  FROM ev GROUP BY etype
-), thr AS (
-  SELECT etype, round(mu + 0.5 * sd, 6)::DECIMAL(28,6) AS thr_pos,
-         round(mu - 0.5 * sd, 6)::DECIMAL(28,6) AS thr_neg,
-         round(4.0 * sd, 6)::DECIMAL(28,6) AS h_band
-  FROM stats
-), pre AS (
-  SELECT ev.etype, us, eid, h_band,
-         sum((x - thr_pos)::DECIMAL(28,6)) OVER w AS p_pos,
-         sum((thr_neg - x)::DECIMAL(28,6)) OVER w AS p_neg
-  FROM ev JOIN thr USING (etype)
-  WINDOW w AS (PARTITION BY ev.etype ORDER BY us, eid
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-), scored AS (
-  SELECT etype, us, h_band,
-         p_pos - least(min(p_pos) OVER w, 0::DECIMAL(28,6)) AS s_pos,
-         p_neg - least(min(p_neg) OVER w, 0::DECIMAL(28,6)) AS s_neg
-  FROM pre
-  WINDOW w AS (PARTITION BY etype ORDER BY us, eid
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT etype AS event_type, count(*)::BIGINT AS n_obs,
-       sum(CASE WHEN s_pos > h_band THEN 1 ELSE 0 END)::BIGINT AS n_pos_alarm,
-       sum(CASE WHEN s_neg > h_band THEN 1 ELSE 0 END)::BIGINT AS n_neg_alarm,
-       min(CASE WHEN s_pos > h_band THEN us END)::BIGINT AS first_pos_us,
-       min(CASE WHEN s_neg > h_band THEN us END)::BIGINT AS first_neg_us,
-       round(max(s_pos)::DOUBLE, 6) AS max_s_pos,
-       round(max(s_neg)::DOUBLE, 6) AS max_s_neg
-FROM scored GROUP BY etype""",
-        "compaction_plan": """
-WITH f AS (
-  SELECT source, doc_id AS file_id, strlen(text)::INT AS size_bytes
-  FROM documents WHERE strlen(text) < 500
-), packed AS (
-  SELECT source, size_bytes,
-         floor((sum(size_bytes) OVER w - size_bytes) / 2000.0)::INT AS bin_id
-  FROM f
-  WINDOW w AS (PARTITION BY source ORDER BY size_bytes DESC, file_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT source, bin_id, count(*)::BIGINT AS n_files,
-       sum(size_bytes)::BIGINT AS bin_bytes,
-       max(size_bytes)::BIGINT AS largest_file,
-       min(size_bytes)::BIGINT AS smallest_file,
-       round(sum(size_bytes) / 2000.0, 6) AS fill_frac
-FROM packed GROUP BY source, bin_id""",
-        "artifact_roundtrip": """
-SELECT source, count(*)::BIGINT AS n_docs,
-       count(DISTINCT sha256(text))::BIGINT AS n_hashes,
-       sum(length(text))::BIGINT AS n_bytes,
-       min(doc_id) AS min_doc, max(doc_id) AS max_doc
-FROM documents GROUP BY source""",
-        "bluegreen_swap": """
-SELECT lang, count(*)::BIGINT AS n_docs,
-       sum(n_chars)::BIGINT AS sum_chars,
-       'green' AS live_color
-FROM documents GROUP BY lang""",
-        "audio_wav_segments": """
-WITH p AS (
-  SELECT doc_id::VARCHAR AS media_id,
-         ((2000 + (doc_id * 37) % 20000) * 1000)
-           // (CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-               ELSE 44100 END) AS duration_ms
-  FROM documents
-)
-SELECT media_id, i::INT AS segment_index,
-       (i * 500)::BIGINT AS start_ms,
-       least((i + 1) * 500, duration_ms)::BIGINT AS end_ms
-FROM (SELECT media_id, duration_ms,
-             unnest(generate_series(0, (ceil(duration_ms / 500.0))::BIGINT - 1)) AS i
-      FROM p)""",
-        "multimodal_frames": """
-WITH h AS (
-  SELECT doc_id::VARCHAR AS media_id,
-         1 + (('0x' || substr(sha256(text), 1, 2))::INT % 8) AS n
-  FROM documents
-)
-SELECT media_id, f::INT AS frame_index, (f * 1000)::BIGINT AS ts_ms
-FROM (SELECT media_id, unnest(generate_series(0, n - 1)) AS f FROM h)""",
-        "ingest_index": _ORACLE_INGEST_INDEX,
-        "embedding_quantize": _ORACLE_EMBEDDING_QUANTIZE,
-        "benchmark_mapping": _ORACLE_BENCHMARK_MAPPING,
-        "parse_routed": _ORACLE_PARSE_ROUTED,
-        "rerank_search": oracles.q_rerank_search(10),
-        "multi_collection_dense": oracles.q_multi_collection_dense(10),
-        "chunk_collapse": oracles.q_chunk_collapse(20),
-        "sniff_formats": _ORACLE_SNIFF,
-        "collection_counters": """
-SELECT source, count(*)::BIGINT AS document_count,
-       sum(n_chars)::BIGINT AS total_size_bytes
-FROM documents GROUP BY source""",
-        "gc_orphans": f"""
-WITH {oracles.fixed_chunk_ctes().lstrip()}
-SELECT chunk_id, doc_id::BIGINT AS doc_id FROM fchunks
-WHERE doc_id::BIGINT % 10 = 0""",
-        "stale_marking": """
-SELECT d.doc_id, d.source, (d.doc_id % 7 = 0) AS is_stale FROM documents d""",
-        "run_status_counts": """
-WITH r AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 10 = 0 THEN 'failed'
-              WHEN doc_id % 10 = 1 THEN 'skipped'
-              ELSE 'succeeded' END AS status
-  FROM documents
-)
-SELECT count(*)::BIGINT AS files_processed,
-       sum(CASE WHEN status = 'succeeded' THEN 1 ELSE 0 END)::BIGINT AS files_succeeded,
-       sum(CASE WHEN status = 'failed' THEN 1 ELSE 0 END)::BIGINT AS files_failed,
-       sum(CASE WHEN status = 'skipped' THEN 1 ELSE 0 END)::BIGINT AS files_skipped
-FROM r""",
-        "run_dead_letter": """
-WITH r AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 10 = 0 THEN 'failed'
-              WHEN doc_id % 10 = 1 THEN 'skipped'
-              ELSE 'succeeded' END AS status,
-         CASE WHEN doc_id % 20 = 0 THEN 'connection timeout to vecpipe'
-              ELSE 'parse error: bad header' END AS error_message,
-         (doc_id % 4)::INT AS retry_count
-  FROM documents
-), dead AS (
-  SELECT doc_id, status, error_message, retry_count,
-         CASE WHEN lower(error_message) LIKE '%timeout%'
-                OR lower(error_message) LIKE '%connection%'
-                OR lower(error_message) LIKE '%throttled%'
-                OR lower(error_message) LIKE '%oom%'
-              THEN 'transient' ELSE 'permanent' END AS error_category
-  FROM r WHERE status = 'failed'
-)
-SELECT doc_id, status, error_message, retry_count, error_category,
-       error_category = 'transient' AS retryable,
-       (error_category = 'transient' AND retry_count < 3) AS will_retry
-FROM dead""",
-        "events_sliding": """
-WITH slid AS (
-  SELECT epoch_us(time_bucket(INTERVAL 5 MINUTES, ts::TIMESTAMP))::BIGINT AS b0,
-         event_type, ts
-  FROM events
-), expanded AS (
-  SELECT b0 AS bucket_us, event_type FROM slid
-  UNION ALL
-  SELECT b0 - 300000000 AS bucket_us, event_type FROM slid
-)
-SELECT bucket_us, event_type, count(*)::BIGINT AS n
-FROM expanded GROUP BY bucket_us, event_type""",
-        "text_lang_id": _ORACLE_LANG_ID,
-        "text_quality": _ORACLE_QUALITY,
-        "quality_calibrated": _ORACLE_CALIBRATED.format(q=_ORACLE_QUALITY),
-        "bpe_fertility": oracles.q_bpe_fertility(8),
-        "text_curation": _ORACLE_CURATION.format(quality=_ORACLE_QUALITY),
-        "text_repetition": """
-WITH base AS (
-  SELECT doc_id,
-         list_filter(list_transform(regexp_split_to_array(text, '\\n'), x -> trim(x)),
-                     x -> length(x) > 0) AS lines,
-         list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> length(t) > 0) AS toks
-  FROM documents
-), g AS (
-  SELECT doc_id, lines,
-         CASE WHEN len(toks) >= 2
-              THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])
-              ELSE []::VARCHAR[] END AS g2,
-         CASE WHEN len(toks) >= 3
-              THEN list_transform(range(1, len(toks) - 1),
-                   i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])
-              ELSE []::VARCHAR[] END AS g3
-  FROM base
-)
-SELECT doc_id, len(lines)::BIGINT AS n_lines,
-       round(CASE WHEN len(lines) > 0
-             THEN 1.0 - len(list_distinct(lines))::DOUBLE / len(lines) ELSE 0.0 END, 6) AS dup_line_frac,
-       round(CASE WHEN len(g2) > 0
-             THEN 1.0 - len(list_distinct(g2))::DOUBLE / len(g2) ELSE 0.0 END, 6) AS dup_2gram_frac,
-       round(CASE WHEN len(g3) > 0
-             THEN 1.0 - len(list_distinct(g3))::DOUBLE / len(g3) ELSE 0.0 END, 6) AS dup_3gram_frac
-FROM g""",
-        "text_token_counts": _ORACLE_TOKEN_COUNTS,
-        "text_fingerprint": _ORACLE_FINGERPRINT,
-        "chunk_fixed": _ORACLE_CHUNK_FIXED,
-        "predicate_route": """
-SELECT doc_id, lang, source, n_chars FROM documents
-WHERE lang IN ('en', 'de') AND n_chars > 300 AND regexp_matches(source, '^src1.*$')""",
-        "incremental_changed": """
-WITH old AS (
-  SELECT doc_id, sha256(text) AS old_hash FROM documents WHERE doc_id % 7 <> 0
-), new_enum AS (
-  SELECT doc_id,
-         sha256(CASE WHEN doc_id % 5 = 0 THEN text || ' updated' ELSE text END) AS new_hash
-  FROM documents
-)
-SELECT n.doc_id,
-       CASE WHEN o.old_hash IS NULL THEN 'new' ELSE 'modified' END AS change_type
-FROM new_enum n LEFT JOIN old o USING (doc_id)
-WHERE o.old_hash IS NULL OR n.new_hash <> o.old_hash""",
-        "events_asof": """
-WITH p AS (
-  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us, value
-  FROM events WHERE event_type = 'purchase'
-), c AS (
-  SELECT user_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us,
-         max(event_id)::BIGINT AS click_event_id
-  FROM events WHERE event_type = 'click' GROUP BY 1, 2
-)
-SELECT p.user_id, p.event_id, p.us AS purchase_us, p.value,
-       c.click_event_id, c.us AS click_us, p.us - c.us AS gap_us
-FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.us >= c.us""",
-        "events_range_window": """
-SELECT user_id, event_id, us,
-       count(*) OVER w::BIGINT AS n_10m,
-       round(sum(value) OVER w, 4) AS sum_10m
-FROM (SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us, value FROM events)
-WINDOW w AS (PARTITION BY user_id ORDER BY us
-             RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)""",
-        "value_percentiles": """
-SELECT event_type, count(*)::BIGINT AS n,
-       round(quantile_cont(value, 0.5), 6) AS p50,
-       round(quantile_cont(value, 0.9), 6) AS p90,
-       round(quantile_cont(value, 0.99), 6) AS p99
-FROM events GROUP BY event_type""",
-        "doc_length_histogram": """
-SELECT (floor(n_chars / 50) * 50)::BIGINT AS bucket,
-       count(*)::BIGINT AS n, round(avg(n_chars), 6) AS avg_chars
-FROM documents GROUP BY 1""",
-        "ngram_topk": f"""
-WITH tokd AS (
-  SELECT doc_id,
-         list_filter(regexp_extract_all(lower(text), '{oracles.TOKEN_PATTERN}'),
-                     t -> length(t) >= 2 AND NOT list_contains({oracles.STOPLIST_SQL}, t)) AS toks
-  FROM documents
-), big AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(range(1, len(toks)),
-                i -> toks[i] || ' ' || toks[i + 1]))) AS ngram
-  FROM tokd WHERE len(toks) >= 2
-), cnt AS (
-  SELECT ngram, count(*)::BIGINT AS n_docs FROM big GROUP BY ngram
-)
-SELECT ngram, n_docs,
-       row_number() OVER (ORDER BY n_docs DESC, ngram ASC)::INT AS rank
-FROM cnt ORDER BY n_docs DESC, ngram ASC LIMIT 20""",
-        "chunk_character": oracles.q_chunk_character(chunk_size=200, overlap=50),
-        "chunk_recursive": oracles.q_chunk_recursive(chunk_size=200),
-        "chunk_hierarchical": oracles.q_chunk_hierarchical(chunk_size=400),
-        "chunk_semantic": oracles.q_chunk_semantic(chunk_size=300),
-        "chunk_markdown": oracles.q_chunk_markdown(chunk_size=400),
-        "chunk_hybrid": oracles.q_chunk_hybrid(chunk_size=300, overlap=60),
-        "pii_redact": oracles.q_pii_redact(),
-        "lm_quality": oracles.q_lm_quality(),
-        "dedup_sentences": oracles.q_dedup_sentences(),
-        "dataset_split": oracles.q_dataset_split(),
-        "pack_sequences": oracles.q_pack_sequences(seq_len=256),
-        "decontaminate": oracles.q_decontaminate(n=2),
-        "contamination_report": oracles.q_contamination_report(n=2),
-        "quality_sample": """
-WITH q AS ({q})
-SELECT doc_id, quality_score,
-       round(0.1 + 0.9 * quality_score, 6) AS keep_prob,
-       ({h} % 1000000)
-         < floor(round(0.1 + 0.9 * quality_score, 6) * 1e6)::BIGINT AS kept
-FROM q""".format(q=_ORACLE_QUALITY,
-                 h=oracles.hash60_expr("doc_id::VARCHAR || '#sample'")),
-        "pca_projection": oracles.q_pca_spectrum(),
-        "stratified_sample": """
-WITH d AS (SELECT doc_id, coalesce(source, '__null__') AS stratum FROM documents),
-c AS (SELECT stratum, count(*)::BIGINT AS stratum_size FROM d GROUP BY stratum)
-SELECT doc_id, stratum, stratum_size,
-       round(least(1.0, 50.0 / stratum_size), 6) AS sample_rate,
-       ({h} % 1000000)
-         < floor(round(least(1.0, 50.0 / stratum_size), 6) * 1e6)::BIGINT AS kept
-FROM d JOIN c USING (stratum)""".format(
-            h=oracles.hash60_expr("doc_id::VARCHAR || '#strat'")),
-        "dedup_canonical": _ORACLE_DEDUP_CANONICAL.format(q=_ORACLE_QUALITY),
-        "dedup_passages": oracles.q_repeated_passages(k=10, min_docs=2),
-        "text_vocab": """
-WITH tk AS (
-  SELECT doc_id, unnest(list_filter(
-           regexp_split_to_array(lower(text), '\\s+'), x -> length(x) > 0)) AS term
-  FROM documents
-),
-fr AS (
-  SELECT term, count(*)::BIGINT AS freq, count(DISTINCT doc_id)::BIGINT AS doc_freq
-  FROM tk GROUP BY term
-  ORDER BY freq DESC, term ASC LIMIT 200
-)
-SELECT term, freq, doc_freq,
-       (row_number() OVER (ORDER BY freq DESC, term ASC) - 1)::BIGINT AS vocab_id
-FROM fr""",
-        "corpus_shards": """
-SELECT doc_id,
-       ({h} % 16)::INT AS shard,
-       len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                       x -> length(x) > 0))::BIGINT AS n_tokens
-FROM documents""".format(h=oracles.hash60_expr("doc_id::VARCHAR || '#shard'")),
-        "events_anomaly": """
-WITH st AS (
-  SELECT event_type, count(*)::BIGINT AS n,
-         sum(value::DECIMAL(28,8)) AS s1,
-         sum((value::DECIMAL(28,8) * value::DECIMAL(28,8))::DECIMAL(38,10)) AS s2
-  FROM events GROUP BY event_type
-), m AS (
-  SELECT event_type, n, s1::DOUBLE / n AS mean,
-         sqrt((s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / n) / (n - 1)) AS sd
-  FROM st
-)
-SELECT e.event_id, e.event_type,
-       round(e.value, 6) AS value,
-       round(m.mean, 6) AS mean,
-       round(m.sd, 6) AS sd,
-       round((e.value - m.mean) / m.sd, 6) AS z
-FROM events e JOIN m USING (event_type)
-WHERE m.n >= 2 AND m.sd > 0 AND abs((e.value - m.mean) / m.sd) > 2.5""",
-        "text_collocations": """
-WITH tk AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                             x -> length(x) > 0) AS toks
-  FROM documents
-),
-uni AS (
-  SELECT w, count(*)::BIGINT AS n_w
-  FROM (SELECT unnest(toks) AS w FROM tk) s GROUP BY w
-),
-bg_all AS (
-  SELECT word_a, word_b, count(*)::BIGINT AS n_pair FROM (
-    SELECT toks[r.i] AS word_a, toks[r.i + 1] AS word_b
-    FROM tk, LATERAL unnest(range(1, len(toks))) AS r(i)
-    WHERE len(toks) >= 2
-  ) s GROUP BY word_a, word_b
-),
-bg AS (SELECT * FROM bg_all WHERE n_pair >= 5),
-tot AS (
-  -- P(ab) normalizes by the PRE-filter bigram total (Church & Hanks)
-  SELECT (SELECT sum(n_w)::DOUBLE FROM uni) AS t_uni,
-         (SELECT sum(n_pair)::DOUBLE FROM bg_all) AS t_big
-),
-sc AS (
-  SELECT word_a, word_b, n_pair, a.n_w AS n_a, b.n_w AS n_b,
-         log2((n_pair / t_big) / ((a.n_w / t_uni) * (b.n_w / t_uni))) AS pmi_raw
-  FROM bg JOIN uni a ON bg.word_a = a.w JOIN uni b ON bg.word_b = b.w, tot
-)
-SELECT word_a, word_b, n_pair, n_a, n_b, round(pmi_raw, 6) AS pmi
-FROM sc
-ORDER BY round(pmi_raw, 6) DESC, word_a ASC, word_b ASC
-LIMIT 50""",
-        "profile_table": oracles.q_profile_table(),
-        "state_islands": oracles.q_state_islands(),
-        "zipf_fit": oracles.q_zipf_fit(1000),
-        "length_bins": oracles.q_length_bins(16),
-        "hard_negatives": oracles.q_hard_negatives(50, 5, 3),
-        "knn_pagerank": oracles.q_knn_pagerank(5, 0.85, 5),
-        "knn_communities": oracles.q_knn_communities(5, 4),
-        "cdc_dedup": oracles.q_cdc_dedup_stats(16, 64),
-        # chunk-row twin of the md5 boundary rule; serves the fused
-        # mapInPandas scan (boundary-equal to the spec form, test-pinned)
-        "cdc_chunks_scan": oracles.q_cdc_chunks(16, 64),
-        "events_trend": """
-WITH ev AS (
-  SELECT event_type AS etype, epoch_us(ts::TIMESTAMP)::BIGINT AS us, value
-  FROM events WHERE value IS NOT NULL
-), xx AS (
-  SELECT etype,
-         ((us / 1000000.0)
-          - min(us / 1000000.0) OVER (PARTITION BY etype))::DECIMAL(18,6) AS x,
-         round(value, 6)::DECIMAL(18,6) AS y
-  FROM ev
-), sums AS (
-  SELECT etype, count(*)::BIGINT AS n,
-         sum(x::DECIMAL(38,6)) AS sx, sum(y::DECIMAL(38,6)) AS sy,
-         sum((x::DECIMAL(28,6) * y::DECIMAL(28,6))::DECIMAL(38,12)) AS sxy,
-         sum((x::DECIMAL(28,6) * x::DECIMAL(28,6))::DECIMAL(38,12)) AS sxx,
-         sum((y::DECIMAL(28,6) * y::DECIMAL(28,6))::DECIMAL(38,12)) AS syy
-  FROM xx GROUP BY etype
-), dd AS (
-  SELECT etype, n, n::DOUBLE AS nd, sx::DOUBLE AS sxd, sy::DOUBLE AS syd,
-         sxy::DOUBLE AS sxyd, sxx::DOUBLE AS sxxd, syy::DOUBLE AS syyd
-  FROM sums
-), cf AS (
-  SELECT etype, n, nd, sxd, syd,
-         nd * sxyd - sxd * syd AS cov_n,
-         nd * sxxd - sxd * sxd AS var_x,
-         nd * syyd - syd * syd AS var_y
-  FROM dd
-)
-SELECT etype AS event_type, n AS n_obs,
-       round((cov_n / var_x) * 86400.0, 6) AS slope_per_day,
-       round((syd - (cov_n / var_x) * sxd) / nd, 6) AS intercept,
-       round(CASE WHEN var_x > 0 AND var_y > 0
-                  THEN (cov_n * cov_n) / (var_x * var_y) END, 6) AS r2
-FROM cf""",
-        "scd2_asof_join": """
-WITH upd AS (
-  SELECT o_custkey AS custkey, o_orderpriority AS priority,
-         o_orderdate AS ts, o_orderkey AS seq
-  FROM orders
-), flagged AS (
-  SELECT custkey, priority, ts, seq,
-         lag(priority) OVER (PARTITION BY custkey ORDER BY ts, seq) AS prev_priority,
-         row_number() OVER (PARTITION BY custkey ORDER BY ts, seq) AS rn
-  FROM upd
-), changes AS (
-  SELECT custkey, priority, ts AS valid_from, seq
-  FROM flagged WHERE rn = 1 OR prev_priority IS DISTINCT FROM priority
-), hist AS (
-  SELECT custkey, priority, valid_from,
-         lead(valid_from) OVER w AS valid_to
-  FROM changes WINDOW w AS (PARTITION BY custkey ORDER BY valid_from, seq)
-), snap AS (
-  SELECT custkey, priority FROM hist
-  WHERE valid_from <= DATE '1997-07-01'
-    AND (valid_to IS NULL OR valid_to > DATE '1997-07-01')
-)
-SELECT n_name, priority, count(*)::BIGINT AS n_customers
-FROM snap
-JOIN customer ON custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name, priority""",
-        "event_assoc": oracles.q_event_assoc(30, 5, 20),
-        "events_ewma": oracles.q_events_ewma(0.3, 8),
-        "knn_triangles": oracles.q_knn_triangles(5, 20),
-        "kmv_set_ops": oracles.q_kmv_set_ops(64),
-        "local_supplier_revenue": """
-SELECT r.r_name AS region_name, n.n_name AS nation_name,
-       (sum((l.l_extendedprice::DECIMAL(18,2)
-             * (1::DECIMAL(8,2) - l.l_discount::DECIMAL(8,2)))::DECIMAL(30,4)))::DOUBLE AS revenue,
-       count(*)::BIGINT AS n_items
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY 1, 2""",
-        "customer_value_ranks": """
-WITH tot AS (
-  SELECT o_custkey, (sum(o_totalprice::DECIMAL(18,2)))::DOUBLE AS total_value
-  FROM orders GROUP BY o_custkey
-)
-SELECT o_custkey AS custkey, round(total_value, 2) AS total_value,
-       round(percent_rank() OVER w, 6) AS pct_rank,
-       round(cume_dist() OVER w, 6) AS cume,
-       (ntile(10) OVER w)::INT AS decile
-FROM tot WINDOW w AS (ORDER BY total_value DESC, o_custkey ASC)""",
-        "priority_grouping_sets": """
-WITH j AS (
-  SELECT o.o_orderpriority, n.n_name, o.o_totalprice
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-)
-SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-       coalesce(n_name, 'ALL') AS nation,
-       (grouping(o_orderpriority) * 2 + grouping(n_name))::INT AS gid,
-       count(*)::BIGINT AS n_orders,
-       round((sum(o_totalprice::DECIMAL(18,2)))::DOUBLE, 2) AS total_value
-FROM j
-GROUP BY GROUPING SETS ((o_orderpriority, n_name), (o_orderpriority), (n_name), ())""",
-        "events_twap": """
-WITH g AS (
-  SELECT event_type, value,
-         CASE WHEN lead(epoch_us(ts::TIMESTAMP)::BIGINT) OVER w IS NULL THEN NULL
-              ELSE least(lead(epoch_us(ts::TIMESTAMP)::BIGINT) OVER w
-                           - epoch_us(ts::TIMESTAMP)::BIGINT,
-                         600000000) END AS w_us
-  FROM events WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-)
-SELECT event_type, count(*)::BIGINT AS n_intervals,
-       round((sum(value::DECIMAL(18,6) * w_us))::DOUBLE / (sum(w_us))::DOUBLE, 6) AS twap,
-       round(avg(value), 6) AS plain_avg
-FROM g WHERE w_us IS NOT NULL GROUP BY event_type""",
-        "fuzzy_pairs": oracles.q_fuzzy_pairs(12, 40, 5),
-        "dedup_jaccard_prefix": oracles.q_jaccard_prefix(3, 0.5),
-        "weighted_sample": oracles.q_weighted_sample(50),
-        "purchase_attribution": """
-WITH e AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts::TIMESTAMP)::BIGINT AS us
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN us - lag(us) OVER w > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-), sess AS (
-  SELECT user_id, event_id, event_type, us,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                          ROWS UNBOUNDED PRECEDING)::BIGINT AS sid
-  FROM flagged
-), lt AS (
-  SELECT event_type,
-         last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
-           OVER (PARTITION BY user_id, sid ORDER BY us, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_t
-  FROM sess
-), p AS (SELECT coalesce(prev_t, 'direct') AS touch FROM lt WHERE event_type = 'purchase')
-SELECT touch, count(*)::BIGINT AS n_purchases,
-       round(count(*)::DOUBLE / (SELECT count(*) FROM p), 6) AS share
-FROM p GROUP BY touch""",
-        "events_pivot": """
-SELECT user_id,
-       count(*) FILTER (WHERE event_type = 'click')::BIGINT AS n_click,
-       count(*) FILTER (WHERE event_type = 'error')::BIGINT AS n_error,
-       count(*) FILTER (WHERE event_type = 'purchase')::BIGINT AS n_purchase,
-       count(*) FILTER (WHERE event_type = 'signup')::BIGINT AS n_signup,
-       count(*) FILTER (WHERE event_type = 'view')::BIGINT AS n_view,
-       count(*) FILTER (WHERE event_type IS NULL OR event_type NOT IN
-         ('click','error','purchase','signup','view'))::BIGINT AS n_other,
-       count(*)::BIGINT AS n_total
-FROM events GROUP BY user_id""",
-        "events_dedup_first": """
-WITH b AS (
-  SELECT event_type, user_id, event_id, ts,
-         (epoch_us(ts::TIMESTAMP)::BIGINT // 300000000) AS bucket
-  FROM events
-), r AS (
-  SELECT event_type,
-         row_number() OVER (PARTITION BY user_id, event_type, bucket
-                            ORDER BY ts, event_id) AS rn
-  FROM b
-)
-SELECT event_type, count(*)::BIGINT AS n_events,
-       sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       round(1.0 - sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) / count(*), 6) AS dup_frac
-FROM r GROUP BY event_type""",
-        "ivm_counters": """
-SELECT event_type, (ts::TIMESTAMP::DATE)::VARCHAR AS day,
-       count(*)::BIGINT AS n,
-       round((sum(value::DECIMAL(28,8)))::DOUBLE, 6) AS sum_value
-FROM events GROUP BY 1, 2""",
-        # --- late round-5 additions (round-6 window heads) ---
-        "quantile_sketch": oracles.q_quantile_sketch(0.02, (0.25, 0.5, 0.9, 0.99)),
-        "url_domain_stats": _ORACLE_URL_DOMAIN_STATS,
-        "customer_order_distribution": """
-SELECT c_count, count(*)::BIGINT AS custdist FROM (
-  SELECT c.c_custkey, count(o.o_orderkey)::BIGINT AS c_count
-  FROM customer c LEFT JOIN orders o
-    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-  GROUP BY c.c_custkey) t
-GROUP BY c_count""",
-        "top_supplier": """
-WITH rev AS (
-  SELECT l_suppkey,
-         sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4)) AS r
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1998-04-01 00:00:00'
-  GROUP BY l_suppkey)
-SELECT s_suppkey, s_name, r::DOUBLE AS total_revenue
-FROM rev JOIN supplier ON s_suppkey = l_suppkey
-WHERE r = (SELECT max(r) FROM rev)""",
-        "idle_customer_balance": """
-WITH pos AS (
-  SELECT sum(c_acctbal::DECIMAL(18,2)) AS s, count(*)::BIGINT AS n
-  FROM customer WHERE c_acctbal > 0)
-SELECT n_name, count(*)::BIGINT AS n_customers,
-       sum(c_acctbal::DECIMAL(18,2))::DOUBLE AS total_bal
-FROM customer CROSS JOIN pos
-JOIN nation ON c_nationkey = n_nationkey
-WHERE c_acctbal::DECIMAL(18,2) * n > s
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                  AND o_orderdate >= TIMESTAMP '2000-07-01 00:00:00')
-GROUP BY n_name""",
-        # the streaming MG state + exact recount provably equals the
-        # plain batch GROUP BY/HAVING for any micro-batch split — the
-        # oracle IS that batch recompute (m=80)
-        "streaming_heavy_hitters": """
-WITH tok AS (
-  SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                            t -> length(t) > 0)) AS k
-  FROM documents
-), tot AS (SELECT count(*)::BIGINT AS n FROM tok)
-SELECT k AS token, count(*)::BIGINT AS n,
-       round(count(*)::DOUBLE / min(tot.n), 6) AS frac
-FROM tok CROSS JOIN tot
-GROUP BY k HAVING count(*) * 80 > min(tot.n)""",
-        # the config-driven pipeline is chunk_fixed 200/50 + the mock
-        # embedding over chunk content — both replayed in SQL
-        "pipeline_config": f"""
-WITH chunks AS ({_ORACLE_CHUNK_FIXED})
-SELECT doc_id, chunk_id, chunk_index, token_count,
-       round({mock_embedding_sql("content")}[1], 6) AS emb0
-FROM chunks""",
-        # brute-force all-pairs — the completeness check of the
-        # deletion-neighborhood blocking
-        "edit_distance_pairs": """
-WITH n AS (
-  SELECT DISTINCT p_name AS s FROM part
-  UNION
-  SELECT DISTINCT s_name FROM supplier
-)
-SELECT a.s AS name_a, b.s AS name_b, levenshtein(a.s, b.s)::INT AS dist
-FROM n a JOIN n b ON a.s < b.s AND levenshtein(a.s, b.s) <= 1""",
-        # sampled trainer with sample >= vocab: same unrolled replay —
-        # the driver-hash row IS the local==distributed proof
-        "bpe_merges_sampled": oracles.q_bpe_merges(8),
-        "bpe_encode_words": oracles.q_bpe_encode_words(8, 30),
-        "gopher_quality": oracles.q_gopher_rules(50, 100000),
-        "knn_ivfpq": oracles.q_knn_ivfpq(5, 64, 16, 4, 8, 16, 20, 1),
-        # persisted-layout serve is row-identical to the in-one-run
-        # operator (equality test-pinned), so the oracle replays the
-        # same training composition
-        "knn_ivfpq_serve": oracles.q_knn_ivfpq(5, 64, 16, 4, 8, 16, 20, 1),
-        "dsir_weights": oracles.q_dsir_weights(64, "lang = 'en'"),
-        "streaming_count_min": oracles.q_count_min(4, 256, 30, full_report=False),
-        "semdedup": oracles.q_semdedup(0.95, 16, 1),
-        "logreg_scores": oracles.q_logreg_scores(64, 3, 0.05, "n_chars > 311"),
-        "jl_projection": oracles.q_jl_projection(16, 64),
-        "streaming_lsh_dedup": oracles.q_lsh_signature_matches(16, 4, 3, 0.5),
-        "market_share": """
-WITH asia_cust AS (
-  SELECT c_custkey FROM customer c
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE r.r_name = 'ASIA'),
-sn AS (
-  SELECT s_suppkey, n_name AS supp_nation
-  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey),
-j AS (
-  SELECT year(o.o_orderdate)::INT AS o_year,
-         (l.l_extendedprice::DECIMAL(18,2)
-          * (1::DECIMAL(8,2) - l.l_discount::DECIMAL(8,2)))::DECIMAL(30,4) AS rev,
-         sn.supp_nation
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN sn ON l.l_suppkey = sn.s_suppkey
-  WHERE o.o_custkey IN (SELECT c_custkey FROM asia_cust)),
-agg AS (
-  SELECT o_year,
-         sum(CASE WHEN supp_nation = 'NATION_3' THEN rev
-                  ELSE 0::DECIMAL(30,4) END) AS nat_rev,
-         sum(rev) AS all_rev
-  FROM j GROUP BY o_year)
-SELECT o_year, round(nat_rev::DOUBLE / all_rev::DOUBLE, 6) AS mkt_share,
-       all_rev::DOUBLE AS total_revenue
-FROM agg""",
-        "top_revenue_parts": """
-WITH pp AS (
-  SELECT l_partkey AS p_partkey,
-         sum((l_extendedprice::DECIMAL(18,2)
-              * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4)) AS part_rev
-  FROM lineitem GROUP BY l_partkey),
-t AS (SELECT sum(part_rev) AS total_rev, count(*)::BIGINT AS n_parts FROM pp)
-SELECT p_partkey, part_rev::DOUBLE AS revenue,
-       round(part_rev::DOUBLE * n_parts / total_rev::DOUBLE, 6) AS vs_mean
-FROM pp, t WHERE part_rev * n_parts * 4 > total_rev * 5""",
-        "corpus_overlap": oracles.q_corpus_overlap(64, 3),
-        "corpus_drift_psi": oracles.q_corpus_drift_psi(32),
-        "late_data_audit": """
-WITH ev AS (
-  SELECT (event_id // 1000)::BIGINT AS batch, epoch_us(ts::TIMESTAMP)::BIGINT AS ts_us
-  FROM events
-),
-pb AS (SELECT batch, max(ts_us) AS bmax FROM ev GROUP BY batch),
-fr AS (
-  SELECT batch,
-         max(bmax) OVER (ORDER BY batch
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS frontier_us
-  FROM pb
-)
-SELECT (ts_us // 300000000) * 300000000 AS bucket_us,
-       count(*)::BIGINT AS n_events,
-       sum(CASE WHEN ts_us < frontier_us - 60000000 THEN 1 ELSE 0 END)::BIGINT AS n_late_60s,
-       sum(CASE WHEN ts_us < frontier_us - 300000000 THEN 1 ELSE 0 END)::BIGINT AS n_late_300s,
-       round(max(greatest(coalesce(frontier_us - ts_us, -1), 0))::DOUBLE / 1e6, 6) AS max_lateness_s
-FROM ev JOIN fr USING (batch)
-GROUP BY bucket_us""",
-        "leakage_safe_split": oracles.q_leakage_safe_split(2, 10, 16, 4, 3, 0.5),
-        "knn_ivf_sample_sweep": oracles.q_knn_ivf_sample_sweep(
-            5, 16, 4, (1, 3, 10)),
-        "embedding_dbscan": oracles.q_embedding_dbscan(50_000, 4),
-        "bm25_rocchio_search": oracles.q_bm25_rocchio_search(10, 5, 8, 400),
-        "lm_dirichlet_search": oracles.q_lm_dirichlet_search(10, 300.0),
-        # horizon > corpus span makes the stream output exactly the
-        # distinct key set; bounded-state semantics unit-pinned
-        "streaming_exact_dedup": "SELECT DISTINCT event_type, user_id FROM events",
-        "mmr_rerank": oracles.q_mmr_rerank(16, 8, 500),
-        "search_snippets": oracles.q_search_snippets(5, 12),
-        "sliding_uniques_hll": oracles.q_sliding_uniques_hll(8, 7),
-        "phrase_search": oracles.q_phrase_search(k=10),
-        "search_facets": oracles.q_search_facets(50, 5),
-        "query_autocomplete": oracles.q_query_autocomplete(k=5),
-        "user_survival": oracles.q_user_survival(36, "purchase"),
-        "benford_audit": oracles.q_benford_audit("orders", "o_totalprice"),
-        "token_gini": oracles.q_token_gini(10),
-        "knn_label_modularity": oracles.q_knn_label_modularity(5),
-        "lm_kneser_ney": oracles.q_lm_kneser_ney(0.75),
-        "boolean_search": oracles.q_boolean_search(k=10),
-        "stat_ks_test": oracles.q_stat_ks_test("click", "purchase"),
-        "stat_mann_whitney": oracles.q_stat_mann_whitney("view", "purchase"),
-        "stat_chi_square": oracles.q_stat_chi_square(5),
-        "theil_sen_trend": oracles.q_theil_sen_trend(),
-        "good_turing": oracles.q_good_turing(20, n=2),
-        "stupid_backoff": oracles.q_stupid_backoff(400),
-        "sole_fault_supplier": """
-WITH fault AS (
-  SELECT DISTINCT l_orderkey, l_suppkey
-  FROM lineitem l JOIN orders o
-    ON o.o_orderkey = l.l_orderkey AND o.o_orderstatus = 'F'
-  WHERE l.l_returnflag = 'R'
-),
-alll AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-sole AS (
-  SELECT f.l_orderkey, f.l_suppkey FROM fault f
-  WHERE EXISTS (SELECT 1 FROM alll a
-                WHERE a.l_orderkey = f.l_orderkey
-                  AND a.l_suppkey <> f.l_suppkey)
-    AND NOT EXISTS (SELECT 1 FROM fault f2
-                    WHERE f2.l_orderkey = f.l_orderkey
-                      AND f2.l_suppkey <> f.l_suppkey)
-)
-SELECT s_name, count(*)::BIGINT AS numwait
-FROM sole JOIN supplier ON s_suppkey = l_suppkey
-GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""",
-        "nation_year_profit": """
-SELECT n_name AS nation, CAST(year(l_shipdate) AS INT) AS o_year,
-       sum((l_extendedprice::DECIMAL(18,2)
-            * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS sum_profit,
-       count(*)::BIGINT AS n_lines
-FROM lineitem
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN nation ON n_nationkey = s_nationkey
-WHERE EXISTS (SELECT 1 FROM part
-              WHERE p_partkey = l_partkey AND p_name LIKE '%widget%')
-GROUP BY 1, 2""",
-        "bloom_prune": """
-WITH skeys AS (
-  SELECT DISTINCT c_custkey AS sk FROM customer WHERE c_nationkey = 3
-), bitsrc AS (
-  SELECT DISTINCT
-    ('0x'||substr(md5(sk::VARCHAR || '#' || i::VARCHAR),1,15))::BIGINT % 1024 AS setbit
-  FROM skeys, range(3) t(i)
-), pkeys AS (
-  SELECT DISTINCT o_custkey AS pk FROM orders
-), probe AS (
-  SELECT pk,
-    ('0x'||substr(md5(pk::VARCHAR || '#' || i::VARCHAR),1,15))::BIGINT % 1024 AS bitpos
-  FROM pkeys, range(3) t(i)
-), hits AS (
-  SELECT pk, min(CASE WHEN b.setbit IS NOT NULL THEN 1 ELSE 0 END) AS passes
-  FROM probe LEFT JOIN bitsrc b ON probe.bitpos = b.setbit GROUP BY pk
-), truth AS (
-  SELECT pk, CASE WHEN sk IS NOT NULL THEN 1 ELSE 0 END AS is_true
-  FROM pkeys LEFT JOIN skeys ON pk = sk
-)
-SELECT (SELECT count(*) FROM skeys)::BIGINT AS n_small_keys,
-       (SELECT count(*) FROM bitsrc)::BIGINT AS n_bits_set,
-       count(*)::BIGINT AS n_probe_keys,
-       sum(passes)::BIGINT AS n_pass,
-       sum(is_true)::BIGINT AS n_true,
-       sum(CASE WHEN passes = 1 AND is_true = 0 THEN 1 ELSE 0 END)::BIGINT AS n_false_pos,
-       round(sum(CASE WHEN passes = 1 AND is_true = 0 THEN 1 ELSE 0 END)::DOUBLE
-             / greatest(count(*) - sum(is_true), 1), 6) AS fp_rate
-FROM hits JOIN truth USING (pk)""",
-        "winsorized_stats": f"""
-WITH cuts AS ({oracles.q_quantile_sketch(0.02, (0.05, 0.95))}),
-cw AS (
-  SELECT event_type, min(estimate) AS lo, max(estimate) AS hi
-  FROM cuts GROUP BY event_type
-)
-SELECT e.event_type, count(*)::BIGINT AS n,
-       sum(CASE WHEN value < lo THEN 1 ELSE 0 END)::BIGINT AS n_lo,
-       sum(CASE WHEN value > hi THEN 1 ELSE 0 END)::BIGINT AS n_hi,
-       round(sum((CASE WHEN lo IS NOT NULL
-                       THEN least(greatest(value, lo), hi)
-                       ELSE value END)::DECIMAL(28,8))::DOUBLE
-             / count(*), 6) AS winsorized_mean,
-       round(sum(value::DECIMAL(28,8))::DOUBLE / count(*), 6) AS raw_mean
-FROM events e LEFT JOIN cw USING (event_type)
-GROUP BY e.event_type""",
-        "nation_trade_volume": """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       year(l_shipdate)::INT AS l_year,
-       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS revenue,
-       count(*)::BIGINT AS n_items
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE n1.n_name <> n2.n_name
-GROUP BY n1.n_name, n2.n_name, year(l_shipdate)""",
-        # the oracle keeps the CORRELATED subquery form on purpose —
-        # DuckDB's decorrelator is the independent cross-check of the
-        # hand-decorrelated Spark plan
-        "min_cost_supplier": """
-SELECT p_partkey, s_suppkey, s_name, l_extendedprice::DOUBLE AS min_price
-FROM part, lineitem, supplier
-WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey AND p_size <= 3
-  AND l_extendedprice = (SELECT min(l2.l_extendedprice) FROM lineitem l2
-                         WHERE l2.l_partkey = p_partkey)""",
-        "excess_qty_supplier": """
-SELECT s_suppkey, s_name FROM supplier
-WHERE EXISTS (
-  SELECT 1 FROM lineitem l1
-  WHERE l1.l_suppkey = s_suppkey
-  GROUP BY l1.l_partkey
-  HAVING sum(l1.l_quantity::DECIMAL(18,2)) * 20 >
-         (SELECT sum(l2.l_quantity::DECIMAL(18,2)) FROM lineitem l2
-          WHERE l2.l_partkey = l1.l_partkey) * 3
-)""",
-        # round-7 post-window additions — ROUND8_WINDOW_MUST
-        "knn_binary": oracles.q_knn_binary(5, 20, 64),
-        "dedup_spans": oracles.q_duplicate_spans(10, 2),
-        "matryoshka_recall": oracles.q_matryoshka_recall(10, (8, 16, 32, 64)),
-        "dedup_cut": oracles.q_cut_spans(10, 2),
-        "bm25_pruned_search": oracles.q_bm25_pruned_search(10, 32),
-        "unigram_pieces": oracles.q_unigram_pieces(120, 5, 1000),
-        "unigram_encode": oracles.q_unigram_encode(120, 5, 1000, 30, 20),
-        "knn_ivf_append": oracles.q_knn_ivf(5, 16, 4, 1, "base"),
-        "stream_interval_join_outer": """
-WITH c AS (
-  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us
-  FROM events WHERE event_type = 'click'
-),
-p AS (
-  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-       (p.us - c.us)::BIGINT AS lag_us
-FROM c LEFT JOIN p ON c.user_id = p.user_id
- AND c.us BETWEEN p.us - 86400000000 AND p.us""",
-        "knn_kcore": oracles.q_knn_kcore(5, 8),
-        "textrank_keywords": oracles.q_textrank_keywords(20, 0.85, 5),
-        "maxsim_rerank": oracles.q_maxsim_rerank(5, 20, 32, 8),
-        "spell_suggestions": oracles.q_spell_suggestions(20, 5, 1),
-        # incremental == batch by construction: the oracle is the batch
-        # transitive closure, unchanged
-        "incremental_clusters": oracles.q_dedup_clusters(16, 4, 3, 0.5),
-        "events_seasonal": """
-WITH daily AS (
-  SELECT event_type, (ts::TIMESTAMP)::DATE AS day, count(*)::BIGINT AS n
-  FROM events GROUP BY event_type, (ts::TIMESTAMP)::DATE
-),
-base AS (
-  SELECT a.event_type, a.day, a.n, b.n AS forecast,
-         (a.n - b.n)::BIGINT AS residual
-  FROM daily a JOIN daily b
-    ON a.event_type = b.event_type AND b.day = a.day - 7
-),
-stats AS (
-  SELECT event_type, count(*)::BIGINT AS nn,
-         sum(residual::DECIMAL(28,8)) AS s1,
-         sum((residual::DECIMAL(28,8) * residual::DECIMAL(28,8))::DECIMAL(38,10)) AS s2
-  FROM base GROUP BY event_type
-),
-st AS (
-  SELECT event_type, nn,
-         s1::DOUBLE / nn AS rmean,
-         sqrt((s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / nn) / (nn - 1)) AS rsd
-  FROM stats
-)
-SELECT b.event_type, strftime(b.day, '%Y-%m-%d') AS day, b.n, b.forecast,
-       b.residual,
-       round((b.residual - st.rmean) / st.rsd, 6) AS z,
-       abs((b.residual - st.rmean) / st.rsd) > 2.0 AS is_anomaly
-FROM base b JOIN st USING (event_type)
-WHERE st.nn >= 2 AND st.rsd > 0""",
-        "heaps_law": oracles.q_heaps_law(32, n=3),
-        "corpus_drift_jsd": oracles.q_corpus_drift_jsd(20),
-        "item_item_cf": oracles.q_item_item_cf(50, 50),
-        "burrows_delta": oracles.q_burrows_delta(30, 4, 5, 125),
-        "hill_tail": oracles.q_hill_tail((50, 100, 200, 500)),
-        "ltr_features": oracles.q_ltr_features(20),
-        "market_hhi": oracles.q_market_hhi(),
-        "cuped_ab": oracles.q_cuped("2024-01-16 00:00:00", 2),
-        "logrank_test": oracles.q_logrank(36, "purchase", 2),
-        "knn_clustering": oracles.q_knn_clustering(5, 10),
-        "price_elasticity": oracles.q_price_elasticity(50),
-        "forecast_backtest": oracles.q_forecast_backtest(7, 28),
-        "streaming_chi_square": oracles.q_stat_chi_square(5),
-        "markov_stationary": oracles.q_markov_stationary(30),
-        "textrank_sentences": oracles.q_textrank_sentences(3, 0.85, 8),
-        "referential_integrity": oracles.q_referential_integrity(),
-        "markov_attribution": oracles.q_markov_attribution(("click", "error", "signup", "view"), "purchase", 50),
-        "sequential_patterns": oracles.q_sequential_patterns(30, 3, 20),
-        "poisson_bootstrap": oracles.q_poisson_bootstrap(200, 5),
-        "funnel_wilson": oracles.q_funnel_wilson(1960),
-        "eb_item_rates": oracles.q_eb_rates(),
-        "ks_family_bh": oracles.q_ks_family_bh(50),
-        "rank_tau": oracles.q_rank_tau(20),
-        "collocations_llr": oracles.q_collocations_llr(5, 50),
-        "knn_harmonic": oracles.q_knn_harmonic(5, 3, 20),
-        "label_centroids": oracles.q_label_centroids(),
-        "simpson_audit": oracles.q_simpson_audit(),
-        "mutual_information": oracles.q_mutual_information(),
-        "cohens_kappa": oracles.q_cohens_kappa(),
-        # --- round-10 additions
-        "phrase_search_slop": oracles.q_phrase_search_slop(k=10, slop=1),
-        "ivf_codebook_drift": oracles.q_ivf_codebook_drift(16, 200),
-        "stat_tests_from_sketch": oracles.q_stat_tests_from_sketch(
-            "click", "purchase", 0.01),
-        "ivf_retrain_recall": oracles.q_ivf_retrain_recall(5, 16, 4),
-        "streaming_ks": oracles.q_streaming_ks("click", "purchase", 0.01),
-        "stat_bf_from_sketch": oracles.q_stat_bf_from_sketch(0.01),
-        "streaming_bf": oracles.q_streaming_bf(0.01),
-        "streaming_psi": oracles.q_streaming_psi("click", "purchase", 0.01),
-    }
-    # streaming SCD2's final state IS the full-log rebuild (merge ==
-    # rebuild per trigger), so it shares the batch oracle verbatim
-    # the streaming SCD2 state must equal the one-pass full-log rebuild
-    # (scd2_merge fold ≡ batch scd2_history; formerly shared with the
-    # batch entry scd2_orders, pruned r12)
-    out["streaming_scd2"] = """
-WITH upd AS (
-  SELECT o_custkey AS custkey, o_orderpriority AS priority,
-         o_orderdate AS ts, o_orderkey AS seq
-  FROM orders
-), flagged AS (
-  SELECT custkey, priority, ts, seq,
-         lag(priority) OVER (PARTITION BY custkey ORDER BY ts, seq) AS prev_priority,
-         row_number() OVER (PARTITION BY custkey ORDER BY ts, seq) AS rn
-  FROM upd
-), changes AS (
-  SELECT custkey, priority, ts AS valid_from, seq
-  FROM flagged WHERE rn = 1 OR prev_priority IS DISTINCT FROM priority
-)
-SELECT custkey, priority, valid_from,
-       lead(valid_from) OVER w AS valid_to,
-       (row_number() OVER w)::INT AS version,
-       (lead(valid_from) OVER w IS NULL) AS is_current
-FROM changes WINDOW w AS (PARTITION BY custkey ORDER BY valid_from, seq)"""
-    # two-level bucketing is a pure shuffle-shape change: identical
-    # result set to the one-level join, so it shares its raw-range
-    # oracle verbatim — the hash match IS the equality pin at SF
-    out["interval_overlap_two_level"] = out["interval_overlap"]
-    # Ljung-Box composes the events_acf twin (Q-fold over its rows)
-    out["ljung_box"] = oracles.q_ljung_box(out["events_acf"], 3)
-    # ROC AUC composes the text_quality twin (stopword_ratio score)
-    out["roc_auc"] = oracles.q_roc_auc(out["text_quality"])
-    out["pacf_daily"] = oracles.q_pacf_daily(7)
-    out["brown_forsythe"] = oracles.q_brown_forsythe()
-    out["text_entropy"] = """
-WITH chars AS (
-  SELECT doc_id, unnest(list_transform(range(1, length(lower(text)) + 1),
-                                       i -> substr(lower(text), i, 1))) AS ch
-  FROM documents
-),
-counts AS (
-  SELECT doc_id, ch, count(*)::BIGINT AS c FROM chars
-  WHERE ch <> '' GROUP BY doc_id, ch
-),
-per AS (
-  SELECT doc_id, ch, c, sum(c) OVER (PARTITION BY doc_id) AS n FROM counts
-)
-SELECT doc_id,
-       max(n)::BIGINT AS n_chars,
-       count(*)::BIGINT AS n_distinct_chars,
-       sum(CAST(floor(-(c::DOUBLE / n) * ln(c::DOUBLE / n)
-                      / 0.6931471805599453 * 100000000 + 0.5)
-                AS BIGINT))::BIGINT AS entropy_microbits,
-       round(max(c)::DOUBLE / max(n), 6) AS top_char_frac
-FROM per GROUP BY doc_id"""
-    out["value_band_pairs"] = """
-WITH p AS (SELECT event_id, value FROM events WHERE event_type = 'purchase')
-SELECT a.event_id AS id_a, b.event_id AS id_b,
-       round(a.value, 6) AS value_a, round(b.value, 6) AS value_b,
-       round(abs(a.value - b.value), 6) AS diff
-FROM p a JOIN p b
-  ON a.event_id < b.event_id AND abs(a.value - b.value) <= 0.1"""
-    out["events_mad_outliers"] = """
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
-  FROM events GROUP BY event_type
-),
-mad AS (
-  SELECT e.event_type, max(m.med) AS med,
-         quantile_cont(abs(e.value - m.med), 0.5) AS mad,
-         count(*)::BIGINT AS n
-  FROM events e JOIN med m USING (event_type)
-  GROUP BY e.event_type
-)
-SELECT e.event_id, e.event_type,
-       round(e.value, 6) AS value,
-       round(s.med, 6) AS med,
-       round(s.mad, 6) AS mad,
-       round((e.value - s.med) / (1.4826 * s.mad), 6) AS robust_z
-FROM events e JOIN mad s USING (event_type)
-WHERE s.mad > 0 AND abs((e.value - s.med) / (1.4826 * s.mad)) > 3.5"""
-    out["curated_manifest"] = _ORACLE_MANIFEST.format(
-        q=_ORACLE_QUALITY,
-        gopher=oracles.q_gopher_rules(50, 100000, "aug_docs"),
-    )
-    out["unigram_em_encode"] = oracles.q_unigram_em_encode(120, 5, 1000, 30, 20)
-    out["dedup_containment"] = oracles.q_ngram_containment(3, 0.8)
-    out["knn_ppr"] = oracles.q_knn_ppr(5, 0.85, 5, 50, 10)
-    out["customer_rfm"] = """
-WITH anchor AS (SELECT max(o_orderdate) AS mx FROM orders),
-base AS (
-  SELECT o_custkey AS custkey,
-         date_diff('day', max(o_orderdate), (SELECT mx FROM anchor))::INT AS recency_days,
-         count(*)::BIGINT AS frequency,
-         sum(o_totalprice::DECIMAL(18,2)) AS money
-  FROM orders GROUP BY o_custkey
-)
-SELECT custkey, recency_days, frequency,
-       round(money::DOUBLE, 2) AS monetary,
-       ntile(5) OVER (ORDER BY recency_days ASC, custkey ASC)::INT AS r_score,
-       ntile(5) OVER (ORDER BY frequency DESC, custkey ASC)::INT AS f_score,
-       ntile(5) OVER (ORDER BY money::DOUBLE DESC, custkey ASC)::INT AS m_score
-FROM base"""
-    out["streaming_sessions"] = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
-),
-flagged AS (
-  SELECT user_id, us,
-         CASE WHEN us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                   > 1800000000 OR
-                   lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
-              THEN 1 ELSE 0 END AS is_new
-  FROM e
-),
-islands AS (
-  SELECT user_id, us,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY us
-                           ROWS UNBOUNDED PRECEDING) AS sid
-  FROM flagged
-)
-SELECT user_id,
-       make_timestamp(min(us)) AS session_start,
-       make_timestamp(max(us) + 1800000000) AS session_end,
-       count(*)::BIGINT AS n_events
-FROM islands GROUP BY user_id, sid"""
-    out["events_concurrency"] = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
-),
-flagged AS (
-  SELECT user_id, us,
-         CASE WHEN us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                   > 1800000000 OR
-                   lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
-              THEN 1 ELSE 0 END AS is_new
-  FROM e
-),
-islands AS (
-  SELECT user_id, us,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY us
-                           ROWS UNBOUNDED PRECEDING) AS sid
-  FROM flagged
-),
-sessions AS (
-  SELECT user_id, sid, min(us) AS s, max(us) + 1800000000 AS e
-  FROM islands GROUP BY user_id, sid
-),
-deltas AS (
-  SELECT us, sum(delta)::BIGINT AS net FROM (
-    SELECT s AS us, 1 AS delta FROM sessions
-    UNION ALL
-    SELECT e AS us, -1 AS delta FROM sessions
-  ) GROUP BY us
-)
-SELECT us, net,
-       sum(net) OVER (ORDER BY us ROWS UNBOUNDED PRECEDING)::BIGINT AS concurrent
-FROM deltas"""
-    # --- round-12 additions: source-connector oracle gates ---
-    out["source_file_filters"] = """
-WITH sub AS (
-  SELECT doc_id AS d, text AS content
-  FROM documents WHERE doc_id % 19 = 3
-), f AS (
-  SELECT d, d % 5 AS c,
-         CASE d % 5 WHEN 0 THEN '.txt' WHEN 1 THEN '.md'
-              WHEN 2 THEN '.json' WHEN 3 THEN '.log' ELSE '.txt' END AS extension,
-         content
-  FROM sub
-)
-SELECT 'doc_' || d || extension AS file_name,
-       extension,
-       CASE extension WHEN '.txt' THEN 'text/plain'
-            WHEN '.md' THEN 'text/markdown'
-            ELSE 'application/json' END AS mime_type,
-       octet_length(encode(content))::BIGINT AS size_bytes,
-       sha256(content) AS content_hash
-FROM f
-WHERE c IN (0, 1, 2) AND octet_length(encode(content)) <= 280"""
-    out["source_git_sync"] = """
-WITH sub AS (
-  SELECT doc_id AS d, text FROM documents WHERE doc_id % 23 = 1
-), base AS (
-  SELECT CASE d % 3 WHEN 0 THEN 'src/doc_' || d || '.py'
-              ELSE 'docs/doc_' || d || '.md' END AS rel_path,
-         CASE WHEN d % 4 = 2 THEN 'changed' ELSE 'same' END AS status,
-         text || CASE WHEN d % 4 = 2
-                      THEN chr(10) || 'rev2' ELSE '' END AS content
-  FROM sub WHERE d % 3 <> 2
-), added AS (
-  SELECT 'src/new_' || d || '.py' AS rel_path, 'added' AS status,
-         'new ' || text AS content
-  FROM sub WHERE d % 4 = 3
-)
-SELECT rel_path, status,
-       octet_length(encode(content))::BIGINT AS size_bytes,
-       sha256(content) AS content_hash
-FROM (SELECT * FROM base UNION ALL SELECT * FROM added)"""
-    out["source_imap_sync"] = """
-WITH sub AS (
-  SELECT doc_id AS uid, substr(text, 1, 200) AS body,
-         TIMESTAMP '1998-01-01 00:00:00'
-           + doc_id * INTERVAL 1 MINUTE AS ts
-  FROM documents WHERE doc_id % 17 = 2
-), cur AS (
-  SELECT CAST(floor(max(uid) / 2) AS BIGINT) AS c FROM sub
-), msg AS (
-  SELECT uid, body, ts,
-         CASE WHEN uid % 5 = 0 THEN '=?utf-8?q?Report_' || uid || '?='
-              ELSE 'Report ' || uid END AS subj_hdr,
-         'sender' || (uid % 7) || '@example.com' AS from_addr
-  FROM sub
-)
-SELECT uid,
-       (octet_length(encode(
-          'From: ' || from_addr || chr(13) || chr(10) ||
-          'To: team@example.com' || chr(13) || chr(10) ||
-          'Subject: ' || subj_hdr || chr(13) || chr(10) ||
-          'Date: ' || strftime(ts, '%a, %d %b %Y %H:%M:%S') || ' +0000'
-                   || chr(13) || chr(10) ||
-          'MIME-Version: 1.0' || chr(13) || chr(10) ||
-          'Content-Type: text/plain; charset=utf-8'
-                   || chr(13) || chr(10) || chr(13) || chr(10)))
-        + octet_length(encode(body)))::BIGINT AS size_bytes,
-       'Report ' || uid AS subject,
-       from_addr,
-       'team@example.com' AS to_addr,
-       strftime(ts, '%Y-%m-%dT%H:%M:%S') || '+00:00' AS sent_at,
-       body,
-       'parsed' AS parse_status
-FROM msg
-WHERE uid > (SELECT c FROM cur)"""
-    return out
-
-
 from semantik_spark.config import LANG_STOPWORDS  # noqa: E402
 
 _LANGSETS = {
@@ -8472,3 +6243,1730 @@ from semantik_spark.functions.psl import psl_domain_sql  # noqa: E402
 _ORACLE_URL_DOMAIN_STATS = _ORACLE_URL_DOMAIN_STATS.replace(
     "__PSL_DOMAIN__", psl_domain_sql("host")
 )
+
+
+# the oracle joins on the RAW range predicate — a hash match
+# proves the bucket-blocked equi-join loses no pair
+_ORACLE_INTERVAL_OVERLAP = """
+WITH e AS (
+  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us, ts FROM events
+), flagged AS (
+  SELECT user_id, event_id, us,
+         CASE WHEN us - lag(us) OVER w > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_s
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+), sess AS (
+  SELECT user_id, us,
+         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
+  FROM flagged
+), si AS (
+  SELECT user_id, session_id, min(us) AS s0, max(us) AS s1
+  FROM sess GROUP BY user_id, session_id
+), busy AS (
+  SELECT date_trunc('day', ts) AS day, count(*) AS n FROM e
+  GROUP BY 1 ORDER BY n DESC, day ASC LIMIT 5
+), win AS (
+  SELECT strftime(day, '%Y-%m-%d') AS day,
+         epoch_us(day::TIMESTAMP)::BIGINT AS r0,
+         epoch_us(day::TIMESTAMP)::BIGINT + 86399999999 AS r1
+  FROM busy
+)
+SELECT user_id, session_id, day,
+       (least(s1, r1) - greatest(s0, r0))::BIGINT AS overlap_us
+FROM si JOIN win ON s0 <= r1 AND r0 <= s1"""
+
+_ORACLE_EVENTS_ACF = """
+WITH span AS (
+  SELECT date_trunc('day', min(ts)) AS d0, date_trunc('day', max(ts)) AS d1 FROM events
+), cal AS (
+  SELECT g, unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS day
+  FROM span CROSS JOIN (SELECT DISTINCT event_type AS g FROM events)
+), counts AS (
+  SELECT event_type AS g, date_trunc('day', ts) AS day, count(*)::BIGINT AS x
+  FROM events GROUP BY 1, 2
+), dense AS (
+  SELECT cal.g, cal.day, coalesce(x, 0)::DECIMAL(18,0) AS x
+  FROM cal LEFT JOIN counts ON cal.g = counts.g AND cal.day = counts.day
+), stats AS (
+  SELECT g, sum(x)::DECIMAL(18,0) AS s, count(*)::DECIMAL(18,0) AS n FROM dense GROUP BY 1
+), wid AS (
+  SELECT dense.g, n,
+         (x * n - s)::DECIMAL(18,0) AS c0,
+         (lead(x, 1) OVER w * n - s)::DECIMAL(18,0) AS c1,
+         (lead(x, 2) OVER w * n - s)::DECIMAL(18,0) AS c2,
+         (lead(x, 7) OVER w * n - s)::DECIMAL(18,0) AS c7
+  FROM dense JOIN stats ON dense.g = stats.g
+  WINDOW w AS (PARTITION BY dense.g ORDER BY day)
+), agg AS (
+  SELECT g, max(n)::BIGINT AS n_days, sum(c0 * c0) AS den,
+         sum(c0 * c1) AS n1, sum(c0 * c2) AS n2, sum(c0 * c7) AS n7
+  FROM wid GROUP BY 1
+)
+SELECT g AS event_type, n_days, l.lag,
+       round((CASE l.lag WHEN 1 THEN n1 WHEN 2 THEN n2 ELSE n7 END)::DOUBLE
+             / den::DOUBLE, 6) AS acf
+FROM agg CROSS JOIN (VALUES (1), (2), (7)) AS l(lag)"""
+
+
+class QueryRow(NamedTuple):
+    """One registered query. queries(), oracle_sql(), DRIVER_WINDOW,
+    tools/check_oracle.py and bench.py's series all read these rows."""
+
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    # bench.py series: None = not benched; "count" = the timed .count()
+    # series; "one_rep" = the count series at one rep, left out of the
+    # suite total (fixed-overhead streaming and sync-loop replays and
+    # in-query index rebuilds, whose wall is scheduler constants rather
+    # than plan health); "noop" = the count series plus one noop-sink
+    # run that computes every column (.count() lets the optimizer prune
+    # whole expression subtrees)
+    bench: str | None
+    sql: str  # the DuckDB oracle twin, the same rows at any SF
+
+
+# The registry, one row per query, in driver order. The correctness
+# driver hash-checks the first 50 rows (DRIVER_WINDOW), so their order
+# is a staleness rotation: first-ever driver rows for queries added
+# since the last rotation, then behavior-changed entries, then the
+# longest-unrefreshed anchors. A rotation moves rows and re-pins the
+# order hash in tests/test_entry_contract.py; a new query is one row.
+# Rows past the window are behavior-anchored by their last driver-green
+# round: whenever a module behind one is touched, tools/check_oracle.py
+# re-runs every affected query and logs the run to ORACLE_CHECKS.jsonl
+# (README "Correctness window rotation").
+QUERY_TABLE: tuple[QueryRow, ...] = tuple(map(QueryRow._make, (
+    ("doc_clusters", q_doc_clusters, "count", oracles.q_doc_clusters(16, 1)),
+    ("knn_ivf_sample_sweep", q_knn_ivf_sample_sweep, "count", oracles.q_knn_ivf_sample_sweep(
+        5, 16, 4, (1, 3, 10))),
+    ("search_snippets", q_search_snippets, "count", oracles.q_search_snippets(5, 12)),
+    ("rerank_search", q_rerank_search, "count", oracles.q_rerank_search(10)),
+    ("theil_sen_trend", q_theil_sen_trend, "count", oracles.q_theil_sen_trend()),
+    ("bm25_append_delete_replay", q_bm25_append_delete_replay, "one_rep",
+     oracles.q_bm25_append_delete_replay()),
+    ("bm25_pruned_search", q_bm25_pruned_search, "count", oracles.q_bm25_pruned_search(10, 32)),
+    ("bpe_fertility", q_bpe_fertility, "count", oracles.q_bpe_fertility(8)),
+    ("curated_manifest", q_curated_manifest, "count", _ORACLE_MANIFEST.format(
+        q=_ORACLE_QUALITY,
+        gopher=oracles.q_gopher_rules(50, 100000, "aug_docs"),
+    )),
+    ("customer_rfm", q_customer_rfm, "count", """
+WITH anchor AS (SELECT max(o_orderdate) AS mx FROM orders),
+base AS (
+  SELECT o_custkey AS custkey,
+         date_diff('day', max(o_orderdate), (SELECT mx FROM anchor))::INT AS recency_days,
+         count(*)::BIGINT AS frequency,
+         sum(o_totalprice::DECIMAL(18,2)) AS money
+  FROM orders GROUP BY o_custkey
+)
+SELECT custkey, recency_days, frequency,
+       round(money::DOUBLE, 2) AS monetary,
+       ntile(5) OVER (ORDER BY recency_days ASC, custkey ASC)::INT AS r_score,
+       ntile(5) OVER (ORDER BY frequency DESC, custkey ASC)::INT AS f_score,
+       ntile(5) OVER (ORDER BY money::DOUBLE DESC, custkey ASC)::INT AS m_score
+FROM base"""),
+    ("dedup_canonical", q_dedup_canonical, "count",
+     _ORACLE_DEDUP_CANONICAL.format(q=_ORACLE_QUALITY)),
+    ("dedup_containment", q_dedup_containment, "count", oracles.q_ngram_containment(3, 0.8)),
+    ("dedup_cut", q_dedup_cut, "count", oracles.q_cut_spans(10, 2)),
+    ("dedup_embedding", q_dedup_embedding, None, oracles.q_embedding_dups(0.99)),
+    ("dedup_passages", q_dedup_passages, "count", oracles.q_repeated_passages(k=10, min_docs=2)),
+    ("dedup_spans", q_dedup_spans, "count", oracles.q_duplicate_spans(10, 2)),
+    ("events_acf", q_events_acf, "count", _ORACLE_EVENTS_ACF),
+    ("events_concurrency", q_events_concurrency, "count", """
+WITH e AS (
+  SELECT user_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
+),
+flagged AS (
+  SELECT user_id, us,
+         CASE WHEN us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
+                   > 1800000000 OR
+                   lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
+              THEN 1 ELSE 0 END AS is_new
+  FROM e
+),
+islands AS (
+  SELECT user_id, us,
+         sum(is_new) OVER (PARTITION BY user_id ORDER BY us
+                           ROWS UNBOUNDED PRECEDING) AS sid
+  FROM flagged
+),
+sessions AS (
+  SELECT user_id, sid, min(us) AS s, max(us) + 1800000000 AS e
+  FROM islands GROUP BY user_id, sid
+),
+deltas AS (
+  SELECT us, sum(delta)::BIGINT AS net FROM (
+    SELECT s AS us, 1 AS delta FROM sessions
+    UNION ALL
+    SELECT e AS us, -1 AS delta FROM sessions
+  ) GROUP BY us
+)
+SELECT us, net,
+       sum(net) OVER (ORDER BY us ROWS UNBOUNDED PRECEDING)::BIGINT AS concurrent
+FROM deltas"""),
+    ("events_mad_outliers", q_events_mad_outliers, "count", """
+WITH med AS (
+  SELECT event_type, quantile_cont(value, 0.5) AS med
+  FROM events GROUP BY event_type
+),
+mad AS (
+  SELECT e.event_type, max(m.med) AS med,
+         quantile_cont(abs(e.value - m.med), 0.5) AS mad,
+         count(*)::BIGINT AS n
+  FROM events e JOIN med m USING (event_type)
+  GROUP BY e.event_type
+)
+SELECT e.event_id, e.event_type,
+       round(e.value, 6) AS value,
+       round(s.med, 6) AS med,
+       round(s.mad, 6) AS mad,
+       round((e.value - s.med) / (1.4826 * s.mad), 6) AS robust_z
+FROM events e JOIN mad s USING (event_type)
+WHERE s.mad > 0 AND abs((e.value - s.med) / (1.4826 * s.mad)) > 3.5"""),
+    ("events_seasonal", q_events_seasonal, "count", """
+WITH daily AS (
+  SELECT event_type, (ts::TIMESTAMP)::DATE AS day, count(*)::BIGINT AS n
+  FROM events GROUP BY event_type, (ts::TIMESTAMP)::DATE
+),
+base AS (
+  SELECT a.event_type, a.day, a.n, b.n AS forecast,
+         (a.n - b.n)::BIGINT AS residual
+  FROM daily a JOIN daily b
+    ON a.event_type = b.event_type AND b.day = a.day - 7
+),
+stats AS (
+  SELECT event_type, count(*)::BIGINT AS nn,
+         sum(residual::DECIMAL(28,8)) AS s1,
+         sum((residual::DECIMAL(28,8) * residual::DECIMAL(28,8))::DECIMAL(38,10)) AS s2
+  FROM base GROUP BY event_type
+),
+st AS (
+  SELECT event_type, nn,
+         s1::DOUBLE / nn AS rmean,
+         sqrt((s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / nn) / (nn - 1)) AS rsd
+  FROM stats
+)
+SELECT b.event_type, strftime(b.day, '%Y-%m-%d') AS day, b.n, b.forecast,
+       b.residual,
+       round((b.residual - st.rmean) / st.rsd, 6) AS z,
+       abs((b.residual - st.rmean) / st.rsd) > 2.0 AS is_anomaly
+FROM base b JOIN st USING (event_type)
+WHERE st.nn >= 2 AND st.rsd > 0"""),
+    ("forecast_revenue", q_forecast_revenue, "count", """
+SELECT sum((l_extendedprice::DECIMAL(18,2) * l_discount::DECIMAL(8,2))::DECIMAL(30,4))::DOUBLE AS revenue,
+       count(*)::BIGINT AS n_lines
+FROM lineitem
+WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
+  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24"""),
+    ("gdpr_delete_cascade", q_gdpr_delete_cascade, "count", oracles.q_gdpr_delete_cascade()),
+    # incremental == batch by construction: the oracle is the batch
+    # transitive closure, unchanged
+    ("incremental_clusters", q_incremental_clusters, "count",
+     oracles.q_dedup_clusters(16, 4, 3, 0.5)),
+    ("interval_overlap", q_interval_overlap, "count", _ORACLE_INTERVAL_OVERLAP),
+    ("k_anonymity", q_k_anonymity, "count", """
+WITH span AS (
+  SELECT min(c_acctbal) AS lo, max(c_acctbal) AS hi FROM customer
+), d AS (
+  SELECT c_nationkey, c_mktsegment,
+         (CASE WHEN hi = lo THEN 0
+               ELSE least(9, floor((c_acctbal - lo) * 10.0 / (hi - lo)))
+          END)::INT AS bal_band
+  FROM customer CROSS JOIN span
+), classes AS (
+  SELECT c_nationkey, c_mktsegment, bal_band, count(*)::BIGINT AS class_size
+  FROM d GROUP BY 1, 2, 3
+)
+SELECT c_nationkey, c_mktsegment, bal_band, class_size,
+       (SELECT min(class_size) FROM classes)::BIGINT AS k_anonymity,
+       class_size < 5 AS at_risk
+FROM classes"""),
+    ("knn_assortativity", q_knn_assortativity, "count", oracles.q_knn_assortativity(k=5)),
+    ("knn_binary", q_knn_binary, "noop", oracles.q_knn_binary(5, 20, 64)),
+    ("knn_ivf_append", q_knn_ivf_append, "count", oracles.q_knn_ivf(5, 16, 4, 1, "base")),
+    ("knn_kcore", q_knn_kcore, "count", oracles.q_knn_kcore(5, 8)),
+    ("knn_link_prediction", q_knn_link_prediction, "count",
+     oracles.q_knn_link_prediction(k=5, top_k=20)),
+    ("knn_ppr", q_knn_ppr, "count", oracles.q_knn_ppr(5, 0.85, 5, 50, 10)),
+    ("matryoshka_recall", q_matryoshka_recall, "noop",
+     oracles.q_matryoshka_recall(10, (8, 16, 32, 64))),
+    ("maxsim_rerank", q_maxsim_rerank, "count", oracles.q_maxsim_rerank(5, 20, 32, 8)),
+    ("quality_calibrated", q_quality_calibrated, "count",
+     _ORACLE_CALIBRATED.format(q=_ORACLE_QUALITY)),
+    ("record_linkage", q_record_linkage, "count", """
+WITH clean AS (
+  SELECT c_nationkey, c_custkey AS id, c_name AS name,
+         c_acctbal::DOUBLE AS val,
+         list_aggregate(list_transform(regexp_extract_all(c_name, '[0-9]'),
+                        x -> x::BIGINT), 'sum') AS dsum
+  FROM customer
+), dirty AS (
+  SELECT c_nationkey, c_custkey + 1000000 AS id,
+         substr(c_name, 1, length(c_name) - 2)
+           || substr(c_name, length(c_name), 1)
+           || substr(c_name, length(c_name) - 1, 1) AS name,
+         floor(c_acctbal)::DOUBLE AS val
+  FROM customer WHERE c_custkey % 7 = 0
+), dirtyb AS (
+  SELECT *, list_aggregate(list_transform(regexp_extract_all(name, '[0-9]'),
+                           x -> x::BIGINT), 'sum') AS dsum
+  FROM dirty
+), cand AS (
+  SELECT l.id AS id_left, r.id AS id_right,
+         levenshtein(l.name, r.name) AS dist,
+         CASE WHEN levenshtein(l.name, r.name) = 0 THEN 4000
+              WHEN levenshtein(l.name, r.name) <= 2 THEN 2500
+              ELSE -3000 END
+         + CASE WHEN abs(l.val - r.val) < 1.0 THEN 1500 ELSE -1000 END AS score
+  FROM clean l JOIN dirtyb r
+    ON l.c_nationkey = r.c_nationkey AND l.dsum = r.dsum
+)
+SELECT id_left, id_right, dist::INT AS name_dist, score::BIGINT AS score_milli
+FROM cand WHERE score >= 3000"""),
+    ("spell_suggestions", q_spell_suggestions, "count", oracles.q_spell_suggestions(20, 5, 1)),
+    ("stratified_sample", q_stratified_sample, "count", """
+WITH d AS (SELECT doc_id, coalesce(source, '__null__') AS stratum FROM documents),
+c AS (SELECT stratum, count(*)::BIGINT AS stratum_size FROM d GROUP BY stratum)
+SELECT doc_id, stratum, stratum_size,
+       round(least(1.0, 50.0 / stratum_size), 6) AS sample_rate,
+       ({h} % 1000000)
+         < floor(round(least(1.0, 50.0 / stratum_size), 6) * 1e6)::BIGINT AS kept
+FROM d JOIN c USING (stratum)""".format(
+        h=oracles.hash60_expr("doc_id::VARCHAR || '#strat'"))),
+    ("stream_interval_join_outer", q_stream_interval_join_outer, "one_rep", """
+WITH c AS (
+  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us
+  FROM events WHERE event_type = 'click'
+),
+p AS (
+  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us
+  FROM events WHERE event_type = 'purchase'
+)
+SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
+       (p.us - c.us)::BIGINT AS lag_us
+FROM c LEFT JOIN p ON c.user_id = p.user_id
+ AND c.us BETWEEN p.us - 86400000000 AND p.us"""),
+    # batch-register replay: a hash match IS the stream==batch proof
+    ("streaming_hll", q_streaming_hll, "count",
+     oracles.q_approx_distinct_hll(p=8, with_exact=False)),
+    # the streaming SCD2 state must equal the one-pass full-log rebuild
+    # (merge == rebuild per trigger; scd2_merge fold ≡ batch scd2_history)
+    ("streaming_scd2", q_streaming_scd2, "one_rep", """
+WITH upd AS (
+  SELECT o_custkey AS custkey, o_orderpriority AS priority,
+         o_orderdate AS ts, o_orderkey AS seq
+  FROM orders
+), flagged AS (
+  SELECT custkey, priority, ts, seq,
+         lag(priority) OVER (PARTITION BY custkey ORDER BY ts, seq) AS prev_priority,
+         row_number() OVER (PARTITION BY custkey ORDER BY ts, seq) AS rn
+  FROM upd
+), changes AS (
+  SELECT custkey, priority, ts AS valid_from, seq
+  FROM flagged WHERE rn = 1 OR prev_priority IS DISTINCT FROM priority
+)
+SELECT custkey, priority, valid_from,
+       lead(valid_from) OVER w AS valid_to,
+       (row_number() OVER w)::INT AS version,
+       (lead(valid_from) OVER w IS NULL) AS is_current
+FROM changes WINDOW w AS (PARTITION BY custkey ORDER BY valid_from, seq)"""),
+    ("streaming_sessions", q_streaming_sessions, "one_rep", """
+WITH e AS (
+  SELECT user_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
+),
+flagged AS (
+  SELECT user_id, us,
+         CASE WHEN us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
+                   > 1800000000 OR
+                   lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
+              THEN 1 ELSE 0 END AS is_new
+  FROM e
+),
+islands AS (
+  SELECT user_id, us,
+         sum(is_new) OVER (PARTITION BY user_id ORDER BY us
+                           ROWS UNBOUNDED PRECEDING) AS sid
+  FROM flagged
+)
+SELECT user_id,
+       make_timestamp(min(us)) AS session_start,
+       make_timestamp(max(us) + 1800000000) AS session_end,
+       count(*)::BIGINT AS n_events
+FROM islands GROUP BY user_id, sid"""),
+    ("temporal_split", q_temporal_split, "count", """
+WITH span AS (
+  SELECT min(epoch_us(ts::TIMESTAMP)) AS t0, max(epoch_us(ts::TIMESTAMP)) AS t1
+  FROM events
+), tagged AS (
+  SELECT event_type, user_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us,
+         CASE WHEN ts IS NULL THEN 'unknown'
+              WHEN epoch_us(ts::TIMESTAMP) < t0 + ((t1 - t0) * 8) // 10
+              THEN 'train'
+              WHEN epoch_us(ts::TIMESTAMP) < t0 + ((t1 - t0) * 8) // 10
+                                                + 2 * 86400000000
+              THEN 'embargo'
+              ELSE 'test' END AS split
+  FROM events CROSS JOIN span
+)
+SELECT split, event_type, count(*)::BIGINT AS n_events,
+       count(DISTINCT user_id)::BIGINT AS n_users,
+       min(us) AS min_us, max(us) AS max_us
+FROM tagged GROUP BY 1, 2"""),
+    ("text_entropy", q_text_entropy, "count", """
+WITH chars AS (
+  SELECT doc_id, unnest(list_transform(range(1, length(lower(text)) + 1),
+                                       i -> substr(lower(text), i, 1))) AS ch
+  FROM documents
+),
+counts AS (
+  SELECT doc_id, ch, count(*)::BIGINT AS c FROM chars
+  WHERE ch <> '' GROUP BY doc_id, ch
+),
+per AS (
+  SELECT doc_id, ch, c, sum(c) OVER (PARTITION BY doc_id) AS n FROM counts
+)
+SELECT doc_id,
+       max(n)::BIGINT AS n_chars,
+       count(*)::BIGINT AS n_distinct_chars,
+       sum(CAST(floor(-(c::DOUBLE / n) * ln(c::DOUBLE / n)
+                      / 0.6931471805599453 * 100000000 + 0.5)
+                AS BIGINT))::BIGINT AS entropy_microbits,
+       round(max(c)::DOUBLE / max(n), 6) AS top_char_frac
+FROM per GROUP BY doc_id"""),
+    ("text_vocab", q_text_vocab, None, """
+WITH tk AS (
+  SELECT doc_id, unnest(list_filter(
+           regexp_split_to_array(lower(text), '\\s+'), x -> length(x) > 0)) AS term
+  FROM documents
+),
+fr AS (
+  SELECT term, count(*)::BIGINT AS freq, count(DISTINCT doc_id)::BIGINT AS doc_freq
+  FROM tk GROUP BY term
+  ORDER BY freq DESC, term ASC LIMIT 200
+)
+SELECT term, freq, doc_freq,
+       (row_number() OVER (ORDER BY freq DESC, term ASC) - 1)::BIGINT AS vocab_id
+FROM fr"""),
+    ("textrank_keywords", q_textrank_keywords, "count", oracles.q_textrank_keywords(20, 0.85, 5)),
+    ("unigram_em_encode", q_unigram_em_encode, "count",
+     oracles.q_unigram_em_encode(120, 5, 1000, 30, 20)),
+    ("unigram_encode", q_unigram_encode, "count", oracles.q_unigram_encode(120, 5, 1000, 30, 20)),
+    ("unigram_pieces", q_unigram_pieces, "count", oracles.q_unigram_pieces(120, 5, 1000)),
+    ("value_band_pairs", q_value_band_pairs, "count", """
+WITH p AS (SELECT event_id, value FROM events WHERE event_type = 'purchase')
+SELECT a.event_id AS id_a, b.event_id AS id_b,
+       round(a.value, 6) AS value_a, round(b.value, 6) AS value_b,
+       round(abs(a.value - b.value), 6) AS diff
+FROM p a JOIN p b
+  ON a.event_id < b.event_id AND abs(a.value - b.value) <= 0.1"""),
+    ("wordpiece_encode", q_wordpiece_encode, "count", oracles.q_wordpiece_encode(8, 30)),
+    ("heaps_law", q_heaps_law, "count", oracles.q_heaps_law(32, n=3)),
+    ("corpus_drift_jsd", q_corpus_drift_jsd, "count", oracles.q_corpus_drift_jsd(20)),
+    ("item_item_cf", q_item_item_cf, "count", oracles.q_item_item_cf(50, 50)),
+    ("burrows_delta", q_burrows_delta, "count", oracles.q_burrows_delta(30, 4, 5, 125)),
+    ("hill_tail", q_hill_tail, "count", oracles.q_hill_tail((50, 100, 200, 500))),
+    ("ltr_features", q_ltr_features, "count", oracles.q_ltr_features(20)),
+    ("market_hhi", q_market_hhi, "count", oracles.q_market_hhi()),
+    ("cuped_ab", q_cuped_ab, "count", oracles.q_cuped("2024-01-16 00:00:00", 2)),
+    ("logrank_test", q_logrank_test, "count", oracles.q_logrank(36, "purchase", 2)),
+    ("knn_clustering", q_knn_clustering, "count", oracles.q_knn_clustering(5, 10)),
+    ("price_elasticity", q_price_elasticity, "count", oracles.q_price_elasticity(50)),
+    ("forecast_backtest", q_forecast_backtest, "count", oracles.q_forecast_backtest(7, 28)),
+    ("streaming_chi_square", q_streaming_chi_square, "one_rep", oracles.q_stat_chi_square(5)),
+    ("markov_stationary", q_markov_stationary, "count", oracles.q_markov_stationary(30)),
+    ("textrank_sentences", q_textrank_sentences, "count",
+     oracles.q_textrank_sentences(3, 0.85, 8)),
+    ("referential_integrity", q_referential_integrity, "count", oracles.q_referential_integrity()),
+    ("markov_attribution", q_markov_attribution, "count",
+     oracles.q_markov_attribution(("click", "error", "signup", "view"), "purchase", 50)),
+    ("sequential_patterns", q_sequential_patterns, "count",
+     oracles.q_sequential_patterns(30, 3, 20)),
+    ("poisson_bootstrap", q_poisson_bootstrap, "noop", oracles.q_poisson_bootstrap(200, 5)),
+    ("funnel_wilson", q_funnel_wilson, "count", oracles.q_funnel_wilson(1960)),
+    ("eb_item_rates", q_eb_item_rates, "count", oracles.q_eb_rates()),
+    ("ks_family_bh", q_ks_family_bh, "count", oracles.q_ks_family_bh(50)),
+    ("rank_tau", q_rank_tau, "count", oracles.q_rank_tau(20)),
+    ("collocations_llr", q_collocations_llr, "count", oracles.q_collocations_llr(5, 50)),
+    ("knn_harmonic", q_knn_harmonic, "count", oracles.q_knn_harmonic(5, 3, 20)),
+    ("label_centroids", q_label_centroids, "count", oracles.q_label_centroids()),
+    ("simpson_audit", q_simpson_audit, "count", oracles.q_simpson_audit()),
+    ("mutual_information", q_mutual_information, "count", oracles.q_mutual_information()),
+    ("cohens_kappa", q_cohens_kappa, "count", oracles.q_cohens_kappa()),
+    # Ljung-Box composes the events_acf twin (Q-fold over its rows)
+    ("ljung_box", q_ljung_box, "count", oracles.q_ljung_box(_ORACLE_EVENTS_ACF, 3)),
+    # ROC AUC composes the text_quality twin (stopword_ratio score)
+    ("roc_auc", q_roc_auc, "count", oracles.q_roc_auc(_ORACLE_QUALITY)),
+    ("pacf_daily", q_pacf_daily, "count", oracles.q_pacf_daily(7)),
+    ("brown_forsythe", q_brown_forsythe, "count", oracles.q_brown_forsythe()),
+    ("rollup_agg", q_rollup_agg, None, """
+SELECT l_returnflag, l_linestatus, count(*)::BIGINT AS n, sum(l_quantity) AS sum_qty
+FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""),
+    ("sniff_formats", q_sniff_formats, "count", _ORACLE_SNIFF),
+    ("text_collocations", q_text_collocations, None, """
+WITH tk AS (
+  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                             x -> length(x) > 0) AS toks
+  FROM documents
+),
+uni AS (
+  SELECT w, count(*)::BIGINT AS n_w
+  FROM (SELECT unnest(toks) AS w FROM tk) s GROUP BY w
+),
+bg_all AS (
+  SELECT word_a, word_b, count(*)::BIGINT AS n_pair FROM (
+    SELECT toks[r.i] AS word_a, toks[r.i + 1] AS word_b
+    FROM tk, LATERAL unnest(range(1, len(toks))) AS r(i)
+    WHERE len(toks) >= 2
+  ) s GROUP BY word_a, word_b
+),
+bg AS (SELECT * FROM bg_all WHERE n_pair >= 5),
+tot AS (
+  -- P(ab) normalizes by the PRE-filter bigram total (Church & Hanks)
+  SELECT (SELECT sum(n_w)::DOUBLE FROM uni) AS t_uni,
+         (SELECT sum(n_pair)::DOUBLE FROM bg_all) AS t_big
+),
+sc AS (
+  SELECT word_a, word_b, n_pair, a.n_w AS n_a, b.n_w AS n_b,
+         log2((n_pair / t_big) / ((a.n_w / t_uni) * (b.n_w / t_uni))) AS pmi_raw
+  FROM bg JOIN uni a ON bg.word_a = a.w JOIN uni b ON bg.word_b = b.w, tot
+)
+SELECT word_a, word_b, n_pair, n_a, n_b, round(pmi_raw, 6) AS pmi
+FROM sc
+ORDER BY round(pmi_raw, 6) DESC, word_a ASC, word_b ASC
+LIMIT 50"""),
+    ("text_curation", q_text_curation, None, _ORACLE_CURATION.format(quality=_ORACLE_QUALITY)),
+    ("text_fingerprint", q_text_fingerprint, None, _ORACLE_FINGERPRINT),
+    ("text_lang_id", q_text_lang_id, None, _ORACLE_LANG_ID),
+    ("text_quality", q_text_quality, "count", _ORACLE_QUALITY),
+    ("text_repetition", q_text_repetition, None, """
+WITH base AS (
+  SELECT doc_id,
+         list_filter(list_transform(regexp_split_to_array(text, '\\n'), x -> trim(x)),
+                     x -> length(x) > 0) AS lines,
+         list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> length(t) > 0) AS toks
+  FROM documents
+), g AS (
+  SELECT doc_id, lines,
+         CASE WHEN len(toks) >= 2
+              THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])
+              ELSE []::VARCHAR[] END AS g2,
+         CASE WHEN len(toks) >= 3
+              THEN list_transform(range(1, len(toks) - 1),
+                   i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])
+              ELSE []::VARCHAR[] END AS g3
+  FROM base
+)
+SELECT doc_id, len(lines)::BIGINT AS n_lines,
+       round(CASE WHEN len(lines) > 0
+             THEN 1.0 - len(list_distinct(lines))::DOUBLE / len(lines) ELSE 0.0 END, 6) AS dup_line_frac,
+       round(CASE WHEN len(g2) > 0
+             THEN 1.0 - len(list_distinct(g2))::DOUBLE / len(g2) ELSE 0.0 END, 6) AS dup_2gram_frac,
+       round(CASE WHEN len(g3) > 0
+             THEN 1.0 - len(list_distinct(g3))::DOUBLE / len(g3) ELSE 0.0 END, 6) AS dup_3gram_frac
+FROM g"""),
+    ("text_token_counts", q_text_token_counts, None, _ORACLE_TOKEN_COUNTS),
+    ("topk_per_group", q_topk_per_group, None, """
+SELECT p_brand, p_partkey, p_retailprice, rn::INT AS rn FROM (
+  SELECT p_brand, p_partkey, p_retailprice,
+         row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC) AS rn
+  FROM part) WHERE rn <= 3"""),
+    ("user_retention", q_user_retention, "count", """
+WITH ud AS (SELECT DISTINCT user_id AS u, ts::TIMESTAMP::DATE AS d FROM events),
+f AS (SELECT u, min(d) AS cohort_day FROM ud GROUP BY u),
+sz AS (SELECT cohort_day, count(*)::BIGINT AS n_cohort FROM f GROUP BY cohort_day),
+act AS (
+  SELECT f.cohort_day, date_diff('day', f.cohort_day, ud.d)::INT AS day_offset,
+         count(*)::BIGINT AS n_active
+  FROM ud JOIN f USING (u)
+  WHERE date_diff('day', f.cohort_day, ud.d) <= 7
+  GROUP BY 1, 2
+)
+SELECT act.cohort_day::VARCHAR AS cohort_day, day_offset, n_active, n_cohort,
+       round(n_active / n_cohort, 6) AS retention
+FROM act JOIN sz USING (cohort_day)"""),
+    ("user_sessions", q_user_sessions, "count", """
+WITH e AS (
+  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
+), flagged AS (
+  SELECT user_id, event_id, us,
+         CASE WHEN us - lag(us) OVER w > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_s
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+), sess AS (
+  SELECT user_id, us,
+         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
+  FROM flagged
+)
+SELECT user_id, session_id, min(us) AS session_start_us, max(us) AS session_end_us,
+       count(*)::BIGINT AS n_events
+FROM sess GROUP BY user_id, session_id"""),
+    ("value_percentiles", q_value_percentiles, None, """
+SELECT event_type, count(*)::BIGINT AS n,
+       round(quantile_cont(value, 0.5), 6) AS p50,
+       round(quantile_cont(value, 0.9), 6) AS p90,
+       round(quantile_cont(value, 0.99), 6) AS p99
+FROM events GROUP BY event_type"""),
+    ("audio_wav_segments", q_audio_wav_segments, "count", """
+WITH p AS (
+  SELECT doc_id::VARCHAR AS media_id,
+         ((2000 + (doc_id * 37) % 20000) * 1000)
+           // (CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
+               ELSE 44100 END) AS duration_ms
+  FROM documents
+)
+SELECT media_id, i::INT AS segment_index,
+       (i * 500)::BIGINT AS start_ms,
+       least((i + 1) * 500, duration_ms)::BIGINT AS end_ms
+FROM (SELECT media_id, duration_ms,
+             unnest(generate_series(0, (ceil(duration_ms / 500.0))::BIGINT - 1)) AS i
+      FROM p)"""),
+    ("bluegreen_swap", q_bluegreen_swap, "count", """
+SELECT lang, count(*)::BIGINT AS n_docs,
+       sum(n_chars)::BIGINT AS sum_chars,
+       'green' AS live_color
+FROM documents GROUP BY lang"""),
+    ("cluster_keywords", q_cluster_keywords, "count", oracles.q_cluster_keywords(8, 5)),
+    ("contamination_report", q_contamination_report, "count", oracles.q_contamination_report(n=2)),
+    ("gdpr_sync_replay", q_gdpr_sync_replay, "one_rep", oracles.q_gdpr_sync_replay()),
+    # row-form batch replay: a hash match proves the packed
+    # shard->pack->merge->estimate algebra == batch registers
+    ("approx_distinct_hll_packed", q_approx_distinct_hll_packed, "count",
+     oracles.q_approx_distinct_hll(p=8)),
+    # two-level bucketing is a pure shuffle-shape change: identical
+    # result set to the one-level join, so it shares its raw-range
+    # oracle verbatim — the hash match IS the equality pin at SF
+    ("interval_overlap_two_level", q_interval_overlap_two_level, "count",
+     _ORACLE_INTERVAL_OVERLAP),
+    ("embedding_dbscan", q_embedding_dbscan, "count", oracles.q_embedding_dbscan(50_000, 4)),
+    ("bm25_rocchio_search", q_bm25_rocchio_search, "count",
+     oracles.q_bm25_rocchio_search(10, 5, 8, 400)),
+    ("lm_dirichlet_search", q_lm_dirichlet_search, "count",
+     oracles.q_lm_dirichlet_search(10, 300.0)),
+    # horizon > corpus span makes the stream output exactly the
+    # distinct key set; bounded-state semantics unit-pinned
+    ("streaming_exact_dedup", q_streaming_exact_dedup, "one_rep",
+     "SELECT DISTINCT event_type, user_id FROM events"),
+    ("mmr_rerank", q_mmr_rerank, "count", oracles.q_mmr_rerank(16, 8, 500)),
+    ("sliding_uniques_hll", q_sliding_uniques_hll, "count", oracles.q_sliding_uniques_hll(8, 7)),
+    ("phrase_search", q_phrase_search, "count", oracles.q_phrase_search(k=10)),
+    ("search_facets", q_search_facets, "count", oracles.q_search_facets(50, 5)),
+    ("query_autocomplete", q_query_autocomplete, "count", oracles.q_query_autocomplete(k=5)),
+    ("user_survival", q_user_survival, "count", oracles.q_user_survival(36, "purchase")),
+    ("benford_audit", q_benford_audit, "count", oracles.q_benford_audit("orders", "o_totalprice")),
+    ("token_gini", q_token_gini, "count", oracles.q_token_gini(10)),
+    ("knn_label_modularity", q_knn_label_modularity, "count", oracles.q_knn_label_modularity(5)),
+    ("lm_kneser_ney", q_lm_kneser_ney, "count", oracles.q_lm_kneser_ney(0.75)),
+    ("boolean_search", q_boolean_search, "count", oracles.q_boolean_search(k=10)),
+    ("stat_ks_test", q_stat_ks_test, "count", oracles.q_stat_ks_test("click", "purchase")),
+    ("stat_mann_whitney", q_stat_mann_whitney, "count",
+     oracles.q_stat_mann_whitney("view", "purchase")),
+    ("stat_chi_square", q_stat_chi_square, "count", oracles.q_stat_chi_square(5)),
+    ("good_turing", q_good_turing, "count", oracles.q_good_turing(20, n=2)),
+    ("stupid_backoff", q_stupid_backoff, "count", oracles.q_stupid_backoff(400)),
+    ("chunk_collapse", q_chunk_collapse, None, oracles.q_chunk_collapse(20)),
+    ("chunk_fixed", q_chunk_fixed, None, _ORACLE_CHUNK_FIXED),
+    ("corpus_shards", q_corpus_shards, None, """
+SELECT doc_id,
+       ({h} % 16)::INT AS shard,
+       len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                       x -> length(x) > 0))::BIGINT AS n_tokens
+FROM documents""".format(h=oracles.hash60_expr("doc_id::VARCHAR || '#shard'"))),
+    ("cube_agg", q_cube_agg, None, """
+SELECT l_returnflag, l_linestatus,
+       GROUPING(l_returnflag, l_linestatus)::INT AS gid,
+       count(*)::BIGINT AS n,
+       sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_price
+FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"""),
+    ("customers_without_orders", q_customers_without_orders, None, """
+SELECT c_custkey, c_name FROM customer
+WHERE NOT EXISTS (SELECT 1 FROM orders
+                  WHERE o_custkey = c_custkey
+                    AND o_orderpriority = '1-URGENT')"""),
+    ("doc_length_histogram", q_doc_length_histogram, None, """
+SELECT (floor(n_chars / 50) * 50)::BIGINT AS bucket,
+       count(*)::BIGINT AS n, round(avg(n_chars), 6) AS avg_chars
+FROM documents GROUP BY 1"""),
+    ("events_anomaly", q_events_anomaly, "count", """
+WITH st AS (
+  SELECT event_type, count(*)::BIGINT AS n,
+         sum(value::DECIMAL(28,8)) AS s1,
+         sum((value::DECIMAL(28,8) * value::DECIMAL(28,8))::DECIMAL(38,10)) AS s2
+  FROM events GROUP BY event_type
+), m AS (
+  SELECT event_type, n, s1::DOUBLE / n AS mean,
+         sqrt((s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / n) / (n - 1)) AS sd
+  FROM st
+)
+SELECT e.event_id, e.event_type,
+       round(e.value, 6) AS value,
+       round(m.mean, 6) AS mean,
+       round(m.sd, 6) AS sd,
+       round((e.value - m.mean) / m.sd, 6) AS z
+FROM events e JOIN m USING (event_type)
+WHERE m.n >= 2 AND m.sd > 0 AND abs((e.value - m.mean) / m.sd) > 2.5"""),
+    ("events_asof", q_events_asof, "count", """
+WITH p AS (
+  SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us, value
+  FROM events WHERE event_type = 'purchase'
+), c AS (
+  SELECT user_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us,
+         max(event_id)::BIGINT AS click_event_id
+  FROM events WHERE event_type = 'click' GROUP BY 1, 2
+)
+SELECT p.user_id, p.event_id, p.us AS purchase_us, p.value,
+       c.click_event_id, c.us AS click_us, p.us - c.us AS gap_us
+FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.us >= c.us"""),
+    ("events_funnel", q_events_funnel, "count", """
+WITH e AS (
+  SELECT user_id AS u, event_type AS et, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
+),
+r0 AS (SELECT u, min(us) AS t FROM e WHERE et = 'view' GROUP BY u),
+r1 AS (SELECT e.u, min(e.us) AS t FROM e JOIN r0 USING (u)
+       WHERE e.et = 'click' AND e.us > r0.t GROUP BY e.u),
+r2 AS (SELECT e.u, min(e.us) AS t FROM e JOIN r1 USING (u)
+       WHERE e.et = 'purchase' AND e.us > r1.t GROUP BY e.u),
+c AS (
+  SELECT 0 AS step_index, 'view' AS step, count(*)::BIGINT AS n_users FROM r0
+  UNION ALL
+  SELECT 1, 'click', count(*)::BIGINT FROM r1
+  UNION ALL
+  SELECT 2, 'purchase', count(*)::BIGINT FROM r2
+)
+SELECT step_index::INT AS step_index, step, n_users,
+       round(n_users / (SELECT n_users FROM c WHERE step_index = 0), 6) AS conversion
+FROM c"""),
+    ("events_props_json", q_events_props_json, "count", """
+WITH e AS (
+  SELECT event_type, try_cast(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events
+)
+SELECT event_type, count(k)::BIGINT AS n_with_k, min(k) AS min_k, max(k) AS max_k,
+       sum(k)::BIGINT AS sum_k, round(avg(k), 6) AS avg_k
+FROM e GROUP BY event_type"""),
+    ("events_range_window", q_events_range_window, "count", """
+SELECT user_id, event_id, us,
+       count(*) OVER w::BIGINT AS n_10m,
+       round(sum(value) OVER w, 4) AS sum_10m
+FROM (SELECT user_id, event_id, epoch_us(ts::TIMESTAMP)::BIGINT AS us, value FROM events)
+WINDOW w AS (PARTITION BY user_id ORDER BY us
+             RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)"""),
+    ("events_sliding", q_events_sliding, None, """
+WITH slid AS (
+  SELECT epoch_us(time_bucket(INTERVAL 5 MINUTES, ts::TIMESTAMP))::BIGINT AS b0,
+         event_type, ts
+  FROM events
+), expanded AS (
+  SELECT b0 AS bucket_us, event_type FROM slid
+  UNION ALL
+  SELECT b0 - 300000000 AS bucket_us, event_type FROM slid
+)
+SELECT bucket_us, event_type, count(*)::BIGINT AS n
+FROM expanded GROUP BY bucket_us, event_type"""),
+    ("events_tumbling", q_events_tumbling, "count", """
+SELECT epoch_us(time_bucket(INTERVAL 5 MINUTES, ts::TIMESTAMP))::BIGINT AS bucket_us,
+       event_type, count(*)::BIGINT AS n, round(sum(value), 4) AS sum_value
+FROM events GROUP BY 1, 2"""),
+    ("join_revenue", q_join_revenue, "count", """
+SELECT n_name, count(*)::BIGINT AS n_orders,
+       sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS revenue
+FROM orders JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+GROUP BY n_name"""),
+    ("more_like_this", q_more_like_this, "count", oracles.q_more_like_this(100, 10, 16)),
+    ("multi_collection_dense", q_multi_collection_dense, "count",
+     oracles.q_multi_collection_dense(10)),
+    ("nb_classify", q_nb_classify, "count", oracles.q_nb_classify(5, "lang")),
+    ("ngram_topk", q_ngram_topk, None, f"""
+WITH tokd AS (
+  SELECT doc_id,
+         list_filter(regexp_extract_all(lower(text), '{oracles.TOKEN_PATTERN}'),
+                     t -> length(t) >= 2 AND NOT list_contains({oracles.STOPLIST_SQL}, t)) AS toks
+  FROM documents
+), big AS (
+  SELECT doc_id,
+         unnest(list_distinct(list_transform(range(1, len(toks)),
+                i -> toks[i] || ' ' || toks[i + 1]))) AS ngram
+  FROM tokd WHERE len(toks) >= 2
+), cnt AS (
+  SELECT ngram, count(*)::BIGINT AS n_docs FROM big GROUP BY ngram
+)
+SELECT ngram, n_docs,
+       row_number() OVER (ORDER BY n_docs DESC, ngram ASC)::INT AS rank
+FROM cnt ORDER BY n_docs DESC, ngram ASC LIMIT 20"""),
+    ("order_priority", q_order_priority, None, """
+SELECT o_orderpriority, count(*)::BIGINT AS order_count
+FROM orders
+WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+  AND EXISTS (SELECT 1 FROM lineitem
+              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
+GROUP BY o_orderpriority"""),
+    ("parse_routed", q_parse_routed, None, _ORACLE_PARSE_ROUTED),
+    ("pricing_summary", q_pricing_summary, "count", """
+SELECT l_returnflag, l_linestatus,
+       sum(l_quantity) AS sum_qty,
+       sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_base_price,
+       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS sum_disc_price,
+       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)) * (1::DECIMAL(8,2) + l_tax::DECIMAL(8,2)))::DECIMAL(30,6))::DOUBLE AS sum_charge,
+       round(sum(l_quantity) / count(*), 6) AS avg_qty,
+       round(sum(l_extendedprice::DECIMAL(18,2))::DOUBLE / count(*), 6) AS avg_price,
+       round(sum(l_discount::DECIMAL(18,4))::DOUBLE / count(*), 6) AS avg_disc,
+       count(*)::BIGINT AS count_order
+FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+GROUP BY l_returnflag, l_linestatus"""),
+    ("approx_distinct_daily", q_approx_distinct_daily, "count",
+     oracles.q_approx_distinct_daily(64)),
+    ("artifact_roundtrip", q_artifact_roundtrip, "count", """
+SELECT source, count(*)::BIGINT AS n_docs,
+       count(DISTINCT sha256(text))::BIGINT AS n_hashes,
+       sum(length(text))::BIGINT AS n_bytes,
+       min(doc_id) AS min_doc, max(doc_id) AS max_doc
+FROM documents GROUP BY source"""),
+    ("customer_value_ranks", q_customer_value_ranks, "count", """
+WITH tot AS (
+  SELECT o_custkey, (sum(o_totalprice::DECIMAL(18,2)))::DOUBLE AS total_value
+  FROM orders GROUP BY o_custkey
+)
+SELECT o_custkey AS custkey, round(total_value, 2) AS total_value,
+       round(percent_rank() OVER w, 6) AS pct_rank,
+       round(cume_dist() OVER w, 6) AS cume,
+       (ntile(10) OVER w)::INT AS decile
+FROM tot WINDOW w AS (ORDER BY total_value DESC, o_custkey ASC)"""),
+    ("dedup_jaccard_prefix", q_dedup_jaccard_prefix, "count", oracles.q_jaccard_prefix(3, 0.5)),
+    ("discounted_revenue", q_discounted_revenue, "count", """
+SELECT count(*)::BIGINT AS n_lines,
+       coalesce(sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE, 0.0) AS revenue
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
+   OR (p_brand = 'Brand#19' AND p_size BETWEEN 1 AND 20 AND l_quantity BETWEEN 10 AND 25)
+   OR (p_brand = 'Brand#5' AND p_size BETWEEN 1 AND 30 AND l_quantity BETWEEN 20 AND 35)"""),
+    ("events_cusum", q_events_cusum, "count", """
+WITH ev AS (
+  SELECT event_type AS etype, epoch_us(ts::TIMESTAMP)::BIGINT AS us,
+         event_id AS eid, round(value, 6)::DECIMAL(28,6) AS x, value
+  FROM events WHERE value IS NOT NULL
+), stats AS (
+  SELECT etype, round(avg(value), 6) AS mu, round(stddev_samp(value), 6) AS sd
+  FROM ev GROUP BY etype
+), thr AS (
+  SELECT etype, round(mu + 0.5 * sd, 6)::DECIMAL(28,6) AS thr_pos,
+         round(mu - 0.5 * sd, 6)::DECIMAL(28,6) AS thr_neg,
+         round(4.0 * sd, 6)::DECIMAL(28,6) AS h_band
+  FROM stats
+), pre AS (
+  SELECT ev.etype, us, eid, h_band,
+         sum((x - thr_pos)::DECIMAL(28,6)) OVER w AS p_pos,
+         sum((thr_neg - x)::DECIMAL(28,6)) OVER w AS p_neg
+  FROM ev JOIN thr USING (etype)
+  WINDOW w AS (PARTITION BY ev.etype ORDER BY us, eid
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+), scored AS (
+  SELECT etype, us, h_band,
+         p_pos - least(min(p_pos) OVER w, 0::DECIMAL(28,6)) AS s_pos,
+         p_neg - least(min(p_neg) OVER w, 0::DECIMAL(28,6)) AS s_neg
+  FROM pre
+  WINDOW w AS (PARTITION BY etype ORDER BY us, eid
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+SELECT etype AS event_type, count(*)::BIGINT AS n_obs,
+       sum(CASE WHEN s_pos > h_band THEN 1 ELSE 0 END)::BIGINT AS n_pos_alarm,
+       sum(CASE WHEN s_neg > h_band THEN 1 ELSE 0 END)::BIGINT AS n_neg_alarm,
+       min(CASE WHEN s_pos > h_band THEN us END)::BIGINT AS first_pos_us,
+       min(CASE WHEN s_neg > h_band THEN us END)::BIGINT AS first_neg_us,
+       round(max(s_pos)::DOUBLE, 6) AS max_s_pos,
+       round(max(s_neg)::DOUBLE, 6) AS max_s_neg
+FROM scored GROUP BY etype"""),
+    ("compaction_plan", q_compaction_plan, "count", """
+WITH f AS (
+  SELECT source, doc_id AS file_id, strlen(text)::INT AS size_bytes
+  FROM documents WHERE strlen(text) < 500
+), packed AS (
+  SELECT source, size_bytes,
+         floor((sum(size_bytes) OVER w - size_bytes) / 2000.0)::INT AS bin_id
+  FROM f
+  WINDOW w AS (PARTITION BY source ORDER BY size_bytes DESC, file_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+SELECT source, bin_id, count(*)::BIGINT AS n_files,
+       sum(size_bytes)::BIGINT AS bin_bytes,
+       max(size_bytes)::BIGINT AS largest_file,
+       min(size_bytes)::BIGINT AS smallest_file,
+       round(sum(size_bytes) / 2000.0, 6) AS fill_frac
+FROM packed GROUP BY source, bin_id"""),
+    ("knn_communities", q_knn_communities, "count", oracles.q_knn_communities(5, 4)),
+    ("cdc_dedup", q_cdc_dedup, "noop", oracles.q_cdc_dedup_stats(16, 64)),
+    ("events_trend", q_events_trend, "count", """
+WITH ev AS (
+  SELECT event_type AS etype, epoch_us(ts::TIMESTAMP)::BIGINT AS us, value
+  FROM events WHERE value IS NOT NULL
+), xx AS (
+  SELECT etype,
+         ((us / 1000000.0)
+          - min(us / 1000000.0) OVER (PARTITION BY etype))::DECIMAL(18,6) AS x,
+         round(value, 6)::DECIMAL(18,6) AS y
+  FROM ev
+), sums AS (
+  SELECT etype, count(*)::BIGINT AS n,
+         sum(x::DECIMAL(38,6)) AS sx, sum(y::DECIMAL(38,6)) AS sy,
+         sum((x::DECIMAL(28,6) * y::DECIMAL(28,6))::DECIMAL(38,12)) AS sxy,
+         sum((x::DECIMAL(28,6) * x::DECIMAL(28,6))::DECIMAL(38,12)) AS sxx,
+         sum((y::DECIMAL(28,6) * y::DECIMAL(28,6))::DECIMAL(38,12)) AS syy
+  FROM xx GROUP BY etype
+), dd AS (
+  SELECT etype, n, n::DOUBLE AS nd, sx::DOUBLE AS sxd, sy::DOUBLE AS syd,
+         sxy::DOUBLE AS sxyd, sxx::DOUBLE AS sxxd, syy::DOUBLE AS syyd
+  FROM sums
+), cf AS (
+  SELECT etype, n, nd, sxd, syd,
+         nd * sxyd - sxd * syd AS cov_n,
+         nd * sxxd - sxd * sxd AS var_x,
+         nd * syyd - syd * syd AS var_y
+  FROM dd
+)
+SELECT etype AS event_type, n AS n_obs,
+       round((cov_n / var_x) * 86400.0, 6) AS slope_per_day,
+       round((syd - (cov_n / var_x) * sxd) / nd, 6) AS intercept,
+       round(CASE WHEN var_x > 0 AND var_y > 0
+                  THEN (cov_n * cov_n) / (var_x * var_y) END, 6) AS r2
+FROM cf"""),
+    ("scd2_asof_join", q_scd2_asof_join, "count", """
+WITH upd AS (
+  SELECT o_custkey AS custkey, o_orderpriority AS priority,
+         o_orderdate AS ts, o_orderkey AS seq
+  FROM orders
+), flagged AS (
+  SELECT custkey, priority, ts, seq,
+         lag(priority) OVER (PARTITION BY custkey ORDER BY ts, seq) AS prev_priority,
+         row_number() OVER (PARTITION BY custkey ORDER BY ts, seq) AS rn
+  FROM upd
+), changes AS (
+  SELECT custkey, priority, ts AS valid_from, seq
+  FROM flagged WHERE rn = 1 OR prev_priority IS DISTINCT FROM priority
+), hist AS (
+  SELECT custkey, priority, valid_from,
+         lead(valid_from) OVER w AS valid_to
+  FROM changes WINDOW w AS (PARTITION BY custkey ORDER BY valid_from, seq)
+), snap AS (
+  SELECT custkey, priority FROM hist
+  WHERE valid_from <= DATE '1997-07-01'
+    AND (valid_to IS NULL OR valid_to > DATE '1997-07-01')
+)
+SELECT n_name, priority, count(*)::BIGINT AS n_customers
+FROM snap
+JOIN customer ON custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+GROUP BY n_name, priority"""),
+    ("jl_projection", q_jl_projection, "count", oracles.q_jl_projection(16, 64)),
+    # persisted-layout serve is row-identical to the in-one-run
+    # operator (equality test-pinned), so the oracle replays the
+    # same training composition
+    ("knn_ivfpq_serve", q_knn_ivfpq_serve, "one_rep",
+     oracles.q_knn_ivfpq(5, 64, 16, 4, 8, 16, 20, 1)),
+    # one-pass whole-corpus stats: a hash-match against the Spark
+    # side's half+half delta-merge IS the merge==recompute proof
+    ("bm25_stats_merge", q_bm25_stats_merge, "count", oracles.q_bm25_stats_merge()),
+    # chunk-row twin of the md5 boundary rule; serves the fused
+    # mapInPandas scan (boundary-equal to the spec form, test-pinned)
+    ("cdc_chunks_scan", q_cdc_chunks_scan, "noop", oracles.q_cdc_chunks(16, 64)),
+    # sampled trainer with sample >= vocab: same unrolled replay —
+    # the driver-hash row IS the local==distributed proof
+    ("bpe_merges_sampled", q_bpe_merges_sampled, "count", oracles.q_bpe_merges(8)),
+    ("ingest_index", q_ingest_index, "count", _ORACLE_INGEST_INDEX),
+    ("chunk_character", q_chunk_character, "count",
+     oracles.q_chunk_character(chunk_size=200, overlap=50)),
+    ("pii_redact", q_pii_redact, "count", oracles.q_pii_redact()),
+    ("lm_quality", q_lm_quality, "count", oracles.q_lm_quality()),
+    ("dedup_sentences", q_dedup_sentences, "count", oracles.q_dedup_sentences()),
+    ("dataset_split", q_dataset_split, None, oracles.q_dataset_split()),
+    ("pack_sequences", q_pack_sequences, None, oracles.q_pack_sequences(seq_len=256)),
+    ("decontaminate", q_decontaminate, None, oracles.q_decontaminate(n=2)),
+    ("quality_sample", q_quality_sample, None, """
+WITH q AS ({q})
+SELECT doc_id, quality_score,
+       round(0.1 + 0.9 * quality_score, 6) AS keep_prob,
+       ({h} % 1000000)
+         < floor(round(0.1 + 0.9 * quality_score, 6) * 1e6)::BIGINT AS kept
+FROM q""".format(q=_ORACLE_QUALITY,
+             h=oracles.hash60_expr("doc_id::VARCHAR || '#sample'"))),
+    ("chunk_markdown", q_chunk_markdown, None, oracles.q_chunk_markdown(chunk_size=400)),
+    ("chunk_semantic", q_chunk_semantic, None, oracles.q_chunk_semantic(chunk_size=300)),
+    ("chunk_hierarchical", q_chunk_hierarchical, None,
+     oracles.q_chunk_hierarchical(chunk_size=400)),
+    ("chunk_hybrid", q_chunk_hybrid, None, oracles.q_chunk_hybrid(chunk_size=300, overlap=60)),
+    ("chunk_recursive", q_chunk_recursive, None, oracles.q_chunk_recursive(chunk_size=200)),
+    ("predicate_route", q_predicate_route, None, """
+SELECT doc_id, lang, source, n_chars FROM documents
+WHERE lang IN ('en', 'de') AND n_chars > 300 AND regexp_matches(source, '^src1.*$')"""),
+    ("incremental_changed", q_incremental_changed, None, """
+WITH old AS (
+  SELECT doc_id, sha256(text) AS old_hash FROM documents WHERE doc_id % 7 <> 0
+), new_enum AS (
+  SELECT doc_id,
+         sha256(CASE WHEN doc_id % 5 = 0 THEN text || ' updated' ELSE text END) AS new_hash
+  FROM documents
+)
+SELECT n.doc_id,
+       CASE WHEN o.old_hash IS NULL THEN 'new' ELSE 'modified' END AS change_type
+FROM new_enum n LEFT JOIN old o USING (doc_id)
+WHERE o.old_hash IS NULL OR n.new_hash <> o.old_hash"""),
+    ("collection_counters", q_collection_counters, None, """
+SELECT source, count(*)::BIGINT AS document_count,
+       sum(n_chars)::BIGINT AS total_size_bytes
+FROM documents GROUP BY source"""),
+    ("gc_orphans", q_gc_orphans, "count", f"""
+WITH {oracles.fixed_chunk_ctes().lstrip()}
+SELECT chunk_id, doc_id::BIGINT AS doc_id FROM fchunks
+WHERE doc_id::BIGINT % 10 = 0"""),
+    ("stale_marking", q_stale_marking, None, """
+SELECT d.doc_id, d.source, (d.doc_id % 7 = 0) AS is_stale FROM documents d"""),
+    ("run_status_counts", q_run_status_counts, None, """
+WITH r AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 10 = 0 THEN 'failed'
+              WHEN doc_id % 10 = 1 THEN 'skipped'
+              ELSE 'succeeded' END AS status
+  FROM documents
+)
+SELECT count(*)::BIGINT AS files_processed,
+       sum(CASE WHEN status = 'succeeded' THEN 1 ELSE 0 END)::BIGINT AS files_succeeded,
+       sum(CASE WHEN status = 'failed' THEN 1 ELSE 0 END)::BIGINT AS files_failed,
+       sum(CASE WHEN status = 'skipped' THEN 1 ELSE 0 END)::BIGINT AS files_skipped
+FROM r"""),
+    ("run_dead_letter", q_run_dead_letter, None, """
+WITH r AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 10 = 0 THEN 'failed'
+              WHEN doc_id % 10 = 1 THEN 'skipped'
+              ELSE 'succeeded' END AS status,
+         CASE WHEN doc_id % 20 = 0 THEN 'connection timeout to vecpipe'
+              ELSE 'parse error: bad header' END AS error_message,
+         (doc_id % 4)::INT AS retry_count
+  FROM documents
+), dead AS (
+  SELECT doc_id, status, error_message, retry_count,
+         CASE WHEN lower(error_message) LIKE '%timeout%'
+                OR lower(error_message) LIKE '%connection%'
+                OR lower(error_message) LIKE '%throttled%'
+                OR lower(error_message) LIKE '%oom%'
+              THEN 'transient' ELSE 'permanent' END AS error_category
+  FROM r WHERE status = 'failed'
+)
+SELECT doc_id, status, error_message, retry_count, error_category,
+       error_category = 'transient' AS retryable,
+       (error_category = 'transient' AND retry_count < 3) AS will_retry
+FROM dead"""),
+    ("projection_labels", q_projection_labels, None, """
+SELECT doc_id, coalesce(source, 'unknown') AS category_source,
+       CASE WHEN n_chars < 200 THEN 'small'
+            WHEN n_chars < 1000 THEN 'medium'
+            ELSE 'large' END AS category_size
+FROM documents"""),
+    ("benchmark_matrix", q_benchmark_matrix, None, f"""
+SELECT m.model, m.quantization, m.k AS run_k, a.metric,
+       round(a.value, 6) AS value
+FROM (SELECT model, quantization, k
+      FROM (VALUES ('modelA'), ('modelB')) m(model)
+      CROSS JOIN (VALUES ('float32'), ('float16'), ('int8')) q(quantization)
+      CROSS JOIN (VALUES (5), (10)) kk(k)) m
+JOIN ({oracles.q_ir_metrics_agg((5, 10), 10)}) a
+  ON a.k IS NULL OR a.k = m.k"""),
+    ("benchmark_mapping", q_benchmark_mapping, None, _ORACLE_BENCHMARK_MAPPING),
+    ("embedding_quantize", q_embedding_quantize, None, _ORACLE_EMBEDDING_QUANTIZE),
+    ("bm25_corpus_stats", q_bm25_corpus_stats, None, oracles.q_bm25_corpus_stats()),
+    ("bm25_term_stats", q_bm25_term_stats, None, oracles.q_bm25_term_stats()),
+    ("extract_keywords", q_keywords, None, oracles.q_keywords(top_k=5)),
+    ("extract_entities", q_entities, None, oracles.q_entities()),
+    ("knn_pq", q_knn_pq, "noop", oracles.q_knn_pq(5, 64, 8, 16, 20)),
+    ("pca_projection", q_pca_projection, "count", oracles.q_pca_spectrum()),
+    ("knn_bruteforce", q_knn_bruteforce, "noop", oracles.q_knn_bruteforce(5)),
+    ("knn_lsh", q_knn_lsh, "noop", oracles.q_knn_lsh(5, 64, 8)),
+    ("knn_ivf", q_knn_ivf, "noop", oracles.q_knn_ivf(5, 16, 4)),
+    ("knn_quantized", q_knn_quantized, "noop", oracles.q_knn_quantized(5, 20)),
+    ("quantile_sketch", q_quantile_sketch, "count",
+     oracles.q_quantile_sketch(0.02, (0.25, 0.5, 0.9, 0.99))),
+    ("url_domain_stats", q_url_domain_stats, "count", _ORACLE_URL_DOMAIN_STATS),
+    ("customer_order_distribution", q_customer_order_distribution, "count", """
+SELECT c_count, count(*)::BIGINT AS custdist FROM (
+  SELECT c.c_custkey, count(o.o_orderkey)::BIGINT AS c_count
+  FROM customer c LEFT JOIN orders o
+    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
+  GROUP BY c.c_custkey) t
+GROUP BY c_count"""),
+    ("top_supplier", q_top_supplier, "count", """
+WITH rev AS (
+  SELECT l_suppkey,
+         sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4)) AS r
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+    AND l_shipdate < TIMESTAMP '1998-04-01 00:00:00'
+  GROUP BY l_suppkey)
+SELECT s_suppkey, s_name, r::DOUBLE AS total_revenue
+FROM rev JOIN supplier ON s_suppkey = l_suppkey
+WHERE r = (SELECT max(r) FROM rev)"""),
+    ("idle_customer_balance", q_idle_customer_balance, "count", """
+WITH pos AS (
+  SELECT sum(c_acctbal::DECIMAL(18,2)) AS s, count(*)::BIGINT AS n
+  FROM customer WHERE c_acctbal > 0)
+SELECT n_name, count(*)::BIGINT AS n_customers,
+       sum(c_acctbal::DECIMAL(18,2))::DOUBLE AS total_bal
+FROM customer CROSS JOIN pos
+JOIN nation ON c_nationkey = n_nationkey
+WHERE c_acctbal::DECIMAL(18,2) * n > s
+  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
+                  AND o_orderdate >= TIMESTAMP '2000-07-01 00:00:00')
+GROUP BY n_name"""),
+    ("bloom_prune", q_bloom_prune, "count", """
+WITH skeys AS (
+  SELECT DISTINCT c_custkey AS sk FROM customer WHERE c_nationkey = 3
+), bitsrc AS (
+  SELECT DISTINCT
+    ('0x'||substr(md5(sk::VARCHAR || '#' || i::VARCHAR),1,15))::BIGINT % 1024 AS setbit
+  FROM skeys, range(3) t(i)
+), pkeys AS (
+  SELECT DISTINCT o_custkey AS pk FROM orders
+), probe AS (
+  SELECT pk,
+    ('0x'||substr(md5(pk::VARCHAR || '#' || i::VARCHAR),1,15))::BIGINT % 1024 AS bitpos
+  FROM pkeys, range(3) t(i)
+), hits AS (
+  SELECT pk, min(CASE WHEN b.setbit IS NOT NULL THEN 1 ELSE 0 END) AS passes
+  FROM probe LEFT JOIN bitsrc b ON probe.bitpos = b.setbit GROUP BY pk
+), truth AS (
+  SELECT pk, CASE WHEN sk IS NOT NULL THEN 1 ELSE 0 END AS is_true
+  FROM pkeys LEFT JOIN skeys ON pk = sk
+)
+SELECT (SELECT count(*) FROM skeys)::BIGINT AS n_small_keys,
+       (SELECT count(*) FROM bitsrc)::BIGINT AS n_bits_set,
+       count(*)::BIGINT AS n_probe_keys,
+       sum(passes)::BIGINT AS n_pass,
+       sum(is_true)::BIGINT AS n_true,
+       sum(CASE WHEN passes = 1 AND is_true = 0 THEN 1 ELSE 0 END)::BIGINT AS n_false_pos,
+       round(sum(CASE WHEN passes = 1 AND is_true = 0 THEN 1 ELSE 0 END)::DOUBLE
+             / greatest(count(*) - sum(is_true), 1), 6) AS fp_rate
+FROM hits JOIN truth USING (pk)"""),
+    ("winsorized_stats", q_winsorized_stats, "count", f"""
+WITH cuts AS ({oracles.q_quantile_sketch(0.02, (0.05, 0.95))}),
+cw AS (
+  SELECT event_type, min(estimate) AS lo, max(estimate) AS hi
+  FROM cuts GROUP BY event_type
+)
+SELECT e.event_type, count(*)::BIGINT AS n,
+       sum(CASE WHEN value < lo THEN 1 ELSE 0 END)::BIGINT AS n_lo,
+       sum(CASE WHEN value > hi THEN 1 ELSE 0 END)::BIGINT AS n_hi,
+       round(sum((CASE WHEN lo IS NOT NULL
+                       THEN least(greatest(value, lo), hi)
+                       ELSE value END)::DECIMAL(28,8))::DOUBLE
+             / count(*), 6) AS winsorized_mean,
+       round(sum(value::DECIMAL(28,8))::DOUBLE / count(*), 6) AS raw_mean
+FROM events e LEFT JOIN cw USING (event_type)
+GROUP BY e.event_type"""),
+    ("nation_trade_volume", q_nation_trade_volume, "count", """
+SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+       year(l_shipdate)::INT AS l_year,
+       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS revenue,
+       count(*)::BIGINT AS n_items
+FROM lineitem
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation n1 ON s_nationkey = n1.n_nationkey
+JOIN nation n2 ON c_nationkey = n2.n_nationkey
+WHERE n1.n_name <> n2.n_name
+GROUP BY n1.n_name, n2.n_name, year(l_shipdate)"""),
+    # the oracle keeps the CORRELATED subquery form on purpose —
+    # DuckDB's decorrelator is the independent cross-check of the
+    # hand-decorrelated Spark plan
+    ("min_cost_supplier", q_min_cost_supplier, "count", """
+SELECT p_partkey, s_suppkey, s_name, l_extendedprice::DOUBLE AS min_price
+FROM part, lineitem, supplier
+WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey AND p_size <= 3
+  AND l_extendedprice = (SELECT min(l2.l_extendedprice) FROM lineitem l2
+                         WHERE l2.l_partkey = p_partkey)"""),
+    ("excess_qty_supplier", q_excess_qty_supplier, "count", """
+SELECT s_suppkey, s_name FROM supplier
+WHERE EXISTS (
+  SELECT 1 FROM lineitem l1
+  WHERE l1.l_suppkey = s_suppkey
+  GROUP BY l1.l_partkey
+  HAVING sum(l1.l_quantity::DECIMAL(18,2)) * 20 >
+         (SELECT sum(l2.l_quantity::DECIMAL(18,2)) FROM lineitem l2
+          WHERE l2.l_partkey = l1.l_partkey) * 3
+)"""),
+    # the streaming MG state + exact recount provably equals the
+    # plain batch GROUP BY/HAVING for any micro-batch split — the
+    # oracle IS that batch recompute (m=80)
+    ("streaming_heavy_hitters", q_streaming_heavy_hitters, "count", """
+WITH tok AS (
+  SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                            t -> length(t) > 0)) AS k
+  FROM documents
+), tot AS (SELECT count(*)::BIGINT AS n FROM tok)
+SELECT k AS token, count(*)::BIGINT AS n,
+       round(count(*)::DOUBLE / min(tot.n), 6) AS frac
+FROM tok CROSS JOIN tot
+GROUP BY k HAVING count(*) * 80 > min(tot.n)"""),
+    # the config-driven pipeline is chunk_fixed 200/50 + the mock
+    # embedding over chunk content — both replayed in SQL
+    ("pipeline_config", q_pipeline_config, "count", f"""
+WITH chunks AS ({_ORACLE_CHUNK_FIXED})
+SELECT doc_id, chunk_id, chunk_index, token_count,
+       round({mock_embedding_sql("content")}[1], 6) AS emb0
+FROM chunks"""),
+    # brute-force all-pairs — the completeness check of the
+    # deletion-neighborhood blocking
+    ("edit_distance_pairs", q_edit_distance_pairs, "count", """
+WITH n AS (
+  SELECT DISTINCT p_name AS s FROM part
+  UNION
+  SELECT DISTINCT s_name FROM supplier
+)
+SELECT a.s AS name_a, b.s AS name_b, levenshtein(a.s, b.s)::INT AS dist
+FROM n a JOIN n b ON a.s < b.s AND levenshtein(a.s, b.s) <= 1"""),
+    ("bpe_encode_words", q_bpe_encode_words, "count", oracles.q_bpe_encode_words(8, 30)),
+    ("sole_fault_supplier", q_sole_fault_supplier, "count", """
+WITH fault AS (
+  SELECT DISTINCT l_orderkey, l_suppkey
+  FROM lineitem l JOIN orders o
+    ON o.o_orderkey = l.l_orderkey AND o.o_orderstatus = 'F'
+  WHERE l.l_returnflag = 'R'
+),
+alll AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
+sole AS (
+  SELECT f.l_orderkey, f.l_suppkey FROM fault f
+  WHERE EXISTS (SELECT 1 FROM alll a
+                WHERE a.l_orderkey = f.l_orderkey
+                  AND a.l_suppkey <> f.l_suppkey)
+    AND NOT EXISTS (SELECT 1 FROM fault f2
+                    WHERE f2.l_orderkey = f.l_orderkey
+                      AND f2.l_suppkey <> f.l_suppkey)
+)
+SELECT s_name, count(*)::BIGINT AS numwait
+FROM sole JOIN supplier ON s_suppkey = l_suppkey
+GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20"""),
+    ("nation_year_profit", q_nation_year_profit, "count", """
+SELECT n_name AS nation, CAST(year(l_shipdate) AS INT) AS o_year,
+       sum((l_extendedprice::DECIMAL(18,2)
+            * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS sum_profit,
+       count(*)::BIGINT AS n_lines
+FROM lineitem
+JOIN supplier ON s_suppkey = l_suppkey
+JOIN nation ON n_nationkey = s_nationkey
+WHERE EXISTS (SELECT 1 FROM part
+              WHERE p_partkey = l_partkey AND p_name LIKE '%widget%')
+GROUP BY 1, 2"""),
+    ("gopher_quality", q_gopher_quality, "count", oracles.q_gopher_rules(50, 100000)),
+    ("knn_ivfpq", q_knn_ivfpq, "noop", oracles.q_knn_ivfpq(5, 64, 16, 4, 8, 16, 20, 1)),
+    ("dsir_weights", q_dsir_weights, "noop", oracles.q_dsir_weights(64, "lang = 'en'")),
+    ("streaming_count_min", q_streaming_count_min, "count",
+     oracles.q_count_min(4, 256, 30, full_report=False)),
+    ("semdedup", q_semdedup, "noop", oracles.q_semdedup(0.95, 16, 1)),
+    ("logreg_scores", q_logreg_scores, "count",
+     oracles.q_logreg_scores(64, 3, 0.05, "n_chars > 311")),
+    ("streaming_lsh_dedup", q_streaming_lsh_dedup, "count",
+     oracles.q_lsh_signature_matches(16, 4, 3, 0.5)),
+    ("market_share", q_market_share, "count", """
+WITH asia_cust AS (
+  SELECT c_custkey FROM customer c
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+  JOIN region r ON n.n_regionkey = r.r_regionkey
+  WHERE r.r_name = 'ASIA'),
+sn AS (
+  SELECT s_suppkey, n_name AS supp_nation
+  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey),
+j AS (
+  SELECT year(o.o_orderdate)::INT AS o_year,
+         (l.l_extendedprice::DECIMAL(18,2)
+          * (1::DECIMAL(8,2) - l.l_discount::DECIMAL(8,2)))::DECIMAL(30,4) AS rev,
+         sn.supp_nation
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN sn ON l.l_suppkey = sn.s_suppkey
+  WHERE o.o_custkey IN (SELECT c_custkey FROM asia_cust)),
+agg AS (
+  SELECT o_year,
+         sum(CASE WHEN supp_nation = 'NATION_3' THEN rev
+                  ELSE 0::DECIMAL(30,4) END) AS nat_rev,
+         sum(rev) AS all_rev
+  FROM j GROUP BY o_year)
+SELECT o_year, round(nat_rev::DOUBLE / all_rev::DOUBLE, 6) AS mkt_share,
+       all_rev::DOUBLE AS total_revenue
+FROM agg"""),
+    ("top_revenue_parts", q_top_revenue_parts, "count", """
+WITH pp AS (
+  SELECT l_partkey AS p_partkey,
+         sum((l_extendedprice::DECIMAL(18,2)
+              * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4)) AS part_rev
+  FROM lineitem GROUP BY l_partkey),
+t AS (SELECT sum(part_rev) AS total_rev, count(*)::BIGINT AS n_parts FROM pp)
+SELECT p_partkey, part_rev::DOUBLE AS revenue,
+       round(part_rev::DOUBLE * n_parts / total_rev::DOUBLE, 6) AS vs_mean
+FROM pp, t WHERE part_rev * n_parts * 4 > total_rev * 5"""),
+    ("corpus_overlap", q_corpus_overlap, "noop", oracles.q_corpus_overlap(64, 3)),
+    ("corpus_drift_psi", q_corpus_drift_psi, "count", oracles.q_corpus_drift_psi(32)),
+    ("late_data_audit", q_late_data_audit, "count", """
+WITH ev AS (
+  SELECT (event_id // 1000)::BIGINT AS batch, epoch_us(ts::TIMESTAMP)::BIGINT AS ts_us
+  FROM events
+),
+pb AS (SELECT batch, max(ts_us) AS bmax FROM ev GROUP BY batch),
+fr AS (
+  SELECT batch,
+         max(bmax) OVER (ORDER BY batch
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+           AS frontier_us
+  FROM pb
+)
+SELECT (ts_us // 300000000) * 300000000 AS bucket_us,
+       count(*)::BIGINT AS n_events,
+       sum(CASE WHEN ts_us < frontier_us - 60000000 THEN 1 ELSE 0 END)::BIGINT AS n_late_60s,
+       sum(CASE WHEN ts_us < frontier_us - 300000000 THEN 1 ELSE 0 END)::BIGINT AS n_late_300s,
+       round(max(greatest(coalesce(frontier_us - ts_us, -1), 0))::DOUBLE / 1e6, 6) AS max_lateness_s
+FROM ev JOIN fr USING (batch)
+GROUP BY bucket_us"""),
+    ("leakage_safe_split", q_leakage_safe_split, "count",
+     oracles.q_leakage_safe_split(2, 10, 16, 4, 3, 0.5)),
+    ("bm25_postings", q_bm25_postings, "count", oracles.q_bm25_postings()),
+    ("bm25_search", q_bm25_search, "count", oracles.q_bm25_search(10)),
+    ("hybrid_rrf", q_hybrid_rrf, "count", oracles.q_hybrid_rrf(10, 20)),
+    ("ir_metrics", q_ir_metrics, "count", oracles.q_ir_metrics((5, 10), 10)),
+    ("ir_metrics_agg", q_ir_metrics_agg, None, oracles.q_ir_metrics_agg((5, 10), 10)),
+    ("hyde_hybrid", q_hyde_hybrid, None, oracles.q_hyde_hybrid(k=10, search_k=20)),
+    ("splade_search", q_splade_search, None, oracles.q_splade_search(k=10)),
+    ("dense_mock_search", q_dense_mock_search, "count", oracles.q_dense_mock_search(10)),
+    ("sparse_vectors", q_sparse_vectors, None, _ORACLE_SPARSE_VECTORS),
+    ("dedup_minhash_lsh", q_dedup_minhash_lsh, "count", oracles.q_minhash_lsh(16, 4, 3, 0.5)),
+    ("dedup_clusters", q_dedup_clusters, None, oracles.q_dedup_clusters(16, 4, 3, 0.5)),
+    ("dedup_exact", q_dedup_exact, None, oracles.q_dedup_exact()),
+    ("dedup_ngram_jaccard", q_dedup_ngram_jaccard, None, oracles.q_ngram_jaccard(3, 0.5)),
+    ("dedup_simhash_pairs", q_dedup_simhash_pairs, None, oracles.q_simhash_pairs(max_hamming=3)),
+    ("text_readability", q_text_readability, "count", oracles.Q_TEXT_READABILITY),
+    ("source_mix", q_source_mix, "count", oracles.Q_SOURCE_MIX),
+    ("events_rolling", q_events_rolling, "count", """
+SELECT event_id, user_id,
+       round(avg(value) OVER w, 6) AS roll_avg,
+       round(min(value) OVER w, 6) AS roll_min,
+       round(max(value) OVER w, 6) AS roll_max,
+       (count(*) OVER w)::INT AS roll_n
+FROM events
+WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)"""),
+    ("value_correlation", q_value_correlation, "count", """
+WITH agg AS (
+  SELECT l_returnflag, count(*)::BIGINT AS n,
+         sum(l_quantity::DECIMAL(18,2))::DOUBLE AS sx,
+         sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sy,
+         sum(l_quantity::DECIMAL(18,2) * l_quantity::DECIMAL(18,2))::DOUBLE AS sxx,
+         sum(l_extendedprice::DECIMAL(18,2) * l_extendedprice::DECIMAL(18,2))::DOUBLE AS syy,
+         sum(l_quantity::DECIMAL(18,2) * l_extendedprice::DECIMAL(18,2))::DOUBLE AS sxy,
+         sum(l_discount::DECIMAL(8,2))::DOUBLE AS sd,
+         sum(l_discount::DECIMAL(8,2) * l_discount::DECIMAL(8,2))::DOUBLE AS sdd
+  FROM lineitem GROUP BY l_returnflag)
+SELECT l_returnflag, n,
+       round(((sxy - sx * sy / n) / (n - 1))
+             / sqrt(((sxx - sx * sx / n) / (n - 1)) * ((syy - sy * sy / n) / (n - 1))), 6) AS corr_qty_price,
+       round((sxy - sx * sy / n) / (n - 1), 6) AS covar_qty_price,
+       round(sqrt((sdd - sd * sd / n) / (n - 1)), 6) AS stddev_disc
+FROM agg"""),
+    ("lm_bigram", q_lm_bigram, "count", """
+WITH tk AS (
+  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                             x -> length(x) > 0) AS toks
+  FROM documents),
+dbg AS (
+  SELECT doc_id, toks[r.i] AS wa, toks[r.i] || ' ' || toks[r.i + 1] AS gram
+  FROM tk, LATERAL unnest(range(1, len(toks))) AS r(i)
+  WHERE len(toks) >= 2),
+bgc AS (SELECT gram, any_value(wa) AS wa, count(*)::BIGINT AS c12 FROM dbg GROUP BY gram),
+uni AS (SELECT w, count(*)::BIGINT AS c1
+        FROM (SELECT unnest(toks) AS w FROM tk) s GROUP BY w),
+v AS (SELECT count(*)::BIGINT AS vsz FROM uni),
+model AS (
+  SELECT gram, round(ln((c12 + 0.5) / (c1 + 0.5 * vsz)), 9)::DECIMAL(20,9) AS lp
+  FROM bgc JOIN uni ON bgc.wa = uni.w, v),
+agg AS (
+  SELECT doc_id, count(*)::INT AS n_bigrams, sum(lp)::DECIMAL(28,9) AS slp
+  FROM dbg JOIN model USING (gram) GROUP BY doc_id)
+SELECT doc_id, n_bigrams,
+       round(slp::DOUBLE / n_bigrams, 6) AS avg_logprob,
+       round(exp(-(slp::DOUBLE / n_bigrams)), 6) AS ppl
+FROM agg"""),
+    ("events_transitions", q_events_transitions, "count", """
+WITH seq AS (
+  SELECT user_id, event_type,
+         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event
+  FROM events),
+pairs AS (
+  SELECT prev_event, event_type AS next_event, count(*)::BIGINT AS n
+  FROM seq WHERE prev_event IS NOT NULL
+  GROUP BY prev_event, event_type)
+SELECT prev_event, next_event, n,
+       round(n / (sum(n) OVER (PARTITION BY prev_event)), 6) AS p_next
+FROM pairs"""),
+    ("text_boilerplate", q_text_boilerplate, "count", """
+WITH sents AS (
+  SELECT doc_id, source AS src, lower(trim(s)) AS s
+  FROM (SELECT doc_id, source, unnest(regexp_split_to_array(text, '[.!?] ')) AS s
+        FROM documents)
+  WHERE lower(trim(s)) != ''),
+hs AS (SELECT doc_id, src, (('0x'||substr(md5(cast(lower(trim(s)) as varchar)),1,15))::bigint) AS h
+       FROM (SELECT doc_id, src, s FROM sents) t),
+sizes AS (SELECT source AS src, count(DISTINCT doc_id) AS n_src_docs FROM documents GROUP BY source),
+bp AS (
+  SELECT src, h FROM (
+    SELECT hs.src, hs.h, count(DISTINCT hs.doc_id) AS n_with, any_value(sizes.n_src_docs) AS n_src_docs
+    FROM hs JOIN sizes USING (src) GROUP BY hs.src, hs.h)
+  WHERE n_with >= 2 AND n_with / n_src_docs >= 0.3)
+SELECT doc_id, count(*)::INT AS n_sentences,
+       sum(CASE WHEN bp.h IS NOT NULL THEN 1 ELSE 0 END)::INT AS n_boilerplate,
+       round(sum(CASE WHEN bp.h IS NOT NULL THEN 1 ELSE 0 END) / count(*), 6) AS bp_frac
+FROM hs LEFT JOIN bp ON hs.src = bp.src AND hs.h = bp.h
+GROUP BY doc_id"""),
+    ("funnel_latency", q_funnel_latency, "count", """
+WITH e AS (
+  SELECT user_id AS u, event_type AS et, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
+),
+r0 AS (SELECT u, min(us) AS t FROM e WHERE et = 'view' GROUP BY u),
+r1 AS (SELECT e.u, min(e.us) AS t FROM e JOIN r0 USING (u)
+       WHERE e.et = 'click' AND e.us > r0.t GROUP BY e.u),
+r2 AS (SELECT e.u, min(e.us) AS t FROM e JOIN r1 USING (u)
+       WHERE e.et = 'purchase' AND e.us > r1.t GROUP BY e.u),
+lat AS (SELECT (r2.t - r0.t) / 1000000.0 AS s FROM r2 JOIN r0 USING (u))
+SELECT count(*)::BIGINT AS n_converted,
+       round(quantile_cont(s, 0.5), 6) AS p50_s,
+       round(quantile_cont(s, 0.9), 6) AS p90_s,
+       round(max(s), 6) AS max_s
+FROM lat"""),
+    ("source_mix_temp", q_source_mix_temp, "count", """
+WITH per AS (SELECT source, count(*)::BIGINT AS n_docs FROM documents GROUP BY source),
+wtd AS (SELECT source, n_docs, pow(n_docs::DOUBLE, 0.5) AS w FROM per),
+tot AS (SELECT sum(w) AS w_total FROM wtd),
+sh AS (SELECT source, n_docs, w / w_total AS target_share FROM wtd, tot),
+sc AS (SELECT min(n_docs / target_share) AS scale FROM sh)
+SELECT source, n_docs,
+       round(target_share, 6) AS target_share,
+       floor(scale * target_share)::BIGINT AS planned_n,
+       round(floor(scale * target_share) / n_docs, 6) AS sample_rate
+FROM sh, sc"""),
+    ("session_paths", q_session_paths, "count", """
+WITH e AS (
+  SELECT user_id, event_id, event_type, epoch_us(ts::TIMESTAMP)::BIGINT AS us FROM events
+), flagged AS (
+  SELECT user_id, event_id, event_type, us,
+         CASE WHEN us - lag(us) OVER w > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_s
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+), sess AS (
+  SELECT user_id, event_id, event_type, us,
+         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS sid
+  FROM flagged
+), capped AS (
+  SELECT * FROM (
+    SELECT user_id, sid, event_type, us, event_id,
+           row_number() OVER (PARTITION BY user_id, sid ORDER BY us, event_id) AS rn
+    FROM sess) WHERE rn <= 8
+), p AS (
+  SELECT user_id, sid, string_agg(event_type, '>' ORDER BY rn) AS path
+  FROM capped GROUP BY user_id, sid
+)
+SELECT path, count(*)::BIGINT AS n_sessions
+FROM p GROUP BY path
+ORDER BY n_sessions DESC, path ASC LIMIT 20"""),
+    ("doc_outliers", q_doc_outliers, "count", oracles.q_doc_outliers(16, 1, -1.0)),
+    ("hybrid_weighted", q_hybrid_weighted, "count", oracles.q_hybrid_weighted(10, 20, 0.5)),
+    ("profile_table", q_profile_table, "count", oracles.q_profile_table()),
+    ("state_islands", q_state_islands, "count", oracles.q_state_islands()),
+    ("zipf_fit", q_zipf_fit, "count", oracles.q_zipf_fit(1000)),
+    ("length_bins", q_length_bins, "count", oracles.q_length_bins(16)),
+    ("hard_negatives", q_hard_negatives, "count", oracles.q_hard_negatives(50, 5, 3)),
+    ("knn_pagerank", q_knn_pagerank, "count", oracles.q_knn_pagerank(5, 0.85, 5)),
+    ("event_assoc", q_event_assoc, "count", oracles.q_event_assoc(30, 5, 20)),
+    ("events_ewma", q_events_ewma, "count", oracles.q_events_ewma(0.3, 8)),
+    ("knn_triangles", q_knn_triangles, "count", oracles.q_knn_triangles(5, 20)),
+    ("kmv_set_ops", q_kmv_set_ops, "count", oracles.q_kmv_set_ops(64)),
+    ("local_supplier_revenue", q_local_supplier_revenue, "count", """
+SELECT r.r_name AS region_name, n.n_name AS nation_name,
+       (sum((l.l_extendedprice::DECIMAL(18,2)
+             * (1::DECIMAL(8,2) - l.l_discount::DECIMAL(8,2)))::DECIMAL(30,4)))::DOUBLE AS revenue,
+       count(*)::BIGINT AS n_items
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
+JOIN nation n ON s.s_nationkey = n.n_nationkey
+JOIN region r ON n.n_regionkey = r.r_regionkey
+GROUP BY 1, 2"""),
+    ("priority_grouping_sets", q_priority_grouping_sets, "count", """
+WITH j AS (
+  SELECT o.o_orderpriority, n.n_name, o.o_totalprice
+  FROM orders o
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+)
+SELECT coalesce(o_orderpriority, 'ALL') AS priority,
+       coalesce(n_name, 'ALL') AS nation,
+       (grouping(o_orderpriority) * 2 + grouping(n_name))::INT AS gid,
+       count(*)::BIGINT AS n_orders,
+       round((sum(o_totalprice::DECIMAL(18,2)))::DOUBLE, 2) AS total_value
+FROM j
+GROUP BY GROUPING SETS ((o_orderpriority, n_name), (o_orderpriority), (n_name), ())"""),
+    ("events_twap", q_events_twap, "count", """
+WITH g AS (
+  SELECT event_type, value,
+         CASE WHEN lead(epoch_us(ts::TIMESTAMP)::BIGINT) OVER w IS NULL THEN NULL
+              ELSE least(lead(epoch_us(ts::TIMESTAMP)::BIGINT) OVER w
+                           - epoch_us(ts::TIMESTAMP)::BIGINT,
+                         600000000) END AS w_us
+  FROM events WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
+)
+SELECT event_type, count(*)::BIGINT AS n_intervals,
+       round((sum(value::DECIMAL(18,6) * w_us))::DOUBLE / (sum(w_us))::DOUBLE, 6) AS twap,
+       round(avg(value), 6) AS plain_avg
+FROM g WHERE w_us IS NOT NULL GROUP BY event_type"""),
+    ("fuzzy_pairs", q_fuzzy_pairs, "count", oracles.q_fuzzy_pairs(12, 40, 5)),
+    ("purchase_attribution", q_purchase_attribution, "count", """
+WITH e AS (
+  SELECT user_id, event_id, event_type, epoch_us(ts::TIMESTAMP)::BIGINT AS us
+  FROM events
+), flagged AS (
+  SELECT *, CASE WHEN us - lag(us) OVER w > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_s
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+), sess AS (
+  SELECT user_id, event_id, event_type, us,
+         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                          ROWS UNBOUNDED PRECEDING)::BIGINT AS sid
+  FROM flagged
+), lt AS (
+  SELECT event_type,
+         last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
+           OVER (PARTITION BY user_id, sid ORDER BY us, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_t
+  FROM sess
+), p AS (SELECT coalesce(prev_t, 'direct') AS touch FROM lt WHERE event_type = 'purchase')
+SELECT touch, count(*)::BIGINT AS n_purchases,
+       round(count(*)::DOUBLE / (SELECT count(*) FROM p), 6) AS share
+FROM p GROUP BY touch"""),
+    ("weighted_sample", q_weighted_sample, "count", oracles.q_weighted_sample(50)),
+    ("events_pivot", q_events_pivot, "count", """
+SELECT user_id,
+       count(*) FILTER (WHERE event_type = 'click')::BIGINT AS n_click,
+       count(*) FILTER (WHERE event_type = 'error')::BIGINT AS n_error,
+       count(*) FILTER (WHERE event_type = 'purchase')::BIGINT AS n_purchase,
+       count(*) FILTER (WHERE event_type = 'signup')::BIGINT AS n_signup,
+       count(*) FILTER (WHERE event_type = 'view')::BIGINT AS n_view,
+       count(*) FILTER (WHERE event_type IS NULL OR event_type NOT IN
+         ('click','error','purchase','signup','view'))::BIGINT AS n_other,
+       count(*)::BIGINT AS n_total
+FROM events GROUP BY user_id"""),
+    ("events_dedup_first", q_events_dedup_first, "count", """
+WITH b AS (
+  SELECT event_type, user_id, event_id, ts,
+         (epoch_us(ts::TIMESTAMP)::BIGINT // 300000000) AS bucket
+  FROM events
+), r AS (
+  SELECT event_type,
+         row_number() OVER (PARTITION BY user_id, event_type, bucket
+                            ORDER BY ts, event_id) AS rn
+  FROM b
+)
+SELECT event_type, count(*)::BIGINT AS n_events,
+       sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END)::BIGINT AS n_kept,
+       round(1.0 - sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) / count(*), 6) AS dup_frac
+FROM r GROUP BY event_type"""),
+    ("ivm_counters", q_ivm_counters, "count", """
+SELECT event_type, (ts::TIMESTAMP::DATE)::VARCHAR AS day,
+       count(*)::BIGINT AS n,
+       round((sum(value::DECIMAL(28,8)))::DOUBLE, 6) AS sum_value
+FROM events GROUP BY 1, 2"""),
+    ("multimodal_features", q_multimodal_features, "count", """
+SELECT doc_id::VARCHAR AS media_id,
+       CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp'
+            WHEN 2 THEN 'gif' ELSE 'jpeg' END AS format,
+       (16 + (doc_id * 7) % 48)::INT AS width,
+       (16 + (doc_id * 13) % 48)::INT AS height,
+       (CASE doc_id % 4
+          WHEN 2 THEN 3
+          WHEN 3 THEN 1 + 2 * (doc_id % 2)
+          ELSE CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END
+        END)::INT AS n_channels
+FROM documents"""),
+    ("multimodal_frames", q_multimodal_frames, None, """
+WITH h AS (
+  SELECT doc_id::VARCHAR AS media_id,
+         1 + (('0x' || substr(sha256(text), 1, 2))::INT % 8) AS n
+  FROM documents
+)
+SELECT media_id, f::INT AS frame_index, (f * 1000)::BIGINT AS ts_ms
+FROM (SELECT media_id, unnest(generate_series(0, n - 1)) AS f FROM h)"""),
+    ("splade_vocab", q_splade_vocab, "count", oracles.q_splade_vocab()),
+    ("shipping_priority", q_shipping_priority, "count", """
+SELECT l_orderkey, o_orderdate::VARCHAR AS order_date,
+       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS revenue
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1998-07-01 00:00:00'
+  AND l_shipdate > TIMESTAMP '1998-07-01 00:00:00'
+GROUP BY l_orderkey, o_orderdate
+ORDER BY revenue DESC, l_orderkey ASC LIMIT 10"""),
+    ("returned_items", q_returned_items, "count", """
+SELECT c_custkey, c_name, n_name,
+       sum((l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4))::DOUBLE AS revenue,
+       count(*)::BIGINT AS n_items
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+WHERE l_returnflag = 'R'
+GROUP BY c_custkey, c_name, n_name
+ORDER BY revenue DESC, c_custkey ASC LIMIT 20"""),
+    ("late_shipment_priority", q_late_shipment_priority, "count", """
+SELECT o_orderpriority,
+       sum(CASE WHEN late THEN 1 ELSE 0 END)::BIGINT AS n_late,
+       sum(CASE WHEN late THEN 0 ELSE 1 END)::BIGINT AS n_ontime,
+       round(sum(CASE WHEN late THEN 1 ELSE 0 END) * 1.0 / count(*), 6) AS late_frac
+FROM (SELECT o_orderpriority,
+             date_diff('day', o_orderdate, l_shipdate) > 90 AS late
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
+GROUP BY o_orderpriority"""),
+    ("promo_revenue", q_promo_revenue, "count", """
+WITH j AS (
+  SELECT strftime(l_shipdate, '%Y-%m') AS month, p_type,
+         (l_extendedprice::DECIMAL(18,2) * (1::DECIMAL(8,2) - l_discount::DECIMAL(8,2)))::DECIMAL(30,4) AS dp
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+  WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+    AND l_shipdate < TIMESTAMP '1998-07-01 00:00:00'
+)
+SELECT month,
+       round(100.0 * sum(CASE WHEN p_type = 'PROMO' THEN dp ELSE 0::DECIMAL(30,4) END)::DOUBLE
+             / sum(dp)::DOUBLE, 6) AS promo_pct,
+       sum(CASE WHEN p_type = 'PROMO' THEN dp ELSE 0::DECIMAL(30,4) END)::DOUBLE AS promo_revenue
+FROM j GROUP BY month"""),
+    ("parts_supplier_count", q_parts_supplier_count, "count", """
+WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
+SELECT p_brand, p_size, count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
+FROM ps JOIN part ON l_partkey = p_partkey
+WHERE p_type <> 'PROMO'
+  AND l_suppkey IN (SELECT s_suppkey FROM supplier WHERE s_acctbal >= 0)
+GROUP BY p_brand, p_size
+ORDER BY supplier_cnt DESC, p_brand ASC, p_size ASC LIMIT 15"""),
+    ("small_qty_revenue", q_small_qty_revenue, "count", """
+WITH f AS (
+  SELECT l_partkey, l_quantity, l_extendedprice FROM lineitem
+  WHERE l_partkey IN (SELECT p_partkey FROM part
+                      WHERE p_brand = 'Brand#13' AND p_type = 'ECONOMY')
+), s AS (
+  SELECT l_partkey, sum(l_quantity::DECIMAL(18,2)) AS sq,
+         count(*)::BIGINT AS n
+  FROM f GROUP BY l_partkey
+)
+SELECT count(*)::BIGINT AS n_lines,
+       coalesce(round(sum(l_extendedprice::DECIMAL(18,2))::DOUBLE / 2.0, 6), 0.0) AS avg_yearly
+FROM f JOIN s USING (l_partkey)
+WHERE l_quantity::DECIMAL(18,2) * 5 * n < sq"""),
+    ("large_orders", q_large_orders, "count", """
+WITH big AS (
+  SELECT l_orderkey, sum(l_quantity::DECIMAL(18,2)) AS sum_qty
+  FROM lineitem GROUP BY l_orderkey
+  HAVING sum(l_quantity::DECIMAL(18,2)) > 100
+)
+SELECT c_custkey, c_name, l_orderkey,
+       (o_totalprice::DECIMAL(18,2))::DOUBLE AS total_price,
+       sum_qty::DOUBLE AS sum_qty
+FROM big JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+ORDER BY sum_qty DESC, l_orderkey ASC LIMIT 100"""),
+    ("phrase_search_slop", q_phrase_search_slop, "count",
+     oracles.q_phrase_search_slop(k=10, slop=1)),
+    ("ivf_codebook_drift", q_ivf_codebook_drift, "count", oracles.q_ivf_codebook_drift(16, 200)),
+    ("stat_tests_from_sketch", q_stat_tests_from_sketch, "count", oracles.q_stat_tests_from_sketch(
+        "click", "purchase", 0.01)),
+    ("ivf_retrain_recall", q_ivf_retrain_recall, "one_rep",
+     oracles.q_ivf_retrain_recall(5, 16, 4)),
+    ("streaming_ks", q_streaming_ks, "one_rep", oracles.q_streaming_ks("click", "purchase", 0.01)),
+    ("stat_bf_from_sketch", q_stat_bf_from_sketch, "count", oracles.q_stat_bf_from_sketch(0.01)),
+    ("streaming_bf", q_streaming_bf, "one_rep", oracles.q_streaming_bf(0.01)),
+    ("streaming_psi", q_streaming_psi, "one_rep",
+     oracles.q_streaming_psi("click", "purchase", 0.01)),
+    ("source_file_filters", q_source_file_filters, "count", """
+WITH sub AS (
+  SELECT doc_id AS d, text AS content
+  FROM documents WHERE doc_id % 19 = 3
+), f AS (
+  SELECT d, d % 5 AS c,
+         CASE d % 5 WHEN 0 THEN '.txt' WHEN 1 THEN '.md'
+              WHEN 2 THEN '.json' WHEN 3 THEN '.log' ELSE '.txt' END AS extension,
+         content
+  FROM sub
+)
+SELECT 'doc_' || d || extension AS file_name,
+       extension,
+       CASE extension WHEN '.txt' THEN 'text/plain'
+            WHEN '.md' THEN 'text/markdown'
+            ELSE 'application/json' END AS mime_type,
+       octet_length(encode(content))::BIGINT AS size_bytes,
+       sha256(content) AS content_hash
+FROM f
+WHERE c IN (0, 1, 2) AND octet_length(encode(content)) <= 280"""),
+    ("source_git_sync", q_source_git_sync, "count", """
+WITH sub AS (
+  SELECT doc_id AS d, text FROM documents WHERE doc_id % 23 = 1
+), base AS (
+  SELECT CASE d % 3 WHEN 0 THEN 'src/doc_' || d || '.py'
+              ELSE 'docs/doc_' || d || '.md' END AS rel_path,
+         CASE WHEN d % 4 = 2 THEN 'changed' ELSE 'same' END AS status,
+         text || CASE WHEN d % 4 = 2
+                      THEN chr(10) || 'rev2' ELSE '' END AS content
+  FROM sub WHERE d % 3 <> 2
+), added AS (
+  SELECT 'src/new_' || d || '.py' AS rel_path, 'added' AS status,
+         'new ' || text AS content
+  FROM sub WHERE d % 4 = 3
+)
+SELECT rel_path, status,
+       octet_length(encode(content))::BIGINT AS size_bytes,
+       sha256(content) AS content_hash
+FROM (SELECT * FROM base UNION ALL SELECT * FROM added)"""),
+    ("source_imap_sync", q_source_imap_sync, "count", """
+WITH sub AS (
+  SELECT doc_id AS uid, substr(text, 1, 200) AS body,
+         TIMESTAMP '1998-01-01 00:00:00'
+           + doc_id * INTERVAL 1 MINUTE AS ts
+  FROM documents WHERE doc_id % 17 = 2
+), cur AS (
+  SELECT CAST(floor(max(uid) / 2) AS BIGINT) AS c FROM sub
+), msg AS (
+  SELECT uid, body, ts,
+         CASE WHEN uid % 5 = 0 THEN '=?utf-8?q?Report_' || uid || '?='
+              ELSE 'Report ' || uid END AS subj_hdr,
+         'sender' || (uid % 7) || '@example.com' AS from_addr
+  FROM sub
+)
+SELECT uid,
+       (octet_length(encode(
+          'From: ' || from_addr || chr(13) || chr(10) ||
+          'To: team@example.com' || chr(13) || chr(10) ||
+          'Subject: ' || subj_hdr || chr(13) || chr(10) ||
+          'Date: ' || strftime(ts, '%a, %d %b %Y %H:%M:%S') || ' +0000'
+                   || chr(13) || chr(10) ||
+          'MIME-Version: 1.0' || chr(13) || chr(10) ||
+          'Content-Type: text/plain; charset=utf-8'
+                   || chr(13) || chr(10) || chr(13) || chr(10)))
+        + octet_length(encode(body)))::BIGINT AS size_bytes,
+       'Report ' || uid AS subject,
+       from_addr,
+       'team@example.com' AS to_addr,
+       strftime(ts, '%Y-%m-%dT%H:%M:%S') || '+00:00' AS sent_at,
+       body,
+       'parsed' AS parse_status
+FROM msg
+WHERE uid > (SELECT c FROM cur)"""),
+)))
+
+DRIVER_WINDOW: tuple[str, ...] = tuple(r.name for r in QUERY_TABLE[:50])
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {r.name: _fresh(r.fn) for r in QUERY_TABLE}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {r.name: r.sql for r in QUERY_TABLE}

@@ -37,185 +37,16 @@ REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 # $SPARK_GRAFT_BENCH_FASTCAP (0 disables the cap).
 FAST_SINGLE_REP_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_FASTCAP", "0.8"))
 
-# Streaming replays whose cost is fixed micro-batch overhead (stream-
-# stream joins run ~5 batches + watermark flush regardless of data):
-# one rep each — the median of three would burn ~2 min of suite wall
-# re-measuring scheduler constants. Spread for these is tracked by the
-# noise canary instead.
-ONE_REP_QUERIES = {"stream_interval_join_outer",
-                   "streaming_scd2", "streaming_sessions",
-                   # in-query IVFADC index rebuild (~19s at sf0.1) —
-                   # correct by construction (the oracle replays the
-                   # training) but a batch build, not a latency path;
-                   # the persisted serve-only number is ivfpq_serve in
-                   # _bench_serving (VERDICT r7 "what's wrong" #4)
-                   "knn_ivfpq_serve",
-                   # fixed-overhead sync-loop replays (VERDICT r8 item
-                   # 4): the point is the merged-state == rebuild
-                   # equality pin, not the wall time — their cost is
-                   # the replay's step count by construction
-                   "bm25_append_delete_replay", "gdpr_sync_replay",
-                   "streaming_exact_dedup", "streaming_chi_square",
-                   # r10: micro-batch state loop (streaming_ks) and the
-                   # two-trainings-in-query lifecycle check
-                   # (ivf_retrain_recall) — both fixed-overhead
-                   # replays, not latency paths
-                   "streaming_ks", "ivf_retrain_recall",
-                   # r11: the streaming BF/PSI micro-batch state loops
-                   # — same fixed-overhead replay class as streaming_ks
-                   "streaming_bf", "streaming_psi"}
-
-# Fixed-overhead replays excluded from the suite "value" (VERDICT r7
-# item 6): their cost is micro-batch scheduler constants / in-query
-# index rebuilds, not query-plan health, so including them makes the
-# headline total track the scheduler instead of the plans. They still
-# appear in "queries" (and BENCH_DETAIL) so compare_bench diffs them,
-# and are listed under "replays" in the output line so the exclusion is
-# explicit, like the noise canary already is.
-REPLAY_QUERIES = ONE_REP_QUERIES
-
-# r14 (VERDICT r13 item 2), ADDITIONS-ONLY: a noop-sink series for the
-# queries whose .count() timing prunes most of their real compute
-# (guide §1.4 — count() lets the optimizer drop whole expression
-# subtrees: poisson_bootstrap counted 0.7 s while its noop/serving
-# cost was 74 s before the r13 fix and ~4.5 s after; the driver bench
-# could not see that win). Each runs ONCE through
-# df.write.format("noop") — every column of every row computed — and
-# is recorded as "<name>_noop" in "queries". The existing .count()
-# series is unchanged (same queries, same reps, same medians) and the
-# suite "value" still sums ONLY the count series, so round-over-round
-# totals stay comparable; the noop entries are excluded like replays
-# and listed under "noop_series" in the output line.
-NOOP_SINK_QUERIES = [
-    "poisson_bootstrap",
-    "knn_bruteforce", "knn_quantized", "knn_binary", "knn_lsh",
-    "knn_ivf", "knn_pq", "knn_ivfpq", "matryoshka_recall",
-    "semdedup", "cdc_dedup", "cdc_chunks_scan",
-    "dsir_weights", "corpus_overlap",
-]
-
-BENCH_QUERIES = [
-    "pricing_summary",
-    "join_revenue",
-    "events_tumbling",
-    "user_sessions",
-    "events_asof",
-    "events_range_window",
-    "bm25_postings",
-    "bm25_search",
-    "more_like_this",
-    "dense_mock_search",
-    "hybrid_rrf",
-    "ir_metrics",
-    "knn_bruteforce",
-    "knn_lsh",
-    "knn_ivf",
-    "knn_quantized",
-    "knn_pq",
-    "dedup_minhash_lsh",
-    "dedup_sentences",
-    "dedup_canonical",
-    "dedup_passages",
-    "stratified_sample",
-    "events_anomaly",
-    "events_funnel",
-    "user_retention",
-    "events_props_json",
-    "nb_classify",
-    "doc_clusters",
-    "events_rolling",
-    "value_correlation",
-    "text_quality",
-    "pii_redact",
-    "lm_quality",
-    "lm_bigram",
-    "text_boilerplate",
-    "chunk_character",
-    "ingest_index",
-    "rerank_search",
-    "multi_collection_dense",
-    "sniff_formats",
-    "gc_orphans",
-    "pca_projection",
-    # round-4 additions (VERDICT r4 item 8: track their cost too)
-    "text_readability", "source_mix", "source_mix_temp",
-    "contamination_report", "approx_distinct_daily", "funnel_latency",
-    "session_paths", "cluster_keywords", "doc_outliers",
-    "hybrid_weighted", "profile_table", "state_islands", "zipf_fit",
-    "length_bins", "hard_negatives", "knn_pagerank", "event_assoc",
-    "events_ewma", "knn_triangles", "kmv_set_ops",
-    "local_supplier_revenue", "customer_value_ranks",
-    "priority_grouping_sets", "events_twap", "fuzzy_pairs",
-    "purchase_attribution", "dedup_jaccard_prefix", "weighted_sample",
-    "events_pivot", "events_dedup_first", "ivm_counters",
-    "events_transitions",
-    # round-5 additions
-    "multimodal_features", "audio_wav_segments", "splade_vocab",
-    "artifact_roundtrip", "bluegreen_swap", "shipping_priority",
-    "returned_items", "late_shipment_priority", "promo_revenue",
-    "parts_supplier_count", "small_qty_revenue", "large_orders",
-    "discounted_revenue",
-    # late round-5 additions
-    "quantile_sketch", "url_domain_stats",
-    "customer_order_distribution", "top_supplier", "idle_customer_balance",
-    "bloom_prune", "winsorized_stats", "nation_trade_volume",
-    # round-6 additions
-    "min_cost_supplier", "excess_qty_supplier", "streaming_heavy_hitters",
-    "pipeline_config", "edit_distance_pairs", "bpe_encode_words", "sole_fault_supplier", "nation_year_profit",
-    "gopher_quality", "knn_ivfpq", "dsir_weights", "streaming_count_min", "semdedup", "logreg_scores", "jl_projection",
-    "streaming_lsh_dedup", "market_share", "top_revenue_parts",
-    "corpus_overlap", "corpus_drift_psi", "late_data_audit",
-    "leakage_safe_split", "events_cusum", "compaction_plan", "knn_communities",
-    "cdc_dedup", "events_trend",
-    "scd2_asof_join",
-    # round-7 additions
-    "knn_ivfpq_serve", "bm25_stats_merge", "cdc_chunks_scan",
-    "bpe_merges_sampled",
-    # round-7 post-window additions
-    "knn_binary", "dedup_spans", "matryoshka_recall", "dedup_cut",
-    "bm25_pruned_search",
-    "unigram_pieces", "unigram_encode", "knn_ivf_append",
-    "stream_interval_join_outer", "knn_kcore", "textrank_keywords",
-    "maxsim_rerank", "spell_suggestions", "incremental_clusters",
-    "events_seasonal", "quality_calibrated", "bpe_fertility",
-    "streaming_scd2", "text_entropy", "value_band_pairs",
-    "events_mad_outliers", "curated_manifest", "unigram_em_encode",
-    "dedup_containment", "knn_ppr", "customer_rfm", "streaming_sessions",
-    "events_concurrency",
-    # round-8 additions
-    "gdpr_delete_cascade", "bm25_append_delete_replay", "forecast_revenue", "interval_overlap",
-    "events_acf", "wordpiece_encode",
-    "record_linkage", "k_anonymity", "knn_link_prediction",
-    "streaming_hll", "temporal_split", "knn_assortativity",
-    # round-9 additions
-    "gdpr_sync_replay", "approx_distinct_hll_packed",
-    "interval_overlap_two_level", "knn_ivf_sample_sweep",
-    "embedding_dbscan", "bm25_rocchio_search", "lm_dirichlet_search",
-    "streaming_exact_dedup", "mmr_rerank", "search_snippets",
-    "sliding_uniques_hll", "phrase_search", "search_facets",
-    "query_autocomplete", "user_survival", "benford_audit", "token_gini",
-    "knn_label_modularity", "lm_kneser_ney", "boolean_search",
-    "stat_ks_test", "stat_mann_whitney", "stat_chi_square",
-    "theil_sen_trend", "good_turing", "stupid_backoff", "heaps_law",
-    "corpus_drift_jsd", "item_item_cf", "burrows_delta", "hill_tail",
-    "ltr_features", "market_hhi", "cuped_ab", "logrank_test",
-    "knn_clustering", "price_elasticity", "forecast_backtest",
-    "streaming_chi_square", "markov_stationary",
-    "textrank_sentences", "referential_integrity",
-    "markov_attribution", "sequential_patterns", "poisson_bootstrap",
-    "funnel_wilson", "eb_item_rates", "ks_family_bh", "rank_tau",
-    "collocations_llr", "knn_harmonic", "label_centroids",
-    "simpson_audit", "mutual_information", "cohens_kappa",
-    "ljung_box", "roc_auc", "pacf_daily", "brown_forsythe",
-    # round-10 additions (streaming_ks / ivf_retrain_recall are
-    # one-rep replays — see ONE_REP_QUERIES)
-    "phrase_search_slop", "ivf_codebook_drift", "stat_tests_from_sketch",
-    "ivf_retrain_recall", "streaming_ks",
-    # round-11 additions (streaming_bf/psi are one-rep replays)
-    "stat_bf_from_sketch", "streaming_bf", "streaming_psi",
-    # round-12 additions (source-connector oracle gates)
-    "source_file_filters", "source_git_sync", "source_imap_sync",
-]
+# The three series are read off the registry rows' `bench` tag (see
+# __spark_entry__.QueryRow): the timed .count() series in registry
+# order; its one-rep subset, fixed-overhead replays that are left out of
+# the suite "value" (they still appear in "queries" and are listed under
+# "replays"); and the noop-sink series, one df.write.format("noop") run
+# each after the count series, recorded as "<name>_noop" and also left
+# out of "value", so the total stays comparable across rounds.
+BENCH_QUERIES = [r.name for r in entrymod.QUERY_TABLE if r.bench]
+ONE_REP_QUERIES = {r.name for r in entrymod.QUERY_TABLE if r.bench == "one_rep"}
+NOOP_SINK_QUERIES = [r.name for r in entrymod.QUERY_TABLE if r.bench == "noop"]
 
 
 def _timed(fn) -> tuple[float, int]:
@@ -630,7 +461,7 @@ def main() -> None:
     print(f"# noise_canary: {canary:.3f}s (start {canary_start:.3f}s, "
           f"end {canary_end:.3f}s)", file=sys.stderr)
 
-    excluded = REPLAY_QUERIES | {"noise_canary"} \
+    excluded = ONE_REP_QUERIES | {"noise_canary"} \
         | {k for k in med if k.endswith("_noop")}
     total = round(sum(v for k, v in med.items() if k not in excluded), 3)
     line = {
@@ -638,7 +469,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": {k: round(v, 2) for k, v in med.items()},
-        "replays": sorted(k for k in med if k in REPLAY_QUERIES),
+        "replays": sorted(k for k in med if k in ONE_REP_QUERIES),
         "noop_series": sorted(k for k in med if k.endswith("_noop")),
         "reps": REPS,
         "sf": sf,

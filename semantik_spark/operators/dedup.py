@@ -1315,66 +1315,6 @@ def semdedup(emb: DataFrame, threshold: float = 0.95, n_centroids: int = 16,
     )
 
 
-def simhash_radius_report(docs: DataFrame, radii: tuple = (2, 4, 6, 8),
-                          n: int = 3, threshold: float = 0.5, bits: int = 60,
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
-    """Precision/recall of SimHash hamming-radius matching against
-    true n-gram Jaccard, at several radii — the tuning curve that
-    sizes ``max_hamming`` before a 100 TB run (third member of the
-    recall-harness family: lsh_recall_report for MinHash banding,
-    knn_nprobe_sweep for IVF probing). Banding recall is exact by
-    pigeonhole, so the open question is semantic: how well does bit
-    distance PREDICT Jaccard — precision falls and recall rises with
-    the radius, and this measures both on real text.
-
-    One row per radius: radius, n_found (pairs within radius),
-    n_true_found (of those, truly >= threshold Jaccard), n_exact
-    (all true pairs), precision, recall (6 dp).
-
-    Shape: one banded simhash pass at max(radii) (reused for every
-    radius via a broadcast theta-join against the 4-row radius list),
-    one exact-Jaccard truth pass (the quadratic-ish oracle stage — on
-    a SAMPLE at 100 TB, like lsh_recall_report)."""
-    from semantik_spark.functions.caching import cache
-
-    truth = cache(
-        ngram_jaccard_pairs(docs, n=n, threshold=threshold,
-                            id_col=id_col, text_col=text_col)
-        .select("doc_a", "doc_b")
-    )
-    pairs = simhash_pairs(docs, max_hamming=max(radii), bits=bits,
-                          id_col=id_col, text_col=text_col)
-    marked = (
-        pairs.join(truth.withColumn("is_true", F.lit(1)),
-                   ["doc_a", "doc_b"], "left")
-        .select("hamming", F.coalesce("is_true", F.lit(0)).alias("is_true"))
-    )
-    spark = docs.sparkSession
-    radii_df = spark.createDataFrame([(int(r),) for r in radii],
-                                     "radius int")
-    n_exact = truth.agg(F.count("*").cast("bigint").alias("n_exact"))
-    return (
-        marked.join(F.broadcast(radii_df),
-                    F.col("hamming") <= F.col("radius"))
-        .groupBy("radius")
-        .agg(
-            F.count("*").cast("bigint").alias("n_found"),
-            F.sum("is_true").cast("bigint").alias("n_true_found"),
-        )
-        .crossJoin(F.broadcast(n_exact))
-        .select(
-            "radius", "n_found", "n_true_found", "n_exact",
-            # try_divide: zero candidates / empty ground truth must
-            # yield NULL precision/recall, not an ANSI job abort
-            F.round(F.try_divide(F.col("n_true_found"),
-                                 F.col("n_found")), 6).alias("precision"),
-            F.round(F.try_divide(F.col("n_true_found"),
-                                 F.col("n_exact")), 6).alias("recall"),
-        )
-    )
-
-
 def merge_components(state: DataFrame | None, new_edges: DataFrame,
                      node_a: str = "doc_a", node_b: str = "doc_b") -> DataFrame:
     """Incremental connected components: fold a batch of NEW edges into

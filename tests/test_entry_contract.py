@@ -1,288 +1,32 @@
 """Driver-contract tripwires for __spark_entry__ (no SparkSession).
 
 The correctness driver evaluates the FIRST 50 queries() entries, so an
-accidental reorder or a new no-oracle entry silently shrinks coverage.
-These asserts fail fast instead.
+accidental reorder or an edited oracle silently changes what it checks.
+Both are pinned by hash here: a rotation or a new query moves or adds
+rows in __spark_entry__.QUERY_TABLE and re-pins these two values.
 """
 
 from __future__ import annotations
 
+import hashlib
 import inspect
+import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 
-# Queries that MUST sit inside the first-50 driver window this round
-# (round 10): see ROUND10_WINDOW_MUST below. ROUND9_WINDOW_MUST is kept
-# as the historical r9 window record — its entries are now
-# behavior-anchored past the boundary (every one green in
-# CORRECTNESS_r09) and must stay registered.
-ROUND9_WINDOW_MUST: tuple = (
-    # added in round 9 — each takes its FIRST driver row this round;
-    # extend as queries land (displaces the r5 fill, never the r4
-    # anchors)
-    "gdpr_sync_replay",
-    "approx_distinct_hll_packed",
-    "interval_overlap_two_level",
-    "knn_ivf_sample_sweep",
-    "embedding_dbscan",
-    "bm25_rocchio_search",
-    "lm_dirichlet_search",
-    "streaming_exact_dedup",
-    "mmr_rerank",
-    "search_snippets",
-    "sliding_uniques_hll",
-    "phrase_search",
-    "search_facets",
-    "query_autocomplete",
-    "user_survival",
-    "benford_audit",
-    "token_gini",
-    "knn_label_modularity",
-    "lm_kneser_ney",
-    "boolean_search",
-    "stat_ks_test",
-    "stat_mann_whitney",
-    "stat_chi_square",
-    "theil_sen_trend",
-    "good_turing",
-    "stupid_backoff",
-    # the longest-unrefreshed anchors (last driver-green row:
-    # CORRECTNESS_r04) that still FIT after the new-query block: new
-    # queries take window priority (a first-ever driver row beats a
-    # refresh), so 24 of the 37 r4 anchors refresh this round and the
-    # displaced 13 head the round-10 window (ROUND10_WINDOW_MUST)
-    "approx_distinct_kmv",
-    "chunk_collapse",
-    "chunk_fixed",
-    "corpus_shards",
-    "cube_agg",
-    "customers_without_orders",
-    "doc_clusters",
-    "doc_length_histogram",
-    "events_anomaly",
-    "events_asof",
-    "events_funnel",
-    "events_props_json",
-    "events_range_window",
-    "events_sliding",
-    "events_tumbling",
-    "join_revenue",
-    "more_like_this",
-    "multi_collection_dense",
-    "nb_classify",
-    "ngram_topk",
-    "order_priority",
-    "parse_routed",
-    "pricing_summary",
-    "rerank_search",
-)
+# sha256 of "\n".join(queries()): the driver order, window first
+QUERIES_ORDER_SHA256 = "d7512bb294a81b7f36e7ad3fb6f378056fa38d0cb482e650d2137af643f1badb"
+# sha256 of json.dumps(sorted(oracle_sql().items())): every oracle's text
+ORACLE_SQL_SHA256 = "bd02fe995823878c65a66d27adbeb337d45e15a0c03bc112a1f027382fe456ce"
 
 
-# The round-10 driver window MUST list (VERDICT r9 item 1): the 33
-# round-9 late additions (first-ever driver row) + the 13 r4 anchors
-# displaced from the r9 window. The remaining 4 slots are the oldest
-# r5 anchors (ROUND10_R5_FILL). Extend ROUND11_WINDOW_MUST — never a
-# count constant — when adding a query this round.
-ROUND10_WINDOW_MUST: tuple = (
-    # queries added after the r9 window filled — locally oracle-
-    # verified, first driver row next rotation
-    "heaps_law",
-    "corpus_drift_jsd",
-    "item_item_cf",
-    "burrows_delta",
-    "hill_tail",
-    "ltr_features",
-    "market_hhi",
-    "cuped_ab",
-    "logrank_test",
-    "knn_clustering",
-    "price_elasticity",
-    "forecast_backtest",
-    "streaming_chi_square",
-    "markov_stationary",
-    "textrank_sentences",
-    "referential_integrity",
-    "markov_attribution",
-    "sequential_patterns",
-    "poisson_bootstrap",
-    "funnel_wilson",
-    "eb_item_rates",
-    "ks_family_bh",
-    "rank_tau",
-    "collocations_llr",
-    "knn_harmonic",
-    "label_centroids",
-    "simpson_audit",
-    "mutual_information",
-    "cohens_kappa",
-    "ljung_box",
-    "roc_auc",
-    "pacf_daily",
-    "brown_forsythe",
-    # r4-anchored entries displaced from the round-9 window by the
-    # round's 26 new queries — their refresh rolls to round 10
-    "rollup_agg",
-    "sniff_formats",
-    "text_collocations",
-    "text_curation",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_quality",
-    "text_repetition",
-    "text_token_counts",
-    "topk_per_group",
-    "user_retention",
-    "user_sessions",
-    "value_percentiles",
-)
-
-# The 4 oldest r5 anchors filling the round-10 window to capacity.
-# A query added THIS round displaces from here (it rolls to the
-# round-11 window head via ROUND11_WINDOW_MUST).
-ROUND10_R5_FILL: tuple = (
-    "audio_wav_segments",
-    "bluegreen_swap",
-    "cluster_keywords",
-    "contamination_report",
-)
-
-# Round-11 window MUSTs (VERDICT r10 item 3), all inside
-# __spark_entry__.ROUND11_WINDOW (the authoritative full-order list):
-# the 5 round-10 additions take first driver rows; the 5 fixed-chunk
-# queries changed behavior under the drop_contained_tail=True flip
-# (executed this round — operator default flipped, oracle twins mirror
-# the start-filter, all 5 re-verified via tools/check_oracle.py at
-# sf0.001 + sf0.01).
-ROUND11_WINDOW_MUST: tuple = (
-    "phrase_search_slop",
-    "ivf_codebook_drift",
-    "stat_tests_from_sketch",
-    "ivf_retrain_recall",
-    "streaming_ks",
-    "chunk_fixed",
-    "chunk_collapse",
-    "ingest_index",
-    "gc_orphans",
-    "pipeline_config",
-    # non-empty-fixture fixes (VERDICT r10 item 6): both queries'
-    # rows changed (urgent-order anti-join; min_sessions 5 → 3), so
-    # both rotate into the window under the behavior-change rule
-    "customers_without_orders",
-    "sequential_patterns",
-)
-
-# The 8 r5 anchors that did NOT fit the round-11 window (38 of 46
-# rotated in). These MUST head the round-12 fill, followed by the r6
-# block (49 entries). Window arithmetic: 300 entries / 50 slots = a
-# SIX-round refresh floor; r12's free capacity after these 8 is ~42
-# slots minus any r11 additions, so keep r11 registry growth ≤ ~6
-# (VERDICT r10 item 10).
-ROUND12_R5_CARRY: tuple = (
-    "source_mix_temp",
-    "splade_vocab",
-    "state_islands",
-    "text_boilerplate",
-    "text_readability",
-    "value_correlation",
-    "weighted_sample",
-    "zipf_fit",
-)
-
-# Entries added AFTER the round-11 rotation: never driver-evaluated,
-# verified locally via tools/check_oracle.py (ORACLE_CHECKS.jsonl).
-# These MUST head the round-12 window, before ROUND12_R5_CARRY.
-ROUND12_WINDOW_MUST: tuple = (
-    "stat_bf_from_sketch",
-    "streaming_bf",
-    "streaming_psi",
-)
-
-# Registry entries PRUNED in round 12 (VERDICT r11 item 1: shrink the
-# registry back toward 300 so the 6-round staleness floor holds).
-# Every prune is a single-purpose variant whose operator body stays
-# implemented, unit-tested, and oracle-gated through a surviving entry:
-#   knn_nprobe_sweep     — sweep-loop twin of knn_ivf_sample_sweep;
-#                          recall payoff now gated by ivf_retrain_recall
-#   heavy_hitters        — batch MG; streaming_heavy_hitters runs the
-#                          same mg_merge/mg_summarize body + recount
-#   count_min_freq       — batch CM; streaming_count_min replays the
-#                          same count_min_cells body cell-for-cell
-#   bpe_merges           — bpe_encode_words retrains the same 8 merges
-#                          and its oracle replays the full training
-#   splade_vectors       — splade_search consumes doc_vectors end-to-
-#                          end; vocab persistence gated by splade_vocab
-#   dedup_lsh_recall     — diagnostic S-curve over the same LSH body as
-#                          dedup_minhash_lsh + dedup_ngram_jaccard
-#   approx_distinct_hll  — row-form HLL whose algebra IS the oracle of
-#                          approx_distinct_hll_packed (bit-for-bit)
-#   approx_distinct_kmv  — kmv_distinct body gated by
-#                          approx_distinct_daily + kmv_set_ops
-#   -- second wave (same round): shrink the r7/r8 blocks so the
-#      round-13 window (3 MUSTs + 3 r6 tail + r7 block) and the
-#      round-14 window (r13 MUSTs + r8 block) fit 50 slots without a
-#      new tail --
-#   knn_recall           — recall@k harness over lsh/ivf/quantized/pq;
-#                          same class as the judge-named sweep pairs
-#                          (knn_ivf_sample_sweep + ivf_retrain_recall
-#                          keep the recall math oracle-gated)
-#   config_matrix        — benchmark_matrix composes the same expansion
-#                          helper and its oracle replays it
-#   scd2_orders          — streaming_scd2 carries the identical oracle
-#                          (merge fold ≡ full-log rebuild) and
-#                          scd2_asof_join gates scd2_history directly
-#   simhash_radius_recall— third recall harness (SimHash radii);
-#                          dedup_simhash_pairs keeps banding gated
-#   knn_ivf_sampled      — single-mod twin of knn_ivf_sample_sweep
-#                          (judge-named sweep pair)
-#   stream_interval_join — inner-join subset of
-#                          stream_interval_join_outer (same operator,
-#                          outer additionally gates NULL-padded
-#                          watermark emission)
-#   wordpiece_merges     — wordpiece_encode retrains the same 8 merges
-#                          and its oracle embeds the full unrolled
-#                          training replay
-#   dedup_simhash        — signature-table dump consumed end-to-end by
-#                          dedup_simhash_pairs
-PRUNED_ROUND12: tuple = (
-    "knn_nprobe_sweep",
-    "heavy_hitters",
-    "count_min_freq",
-    "bpe_merges",
-    "splade_vectors",
-    "dedup_lsh_recall",
-    "approx_distinct_hll",
-    "approx_distinct_kmv",
-    "knn_recall",
-    "config_matrix",
-    "scd2_orders",
-    "simhash_radius_recall",
-    "knn_ivf_sampled",
-    "stream_interval_join",
-    "wordpiece_merges",
-    "dedup_simhash",
-)
-
-# Entries added AFTER the round-12 rotation: never driver-evaluated,
-# verified locally via tools/check_oracle.py (ORACLE_CHECKS.jsonl).
-# These MUST head the round-13 window, before ROUND13_R6_TAIL. Growth
-# is capped at 3 this round: the r13 window is exactly 3 MUSTs +
-# 3-entry r6 tail + the 44-entry r7 block.
-ROUND13_WINDOW_MUST: tuple = (
-    # VERDICT r11 item 7: the source connectors' oracle-adjacent gates
-    "source_file_filters",
-    "source_git_sync",
-    "source_imap_sync",
-)
-
-# Entries added AFTER the round-13 rotation: never driver-evaluated,
-# verified locally via tools/check_oracle.py (ORACLE_CHECKS.jsonl).
-# These MUST head the round-14 window, before the 45-entry r8 block.
-# Growth is capped at 5 this round (the r14 window's free slots:
-# 50 - 45 r8 anchors = 5).
-ROUND14_WINDOW_MUST: tuple = ()
+def _sha256(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()
 
 
 def test_every_query_has_an_oracle():
@@ -296,50 +40,24 @@ def test_every_query_has_an_oracle():
 
 
 def test_window_holds_rotation_invariants():
-    """Round-14 window contract (README 'Correctness window rotation'):
-    the first 50 queries() entries ARE __spark_entry__.ROUND14_WINDOW,
-    in order — the driver hash-checks exactly this slice."""
-    window = list(entrymod.queries())[:50]
-    assert window == list(entrymod.ROUND14_WINDOW), (
-        "driver window diverged from ROUND14_WINDOW")
-    # no queries were added in r13/r14 (optimization rounds —
-    # ROUND14_WINDOW_MUST is empty), so the 5 free slots go to the
-    # optimization-touched r9 anchors, then the FULL 45-entry r8 block
-    # (every registered entry whose last driver row is CORRECTNESS_r08,
-    # alphabetical) — the oldest anchor after this round is r9
-    assert list(ROUND14_WINDOW_MUST) == []
-    assert len(entrymod.ROUND14_WINDOW) == 50
-    assert window[:5] == ["doc_clusters", "knn_ivf_sample_sweep",
-                          "search_snippets", "rerank_search",
-                          "theil_sen_trend"]
-    assert window[5:] == sorted(window[5:]), "r8 block must be alphabetical"
-    # the r13 window anchors stay registered (freshest driver-green rows)
-    for anchor in entrymod.ROUND13_WINDOW:
-        assert anchor in set(entrymod.queries()), (
-            f"{anchor} (r13 anchor) not registered")
-    # past-boundary entries are behavior-anchored by earlier driver
-    # rounds (r6-r12 green rows) — they must stay registered (minus the
-    # 16 near-redundant entries pruned in round 12, PRUNED_ROUND12)
-    names = set(entrymod.queries())
-    pruned = set(PRUNED_ROUND12)
-    assert pruned.isdisjoint(names), "pruned query still registered"
-    for must in (ROUND9_WINDOW_MUST + ROUND10_WINDOW_MUST
-                 + ROUND10_R5_FILL + ROUND12_R5_CARRY
-                 + ROUND11_WINDOW_MUST + ROUND12_WINDOW_MUST):
-        if must in pruned:
-            continue
-        assert must in names, f"{must} (anchor) not registered"
-    # the r12 window anchors stay registered (they are the freshest
-    # driver-green rows and must not silently drop out)
-    for anchor in entrymod.ROUND12_WINDOW:
-        assert anchor in names, f"{anchor} (r12 anchor) not registered"
-    # round-14 candidates (added this round, past the boundary):
-    # registered, awaiting their first driver row next rotation;
-    # growth capped at the r14 window's 5 free slots
-    assert len(ROUND14_WINDOW_MUST) <= 5, (
-        "r13 registry growth exceeds the r14 window's free slots")
-    for must in ROUND14_WINDOW_MUST:
-        assert must in names, f"{must} not registered"
+    """The driver window is the registry table's first 50 rows, and
+    every queries() entry is the row's function behind _fresh."""
+    qs = entrymod.queries()
+    assert list(qs)[:50] == list(entrymod.DRIVER_WINDOW)
+    assert len(entrymod.DRIVER_WINDOW) == 50
+    for row in entrymod.QUERY_TABLE:
+        assert qs[row.name].__wrapped__ is row.fn, row.name
+        # bench.py reads these tags by value: a misspelt one would
+        # silently fall back to the plain count series
+        assert row.bench in (None, "count", "one_rep", "noop"), row.name
+
+
+def test_driver_contract_is_pinned_by_hash():
+    """The queries() key order and every oracle_sql() text, byte for
+    byte. A rotation or a registry change re-pins these on purpose."""
+    assert _sha256("\n".join(entrymod.queries())) == QUERIES_ORDER_SHA256
+    assert (_sha256(json.dumps(sorted(entrymod.oracle_sql().items())))
+            == ORACLE_SQL_SHA256)
 
 
 def test_query_callables_take_spark_and_sfdir():
@@ -354,45 +72,22 @@ def test_oracle_sql_is_nonempty_select():
         assert s.startswith(("select", "with")), name
 
 
-def test_scale_md_registry_index_matches_queries():
-    """Doc-drift tripwire (VERDICT r10 item 9): SCALE.md's generated
-    'Registry index' appendix must equal the registered query key set
-    EXACTLY — a registry add/rename/prune that skips the docs fails
-    here instead of becoming a judge finding."""
-    import re
-
-    text = open("/root/repo/SCALE.md").read()
-    assert "## Registry index" in text, "SCALE.md registry index removed"
-    sec = text.split("## Registry index")[1]
-    listed = set(re.findall(r"[a-z][a-z0-9_]*", sec.split("Regenerate with")[1]
-                            .split("```")[0].split("\n", 2)[2]))
-    keys = set(entrymod.queries())
-    assert listed == keys, (
-        f"SCALE.md index drift: missing={sorted(keys - listed)[:10]} "
-        f"stale={sorted(listed - keys)[:10]}")
-
-
 def test_readme_rotation_section_references_constants_not_lists():
-    """VERDICT r11 item 3: window/MUST lists must never be duplicated
-    in README prose (a copy drifted in r11 — streaming_psi was missing
-    from the ROUND12_WINDOW_MUST prose while the constant was right).
-    The rotation section must reference the authoritative constants,
-    must not enumerate any registered or pruned query name, and its
-    stated registry size must equal the live count."""
+    """The rotation prose must point at the registry table instead of
+    copying names out of it (a prose copy drifted once), and its stated
+    registry size must equal the live count."""
     import re
 
-    text = open("/root/repo/README.md").read()
+    text = open(os.path.join(REPO, "README.md")).read()
     sec = text.split("## Correctness window rotation")[1].split("\n## ")[0]
-    for const in ("ROUND14_WINDOW", "ROUND13_WINDOW",
-                  "ROUND13_WINDOW_MUST", "ROUND13_R6_TAIL",
-                  "ROUND14_WINDOW_MUST", "PRUNED_ROUND12"):
+    for const in ("QUERY_TABLE", "DRIVER_WINDOW"):
         assert const in sec, f"rotation prose lost its {const} reference"
-    keys = set(entrymod.queries()) | set(PRUNED_ROUND12)
+    keys = set(entrymod.queries())
     tokens = set(re.findall(r"[a-z][a-z0-9_]{2,}", sec))
     listed = sorted(tokens & keys)
     assert listed == [], (
         f"rotation prose enumerates query names (drift hazard): {listed}"
-        " — reference the constants instead")
+        " — reference the table instead")
     m = re.search(r"with (\d+)\s*\nregistered entries|with (\d+) registered"
                   r" entries", sec)
     assert m, "rotation prose no longer states the registry size"
@@ -408,7 +103,7 @@ def test_readme_coverage_map_query_references_exist():
     a rename/prune fail here (VERDICT r10 item 9)."""
     import re
 
-    text = open("/root/repo/README.md").read()
+    text = open(os.path.join(REPO, "README.md")).read()
     sec = text.split("## SURVEY §2 coverage map")[1].split("\n## ")[0]
     keys = set(entrymod.queries())
     stale = sorted({t[2:] for t in re.findall(r"\bq_[a-z0-9_]+", sec)}

@@ -902,17 +902,6 @@ def test_label_propagation_equi_joins_only(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_simhash_radius_report_broadcasts_radii(spark):
-    """The per-radius fan-out must be the tiny broadcast theta-join,
-    never a shuffle of the pair table per radius."""
-    from semantik_spark.operators.dedup import simhash_radius_report
-
-    docs = _mk_docs(spark, 40)
-    plan = _plan(simhash_radius_report(docs, radii=(2, 4)))
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_cdc_chunks_no_join_until_stats(spark):
     """The anchor scan is pure per-row expression work — the chunk
     builder introduces only the per-doc window exchange and the spans

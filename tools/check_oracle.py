@@ -160,11 +160,6 @@ def main() -> None:
             n_fail += 1
             results[name] = "FAIL: SPARK ERROR"
             continue
-        if name not in oqs:
-            print(f"pass {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)")
-            n_pass += 1
-            results[name] = f"pass rows-only ({len(sdf)} rows)"
-            continue
         try:
             odf = con.sql(oqs[name]).df()
         except Exception as e:
